@@ -7,15 +7,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `queries` is the union of per-module registries; every entry with a
   * matching `oracleSql` key is hash-compared against DuckDB on sf0.01 by the
   * driver. Entries without oracle SQL get a weaker rows>0 check.
+  *
+  * Every entry first installs the engine surface
+  * ([[graft.catalyst.GraftExtensions.install]]) on the session it is given,
+  * so a query plans the same whichever queries ran before it.
   */
 object SparkEntry {
+  type Query = (SparkSession, String) => DataFrame
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    operators.Relational.q03JoinTopk(spark, "/root/testdata/sf0.001")
+    installed(operators.Relational.q03JoinTopk)(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  def queries: Map[String, Query] =
+    registry.map { case (name, fn) => name -> installed(fn) }
+
+  private def installed(fn: Query): Query = { (spark, dir) =>
+    catalyst.GraftExtensions.install(spark)
+    fn(spark, dir)
+  }
+
+  private def registry: Map[String, Query] =
     operators.Relational.queries ++
       operators.RelationalExt.queries ++
       operators.PipelineQueries.queries ++

@@ -3,6 +3,37 @@ package graft
 /** Shared session plumbing for the harness mains. */
 object SparkSupport {
 
+  /** The one session factory for the harness mains: `local[cpus]` with
+    * `cpus` from `SPARK_GRAFT_CPUS` (default: every available processor — a
+    * fixed default of 4 for an unset variable once ran a recorded bench 8x
+    * under-parallelized), as many shuffle partitions as cores, UTC session
+    * time, AQE on, no UI, and shuffle scratch on [[scratchDir]].
+    *
+    * AQE coalescing stays at the Spark DEFAULT (parallelismFirst=true).
+    * Round 3 measured the size-based alternative (parallelismFirst=false +
+    * 32m advisory): it coalesces any exchange whose BYTES are small to 1
+    * partition — but the dedup suite's plans put a C(n,2) pair Generate
+    * AFTER such exchanges (collect_list buckets are few MB, their explosion
+    * is not), serializing the explosion onto one core: d143 3.6 s vs 2.3 s,
+    * d30 2.6 s vs 1.9 s. The floor on the ~105 small queries was unchanged
+    * (±3%). Post-shuffle row EXPANSION is invisible to size-based
+    * coalescing — the default's min-parallelism guard is the correct
+    * setting for this workload. */
+  def session(): org.apache.spark.sql.SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.local.dir", scratchDir)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Raise scan parallelism to the session's shuffle parallelism BEFORE a
     * work-AMPLIFYING stage (an explode ×B replicate fan-out, per-row HOF
     * signature folds) when the scan under-partitions — the local/

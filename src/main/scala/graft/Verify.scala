@@ -1,22 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", SparkSupport.scratchDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkSupport.session()
     new java.io.File(outDir).mkdirs()
     // Dev aid: SPARK_GRAFT_ONLY=q1,q2 restricts the dump to named queries
     // (the driver never sets it, so the gate always runs the full set).

@@ -7,7 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression: fused cosine similarity over two
@@ -173,21 +177,13 @@ object GraftFunctions {
     ("might_contain",
       "might_contain(bloom, x) - codegen'd bloom-filter membership probe",
       (args: Seq[Expression]) => BloomFilterMightContain(args.head, args(1))))
-
-  /** Idempotent imperative registration — works on ANY session, including
-    * one the harness built without our extensions class. */
-  def ensureRegistered(spark: SparkSession): Unit =
-    all.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
 }
 
 /** Standard deployment path: `spark.sql.extensions=graft.catalyst.GraftExtensions`
   * installs the WHOLE engine surface at session build time — the native
-  * function family, the top-k re-planning rule, and its physical strategy —
-  * with no imperative `ensureRegistered` calls needed (those remain for
-  * sessions the caller built without extensions). */
+  * function family, the optimizer rules, and the planner strategies.
+  * Sessions built without it get the same surface from
+  * [[GraftExtensions.install]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, doc, builder) =>
@@ -196,9 +192,35 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[CosineSimilarity].getName, null, name, doc, ""),
         builder))
     }
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
-    ext.injectOptimizerRule(_ => graft.plans.DedupCollapseRule)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    ext.injectPlannerStrategy(_ => graft.sources.v2.GraftDmlStrategy)
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
+  }
+}
+
+object GraftExtensions {
+  private val rules: Seq[Rule[LogicalPlan]] =
+    Seq(graft.plans.TopKRewriteRule, graft.plans.DedupCollapseRule)
+  private val strategies: Seq[SparkStrategy] =
+    Seq(graft.plans.TopKPerKeyStrategy, graft.sources.v2.GraftDmlStrategy)
+
+  /** Installs on a live session what [[GraftExtensions]] injects at build
+    * time: the [[GraftFunctions]], [[rules]] on the public
+    * `experimental.extraOptimizations` hook and [[strategies]] on
+    * `experimental.extraStrategies`. Idempotent, and a few lookups when
+    * everything is already there. A session built with the extensions
+    * class already carries all of it, so nothing is added there (the rules
+    * would otherwise run twice per optimizer batch). */
+  def install(spark: SparkSession): Unit = {
+    val builtWith = spark.sessionState.conf
+      .getConf(StaticSQLConf.SPARK_SESSION_EXTENSIONS).getOrElse(Nil)
+    if (builtWith.contains(classOf[GraftExtensions].getName)) return
+    val registry = spark.sessionState.functionRegistry
+    GraftFunctions.all.foreach { case (name, _, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
+    val em = spark.experimental
+    em.extraOptimizations ++= rules.filterNot(em.extraOptimizations.contains)
+    em.extraStrategies ++= strategies.filterNot(em.extraStrategies.contains)
   }
 }

@@ -217,7 +217,6 @@ object Analytics {
   def q280PoissonBootstrap(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.OracleSafe.qsum6
     import org.apache.spark.sql.expressions.Window
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val B = 32
     // ×B fan-out below: scan parallelism must reach the cores BEFORE the
     // explode (no-op at scale — see SparkSupport.parallelized)

@@ -198,7 +198,6 @@ object Analytics2 {
     * accuracy at the final weights (prediction = sign of the linear
     * score, threshold exact at 0). */
   def t199QualityClassifier(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val stopArr = TextAnalysis.stopEn.map(w => s"'$w'").mkString("array(", ", ", ")")
     // measured: SparkSupport.parallelized here is a net LOSS (1.61 →
     // 2.01 s at sf0.1): the sequential GD passes each reread the persisted

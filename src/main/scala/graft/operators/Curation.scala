@@ -45,7 +45,6 @@ object Curation {
     * shared with t219's splice) — materialized per corpus dir exactly like
     * Dedup's shingle index, then read back columnar. */
   private[operators] def gramIndex(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val gramPath = graft.SparkSupport.layoutArtifact("gram_idx", dir) { p =>
       Tables.documents(s, dir)
         // shingles() already degrades sub-5-token docs to an empty array
@@ -61,7 +60,6 @@ object Curation {
   }
 
   def t92Contamination(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     // persisted in-memory on top of the layout: it feeds both the train
     // and eval branches of this query's plan
     val grams = gramIndex(s, dir)
@@ -103,7 +101,6 @@ object Curation {
     * carries k·tasks rows per group — never the input. The row_number window
     * idiom the oracle uses would sort every row of every group. */
   def q93GroupSample(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val o = Tables.orders(s, dir)
       .selectExpr("o_orderpriority", "o_orderkey",
         "poly_hash(CAST(o_orderkey AS STRING)) AS h")
@@ -319,7 +316,6 @@ object Curation {
     * full shuffle of losers) — the same skew-immune path as q93, now with
     * weights. */
   def q118WeightedSample(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val o = Tables.orders(s, dir)
       .selectExpr("o_orderstatus", "o_orderkey", "o_totalprice",
         "poly_hash(CAST(o_orderkey AS STRING)) AS h")
@@ -370,7 +366,6 @@ object Curation {
     * is map-side heaps + one k-bounded exchange, and the final aggregate is
     * |sources| rows. */
   def q138CurationPipeline(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val corpus = Dedup.corpusWithCopies(s, dir)
     // stage 1: exact dedup — winners by key, then semi-join the payload back
     val keep = corpus.select(md5(col("text")).as("h"), col("doc_id"))
@@ -448,7 +443,6 @@ object Curation {
     * count, and the md5 of the cleaned text — the gate hashes the repaired
     * CONTENT, not just the statistics. */
   def t219Decontaminate(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(s, dir)
       .filter(col("doc_id") % 7 =!= 0)
@@ -653,7 +647,6 @@ object Curation {
     * in_delta) — no second probe of the corpus for the pre-refresh
     * state). The shard rollup is |train docs| → |shards|. */
   def t316DecontamDelta(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val grams = gramIndex(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
     val evalFlags = grams.filter(col("doc_id") % 7 === 0)
       .groupBy("h")

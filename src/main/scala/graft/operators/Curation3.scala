@@ -208,7 +208,6 @@ object Curation3 {
     * coordinate agreement count is a map-side zip_with fold. All outputs
     * are exact rationals (k/16) or already-quantized values. */
   def d172MinhashCalibration(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val sigs = Dedup.shingleIndex(s, dir)
       .groupBy("doc_id").agg(collect_list(col("h")).as("hs"))
       .selectExpr("doc_id", "minhash16(hs) AS mh")
@@ -581,7 +580,6 @@ object Curation3 {
     * conventions), and the threshold compare is EXACT INTEGER
     * (common·10 ≥ |A|·9) — no float boundary anywhere. */
   def d225ContainmentJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     d225Core(Dedup.shingleIndexAnnotated(s, dir), Dedup.docHashArrays(s, dir))
   }
 

@@ -116,7 +116,6 @@ object Dedup {
 
   private[operators] def shingleIndexAnnotated(
       s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val path = graft.SparkSupport.layoutArtifact("shingle_idx_df", dir) { p =>
       val idx = Tables.documents(s, dir)
         // shingles() itself already degrades sub-3-token docs to an empty
@@ -424,7 +423,6 @@ object Dedup {
     * char fold and the 30×|tokens| bit fold are native codegen'd expressions
     * ([[graft.catalyst.PolyHash]], [[graft.catalyst.SimHash30]]). */
   def d32Simhash(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     // r15-opt: signatures are MAP-SIDE now — gram_hashes(toks, 1) is the
     // per-token poly_hash array in one codegen'd call (hash-identical,
     // TextKernelExprsSpec k=1 case), feeding simhash30 directly. The old
@@ -513,7 +511,6 @@ object Dedup {
       base.filter(col("vec_id") % 10 === 0)
         .selectExpr("vec_id + 1000000 AS vec_id",
           "transform(v, (x, i) -> x + 0.001D * CAST(i % 3 AS DOUBLE)) AS v"))
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     // the canonical sign-cell quantizer — shared with the IVF family
     // (s39/s193/s206) so d33 blocks on the same cells the posting layout uses
     val cells = corpus.selectExpr("vec_id", "v",
@@ -585,7 +582,6 @@ object Dedup {
     * aggregation over directed candidate pairs. Corpus = d33's planted
     * near-dup corpus, so the gate prunes real duplicates. */
   def d326Semdedup(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val base = Tables.embeddings(s, dir)
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
     val corpus = base.unionByName(
@@ -775,7 +771,6 @@ object Dedup {
     * the admitted batch's bands are what the index-maintenance write would
     * append. `src` labels which side each pair hit. */
   def d142IncrementalMinhash(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val idx = shingleIndex(s, dir)
     // the history side comes from the PERSISTED band index — the premise
     // made literal (round 4; d185 shares the artifact): history signatures
@@ -888,7 +883,6 @@ object Dedup {
     * the write that admits a batch appends its bands here; no later batch
     * ever recomputes history's signatures. */
   private[operators] def historyBandIndex(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val path = graft.SparkSupport.layoutArtifact("band_idx", dir) { p =>
       bandsOf(shingleIndex(s, dir)).write.mode("overwrite").parquet(p)
     }
@@ -916,7 +910,6 @@ object Dedup {
     * columnar artifacts, both pruned to candidate docs before any
     * per-pair work. */
   def d185SnapshotIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val histBands = historyBandIndex(s, dir)
       .withColumnRenamed("doc_id", "hist_id")
     val histShingles = shingleIndex(s, dir)
@@ -1021,7 +1014,6 @@ object Dedup {
     * or a compact — only delta generations fold, so at 100 TB the write
     * amplification is O(batch), not O(corpus). */
   private[operators] def admittedBandIndex(s: SparkSession, dir: String): String = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     graft.SparkSupport.layoutArtifact("band_idx_g2", dir) { p =>
       historyBandIndex(s, dir).write.parquet(s"$p/gen0")
       val g1 = bandsOf(shingleIndex(s, dir).filter(col("doc_id") % 3 === 0)
@@ -1060,7 +1052,6 @@ object Dedup {
     * to matching band keys; verification is candidate-bounded over
     * semi-join-reduced shingle rows. */
   def d189AdmitCompact(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val root = admittedBandIndex(s, dir)
     val index = s.read.parquet(s"$root/gen0", s"$root/compact")
       .withColumnRenamed("doc_id", "idx_id")
@@ -1309,7 +1300,6 @@ object Dedup {
     * higher-order fold over the sorted position array — no window
     * function, nothing corpus-scale in one task (q207 stance). */
   def d302SubstringSpans(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val K = 8
     val toks = graft.functions.PortableHash.tokens
     // r15-opt: the per-window slice+concat_ws+poly_hash lambda (interpreted

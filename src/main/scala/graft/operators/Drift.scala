@@ -135,7 +135,6 @@ object Drift {
     * scales with it. Laplace-smoothed terms and the decimal-summed total
     * follow q120 exactly. */
   def s292EmbeddingDrift(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val binned = Similarity.vecs(s, dir)
       .selectExpr("pmod(lsh_bucket8(v), 16) AS cell",
         "CASE WHEN label < 5 THEN 1 ELSE 0 END AS base")

@@ -185,7 +185,6 @@ object GraphOps {
     * ordering. */
   def q242AdamicAdar(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.catalyst.GraftFunctions.ensureRegistered(s) // pair_structs below
     val e = GraphOps2.coEdges(s, dir)
     // r15-opt (guide §2.4/§2.2): one grouped adjacency-list build replaces
     // the old degree aggregate + deg join + adjacency self-join — the

@@ -89,7 +89,6 @@ object IncrementalCuration {
   private[operators] def initState(s: SparkSession, dir: String,
       root: String): Unit = {
     import graft.sources.TxLog
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val histc = curatedHistory(s, dir)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val histShingles = Dedup.shingleIndex(s, dir)
@@ -112,7 +111,6 @@ object IncrementalCuration {
   private[operators] def admitBatch(s: SparkSession, dir: String,
       root: String, batchPred: Column, shift: Long): DataFrame = {
     import graft.sources.TxLog
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val batch = scoredDocs(s, dir).filter(batchPred)
       .withColumn("doc_id", col("doc_id") + shift)
       .persist(StorageLevel.MEMORY_AND_DISK)

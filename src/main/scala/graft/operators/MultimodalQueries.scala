@@ -171,7 +171,6 @@ object MultimodalQueries {
     * of 887 pairs survive, all 486 planted twins among them; sf0.01: the
     * cap never bites — max bucket 14). */
   def m194AhashNeardup(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s) // pair_structs below
     val docs = Tables.documents(s, dir)
     val corpus = docs.select(col("doc_id").as("media_id"), col("text").as("t"))
       .unionByName(docs.filter(col("doc_id") % 10 === 0)

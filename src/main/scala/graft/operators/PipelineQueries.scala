@@ -95,13 +95,12 @@ object PipelineQueries {
           .otherwise(concat(col("s_name"), lit(".ORG"))).as("Acct_891"))
 
   /** The full conformed silver table through the real pipeline kernel.
-    * Registers the graft optimizer rules: gold consumption patterns
-    * (distinct/pivot over the per-branch-deduplicated silver) trigger
+    * Gold consumption patterns (distinct/pivot over the
+    * per-branch-deduplicated silver) trigger the session's
     * [[graft.plans.DedupCollapseRule]], which deletes the branch dedup
     * shuffles that the downstream duplicate-insensitive aggregate makes
     * redundant. */
   def silverUnified(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftOptimizations.ensure(s)
     val bank = Silver.bankData(
       Silver.cleanseBankInstitutions(rawInstitutions(s, dir)),
       Silver.cleanseBankFinancials(rawFinancials(s, dir)))

@@ -106,7 +106,6 @@ object Pretrain {
     * joined (not broadcast) because at 100 TB a chunk-hash table is
     * executor-memory-sized. */
   def t153LineDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val chunks = Dedup.corpusWithCopies(s, dir)
       .selectExpr("doc_id", s"$tokens AS toks")
       .selectExpr("doc_id", "toks",
@@ -170,7 +169,6 @@ object Pretrain {
     * (islands-by-offset: pos − row_number is constant within a run). No
     * doc×doc product anywhere. */
   def t154DupSpans(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val grams = Dedup.corpusWithCopies(s, dir)
       // r15-opt: native gram_hashes (empty array on sub-5-token docs, like
       // the seqAsc form it replaces; hash-identical per TextKernelExprsSpec)
@@ -262,7 +260,6 @@ object Pretrain {
     * compute them from identical DOUBLE bits via the same sequential fold,
     * so the comparison — not an epsilon — is deterministic. */
   def d155SemDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val base = Tables.embeddings(s, dir)
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
     val corpus = base.unionByName(

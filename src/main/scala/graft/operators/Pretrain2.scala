@@ -162,7 +162,6 @@ object Pretrain2 {
     * embedding-store key index (the d189 lifecycle applies to it
     * verbatim) and the delta side is only the revised documents. */
   def t192EmbedCacheDiff(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val docs = Tables.documents(s, dir)
     val cache = chunkRows(docs, "text").select("h").distinct()
     val v2 = chunkRows(docs.filter(col("doc_id") % 4 === 0), editedTextExpr)

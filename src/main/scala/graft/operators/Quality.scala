@@ -85,7 +85,6 @@ object Quality {
     * divergence — a production profiler hashes a canonical per-type
     * decimal rendering instead. */
   def q110ColumnProfile(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val cols = Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment",
       "c_acctbal")
     // hash once per (row, column) in a codegen'd projection, then SPREAD
@@ -261,7 +260,7 @@ object Quality {
     * TextKernelExprsSpec), `ascii_count(…, 97, 122)` is the [a-z] count.
     * Integer counts are IDENTICAL to the old form (pinned by the spec), so
     * every downstream double is bit-identical and the DuckDB renderings
-    * below are untouched. Callers must have GraftFunctions.ensureRegistered.
+    * below are untouched. Callers need a GraftExtensions-installed session.
     *
     * The old `toks` parameter is retained for source compatibility; every
     * caller passes the shared whitespace-token expression over `text`,

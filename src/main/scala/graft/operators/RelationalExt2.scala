@@ -389,7 +389,6 @@ object RelationalExt2 {
     * across CASE branches). */
   private[operators] def groupSplitAssign(s: SparkSession,
                                           dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     Tables.documents(s, dir)
       .selectExpr("source", "size(split(lower(text), ' ')) AS n_tokens",
         "poly_hash(source) % 100 AS h")

@@ -535,7 +535,6 @@ object ShardPrep {
     * stage hands the next — which is where multi-stage pipelines actually
     * break (the q313 lesson applied to the batch shard path). */
   def t318PretrainE2e(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val toks = graft.functions.PortableHash.tokens
     // stage 1+2: re-crawl corpus → exact dedup (winner = min doc_id, so
     // every synthetic copy loses to its original and 'copy' rows vanish —

@@ -68,7 +68,6 @@ object Similarity {
     * expression instead of the interpreted higher-order-function fold —
     * bit-identical output (shares s38's oracle), measurably faster. */
   def s46AnnBruteNative(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     bruteTopK(s, dir, "cosine_sim(q.v, c.v)")
   }
 
@@ -107,7 +106,6 @@ object Similarity {
     * from an order-independent decimal mean, queries probe their 2 nearest
     * centroids, exact search only within probed cells. */
   def s39AnnIvf(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val cellExpr = signCellExpr
     val all = vecs(s, dir).selectExpr("vec_id", "v", s"$cellExpr AS cell")
       .persist(StorageLevel.MEMORY_AND_DISK) // feeds centroids, probes, and corpus side
@@ -192,7 +190,6 @@ object Similarity {
     * the quantizer needs retraining (the s137 drift check's actionable
     * form). */
   def s193IvfAdmit(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val cellExpr = signCellExpr
     val all = vecs(s, dir).selectExpr("vec_id", "v", s"$cellExpr AS sign_cell")
       .persist(StorageLevel.MEMORY_AND_DISK) // feeds centroid + batch sides
@@ -252,7 +249,6 @@ object Similarity {
     * [-1000, 1000] — reproducible in any engine, no RNG state
     * ([[graft.catalyst.LshBucket8]] carries the same formula). */
   def s40AnnLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     // the 8-plane signature (8×64 multiply-adds per vector) is the native
     // codegen'd LshBucket8 — index-ordered double sums, bit-identical to the
     // HOF fold and the oracle — and feeds both join sides, so persist to
@@ -316,7 +312,6 @@ object Similarity {
     * rank column is recomputed by a window AFTER the reduction, over the
     * already-tiny answer set. */
   def s48AnnTopkPlan(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val all = vecs(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
     val q = all.filter(col("vec_id") < 16).select(col("vec_id").as("qid"), col("v"))
     val scored = broadcast(q).as("q")
@@ -370,7 +365,6 @@ object Similarity {
     * Tie-break: equal distances resolve to the smaller center id, pinned in
     * the struct ordering. */
   def s132KmeansStep(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     // Persist lifetime contract: the returned plan is lazy, so the persist
     // cannot be released here — both gate runners (Verify/Bench) call
     // spark.catalog.clearCache() after each query's action, and library
@@ -435,7 +429,6 @@ object Similarity {
     * join — nothing downstream of the first aggregate scales with corpus
     * size. */
   def s137CentroidDrift(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     def cent(half: DataFrame) = half
       .select(col("label"), posexplode(col("v")).as(Seq("p", "x")))
       .groupBy("label", "p")
@@ -698,7 +691,6 @@ object Similarity {
     * evidence the two-stage structure exists. Both stages' cosines are
     * sequential double folds, bit-identical to the oracle. */
   def s188MatryoshkaRerank(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val w = org.apache.spark.sql.expressions.Window
     val all = vecs(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
     val q = all.filter(col("vec_id") < 16)

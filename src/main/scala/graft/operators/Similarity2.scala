@@ -100,7 +100,6 @@ object Similarity2 {
   /** Nearest-codeword assignment per (vec_id, m): `b.code` is the code,
     * `b.d2` the subspace reconstruction error. */
   private def pqAssign(sub: DataFrame, cb: DataFrame): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(sub.sparkSession)
     sub.as("s").join(broadcast(cb).as("b"), col("s.m") === col("b.m"))
       .selectExpr("vec_id", "s.m AS m", "code",
         "l2_sq(sv, cw) AS d2")
@@ -278,7 +277,6 @@ object Similarity2 {
     * onto different shortlist definitions. */
   private def hybridRetrieval(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     import org.apache.spark.sql.expressions.Window
     val toks = graft.Tables.documents(s, dir)
       .selectExpr("doc_id", "explode(split(lower(text), ' ')) AS t")
@@ -449,7 +447,6 @@ object Similarity2 {
     * oracle's list_reduce), max is order-independent, ranks tie-break on
     * nid, and all emitted floats round at 6. */
   def s197HardNegatives(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     import org.apache.spark.sql.expressions.Window
     val all = Similarity.vecs(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
     val anchors = all.filter(col("vec_id") < 25)
@@ -561,7 +558,6 @@ object Similarity2 {
     * qsv) query subvectors. */
   private[graft] def ivfpqSearch(queries: DataFrame, qsub: DataFrame,
       cent: DataFrame, cb: DataFrame, postings: DataFrame): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(queries.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val probes = broadcast(queries).as("q")
       .join(broadcast(cent).as("c"), lit(true))
@@ -793,7 +789,6 @@ object Similarity2 {
     * batch only — the standing corpus is never touched, O(batch × k). */
   private[graft] def freshAdmitPostings(batch: DataFrame, cent: DataFrame,
       cb: DataFrame): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(batch.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val batchCell = batch.select("vec_id", "v").as("q")
       .join(broadcast(cent).as("c"), lit(true))
@@ -971,7 +966,6 @@ object Similarity2 {
     * t291/t296 driver-solve split; nothing iterative touches the
     * corpus. */
   def s309MmrRerank(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val all = Similarity.vecs(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
     val qid = all.agg(min("vec_id")).head().getLong(0)
     val q = all.filter(col("vec_id") === qid).select(col("v"))
@@ -1086,7 +1080,6 @@ object Similarity2 {
     * stage. */
   def s314CrossencoderRerank(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val (toks, qt, fused) = hybridRetrieval(s, dir)
     // EAGER checkpoint of the 20-row fused shortlist, then BROADCAST joins
     // against it — r9's shape collected the ids to the driver and rebuilt
@@ -1212,7 +1205,6 @@ object Similarity2 {
     * 10-row list and its 10×9 sim matrix (metadata-sized — the s309/t296
     * driver-solve split). */
   def s315RagPipeline(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val reranked = s314CrossencoderRerank(s, dir)
       .selectExpr("doc_id", "score6 DIV 100L AS rel6").collect()
       .map(r => r.getLong(0) -> r.getLong(1))

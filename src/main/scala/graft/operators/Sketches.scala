@@ -55,7 +55,6 @@ object Sketches {
     * hash AND the estimate are exact values the DuckDB oracle re-derives:
     * a custom distributed aggregate verified bit-for-bit cross-engine. */
   def d62KmvDistinct(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     Tables.events(s, dir)
       .selectExpr("event_type", "user_id",
         "poly_hash(CAST(user_id AS STRING)) AS h")
@@ -107,7 +106,6 @@ object Sketches {
     * (one (key, fa·fb) aggregation, never materializing join rows) and
     * asserts the contract flags the oracle pins to TRUE. */
   def q119JoinSizeEstimate(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     import org.apache.spark.sql.Encoders
     val depth = 4; val width = 2048
     val a = Tables.lineitem(s, dir)
@@ -171,7 +169,6 @@ object Sketches {
     * exact quantiles ride along as the error column (the gate doubles as
     * an accuracy report, the s163-recall pattern). */
   def q191SketchQuantiles(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val k = 256
     val qsArr = "array(0.1D, 0.25D, 0.5D, 0.75D, 0.9D)"
     // ties on h (hash collisions) are broken by the unique event_id so the

@@ -575,7 +575,6 @@ object TableOps {
     * lakehouse stores next to its min/max stats for exactly the
     * high-cardinality point-lookup columns clustering can't serve. */
   def q307BloomSkipping(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val tmp = graft.SparkSupport.layoutArtifact("bloomidx", dir) { p =>
       Tables.lineitem(s, dir)
         .select("l_orderkey", "l_quantity", "l_extendedprice", "l_shipdate")

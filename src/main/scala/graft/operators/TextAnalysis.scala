@@ -46,7 +46,6 @@ object TextAnalysis {
     * combined into a single deterministic score — the heuristic filter a
     * pretraining pipeline runs before expensive dedup. */
   def t35Quality(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val stopArr = stopEn.map(w => s"'$w'").mkString("array(", ", ", ")")
     // r15-opt: native byte-scan kernels replace the HOF/regexp forms — the
     // old projection re-evaluated split(lower(text)) once per HOF (HOFs are
@@ -120,7 +119,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "de", "et", "que", "est"))
 
   def t36LangId(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     // r15-opt: stop_count / ascii_count natives replace 4 interpreted
     // filter(split(...)) passes (one per language profile) — counts are
     // integer-identical (TextKernelExprsSpec), ratios bit-identical.
@@ -173,7 +171,6 @@ object TextAnalysis {
     * the native codegen'd [[graft.catalyst.PolyHash]] (same arithmetic as the
     * HOF spec in [[graft.functions.PortableHash]]). */
   def t37Fingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     Tables.documents(s, dir)
       .selectExpr(
         "doc_id",
@@ -233,7 +230,6 @@ object TextAnalysis {
       piiPhone, "<PHONE>")
 
   def t303PiiScrub(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val email = piiEmail
     val ssn   = piiSsn
     Tables.documents(s, dir)

@@ -146,7 +146,6 @@ object TextRanking {
     * At 100 TB the blocked-pair verify is the hot loop of entity
     * resolution; the cutoff kernel is what makes it affordable. */
   def q133FuzzyNative(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val names = Tables.supplier(s, dir)
       .select(col("s_suppkey"), col("s_name"),
         expr("substring(s_name, length(s_name), 1)").as("block"))

@@ -59,7 +59,6 @@ object TrainingPrep {
     * text itself (the dedup/repeat-detection key downstream pipelines
     * want), so the shuffle/sort carries longs. */
   def q55DocChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     Tables.documents(s, dir)
       .selectExpr("doc_id", "split(lower(text), ' ') AS toks")
       .selectExpr("doc_id", "toks",

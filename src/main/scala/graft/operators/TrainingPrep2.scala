@@ -104,7 +104,6 @@ object TrainingPrep2 {
     * bound flags, so the oracle checks the sketch's CONTRACT exactly
     * even though the estimate itself is approximate. */
   def d85CmsHeavy(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val toks = Tables.documents(s, dir)
       .selectExpr("explode(split(text, ' ')) AS tok")
       .filter(length(col("tok")) > 0)

@@ -105,7 +105,6 @@ object TypedOps {
     * and shuffling the 1% that can match. 20_000 bits ≈ 1% fpp at the
     * 2_000-key estimate (the same sizing the old driver-side build used). */
   def q76BloomPrefilter(s: SparkSession, dir: String): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(s)
     val hot = Tables.customer(s, dir)
       .filter(col("c_acctbal") > 9000).select(col("c_custkey"))
     hot.createOrReplaceTempView("graft_q76_hot")

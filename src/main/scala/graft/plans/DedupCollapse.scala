@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max, Min}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -40,7 +39,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Runs on `spark.experimental.extraOptimizations` (after the main batches,
   * when `Deduplicate` has already been rewritten to a distinct-shaped
-  * `Aggregate`) — or via `graft.catalyst.GraftExtensions`.
+  * `Aggregate`) or as an injected rule — `graft.catalyst.GraftExtensions`
+  * installs it either way.
   */
 object DedupCollapseRule extends Rule[LogicalPlan] {
 
@@ -100,16 +100,5 @@ object DedupCollapseRule extends Rule[LogicalPlan] {
     case a: Aggregate if duplicateInsensitive(a) =>
       val stripped = strip(a.child)
       if (stripped eq a.child) a else a.copy(child = stripped)
-  }
-}
-
-/** One-stop idempotent registration of every graft optimizer extension on a
-  * session built without [[graft.catalyst.GraftExtensions]]. */
-object GraftOptimizations {
-  def ensure(spark: SparkSession): Unit = {
-    TopKRewrite.ensureOptimized(spark)
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(DedupCollapseRule))
-      spark.experimental.extraOptimizations = cur :+ DedupCollapseRule
   }
 }

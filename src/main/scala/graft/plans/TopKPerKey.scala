@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BaseOrdering, Descending, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -45,9 +45,10 @@ case class TopKPerKeyNode(
     copy(child = newChild)
 }
 
-/** Planner rule: logical node → partial/final exec pair. Registered through
-  * the PUBLIC `spark.experimental.extraStrategies` hook (no private session
-  * surgery), idempotently, by [[TopKPerKey.ensureRegistered]]. */
+/** Planner rule: logical node → partial/final exec pair. Registered by
+  * [[graft.catalyst.GraftExtensions]] — on a live session through the
+  * PUBLIC `spark.experimental.extraStrategies` hook (no private session
+  * surgery). */
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKeyNode(keys, order, k, child) =>
@@ -125,18 +126,10 @@ case class TopKPerKeyExec(
   * — top k rows per key, ordered by the given (column, ascending) specs. */
 object TopKPerKey {
 
-  /** Idempotent strategy registration on the session's PUBLIC experimental
-    * hook. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies = cur :+ TopKPerKeyStrategy
-  }
-
   def apply(df: DataFrame, keyCols: Seq[String],
             orderSpec: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
-    ensureRegistered(spark)
+    graft.catalyst.GraftExtensions.install(spark)
     val child = df.queryExecution.analyzed
     def attr(name: String): Attribute =
       child.output.find(_.name == name).getOrElse(

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -25,8 +24,8 @@ import org.apache.spark.sql.types.IntegerType
   * the bound is a positive integer literal. The guard on an already-rewritten
   * child makes the rule a fixpoint under the optimizer's repeated batches.
   *
-  * Registered via the PUBLIC `spark.experimental.extraOptimizations` hook
-  * ([[TopKPerKey.ensureOptimized]]); Spark's own WindowGroupLimit
+  * Registered by [[graft.catalyst.GraftExtensions]] (at session build, or
+  * on a live session through `install`); Spark's own WindowGroupLimit
   * optimization (3.5+) bounds rows per partition but still requires the
   * sort — this rule removes the sort itself.
   */
@@ -56,20 +55,4 @@ object TopKRewriteRule extends Rule[LogicalPlan] {
         case _ => f
       }
   }
-}
-
-object TopKRewrite {
-  /** Idempotently register BOTH the rewrite rule and the planning strategy
-    * on the session's public experimental hooks. */
-  def ensureOptimized(spark: SparkSession): Unit = {
-    TopKPerKey.ensureRegistered(spark)
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(TopKRewriteRule))
-      spark.experimental.extraOptimizations = cur :+ TopKRewriteRule
-  }
-
-  /** Remove the rule (for scoped use in shared sessions). */
-  def remove(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == TopKRewriteRule)
 }

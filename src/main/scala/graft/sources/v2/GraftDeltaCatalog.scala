@@ -83,9 +83,10 @@ class GraftDeltaCatalog extends TableCatalog
     catalogName = name
     // UPDATE / MERGE INTO plan through [[GraftDmlStrategy]]; catalogs
     // initialize lazily on first reference, so the active session is the
-    // one about to plan the statement (extensions-built sessions already
-    // carry the strategy — registration is idempotent either way)
-    GraftDmlStrategy.ensureRegistered(SparkSession.active)
+    // one about to plan the statement. Sessions configured with only this
+    // catalog (no extensions class) get the engine surface here;
+    // extensions-built sessions already carry it and install is a no-op.
+    graft.catalyst.GraftExtensions.install(SparkSession.active)
   }
 
   override def name(): String = catalogName

@@ -51,17 +51,6 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, V2Co
   */
 object GraftDmlStrategy extends SparkStrategy {
 
-  /** Idempotent imperative registration on a live session — the same
-    * dual-path contract as `GraftFunctions.ensureRegistered`: the
-    * extensions class injects this strategy at build time, and sessions
-    * built without it (the catalog-conf-only deployment) get it the
-    * first time the catalog initializes. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val em = spark.experimental
-    if (!em.extraStrategies.contains(GraftDmlStrategy))
-      em.extraStrategies = em.extraStrategies :+ GraftDmlStrategy
-  }
-
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case UpdateTable(rel, assignments, condition) =>
       graftTable(rel).map { t =>

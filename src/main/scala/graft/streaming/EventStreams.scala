@@ -136,7 +136,6 @@ object EventStreams {
     * probe the batch-built artifact directly. Works on static AND
     * streaming frames (stateless, no shuffle). */
   def bandKeys(docs: DataFrame): DataFrame = {
-    graft.catalyst.GraftFunctions.ensureRegistered(docs.sparkSession)
     import graft.functions.PortableHash.shingles
     docs.selectExpr("doc_id",
         s"transform(${shingles(3)}, sh -> poly_hash(sh)) AS hs")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthesize scaled copies of the sf0.1 corpus for the SCALING.md
@@ -36,15 +35,7 @@ object ScaleCorpus {
     val outRoot = args.lift(1).getOrElse("tmp/scale")
     val scales = args.lift(2).getOrElse("1,3,10")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.SparkSupport.scratchDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkSupport.session()
 
     scales.foreach { r =>
       val out = s"$outRoot/x$r"

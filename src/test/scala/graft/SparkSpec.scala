@@ -1,30 +1,58 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for suites. `caseSensitive=true` mirrors the
   * reference's load-bearing setting (mixed-case NCUA columns, SURVEY.md
-  * §1.3). One session per JVM (Test/fork := true gives each run its own). */
+  * §1.3). One session per JVM (Test/fork := true gives each run its own),
+  * with the engine surface installed as [[SparkEntry.queries]] does. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.caseSensitive", "true")
-    .config("spark.ui.enabled", "false")
-    // bound plan-string rendering: iterative algorithms (CC loops) can carry
-    // wide plans between checkpoints, and the listener's explainString of an
-    // unbounded tree is an OOM vector in a 4-core test JVM
-    .config("spark.sql.maxPlanStringLength", "100000")
-    .config("spark.local.dir", SparkSupport.scratchDir)
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.caseSensitive", "true")
+      .config("spark.ui.enabled", "false")
+      // bound plan-string rendering: iterative algorithms (CC loops) can carry
+      // wide plans between checkpoints, and the listener's explainString of an
+      // unbounded tree is an OOM vector in a 4-core test JVM
+      .config("spark.sql.maxPlanStringLength", "100000")
+      .config("spark.local.dir", SparkSupport.scratchDir)
+      .getOrCreate()
+    catalyst.GraftExtensions.install(s)
+    s
+  }
 
   override def afterAll(): Unit = {
     // keep the session for sibling suites in the same forked JVM
     super.afterAll()
   }
+
+  /** Runs `f` with the given session confs set, restoring them after. */
+  def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; f }
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** Plans and collects `df` with [[graft.plans.TopKRewriteRule]] excluded
+    * by name, asserting no TopKPerKey node is left. A row_number()<=k
+    * reference built here runs on the stock Window operator, so comparing
+    * against it checks TopKPerKey instead of running it on both sides. */
+  def collectWithoutTopKRewrite(df: => DataFrame): Array[Row] =
+    withSQLConf("spark.sql.optimizer.excludedRules" ->
+        graft.plans.TopKRewriteRule.ruleName) {
+      val ref = df
+      val plan = ref.queryExecution.executedPlan.toString
+      assert(!plan.contains("TopKPerKey"), s"the excluded rule still fired:\n$plan")
+      ref.collect()
+    }
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

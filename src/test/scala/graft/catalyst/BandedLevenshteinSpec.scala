@@ -43,7 +43,6 @@ class BandedLevenshteinSpec extends SparkSpec {
 
   test("expression matches built-in levenshtein in-plan (codegen path)") {
     import spark.implicits._
-    GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(7)
     val words = (1 to 500).map(_ =>
       (0 until 3 + rnd.nextInt(10)).map(_ => ('a' + rnd.nextInt(4)).toChar).mkString)
@@ -68,7 +67,6 @@ class BandedLevenshteinSpec extends SparkSpec {
     assert(BandedLevenshtein.compute("a😀b", "a😁b", 1) == 1)
     // cross-check the in-plan expression against the built-in on the same
     // strings (built-in operates on code points)
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val rows = Seq((script, "A"), (script + "BC", "ABC"),
         ("a😀b", "a😁b"))

@@ -16,7 +16,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("cosine_sim matches the higher-order-function formulation exactly") {
-    GraftFunctions.ensureRegistered(spark)
     val rows = df.selectExpr("id",
       "cosine_sim(a, b) AS native",
       """aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, x) -> acc + x) /
@@ -35,7 +34,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    GraftFunctions.ensureRegistered(spark)
     val base = df.selectExpr("id", "cosine_sim(a, b) AS c").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     withSQLConf("spark.sql.codegen.wholeStage" -> "false",
@@ -46,17 +44,7 @@ class CosineSimilaritySpec extends SparkSpec {
     }
   }
 
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; f }
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("null and length-mismatch semantics") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     // mismatch/null inputs yield NULL (no silent truncation); a zero norm
     // yields NaN exactly like the HOF twin and the DuckDB oracle — both
@@ -89,8 +77,8 @@ class CosineSimilaritySpec extends SparkSpec {
 
   test("registration is per-session and idempotent") {
     val s2 = spark.newSession()
-    GraftFunctions.ensureRegistered(s2)
-    GraftFunctions.ensureRegistered(s2) // second call must not throw
+    GraftExtensions.install(s2)
+    GraftExtensions.install(s2) // second call must not throw
     import s2.implicits._
     val v = Seq((Array(1.0, 0.0), Array(1.0, 0.0))).toDF("a", "b")
       .selectExpr("cosine_sim(a, b)").head().getDouble(0)

@@ -46,6 +46,16 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getLong(0) > 0 && r.getLong(1) >= 0)
   }
 
+  test("install adds nothing to a session built with the extensions class") {
+    val functions = spark.sessionState.functionRegistry.listFunction()
+    val rules = spark.experimental.extraOptimizations
+    val strategies = spark.experimental.extraStrategies
+    GraftExtensions.install(spark)
+    assert(spark.sessionState.functionRegistry.listFunction() == functions)
+    assert(spark.experimental.extraOptimizations == rules && rules.isEmpty)
+    assert(spark.experimental.extraStrategies == strategies && strategies.isEmpty)
+  }
+
   test("row_number top-k idiom re-plans to TopKPerKeyExec via the injected rule") {
     val s = spark
     import s.implicits._

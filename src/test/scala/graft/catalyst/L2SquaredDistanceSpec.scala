@@ -16,7 +16,6 @@ class L2SquaredDistanceSpec extends SparkSpec {
   }
 
   test("l2_sq matches the higher-order-function formulation bit-exactly") {
-    GraftFunctions.ensureRegistered(spark)
     val rows = df.selectExpr("id",
       "l2_sq(a, b) AS native",
       """aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0D,
@@ -33,7 +32,6 @@ class L2SquaredDistanceSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    GraftFunctions.ensureRegistered(spark)
     val base = df.selectExpr("id", "l2_sq(a, b) AS c").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     withSQLConf("spark.sql.codegen.wholeStage" -> "false",
@@ -45,7 +43,6 @@ class L2SquaredDistanceSpec extends SparkSpec {
   }
 
   test("null and length-mismatch semantics match zip_with's") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val rows = Seq(
       (1L, Some(Array(1.0, 0.0)), Some(Array(0.0, 0.0))),      // well-formed
@@ -64,15 +61,6 @@ class L2SquaredDistanceSpec extends SparkSpec {
     withSQLConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       assert(spark.sql(q).head().isNullAt(0))
-    }
-  }
-
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; f }
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 }

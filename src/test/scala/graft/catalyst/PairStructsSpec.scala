@@ -8,11 +8,6 @@ import org.scalacheck.Gen
   * long arrays, including duplicates, empty and 1-element buckets. */
 class PairStructsSpec extends SparkSpec {
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GraftFunctions.ensureRegistered(spark)
-  }
-
   private val hofForm =
     """flatten(transform(ids, (x, i) ->
       |  transform(slice(ids, i + 2, size(ids) - i - 1),

@@ -20,11 +20,6 @@ class PortableHashExprsSpec extends SparkSpec {
     }
   }
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GraftFunctions.ensureRegistered(spark)
-  }
-
   test("poly_hash matches the HOF char fold on generated strings") {
     import spark.implicits._
     val strGen = Gen.listOfN(25, Gen.oneOf(
@@ -107,7 +102,6 @@ class PortableHashExprsSpec extends SparkSpec {
     // GenericArrayData while codegen over UnsafeArrayData silently reads
     // the null slot as 0 — the two paths the design promises are
     // bit-identical would diverge
-    GraftFunctions.ensureRegistered(spark)
     val exprs = Seq(
       "simhash30(array(CAST(7 AS BIGINT), CAST(NULL AS BIGINT)))",
       "minhash16(array(CAST(7 AS BIGINT), CAST(NULL AS BIGINT)))",

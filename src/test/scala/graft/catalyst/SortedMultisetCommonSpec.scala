@@ -10,11 +10,6 @@ import org.scalacheck.Gen
   * min(), because the oracle scores candidate pairs with a posting join. */
 class SortedMultisetCommonSpec extends SparkSpec {
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GraftFunctions.ensureRegistered(spark)
-  }
-
   private def joinCount(a: Seq[Long], b: Seq[Long]): Long = {
     val cb = b.groupBy(identity).view.mapValues(_.size.toLong).toMap
     a.map(v => cb.getOrElse(v, 0L)).sum

@@ -21,11 +21,6 @@ class TextKernelExprsSpec extends SparkSpec {
     }
   }
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GraftFunctions.ensureRegistered(spark)
-  }
-
   // adversarial corpus: spaces in every position, unicode incl. astral
   private val textGen: Gen[List[String]] = Gen.listOfN(40, Gen.oneOf(
     Gen.alphaNumStr.map(_.take(40)),

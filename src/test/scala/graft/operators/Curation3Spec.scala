@@ -177,7 +177,6 @@ class Curation3Spec extends SparkSpec {
     "adversarial DISTINCT indexes; duplicate (doc, h) postings defeat the " +
     "bounds and the build REFUSES them (VERDICT r15 item 7)") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.ensureRegistered(spark)
     import org.apache.spark.sql.expressions.Window
     def annotate(rows: org.apache.spark.sql.DataFrame) = {
       // exactly the production build's annotation: df = ROWS per hash,

@@ -57,7 +57,6 @@ class PretrainSpec extends SparkSpec {
 
   test("semdedup: no semantic-duplicate pair survives with both members " +
     "kept, and only pair members are ever dropped") {
-    graft.catalyst.GraftFunctions.ensureRegistered(spark)
     val dropped = Pretrain.d155SemDedup(spark, dir).cache()
     // rebuild the cell-blocked >= 0.98 pair set independently (d33's kernel)
     val base = graft.Tables.embeddings(spark, dir)

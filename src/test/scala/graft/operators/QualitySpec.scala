@@ -56,7 +56,6 @@ class QualitySpec extends SparkSpec {
     // estimate must be within the ~6% design error of k=256 and EXACTLY
     // reproducible from the k-th smallest hash (what the DuckDB oracle
     // re-derives)
-    graft.catalyst.GraftFunctions.ensureRegistered(spark)
     val spread = graft.functions.PortableHash.kmvSpread("poly_hash(v)")
     val df = (1 to 1000).map(_.toString).toDF("v")
       .selectExpr(s"coalesce($spread, -1L) AS h")

@@ -5,14 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The optimizer rule rewrites the untouched window idiom into the custom
-  * operator — same results, different physics. The rule is registered only
-  * within this suite (shared session) and removed after. */
+  * operator — same results, different physics. The shared session always
+  * carries the rule; the rule-off baseline excludes it by name. */
 class TopKRewriteSpec extends SparkSpec {
-
-  override def afterAll(): Unit = {
-    TopKRewrite.remove(spark)
-    super.afterAll()
-  }
 
   private lazy val df = {
     import spark.implicits._
@@ -26,8 +21,8 @@ class TopKRewriteSpec extends SparkSpec {
       .filter(col("rn") <= k)
 
   test("rule rewrites row_number<=k into TopKPerKey and preserves results") {
-    val before = idiom(3).collect().map(_.toSeq).sortBy(_.toString).toSeq
-    TopKRewrite.ensureOptimized(spark)
+    val before = collectWithoutTopKRewrite(idiom(3))
+      .map(_.toSeq).sortBy(_.toString).toSeq
     val plan = idiom(3).queryExecution.executedPlan.toString
     assert(plan.contains("TopKPerKeyPartial"), s"rewrite did not fire:\n$plan")
     val after = idiom(3).collect().map(_.toSeq).sortBy(_.toString).toSeq
@@ -35,7 +30,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("rule leaves rank() and multi-window plans alone") {
-    TopKRewrite.ensureOptimized(spark)
     val w = Window.partitionBy("key").orderBy(col("score").desc, col("id"))
     val rankPlan = df.withColumn("r", rank().over(w)).filter(col("r") <= 3)
       .queryExecution.executedPlan.toString
@@ -49,7 +43,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("rn = 1 (argmax idiom) rewrites with k = 1") {
-    TopKRewrite.ensureOptimized(spark)
     val out = df.withColumn("rn", row_number().over(
         Window.partitionBy("key").orderBy(col("score").desc, col("id"))))
       .filter(col("rn") === 1)

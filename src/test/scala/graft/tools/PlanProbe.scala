@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev diagnostic (test scope, never shipped): per-query job/stage/task
   * counts and warm min-of-3 timings for named gate queries — the numbers
   * behind SURVEY §9's stage-floor decompositions. Usage:
@@ -17,17 +15,7 @@ object PlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.SparkSupport.scratchDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkSupport.session()
 
     @volatile var jobs = 0
     @volatile var stages = 0

@@ -5,10 +5,27 @@
 # this script makes "compile green before snapshot" mechanical.
 #
 # Usage: tools/preflight.sh [--test]
-#   default : sbt compile + Test/compile (fast, the r9 failure class)
+#   default : session/install guard + sbt compile + Test/compile (fast, the
+#             r9 failure class)
 #   --test  : additionally runs the full ScalaTest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+# One session factory (graft.SparkSupport.session) and one engine install
+# (graft.catalyst.GraftExtensions.install): a second builder or a revived
+# per-call registration helper lets session conf and plans drift by caller.
+echo "[preflight] session/install guard"
+builders=$(grep -rn 'SparkSession\.builder' src/main \
+  | grep -v '^src/main/scala/graft/SparkSupport\.scala:' || true)
+helpers=$(grep -rnE '\bensureRegistered\(|\bensureOptimized\b|\bGraftOptimizations\b' \
+  src || true)
+if [[ -n "$builders$helpers" ]]; then
+  [[ -n "$builders" ]] && echo "SparkSession.builder outside SparkSupport.session:" \
+    && echo "$builders"
+  [[ -n "$helpers" ]] && echo "per-call registration helper (use GraftExtensions.install):" \
+    && echo "$helpers"
+  exit 1
+fi
 
 echo "[preflight] sbt compile + Test/compile"
 sbt -batch compile Test/compile
