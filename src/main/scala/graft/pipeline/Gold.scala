@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Gold-layer publication tables — pure transforms over the conformed silver
@@ -60,13 +60,33 @@ object Gold {
     assetsDepositsRows(silver)
       .repartition(col("year"), col("quarter"), col("state"))
 
+  /** The wide tables' pivot column: the quarter date as `yyyy-MM-dd`. */
+  private def quarterLabel: Column =
+    date_format(col("quarter_date"), "yyyy-MM-dd").as("qd")
+
+  /** The distinct quarter labels of `silver`, ascending with null first —
+    * the values Spark's implicit `pivot("qd")` would discover, from one
+    * `distinct().collect()` (2 jobs) instead of its distinct-limit-sort
+    * (4 jobs). Fails above `spark.sql.pivotMaxValues` as that pivot does.
+    * The labels are ASCII, so String order is Spark's byte order. */
+  def quarters(silver: DataFrame): Seq[String] = {
+    val qs = silver.select(quarterLabel).distinct().collect().map(_.getString(0))
+    val maxValues = silver.sparkSession.conf.get("spark.sql.pivotMaxValues").toInt
+    if (qs.length > maxValues)
+      throw new AnalysisException("_LEGACY_ERROR_TEMP_1324", Map(
+        "pivotColumn" -> "qd", "maxValues" -> maxValues.toString,
+        "config" -> "spark.sql.pivotMaxValues"))
+    qs.toSeq.sortBy(Option(_))
+  }
+
   /** `quarterly_assets_table` / `quarterly_deposits_table`
     * (BuildGoldLayer.py:92-139,183-209): one date-named column per distinct
     * quarter, via native pivot.
     *
-    * `quarters` pins the pivot values: pass the known quarter list to keep
-    * the plan fully deterministic and skip the extra distinct scan; pass
-    * None to discover them (one cheap distinct over a single column).
+    * `quarters` pins the pivot values: pass the known quarter list (one
+    * [[quarters]] call serves both wide tables of a refresh) to keep the
+    * plan fully deterministic and skip the extra distinct scan; pass None
+    * to discover them here with [[quarters]].
     * `max` (not `first`) aggregates the at-most-one value per
     * (charter, type, name, quarter) cell so the result is order-independent
     * even if silver ever carried a duplicate key (SURVEY.md §7.3.5).
@@ -76,12 +96,9 @@ object Gold {
                     quarters: Option[Seq[String]] = None): DataFrame = {
     val keyed = silver.select(
       col("charter_number"), col("institution_type"), col("name"),
-      date_format(col("quarter_date"), "yyyy-MM-dd").as("qd"), col(valueCol))
-    val grouped = keyed.groupBy("charter_number", "institution_type", "name")
-    val pivoted = quarters match {
-      case Some(qs) => grouped.pivot("qd", qs)
-      case None     => grouped.pivot("qd")
-    }
+      quarterLabel, col(valueCol))
+    val pivoted = keyed.groupBy("charter_number", "institution_type", "name")
+      .pivot("qd", quarters.getOrElse(Gold.quarters(silver)))
     selectSortDatedCols(
       pivoted.agg(max(col(valueCol))),
       Seq("charter_number", "institution_type", "name"))

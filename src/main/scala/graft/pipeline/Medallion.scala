@@ -100,17 +100,19 @@ object Medallion {
 
   /** Gold layer end-to-end (update_gold_layer, BuildGoldLayer.py:212-237).
     * Silver is read once and cached across the four tables — the reference
-    * re-scans it up to N+2 times per wide table (SURVEY.md §4.3). */
+    * re-scans it up to N+2 times per wide table (SURVEY.md §4.3) — and the
+    * pivot quarters are discovered once for both wide tables. */
   def updateGoldLayer(spark: SparkSession, paths: LayerPaths): Unit = {
     val silver = readSilver(spark, paths).cache()
     try {
+      val qs = Some(Gold.quarters(silver))
       writeGoldPartitioned(Gold.institutionDirectoryByType(silver),
         paths.gold("institution_directory_by_type"), Seq("institution_type", "state"))
       writeGoldPartitioned(Gold.assetsDepositsByState(silver),
         paths.gold("assets_deposits_by_state"), Seq("year", "quarter", "state"))
-      writeGoldWide(Gold.quarterlyWide(silver, "assets_total"),
+      writeGoldWide(Gold.quarterlyWide(silver, "assets_total", qs),
         paths.gold("quarterly_assets_table"))
-      writeGoldWide(Gold.quarterlyWide(silver, "deposits_total"),
+      writeGoldWide(Gold.quarterlyWide(silver, "deposits_total", qs),
         paths.gold("quarterly_deposits_table"))
     } finally silver.unpersist()
   }
@@ -127,15 +129,16 @@ object Medallion {
   def updateGoldLayerDelta(spark: SparkSession, paths: LayerPaths): Unit = {
     val silver = readSilver(spark, paths).cache()
     try {
+      val qs = Some(Gold.quarters(silver))
       writeGoldPartitionedDelta(spark, Gold.institutionDirectoryByType(silver),
         paths.gold("institution_directory_by_type"),
         Seq("institution_type", "state"))
       writeGoldPartitionedDelta(spark, Gold.assetsDepositsByState(silver),
         paths.gold("assets_deposits_by_state"),
         Seq("year", "quarter", "state"))
-      writeGoldWideDelta(spark, Gold.quarterlyWide(silver, "assets_total"),
+      writeGoldWideDelta(spark, Gold.quarterlyWide(silver, "assets_total", qs),
         paths.gold("quarterly_assets_table"))
-      writeGoldWideDelta(spark, Gold.quarterlyWide(silver, "deposits_total"),
+      writeGoldWideDelta(spark, Gold.quarterlyWide(silver, "deposits_total", qs),
         paths.gold("quarterly_deposits_table"))
     } finally silver.unpersist()
   }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.zip.CRC32
 
 /** Delta-protocol DELETION VECTORS, jar-free: the on-disk formats a
@@ -222,6 +222,25 @@ object DeletionVectors {
                         offset: Option[Int], sizeInBytes: Int,
                         cardinality: Long)
 
+  /** The sidecar file a "u" or "p" descriptor points at; None for an
+    * inline ("i") vector. */
+  def sidecarPath(table: String, d: Descriptor): Option[Path] =
+    d.storageType match {
+      case "p" => Some(Paths.get(d.pathOrInlineDv))
+      case "u" =>
+        // "u": [optional random prefix dirs]<20-char z85 UUID>;
+        // the file lives at <prefix>/deletion_vector_<uuid>.bin
+        val enc = d.pathOrInlineDv
+        val (prefix, u) = enc.splitAt(enc.length - 20)
+        val bytes = z85Decode(u)
+        val bb = ByteBuffer.wrap(bytes)
+        val uuid = new java.util.UUID(bb.getLong, bb.getLong)
+        val name = s"deletion_vector_$uuid.bin"
+        Some(if (prefix.isEmpty) Paths.get(table, name)
+             else Paths.get(table, prefix, name))
+      case _ => None
+    }
+
   /** Resolve and load a descriptor's deleted row indices (sorted). */
   def load(table: String, d: Descriptor): Array[Long] = {
     val data = d.storageType match {
@@ -229,20 +248,7 @@ object DeletionVectors {
         val bytes = z85Decode(d.pathOrInlineDv)
         bytes.take(d.sizeInBytes) // z85 pads to 4-byte groups
       case "u" | "p" =>
-        val path = d.storageType match {
-          case "p" => Paths.get(d.pathOrInlineDv)
-          case _ =>
-            // "u": [optional random prefix dirs]<20-char z85 UUID>;
-            // the file lives at <prefix>/deletion_vector_<uuid>.bin
-            val enc = d.pathOrInlineDv
-            val (prefix, u) = enc.splitAt(enc.length - 20)
-            val bytes = z85Decode(u)
-            val bb = ByteBuffer.wrap(bytes)
-            val uuid = new java.util.UUID(bb.getLong, bb.getLong)
-            val name = s"deletion_vector_$uuid.bin"
-            if (prefix.isEmpty) Paths.get(table, name)
-            else Paths.get(table, prefix, name)
-        }
+        val path = sidecarPath(table, d).get
         val all = Files.readAllBytes(path)
         require(all.nonEmpty && all(0) == 1,
           s"deletion vector file $path: unknown format version " +

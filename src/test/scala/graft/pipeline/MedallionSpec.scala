@@ -223,6 +223,142 @@ class MedallionSpec extends SparkSpec {
     assert(qa.count() == 2)
   }
 
+  /** Three quarters of conforming silver; charter 2 misses the last
+    * quarter, so the wide tables' na.drop removes it. */
+  private def goldFixture(): LayerPaths = {
+    import spark.implicits._
+    val p = LayerPaths(tmpDir("medallion_gold_jobs"))
+    val rows = for {
+      (cn, city, name, state, web, kind) <- Seq(
+        (1, "Richmond", "FIRST BANK", "Virginia", "www.first.com", "bank"),
+        (2, "Austin", "SECOND BANK", "Texas", "Not Provided", "bank"),
+        (100, "Vienna", "NAVY FEDERAL", "Virginia", "navyfederal.org", "credit union"))
+      (q, i) <- Seq("2020-03-31", "2020-06-30", "2020-09-30").zipWithIndex
+      if !(cn == 2 && i == 2)
+    } yield (cn, city, name, Date.valueOf(q), state, web,
+      1000L * cn + 10 * i, 800L * cn + 10 * i, kind)
+    Medallion.writeSilver(rows.toDF(Schemas.silver.fieldNames.toIndexedSeq: _*), p)
+    p
+  }
+
+  private val goldTables = Seq("institution_directory_by_type",
+    "assets_deposits_by_state", "quarterly_assets_table", "quarterly_deposits_table")
+
+  /** Version 0's metaData schemaString and first add path of a gold table. */
+  private def exported(table: String): (String, String) = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val actions = Files.readAllLines(Paths.get(table, "_delta_log", f"${0L}%020d.json"))
+      .toArray.map(l => mapper.readValue(l.toString, classOf[java.util.Map[String, AnyRef]]))
+    def field(action: String, key: String): String = actions
+      .flatMap(a => Option(a.get(action))).head
+      .asInstanceOf[java.util.Map[String, AnyRef]].get(key).asInstanceOf[String]
+    (field("metaData", "schemaString"), field("add", "path"))
+  }
+
+  /** The schema Spark infers for one add (a schema-inference job), with
+    * partition columns discovered Hive-style below the stage prefix. */
+  private def inferred(table: String, add: String): String = {
+    val prefix = add.split('/').dropRight(1).takeWhile(!_.contains('='))
+    val reader = if (add.split('/').dropRight(1).length == prefix.length) spark.read
+      else spark.read.option("basePath", (table +: prefix).mkString("/"))
+    reader.parquet(s"$table/$add").schema.json
+  }
+
+  test("gold wide tables from one quarter discovery equal Spark's implicit " +
+    "pivot: same columns in the same order, same rows") {
+    import org.apache.spark.sql.functions._
+    val p = goldFixture()
+    Medallion.updateGoldLayerDelta(spark, p)
+    val silver = Medallion.readSilver(spark, p)
+    assert(Gold.quarters(silver) == Seq("2020-03-31", "2020-06-30", "2020-09-30"))
+    Seq("quarterly_assets_table" -> "assets_total",
+      "quarterly_deposits_table" -> "deposits_total").foreach { case (t, v) =>
+      val implicitPivot = Gold.selectSortDatedCols(
+        silver.select(col("charter_number"), col("institution_type"), col("name"),
+            date_format(col("quarter_date"), "yyyy-MM-dd").as("qd"), col(v))
+          .groupBy("charter_number", "institution_type", "name").pivot("qd")
+          .agg(max(col(v))),
+        Seq("charter_number", "institution_type", "name")).na.drop()
+      val got = graft.sources.DeltaBridge.read(spark, p.gold(t))
+      assert(got.columns.toSeq == implicitPivot.columns.toSeq, t)
+      assert(got.collect().toSet == implicitPivot.collect().toSet, t)
+      assert(got.count() == 2, s"$t: charter 2 lacks a quarter and is dropped")
+    }
+  }
+
+  test("Gold.quarters keeps a null quarter first and fails above " +
+    "spark.sql.pivotMaxValues as the implicit pivot does") {
+    import spark.implicits._
+    val silver = Seq(Some("2020-06-30"), None, Some("2020-03-31"), Some("2020-06-30"))
+      .map(_.map(Date.valueOf)).toDF("quarter_date")
+    assert(Gold.quarters(silver) == Seq(null, "2020-03-31", "2020-06-30"))
+    withSQLConf("spark.sql.pivotMaxValues" -> "2") {
+      val ours = intercept[org.apache.spark.sql.AnalysisException](Gold.quarters(silver))
+      val spark4 = intercept[org.apache.spark.sql.AnalysisException](
+        silver.select(org.apache.spark.sql.functions.date_format($"quarter_date", "yyyy-MM-dd")
+          .as("qd")).groupBy().pivot("qd").count())
+      assert(ours.getMessage == spark4.getMessage)
+    }
+  }
+
+  test("exported gold schemaStrings equal the schema-inference path, and " +
+    "a footer without Spark metadata falls back to inference") {
+    val p = goldFixture()
+    Medallion.updateGoldLayerDelta(spark, p)
+    goldTables.foreach { t =>
+      val (schemaString, add) = exported(p.gold(t))
+      assert(schemaString == inferred(p.gold(t), add), t)
+    }
+    // a foreign writer's file: parquet's example writer stores no Spark schema
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+    import org.apache.parquet.schema.MessageTypeParser
+    val t = tmpDir("foreign_footer")
+    val file = new org.apache.hadoop.fs.Path(s"$t/stage-foreign/part-0.parquet")
+    val conf = spark.sessionState.newHadoopConf()
+    val msg = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional binary name (UTF8); }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
+      .withType(msg).withConf(conf).build()
+    try w.write(new SimpleGroupFactory(msg).newGroup().append("id", 1L).append("name", "a"))
+    finally w.close()
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try assert(!r.getFooter.getFileMetaData.getKeyValueMetaData
+      .containsKey("org.apache.spark.sql.parquet.row.metadata"))
+    finally r.close()
+    graft.sources.TxLog.commit(t, Seq("stage-foreign/part-0.parquet"), Seq.empty)
+    graft.sources.DeltaBridge.exportLog(spark, t)
+    val (schemaString, add) = exported(t)
+    assert(schemaString == inferred(t, add))
+    assert(graft.sources.DeltaBridge.read(spark, t).collect().map(_.getString(1)).toSeq == Seq("a"))
+  }
+
+  test("updateGoldLayerDelta runs an exact number of jobs: no implicit " +
+    "pivot discovery and no schema-inference job at export") {
+    val p = goldFixture()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftSchedulerBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Medallion.updateGoldLayerDelta(spark, p)
+      org.apache.spark.GraftSchedulerBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() == GoldDeltaJobs, s"updateGoldLayerDelta ran ${jobs.get()} jobs")
+  }
+
+  /** Jobs of one `updateGoldLayerDelta` on [[goldFixture]]: the four
+    * tables' writes plus one two-job quarter discovery. Spark's implicit
+    * pivot would instead run 4 jobs for each wide table, and a schema
+    * inference at export 1 more per exported version. */
+  private val GoldDeltaJobs = 14
+
   test("bronze parquet append accumulates quarterly loads (K1)") {
     val p = s"${tmpDir("append")}/t"
     import spark.implicits._
