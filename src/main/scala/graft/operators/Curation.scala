@@ -56,7 +56,7 @@ object Curation {
         .selectExpr("doc_id", "poly_hash(g) AS h")
         .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(gramPath)
+    Tables.parquet(s, gramPath)
   }
 
   def t92Contamination(s: SparkSession, dir: String): DataFrame = {

@@ -134,7 +134,7 @@ object Dedup {
         .select("doc_id", "h", "df", "ns", "pos")
         .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
 
@@ -163,7 +163,7 @@ object Dedup {
           count(lit(1)).as("ns"))
         .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** Attach both docs' shingle-set sizes and score Jaccard from the
@@ -886,7 +886,7 @@ object Dedup {
     val path = graft.SparkSupport.layoutArtifact("band_idx", dir) { p =>
       bandsOf(shingleIndex(s, dir)).write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** d185: incremental MinHash+LSH across a TRUE snapshot boundary — d142's
@@ -1024,7 +1024,7 @@ object Dedup {
           .write.parquet(s"$p/delta_gen$g")
       }
       g1.unpersist()
-      s.read.parquet((0 to 2).map(g => s"$p/delta_gen$g"): _*)
+      Tables.parquet(s, (0 to 2).map(g => s"$p/delta_gen$g"): _*)
         .repartition(4, col("band_key"))
         .sortWithinPartitions("band_key")
         .write.parquet(s"$p/compact")
@@ -1053,7 +1053,7 @@ object Dedup {
     * semi-join-reduced shingle rows. */
   def d189AdmitCompact(s: SparkSession, dir: String): DataFrame = {
     val root = admittedBandIndex(s, dir)
-    val index = s.read.parquet(s"$root/gen0", s"$root/compact")
+    val index = Tables.parquet(s, s"$root/gen0", s"$root/compact")
       .withColumnRenamed("doc_id", "idx_id")
     val histShingles = shingleIndex(s, dir)
     // the batch re-ingests unchanged content under fresh keys, so the
@@ -1149,7 +1149,7 @@ object Dedup {
         .select("id1", "id2", "jac")
         .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** d30's exact-Jaccard pair list (J ≥ 0.2) as a PERSISTED corpus
@@ -1162,7 +1162,7 @@ object Dedup {
       d30NgramJaccard(s, dir).select("id1", "id2", "jac")
         .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** d143: train/test split LEAKAGE AUDIT — the check a training pipeline
@@ -1329,7 +1329,7 @@ object Dedup {
         .select("h")
         .write.mode("overwrite").parquet(p)
     }
-    val shared = s.read.parquet(sharedPath)
+    val shared = Tables.parquet(s, sharedPath)
     grams.join(shared, "h")
       .groupBy("doc_id")
       .agg(sort_array(collect_list(col("pos"))).as("ps"))

@@ -326,7 +326,7 @@ object DupClusters {
           standingPairs.select(col("id1").as("src"), col("id2").as("dst")))
         .write.mode("overwrite").parquet(p)
     }
-    val labels = s.read.parquet(path)
+    val labels = Tables.parquet(s, path)
     val newPairs = pairs
       .filter(col("id1") % 7 === 0 || col("id2") % 7 === 0)
     incrementalRepair(labels, newPairs, batchPred = "id % 7 = 0")

@@ -113,7 +113,7 @@ object GraphOps2 {
         .write.parquet(s"$p/edges")
       java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "_SUCCESS"))
     }
-    s.read.parquet(s"$root/edges")
+    Tables.parquet(s, s"$root/edges")
   }
 
   def q148Pagerank3(s: SparkSession, dir: String): DataFrame =

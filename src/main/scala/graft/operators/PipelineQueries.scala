@@ -129,7 +129,7 @@ object PipelineQueries {
     val path = graft.SparkSupport.layoutArtifact("silver", dir) { p =>
       silverUnified(s, dir).write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   def p25SilverUnified(s: SparkSession, dir: String): DataFrame =

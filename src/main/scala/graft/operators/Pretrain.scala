@@ -191,7 +191,7 @@ object Pretrain {
         .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
         .write.mode("overwrite").parquet(p)
     }
-    val carriers = s.read.parquet(carrierPath)
+    val carriers = Tables.parquet(s, carrierPath)
     val flagged = grams.join(carriers, "h")
       .selectExpr("doc_id", "pos", "CAST(mn <> mx AS INT) AS isdup")
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -607,7 +607,7 @@ object RelationalExt3 {
       // the DV deletes rows with key % 10 == 4 (all even) BY ROW INDEX —
       // positions read back from the staged file itself, so the gate's
       // oracle predicate and the DV describe the same rows
-      val deleted = s.read.parquet(s"$p/$f1")
+      val deleted = Tables.parquet(s, s"$p/$f1")
         .select(col("_metadata.row_index"), col("col-k"))
         .filter(col("col-k") % 10 === 4)
         .collect().map(_.getLong(0)).sorted

@@ -174,7 +174,7 @@ object ScalePatterns {
   /** The pruned read (separate so the spec can assert the scan's
     * PartitionFilters after the layout exists). */
   def partitionPrunedScan(s: SparkSession, tmp: String): DataFrame =
-    s.read.parquet(tmp)
+    graft.Tables.parquet(s, tmp)
       .filter(col("event_type") === "click")
       .groupBy(col("user_id") % 10)
       .agg(count(lit(1)).as("n"),

@@ -94,7 +94,7 @@ object TableOps {
     }
     // min/max rendered as sortable strings — collect-side types then don't
     // depend on the parquet timestamp flavor (NTZ vs LTZ)
-    val stats = s.read.parquet(tmp)
+    val stats = Tables.parquet(s, tmp)
       .groupBy(input_file_name().as("f"))
       .agg(date_format(min("l_shipdate"), "yyyy-MM-dd HH:mm:ss").as("lo"),
         date_format(max("l_shipdate"), "yyyy-MM-dd HH:mm:ss").as("hi"))
@@ -106,7 +106,7 @@ object TableOps {
       .map(_.getString(0))
     require(keep.nonEmpty && keep.length < stats.length,
       s"skipping index kept ${keep.length}/${stats.length} files")
-    s.read.parquet(keep.toIndexedSeq: _*)
+    Tables.parquet(s, keep.toIndexedSeq: _*)
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1996-07-01").cast("timestamp"))
       .groupBy("l_returnflag")
@@ -155,11 +155,11 @@ object TableOps {
     val totalBytes = files.map(_.getLen).sum
     val targetFileBytes = math.max(totalBytes / 4, 1L << 20)
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    s.read.parquet(frag).repartition(nOut)
+    Tables.parquet(s, frag).repartition(nOut)
       .write.mode("overwrite").parquet(comp)
     val outFiles = fs.listStatus(new org.apache.hadoop.fs.Path(comp))
       .count(_.getPath.getName.endsWith(".parquet"))
-    s.read.parquet(comp)
+    Tables.parquet(s, comp)
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"),
         OracleSafe.dsum(col("o_totalprice")).as("total"),
@@ -205,7 +205,7 @@ object TableOps {
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .write.mode("append").parquet(p)
     }
-    s.read.option("mergeSchema", "true").parquet(tmp)
+    Tables.parquet(s, Map("mergeSchema" -> "true"), tmp)
       .groupBy(coalesce(col("o_orderpriority"), lit("<pre-evolution>"))
         .as("priority"))
       .agg(count(lit(1)).as("n"),
@@ -599,13 +599,13 @@ object TableOps {
     // small-SF behavior identical to the previous fixed 50000/400000
     // sizing, and the max(..., 50000) floor also covers an empty layout
     // (max over zero rows is NULL → treated as 0).
-    val maxRowsRow = s.read.parquet(tmp)
+    val maxRowsRow = Tables.parquet(s, tmp)
       .groupBy(input_file_name()).count()
       .agg(max("count")).head()
     val maxFileRows = if (maxRowsRow.isNullAt(0)) 0L else maxRowsRow.getLong(0)
     val expectedItems = math.max(50000L, maxFileRows)
     val numBits = 8L * expectedItems
-    val index = s.read.parquet(tmp)
+    val index = Tables.parquet(s, tmp)
       .groupBy(input_file_name().as("f"))
       .agg(expr(s"bloom_filter_agg(l_orderkey, CAST($expectedItems AS " +
         s"BIGINT), CAST($numBits AS BIGINT))").as("bf"))
@@ -617,7 +617,7 @@ object TableOps {
     }.map(_.getString(0))
     require(keep.nonEmpty && keep.length < index.length,
       s"bloom index kept ${keep.length}/${index.length} files — no skipping")
-    s.read.parquet(keep.toIndexedSeq: _*)
+    Tables.parquet(s, keep.toIndexedSeq: _*)
       .filter(col("l_orderkey").isInCollection(probes))
       .groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("n"),

@@ -33,7 +33,7 @@ object Bronze {
   /** S4 + the ACCT_671 poison-column drop at the read edge
     * (BuildSilverLayer.py:126, SURVEY.md §2.14.5). */
   def readFs220(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("ACCT_671")
+    graft.Tables.parquet(spark, path).drop("ACCT_671")
 
   /** K1: bronze parquet append — quarterly loads accumulate
     * (BuildBronzeLayer.py:80-97,116-143). */

@@ -88,9 +88,9 @@ object Medallion {
       Bronze.readBronze(spark, paths.bronze("institutions"), Schemas.bankInstitutions))
     val fin = Silver.cleanseBankFinancials(
       Bronze.readBronze(spark, paths.bronze("financials"), Schemas.bankFinancials))
-    val foicu = Silver.cleanseFoicu(spark.read.parquet(paths.bronze("foicu")))
+    val foicu = Silver.cleanseFoicu(graft.Tables.parquet(spark, paths.bronze("foicu")))
     val fs220 = Silver.cleanseFs220(Bronze.readFs220(spark, paths.bronze("fs220")))
-    val fs220d = Silver.cleanseFs220d(spark.read.parquet(paths.bronze("fs220d")))
+    val fs220d = Silver.cleanseFs220d(graft.Tables.parquet(spark, paths.bronze("fs220d")))
     val silver = Silver.unified(
       Silver.bankData(inst, fin),
       Silver.creditUnionData(foicu, fs220d, fs220),

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.Tables.{Stamp, stamps}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
@@ -131,6 +132,8 @@ object DeltaBridge {
     val vs = TxLog.versions(table)
     require(vs.nonEmpty, s"exportLog: $table has no commits")
     Files.createDirectories(deltaLogDir(table))
+    // one Hadoop conf for every footer this export opens
+    val footerConf = spark.sessionState.newHadoopConf()
 
     // one table id across re-exports: version files are immutable, so a
     // later export extending the log must agree with version 0's id and
@@ -175,12 +178,13 @@ object DeltaBridge {
       val partNames = pvs.map(_._1.toLowerCase).toSet
       val stored = footer.flatMap(sparkSchemaOf)
         .filterNot(_.fieldNames.exists(n => partNames.contains(n.toLowerCase)))
-      val reader = stored.foldLeft(spark.read)(_ schema _)
-      if (pvs.isEmpty) reader.parquet(s"$table/$p").schema.json
-      else {
-        val bp = if (prefix.isEmpty) table else s"$table/$prefix"
-        reader.option("basePath", bp).parquet(s"$table/$p").schema.json
-      }
+      val options =
+        if (pvs.isEmpty) Map.empty[String, String]
+        else Map("basePath" -> (if (prefix.isEmpty) table else s"$table/$prefix"))
+      (stored match {
+        case Some(schema) => spark.read.options(options).schema(schema).parquet(s"$table/$p")
+        case None         => graft.Tables.parquet(spark, options, s"$table/$p")
+      }).schema.json
     }
 
     // version 0 MUST carry a metaData action (the spec: every snapshot
@@ -200,7 +204,7 @@ object DeltaBridge {
       firstAdd match {
         case None => return 0 // nothing but empty commits — export later
         case Some(p) =>
-          borrowedSchema = schemaOfAdd(p, readFooter(spark, Paths.get(table, p)))
+          borrowedSchema = schemaOfAdd(p, readFooter(footerConf, Paths.get(table, p)))
           if (!partColsFixed) {
             partCols = pathPartitionValues(p).map(_._1)
             partColsFixed = true
@@ -252,7 +256,7 @@ object DeltaBridge {
         val addPaths = add.map(TxLog.entryPath)
         // one footer read per add, for its stats; the head add's footer
         // also gives the version's schema
-        val headFooter = addPaths.headOption.flatMap(p => readFooter(spark, Paths.get(table, p)))
+        val headFooter = addPaths.headOption.flatMap(p => readFooter(footerConf, Paths.get(table, p)))
         if (!partColsFixed && addPaths.nonEmpty) {
           partCols = pathPartitionValues(addPaths.head).map(_._1)
           partColsFixed = true
@@ -352,7 +356,7 @@ object DeltaBridge {
         add.zip(addPvs).zipWithIndex.foreach { case ((entry, pv), i) =>
           val p = TxLog.entryPath(entry)
           val f = Paths.get(table, p)
-          val footer = if (i == 0) headFooter else readFooter(spark, f)
+          val footer = if (i == 0) headFooter else readFooter(footerConf, f)
           val base = Map[String, AnyRef](
             "path" -> p,
             "partitionValues" -> pv.asJava,
@@ -570,13 +574,17 @@ object DeltaBridge {
   } catch { case scala.util.control.NonFatal(_) => None }
 
   /** One parquet file's footer; None when it cannot be read (the add
-    * then exports without stats, and its schema is inferred). */
-  private def readFooter(spark: SparkSession, f: Path): Option[ParquetMetadata] = try {
+    * then exports without stats, and its schema is inferred). The read
+    * options wrap `conf` itself: parquet's default options would build a
+    * fresh Hadoop conf, re-parsing its XML resources, per file. */
+  private def readFooter(conf: org.apache.hadoop.conf.Configuration,
+                         f: Path): Option[ParquetMetadata] = try {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(f.toUri),
-      spark.sessionState.newHadoopConf()))
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf),
+      HadoopReadOptions.builder(conf).build())
     try Some(r.getFooter) finally r.close()
   } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -1137,10 +1145,6 @@ object DeltaBridge {
       versionAsOf: Option[Long], partitionFilter: Map[String, String],
       statsFilter: Option[(String, (Any, String), (Any, String))])
 
-  /** Name, size, modification time and file key of one file. */
-  private final case class Stamp(path: String, size: Long,
-      modified: java.nio.file.attribute.FileTime, key: AnyRef)
-
   private final case class ReadToken(log: Seq[Stamp], conf: Map[String, String])
 
   private final case class Prepared(token: ReadToken, files: Seq[Path],
@@ -1156,16 +1160,6 @@ object DeltaBridge {
     }
 
   private[sources] def clearReadCache(): Unit = readCache.synchronized(readCache.clear())
-
-  /** None when a file vanished between listing and stat (or never
-    * existed): the call then neither serves nor stores an entry. */
-  private def stamps(files: Seq[Path]): Option[Seq[Stamp]] = try {
-    Some(files.map { f =>
-      val a = Files.readAttributes(f,
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      Stamp(f.toString, a.size, a.lastModifiedTime, a.fileKey)
-    })
-  } catch { case _: java.io.IOException => None }
 
   private def readToken(spark: SparkSession, table: String): Option[ReadToken] = {
     val ld = deltaLogDir(table)
@@ -1750,7 +1744,7 @@ object DeltaBridge {
     require(st.live.isEmpty && st.schemaJson == null,
       "bootstrapFromCheckpoint expects a fresh LogState")
     val files = checkpointFiles(table, cv)
-    val rows = spark.read.parquet(files.map(_.toString): _*)
+    val rows = graft.Tables.parquet(spark, files.map(_.toString): _*)
     val cols = rows.columns.toSet
     val it = rows.toLocalIterator()
     while (it.hasNext) {

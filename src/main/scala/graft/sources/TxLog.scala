@@ -282,13 +282,13 @@ object TxLog {
     val (dvd, clean) = entries.partition(e => entryDv(e).isDefined)
     val cleanDf =
       if (clean.isEmpty) Seq.empty[DataFrame]
-      else Seq(spark.read.parquet(
+      else Seq(graft.Tables.parquet(spark,
         clean.map(e => s"$table/${entryPath(e)}"): _*))
     val dvDfs = dvd.map { e =>
       val deleted = DeletionVectors.load(table, entryDv(e).get.descriptor)
       val dropped = udf((i: Long) =>
         java.util.Arrays.binarySearch(deleted, i) >= 0)
-      spark.read.parquet(s"$table/${entryPath(e)}")
+      graft.Tables.parquet(spark, s"$table/${entryPath(e)}")
         .filter(!dropped(col("_metadata.row_index")))
     }
     (cleanDf ++ dvDfs).reduce(_.unionByName(_))
@@ -351,7 +351,7 @@ object TxLog {
                       statsCol: String, partFiles: Int = 8): Int = {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min}
     val rels = stage(df, table, partFiles)
-    val stats = spark.read.parquet(rels.map(f => s"$table/$f"): _*)
+    val stats = graft.Tables.parquet(spark, rels.map(f => s"$table/$f"): _*)
       .groupBy(input_file_name().as("f"))
       .agg(min(col(statsCol)).as("lo"), max(col(statsCol)).as("hi"))
       .collect()
@@ -781,7 +781,7 @@ object TxLog {
                              partTypes: Map[String, org.apache.spark.sql.types.DataType])
       : DataFrame = {
     if (partCols.isEmpty)
-      spark.read.parquet(entries.map(e => s"$table/${entryPath(e)}"): _*)
+      graft.Tables.parquet(spark, entries.map(e => s"$table/${entryPath(e)}"): _*)
     else {
       entries
         .groupBy(e => DeltaBridge.splitHivePath(entryPath(e))._1)
@@ -791,7 +791,7 @@ object TxLog {
           // per-group data schema from the group's own footer (a stage
           // dir is one write → uniform), partition columns appended in
           // discovery order with the stable types
-          val dataSchema = spark.read.parquet(files.head).schema
+          val dataSchema = graft.Tables.parquet(spark, files.head).schema
           val full = org.apache.spark.sql.types.StructType(
             dataSchema.fields ++ partCols.map(c =>
               org.apache.spark.sql.types.StructField(c, partTypes(c))))

@@ -41,7 +41,7 @@ object ScaleCorpus {
       val out = s"$outRoot/x$r"
       val reps = spark.range(r).select(col("id").as("__r"))
 
-      spark.read.parquet(s"$src/documents.parquet").crossJoin(reps)
+      graft.Tables.parquet(spark, s"$src/documents.parquet").crossJoin(reps)
         .select(
           (col("doc_id") + col("__r") * 10000000L).as("doc_id"),
           when(col("__r") === 0, col("text")).otherwise(expr(
@@ -52,7 +52,7 @@ object ScaleCorpus {
         .withColumn("n_chars", length(col("text")).cast("long"))
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-      spark.read.parquet(s"$src/embeddings.parquet").crossJoin(reps)
+      graft.Tables.parquet(spark, s"$src/embeddings.parquet").crossJoin(reps)
         .select(
           (col("vec_id") + col("__r") * 10000000L).as("vec_id"),
           expr("transform(sequence(0, size(embedding) - 1), i -> " +
@@ -64,7 +64,7 @@ object ScaleCorpus {
           col("label"))
         .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
-      spark.read.parquet(s"$src/lineitem.parquet").crossJoin(reps)
+      graft.Tables.parquet(spark, s"$src/lineitem.parquet").crossJoin(reps)
         .select(
           (col("l_orderkey") + col("__r") * 100000000L).as("l_orderkey"),
           (col("l_partkey") + col("__r") * 10000000L).as("l_partkey"),

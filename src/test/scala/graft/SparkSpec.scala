@@ -54,6 +54,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       ref.collect()
     }
 
+  /** Jobs `body` schedules, counted after a listener-bus drain. */
+  def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftSchedulerBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftSchedulerBridge.drainListenerBus(spark.sparkContext)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 

@@ -19,23 +19,6 @@ class DeltaBridgeReadCacheSpec extends SparkSpec {
 
   private def ids(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
 
-  /** Jobs `body` schedules, counted after a listener-bus drain. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftSchedulerBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.GraftSchedulerBridge.drainListenerBus(spark.sparkContext)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** `read` must fail with the message an uncached read gives. */
   private def failsAsUncached(read: => DataFrame): Unit = {
     val cached = intercept[Exception](read)

@@ -5,8 +5,8 @@
 # this script makes "compile green before snapshot" mechanical.
 #
 # Usage: tools/preflight.sh [--test]
-#   default : session/install guard + sbt compile + Test/compile (fast, the
-#             r9 failure class)
+#   default : session/install and parquet reader guards + sbt compile +
+#             Test/compile (fast, the r9 failure class)
 #   --test  : additionally runs the full ScalaTest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -24,6 +24,18 @@ if [[ -n "$builders$helpers" ]]; then
     && echo "$builders"
   [[ -n "$helpers" ]] && echo "per-call registration helper (use GraftExtensions.install):" \
     && echo "$helpers"
+  exit 1
+fi
+
+# One untyped parquet reader (graft.Tables.parquet): a schema-less
+# `.read[.option(..)].parquet(` elsewhere in src/main runs Spark's
+# schema-inference job on every call, even over unchanged files.
+echo "[preflight] parquet reader guard"
+untyped=$(grep -rnE '\.read(\.options?\([^()]*\))*\.parquet\(' src/main \
+  | grep -v '^src/main/scala/graft/Tables\.scala:' || true)
+if [[ -n "$untyped" ]]; then
+  echo "schema-less parquet read outside graft.Tables.parquet:"
+  echo "$untyped"
   exit 1
 fi
 
