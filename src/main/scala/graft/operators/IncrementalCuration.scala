@@ -190,7 +190,7 @@ object IncrementalCuration {
 
   /** The gate: init + one admitted batch, output the post-commit stats. */
   def q313IncrementalCuration(s: SparkSession, dir: String): DataFrame = {
-    val root = graft.SparkSupport.layoutArtifact("incr_curation", dir) { p =>
+    val root = graft.sources.TxLog.layoutArtifact("incr_curation", dir) { p =>
       initState(s, dir, p)
       admitBatch(s, dir, p, col("doc_id") % 5 === 3, 0L).unpersist()
       java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "_SUCCESS"))

@@ -307,7 +307,7 @@ object RelationalExt3 {
     * carries the transactional semantics in [[graft.sources.TxLog]] and
     * speaks the WIRE FORMAT through [[graft.sources.DeltaBridge]]: the
     * gate builds a customer table as two TxLog commits plus an overwrite,
-    * exports the history as a spec-compliant `_delta_log` (protocol v1 +
+    * each commit a version of a spec-compliant `_delta_log` (protocol v1 +
     * metaData + add/remove actions — mountable by delta-spark, delta-rs,
     * DuckDB's delta extension), then reads the snapshot BACK through the
     * bridge's own log-replay reader and filters a segment. Values are
@@ -319,12 +319,11 @@ object RelationalExt3 {
     val tmp = graft.SparkSupport.roundtripPath("delta_rt", dir)
     val c = Tables.customer(s, dir)
       .select("c_custkey", "c_name", "c_mktsegment")
-    // two appends + an overwrite: the exported log carries a remove set,
+    // two appends + an overwrite: the log carries a remove set,
     // not just adds, so the replay exercises the full action vocabulary
     graft.sources.TxLog.append(s, c.filter(col("c_custkey") % 2 === 0), tmp)
     graft.sources.TxLog.append(s, c.filter(col("c_custkey") % 2 === 1), tmp)
     graft.sources.TxLog.overwrite(s, c, tmp)
-    graft.sources.DeltaBridge.exportLog(s, tmp)
     graft.sources.DeltaBridge.read(s, tmp)
       .filter(col("c_mktsegment") === "MACHINERY")
       .select("c_custkey", "c_name")
@@ -339,7 +338,7 @@ object RelationalExt3 {
     * shape (`partitionBy(institution_type, state)` /
     * `(year, quarter, state)`, BuildGoldLayer.py:217-226) through the
     * jar-free bridge: customers land as two Hive-layout TxLog commits
-    * partitioned by (c_mktsegment, c_nationkey), export publishes
+    * partitioned by (c_mktsegment, c_nationkey), each publishing
     * `partitionColumns` in metaData and per-add `partitionValues` (the
     * delta-rs wire shape), and the read-back PRUNES at the metadata level
     * — the `partitionFilter` drops non-BUILDING add actions before any
@@ -349,12 +348,12 @@ object RelationalExt3 {
     * columns in the output pin the partition-column reconstruction
     * against DuckDB on the original table; DeltaBridgeSpec covers null
     * partitions, foreign non-Hive layouts, and the immutable-table-id
-    * rule on re-export. */
+    * rule across schema changes. */
   def q330DeltaPartitioned(s: SparkSession, dir: String): DataFrame = {
     val tmp = graft.SparkSupport.roundtripPath("delta_part_rt", dir)
     // build-once per JVM: appends are not idempotent (a bench rerun would
     // stack a second copy of the corpus), so reruns go straight to the read
-    if (graft.sources.TxLog.versions(tmp).isEmpty) {
+    if (graft.sources.TxLog.head(tmp) == 0) {
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_mktsegment", "c_nationkey")
       graft.sources.TxLog.appendPartitioned(s,
@@ -363,7 +362,6 @@ object RelationalExt3 {
       graft.sources.TxLog.appendPartitioned(s,
         c.filter(col("c_custkey") % 2 === 1), tmp,
         Seq("c_mktsegment", "c_nationkey"))
-      graft.sources.DeltaBridge.exportLog(s, tmp)
     }
     graft.sources.DeltaBridge.read(s, tmp,
         partitionFilter = Map("c_mktsegment" -> "BUILDING"))
@@ -377,7 +375,7 @@ object RelationalExt3 {
 
   /** q333: Delta DATA SKIPPING end-to-end — the stats loop closed inside
     * one engine: customers land range-partitioned by key (so per-file
-    * bounds come out tight), export lifts per-add min/max stats from the
+    * bounds come out tight), the commit lifts per-add min/max stats from the
     * parquet footers into the `_delta_log`, and the read prunes add
     * actions whose logged bounds prove them disjoint from the key range
     * — metadata-level, before any scan, exactly what delta-rs/DuckDB do
@@ -386,12 +384,11 @@ object RelationalExt3 {
     * asserts the scan actually touches fewer files. */
   def q333DeltaStatsSkip(s: SparkSession, dir: String): DataFrame = {
     val tmp = graft.SparkSupport.roundtripPath("delta_stats_rt", dir)
-    if (graft.sources.TxLog.versions(tmp).isEmpty) {
+    if (graft.sources.TxLog.head(tmp) == 0) {
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal")
         .repartitionByRange(8, col("c_custkey"))
       graft.sources.TxLog.append(s, c, tmp, partFiles = 8)
-      graft.sources.DeltaBridge.exportLog(s, tmp)
     }
     graft.sources.DeltaBridge.readPruned(s, tmp, "c_custkey", 100L, 300L)
       .filter(col("c_custkey") >= 100 && col("c_custkey") < 300)
@@ -406,7 +403,7 @@ object RelationalExt3 {
   /** q334: the Delta bridge as a NATIVE Spark relation — delta-spark's
     * architecture (log-driven FileIndex + Spark's own parquet scan)
     * without the jar: `spark.read.format(graft-delta).load(dir)` mounts
-    * the exported partitioned table, a plain `.filter` on the partition
+    * the partitioned TxLog table, a plain `.filter` on the partition
     * column prunes through CATALYST (FileSourceStrategy hands the
     * predicate to the log-backed listing — shows as `PartitionFilters`
     * in the scan node, no bridge-specific API), and the scan is Spark's
@@ -416,12 +413,11 @@ object RelationalExt3 {
     * against DuckDB on the original table. */
   def q334DeltaNativeRelation(s: SparkSession, dir: String): DataFrame = {
     val tmp = graft.SparkSupport.roundtripPath("delta_native_rt", dir)
-    if (graft.sources.TxLog.versions(tmp).isEmpty) {
+    if (graft.sources.TxLog.head(tmp) == 0) {
       graft.sources.TxLog.appendPartitioned(s,
         Tables.customer(s, dir)
           .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment"),
         tmp, Seq("c_mktsegment"))
-      graft.sources.DeltaBridge.exportLog(s, tmp)
     }
     s.read.format(classOf[graft.sources.DeltaBridgeSource].getName)
       .load(tmp)
@@ -437,9 +433,9 @@ object RelationalExt3 {
       |ORDER BY c_custkey""".stripMargin
 
   /** q335: VACUUM lifecycle under the gate — the maintenance sequence a
-    * long-lived gold table actually runs (write → rewrite → export →
-    * vacuum → serve): two appends and an overwrite land in the TxLog, the
-    * history exports as a Delta log, [[graft.sources.TxLog.vacuum]]
+    * long-lived gold table actually runs (write → rewrite → vacuum →
+    * serve): two appends and an overwrite land in the TxLog's Delta log,
+    * [[graft.sources.TxLog.vacuum]]
     * physically deletes every data file only pre-overwrite versions
     * referenced, and the HEAD then reads back through the native
     * graft-delta relation — pinning that space reclamation never touches
@@ -450,15 +446,13 @@ object RelationalExt3 {
     * pattern). */
   def q335VacuumLifecycle(s: SparkSession, dir: String): DataFrame = {
     val tmp = graft.SparkSupport.roundtripPath("txlog_vacuum_rt", dir)
-    if (graft.sources.TxLog.versions(tmp).isEmpty) {
+    if (graft.sources.TxLog.head(tmp) == 0) {
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       graft.sources.TxLog.append(s, c.filter(col("c_custkey") % 2 === 0), tmp)
       graft.sources.TxLog.append(s, c.filter(col("c_custkey") % 2 === 1), tmp)
       graft.sources.TxLog.overwrite(s,
         c.filter(col("c_mktsegment") === "BUILDING"), tmp)
-      graft.sources.DeltaBridge.exportLog(s, tmp)
-      // export BEFORE vacuum (stats probes read the committed footers);
       // retain only the head — the two append generations' files go
       graft.sources.TxLog.vacuum(tmp, retainVersions = 1)
     }
@@ -487,12 +481,11 @@ object RelationalExt3 {
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.v2.GraftDeltaCatalog].getName)
     val tmp = graft.SparkSupport.roundtripPath("sql_catalog_rt", dir)
-    if (graft.sources.TxLog.versions(tmp).isEmpty) {
+    if (graft.sources.TxLog.head(tmp) == 0) {
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       graft.sources.TxLog.append(s, c.filter(col("c_custkey") % 2 === 0), tmp)
       graft.sources.TxLog.append(s, c.filter(col("c_custkey") % 2 === 1), tmp)
-      graft.sources.DeltaBridge.exportLog(s, tmp)
     }
     // a sentinel row INSERTed through SQL, then DELETEd through SQL along
     // with a real slice — both verbs must land for the aggregate to match
@@ -530,7 +523,7 @@ object RelationalExt3 {
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.v2.GraftDeltaCatalog].getName)
     val tmp = graft.SparkSupport.roundtripPath("call_lifecycle_rt", dir)
-    if (graft.sources.TxLog.versions(tmp).isEmpty) {
+    if (graft.sources.TxLog.head(tmp) == 0) {
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       graft.sources.TxLog.append(s, c.filter(col("c_custkey") % 2 === 0), tmp)
@@ -538,7 +531,7 @@ object RelationalExt3 {
     }
     s.sql(s"CALL graft.optimize('$tmp')").collect()
     // history shrinks under log retention (each run adds an optimize
-    // commit; past version 10 the export checkpoints and this query's
+    // commit; past version 10 the commit checkpoints and this query's
     // own vacuum drops the covered JSON) — assert presence, not a count
     val hist = s.sql(s"CALL graft.history('$tmp')").collect()
     require(hist.nonEmpty, "history must list the retained versions")
@@ -706,9 +699,8 @@ object RelationalExt3 {
     val tmp = graft.SparkSupport.roundtripPath("sql_update_merge_rt", dir)
     val c = Tables.customer(s, dir)
       .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-    if (graft.sources.TxLog.versions(tmp).isEmpty) {
+    if (graft.sources.TxLog.head(tmp) == 0) {
       graft.sources.TxLog.append(s, c.filter(col("c_custkey") % 2 === 0), tmp)
-      graft.sources.DeltaBridge.exportLog(s, tmp)
     }
     c.filter(col("c_custkey") % 2 === 1)
       .createOrReplaceTempView("q341_src")
@@ -752,7 +744,7 @@ object RelationalExt3 {
       |FROM t GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** q346: EXPLICIT CHECKPOINT lifecycle from SQL — `CALL
-    * graft.checkpoint(path)` pins a log checkpoint at the exported head
+    * graft.checkpoint(path)` pins a log checkpoint at the log's head
     * (the delta/Iceberg maintenance idiom for long-lived tables, below
     * the automatic 10-version cadence), `CALL graft.history` reports the
     * covered prefix as `checkpointed`, `CALL graft.vacuum` then retires
@@ -766,7 +758,7 @@ object RelationalExt3 {
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.v2.GraftDeltaCatalog].getName)
     val tmp = graft.SparkSupport.roundtripPath("checkpoint_rt", dir)
-    if (graft.sources.TxLog.versions(tmp).isEmpty) {
+    if (graft.sources.TxLog.head(tmp) == 0) {
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       graft.sources.TxLog.append(s, c.filter(col("c_custkey") % 2 === 0), tmp)
@@ -811,9 +803,8 @@ object RelationalExt3 {
     val tmp = graft.SparkSupport.roundtripPath("merge_clauses_rt", dir)
     val c = Tables.customer(s, dir)
       .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-    if (graft.sources.TxLog.versions(tmp).isEmpty) {
+    if (graft.sources.TxLog.head(tmp) == 0) {
       graft.sources.TxLog.append(s, c.filter(col("c_custkey") % 2 === 0), tmp)
-      graft.sources.DeltaBridge.exportLog(s, tmp)
     }
     c.filter(col("c_custkey") % 3 === 0).createOrReplaceTempView("q344_src")
     s.sql(

@@ -605,7 +605,7 @@ object Similarity2 {
   private def persistedIvfpqIndex(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     import graft.sources.TxLog
-    val root = graft.SparkSupport.layoutArtifact("ivfpq_index", dir) { p =>
+    val root = graft.sources.TxLog.layoutArtifact("ivfpq_index", dir) { p =>
       val ix = ivfpqBuild(s, dir) // the ONE build definition s206 also runs
       TxLog.append(s, ix.cent, s"$p/centroids", partFiles = 1)
       TxLog.append(s, ix.cb, s"$p/codebook", partFiles = 1)
@@ -660,7 +660,7 @@ object Similarity2 {
   def s299AnnWithDeletes(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
     val (cent, cb, postings) = persistedIvfpqIndex(s, dir)
-    val troot = graft.SparkSupport.layoutArtifact("ann_tombstones", dir) { p =>
+    val troot = graft.sources.TxLog.layoutArtifact("ann_tombstones", dir) { p =>
       TxLog.append(s,
         Similarity.vecs(s, dir)
           .filter(col("vec_id") >= 16 && col("vec_id") % 7 === 3)
@@ -805,7 +805,7 @@ object Similarity2 {
 
   def s319FreshIndexSearch(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val root = graft.SparkSupport.layoutArtifact("ivfpq_fresh", dir) { p =>
+    val root = graft.sources.TxLog.layoutArtifact("ivfpq_fresh", dir) { p =>
       val all = Similarity.vecs(s, dir)
         .selectExpr("vec_id", "v", s"${Similarity.signCellExpr} AS cell")
         .persist(StorageLevel.MEMORY_AND_DISK)

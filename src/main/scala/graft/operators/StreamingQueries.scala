@@ -137,7 +137,7 @@ object StreamingQueries {
     * Build-once per JVM (the stream replays as a no-op only against its
     * own checkpoint — reruns skip the stream entirely). */
   def q348StreamPartitionedSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{DeltaBridge, TxLog}
+    import graft.sources.TxLog
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.v2.GraftDeltaCatalog].getName)
     val tmp = graft.SparkSupport.roundtripPath("stream_part_rt", dir)
@@ -149,13 +149,12 @@ object StreamingQueries {
     // half-build — wipe and rebuild.
     val done = new java.io.File(tmp + ".complete")
     if (!done.isFile) {
-      if (TxLog.versions(tmp).nonEmpty)
+      if (TxLog.head(tmp) > 0)
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       TxLog.appendPartitioned(s, c.filter(col("c_custkey") % 2 === 0),
         tmp, Seq("c_mktsegment"))
-      DeltaBridge.exportLog(s, tmp)
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext =
@@ -203,14 +202,13 @@ object StreamingQueries {
     * spec'd in DeltaBridgeSpec. Each run drives a REAL stream into a
     * fresh memory sink over the build-once fixture. */
   def q350StreamDvDelete(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{DeltaBridge, TxLog}
-    val table = graft.SparkSupport.layoutArtifact("stream_dv_src", dir) { p =>
+    import graft.sources.TxLog
+    val table = graft.sources.TxLog.layoutArtifact("stream_dv_src", dir) { p =>
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
         .filter(col("c_custkey") % 5 === 0)
       TxLog.append(s, c, p, partFiles = 1)
       TxLog.deleteWhereDv(s, p, "c_custkey % 485 = 0", maxDvFraction = 0.5)
-      DeltaBridge.exportLog(s, p)
       require(TxLog.liveFiles(p).exists(_.contains("#dv:")),
         "q350 fixture must carry a DV entry")
       java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "_SUCCESS"))

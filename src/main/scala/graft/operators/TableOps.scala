@@ -243,7 +243,7 @@ object TableOps {
     * gold-layer history in miniature), built once per corpus; shared by
     * q251 (time travel) and q252 (version-diff CDC). */
   private def txlogDemo(s: SparkSession, dir: String): String =
-    graft.SparkSupport.layoutArtifact("txlog_demo", dir) { p =>
+    graft.sources.TxLog.layoutArtifact("txlog_demo", dir) { p =>
       import graft.sources.TxLog
       val o = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
       TxLog.append(s, o.filter(col("o_orderkey") % 4 === 0), p)
@@ -334,7 +334,7 @@ object TableOps {
     * have replaced, inserted, and preserved exactly the right rows. */
   def q253TxlogMerge(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.SparkSupport.layoutArtifact("txlog_merge", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact("txlog_merge", dir) { p =>
       val o = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
       TxLog.append(s, o.filter(col("o_orderkey") % 4 === 0), p)
       val updates = o.filter(col("o_orderkey") % 8 === 0)
@@ -374,7 +374,7 @@ object TableOps {
     * the oracle's direct recomputation. */
   def q254TxlogSkipping(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.SparkSupport.layoutArtifact("txlog_stats", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact("txlog_stats", dir) { p =>
       val o = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
         .repartitionByRange(16, col("o_orderkey"))
       TxLog.appendWithStats(s, o, p, "o_orderkey", partFiles = 8)
@@ -422,7 +422,7 @@ object TableOps {
     * travel still shows the pre-merge state. */
   def q300IvmAgg(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val root = graft.SparkSupport.layoutArtifact("ivm_agg", dir) { p =>
+    val root = graft.sources.TxLog.layoutArtifact("ivm_agg", dir) { p =>
       val t = s"$p/agg"
       def aggOf(df: org.apache.spark.sql.DataFrame) =
         df.groupBy("o_orderpriority")
@@ -506,7 +506,7 @@ object TableOps {
         s"min($day) AS dlo", s"max($day) AS dhi").head()
     val (klo, khi, dlo, dhi) =
       (b.getLong(0), b.getLong(1), b.getInt(2).toLong, b.getInt(3).toLong)
-    val table = graft.SparkSupport.layoutArtifact("zorder_tbl", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact("zorder_tbl", dir) { p =>
       val z = Tables.orders(s, dir)
         .selectExpr("o_custkey", s"$day AS oday", "o_totalprice",
           s"${mortonExpr(normExpr("o_custkey", klo, khi),
@@ -659,7 +659,7 @@ object TableOps {
     * have removed exactly the TRUE-predicate rows. */
   def q336TxlogDelete(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.SparkSupport.layoutArtifact("txlog_delete", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact("txlog_delete", dir) { p =>
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       // two generations → several files, so file-granularity is real
@@ -696,7 +696,7 @@ object TableOps {
     * post-update decimal sums are oracle-exact without a cents detour. */
   def q337TxlogUpdate(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.SparkSupport.layoutArtifact("txlog_update", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact("txlog_update", dir) { p =>
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderpriority", "o_orderstatus",
           "o_totalprice")
@@ -736,7 +736,7 @@ object TableOps {
     * back the COMPLETE original table. */
   def q338TxlogRestore(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.SparkSupport.layoutArtifact("txlog_restore", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact("txlog_restore", dir) { p =>
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       TxLog.append(s, o.filter(col("o_orderkey") % 2 === 0), p)
@@ -768,11 +768,11 @@ object TableOps {
     * `col=value` paths; unhit partitions carry over by reference
     * (TxLogSpec pins the by-reference law and partition-moving SET). The
     * gate reads the post-DML head back through [[graft.sources
-    * .DeltaBridge]] — partition values come from the exported layout, not
+    * .DeltaBridge]] — partition values come from the logged layout, not
     * the data files — and checks per-partition counts and exact sums. */
   def q340PartitionedDml(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.{DeltaBridge, TxLog}
-    val table = graft.SparkSupport.layoutArtifact("txlog_part_dml", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact("txlog_part_dml", dir) { p =>
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       // two generations per partition → file-granularity is real
@@ -785,7 +785,6 @@ object TableOps {
       // partition-predicate UPDATE on a data column (×2 is fp-exact)
       TxLog.updateWhere(s, p, "o_orderstatus = 'P'",
         Map("o_totalprice" -> "o_totalprice * 2"))
-      DeltaBridge.exportLog(s, p)
       java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "_SUCCESS"))
     }
     DeltaBridge.read(s, table)
@@ -813,8 +812,8 @@ object TableOps {
     * rows across an 8-file table writes spec-format sidecar vectors and
     * re-publishes the SAME data files (the build asserts every original
     * path survives and the log shows DV entries — no rewrite), the
-    * export upgrades the protocol to readerVersion 3 + deletionVectors
-    * and republishes the descriptors, and the gate reads the post-delete
+    * commit upgrades the protocol to readerVersion 3 + deletionVectors
+    * and publishes the descriptors, and the gate reads the post-delete
     * head through the SQL catalog (the extended mount) with the bridge
     * read asserted equal. At 100 TB this is the difference between a
     * point-delete costing O(deleted rows) and rewriting every hit
@@ -823,7 +822,7 @@ object TableOps {
     import graft.sources.{DeltaBridge, TxLog}
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.v2.GraftDeltaCatalog].getName)
-    val table = graft.SparkSupport.layoutArtifact("txlog_dv_delete", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact("txlog_dv_delete", dir) { p =>
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
         .repartitionByRange(8, col("c_custkey"))
@@ -835,7 +834,6 @@ object TableOps {
         "a sub-threshold DV delete must keep every data file in place")
       require(after.exists(_.contains("#dv:")),
         s"the log must show DV entries, got $after")
-      DeltaBridge.exportLog(s, p)
       // bridge/catalog agreement asserted ONCE per corpus (see q349)
       require(DeltaBridge.read(s, p).count() ==
         s.sql(s"SELECT count(*) FROM graft.`$p`").head().getLong(0),
@@ -868,15 +866,15 @@ object TableOps {
     * place and the log carries DV entries), while the same statement's
     * NOT MATCHED rows still INSERT as ordinary staged adds — one
     * commit. Hit files whose matched rows fire NO clause (the
-    * `c_acctbal >= 9000` survivors) carry over by reference. The export
-    * republishes the vectors as Delta descriptors and the gate reads
+    * `c_acctbal >= 9000` survivors) carry over by reference. The commit
+    * publishes the vectors as Delta descriptors and the gate reads
     * the post-merge head through the SQL catalog with the bridge read
     * asserted equal — delta-spark's merge-on-read MERGE, writer side. */
   def q349DvMerge(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.{DeltaBridge, TxLog}
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.v2.GraftDeltaCatalog].getName)
-    val table = graft.SparkSupport.layoutArtifact("txlog_dv_merge", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact("txlog_dv_merge", dir) { p =>
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
         .repartitionByRange(8, col("c_custkey"))
@@ -912,7 +910,6 @@ object TableOps {
         "a sub-threshold matched-DELETE must keep every data file in place")
       require(after.exists(_.contains("#dv:")),
         s"the log must show DV entries from the MERGE, got $after")
-      DeltaBridge.exportLog(s, p)
       // bridge/catalog agreement asserted ONCE per corpus, here in the
       // build (the artifact is immutable behind its fingerprinted
       // marker — re-asserting per run tripled the gated query's work,

@@ -34,19 +34,18 @@ object Medallion {
 
   /** K3, Delta form: the reference's gold partitioned writes ARE Delta
     * (`partitionBy(institution_type, state)` / `(year, quarter, state)`,
-    * BuildGoldLayer.py:217-226) — published here as a transactional
-    * Hive-layout TxLog overwrite plus a `_delta_log` export carrying
-    * `partitionColumns` + per-add `partitionValues`, so an external Delta
-    * reader mounts the gold directory WITH partition pruning (delta-rs /
-    * DuckDB delta prune on the logged partitionValues exactly as they do
-    * for delta-spark output). Read back via [[readGoldPartitionedDelta]],
-    * optionally pruned. */
+    * BuildGoldLayer.py:217-226) — published here as ONE transactional
+    * Hive-layout TxLog overwrite, committed as a `_delta_log` version
+    * carrying `partitionColumns` + per-add `partitionValues`, so an
+    * external Delta reader mounts the gold directory WITH partition
+    * pruning (delta-rs / DuckDB delta prune on the logged partitionValues
+    * exactly as they do for delta-spark output) the moment the commit
+    * lands. Read back via [[readGoldPartitionedDelta]], optionally
+    * pruned. */
   def writeGoldPartitionedDelta(spark: SparkSession, df: DataFrame,
                                 path: String,
-                                partitionCols: Seq[String]): Unit = {
-    graft.sources.TxLog.overwritePartitioned(spark, df, path, partitionCols)
-    graft.sources.DeltaBridge.exportLog(spark, path)
-  }
+                                partitionCols: Seq[String]): Unit =
+    graft.sources.TxLog.overwritePartitioned(spark, df, path, partitionCols): Unit
 
   /** Partition-pruned snapshot of a Delta-form partitioned gold table —
     * the filter drops add actions at the METADATA level before any scan. */
@@ -64,16 +63,13 @@ object Medallion {
     * the transactional overwrite runs through [[graft.sources.TxLog]] (the
     * same snapshot-isolated replace semantics — a new column set in a new
     * commit IS `overwriteSchema`, since readers resolve the schema from
-    * the commit's own files), and [[graft.sources.DeltaBridge.exportLog]]
-    * publishes the history as a spec-compliant `_delta_log`, so the gold
-    * table is MOUNTABLE by any real Delta reader (delta-spark, delta-rs,
-    * DuckDB's delta extension) with full time travel across quarterly
-    * refreshes. */
+    * the commit's own files), and each commit is one version of a
+    * spec-compliant `_delta_log`, so the gold table is MOUNTABLE by any
+    * real Delta reader (delta-spark, delta-rs, DuckDB's delta extension)
+    * with full time travel across quarterly refreshes. */
   def writeGoldWideDelta(spark: SparkSession, df: DataFrame,
-                         path: String): Unit = {
-    graft.sources.TxLog.overwrite(spark, df, path)
-    graft.sources.DeltaBridge.exportLog(spark, path)
-  }
+                         path: String): Unit =
+    graft.sources.TxLog.overwrite(spark, df, path): Unit
 
   /** Read a Delta-form gold table back (HEAD snapshot) — through the
     * bridge's own log replay, the path an external Delta reader takes. */
@@ -122,8 +118,8 @@ object Medallion {
     * (`partitionBy(institution_type, state)` / `(year, quarter, state)`,
     * BuildGoldLayer.py:217-226) and the two quarterly wide tables with
     * overwriteSchema semantics (BuildGoldLayer.py:227-236) — published
-    * through the transactional TxLog + `_delta_log` export, so every
-    * refresh is a new mountable Delta version with time travel across
+    * through the transactional TxLog, which commits the `_delta_log`
+    * directly, so every refresh is a new mountable Delta version with time travel across
     * quarters. A user of the reference switches to this function and
     * keeps their downstream Delta readers unchanged. */
   def updateGoldLayerDelta(spark: SparkSession, paths: LayerPaths): Unit = {

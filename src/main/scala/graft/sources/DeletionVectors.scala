@@ -232,10 +232,7 @@ object DeletionVectors {
         // the file lives at <prefix>/deletion_vector_<uuid>.bin
         val enc = d.pathOrInlineDv
         val (prefix, u) = enc.splitAt(enc.length - 20)
-        val bytes = z85Decode(u)
-        val bb = ByteBuffer.wrap(bytes)
-        val uuid = new java.util.UUID(bb.getLong, bb.getLong)
-        val name = s"deletion_vector_$uuid.bin"
+        val name = s"deletion_vector_${uuidOfZ85(u)}.bin"
         Some(if (prefix.isEmpty) Paths.get(table, name)
              else Paths.get(table, prefix, name))
       case _ => None
@@ -286,6 +283,12 @@ object DeletionVectors {
       : (String, Seq[(Int, Int)]) = {
     val (uuid, spans) = writeDvFileRef(table, bitmaps)
     (z85OfUuid(uuid), spans)
+  }
+
+  /** The UUID of a 20-character z85 rendering ([[z85OfUuid]]'s inverse). */
+  def uuidOfZ85(u: String): java.util.UUID = {
+    val bb = ByteBuffer.wrap(z85Decode(u))
+    new java.util.UUID(bb.getLong, bb.getLong)
   }
 
   /** The z85 rendering of a UUID — a "u"-descriptor's `pathOrInlineDv`. */

@@ -36,7 +36,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    pruning, codegen, the works — nothing is re-implemented.
   *
   * Read-only by design: writes go through [[TxLog]]'s transactional
-  * commits + [[DeltaBridge.exportLog]], the same split delta-spark makes
+  * commits into the same `_delta_log`, the split delta-spark makes
   * between its transaction log and its scan path.
   */
 class DeltaBridgeSource extends RelationProvider
@@ -95,9 +95,9 @@ class DeltaBridgeSource extends RelationProvider
   }
 
   /** Write side: `df.write.format("graft-delta").mode(...).save(path)` —
-    * a TRANSACTIONAL TxLog commit (append or snapshot-isolated overwrite)
-    * followed by the `_delta_log` export, so every Spark-API write lands
-    * as a new mountable Delta version. Partition columns ride the
+    * a TRANSACTIONAL TxLog commit (append or snapshot-isolated
+    * overwrite), so every Spark-API write lands as a new mountable Delta
+    * version. Partition columns ride the
     * `partitionBy` OPTION (`option("partitionBy", "a,b")`): the V1
     * writer path does not forward `DataFrameWriter.partitionBy` to
     * CreatableRelationProvider — documented quirk, fail-loud on the
@@ -121,7 +121,6 @@ class DeltaBridgeSource extends RelationProvider
       case other => throw new IllegalArgumentException(
         s"graft-delta supports Append/Overwrite, not $other")
     }
-    DeltaBridge.exportLog(spark, table)
     createRelation(ctx, parameters)
   }
 
@@ -150,9 +149,9 @@ class DeltaBridgeSource extends RelationProvider
 
   /** `df.writeStream.format("graft-delta")` — each micro-batch lands as
     * one mountable Delta version through [[TxLog.appendBatch]]'s
-    * exactly-once commit (the batch id rides the commit record, so a
-    * restart's replayed batch is recognized and creates no version) plus
-    * the `_delta_log` export. Unlike the batch write path,
+    * exactly-once commit (the batch id rides the commit's `txn` action,
+    * so a restart's replayed batch is recognized and creates no
+    * version). Unlike the batch write path,
     * `writeStream.partitionBy(...)` DOES reach a V1 StreamSinkProvider,
     * so Hive-layout partitioned streaming tables need no option. Append
     * only: Complete/Update would need per-batch overwrite semantics the
@@ -169,9 +168,9 @@ class DeltaBridgeSource extends RelationProvider
 }
 
 /** The graft-delta streaming SINK: exactly-once micro-batch appends into
-  * the TxLog + Delta-log export. Scale shape: the staged write is the
-  * batch's own parquet job; the commit + export are driver-side metadata
-  * appends (O(batch files), never O(table)). */
+  * the TxLog's Delta log. Scale shape: the staged write is the batch's
+  * own parquet job; the commit is a driver-side metadata append
+  * (O(batch files), never O(table)). */
 private[sources] class DeltaBridgeStreamSink(
     spark: SparkSession, table: String, partitionCols: Seq[String])
   extends org.apache.spark.sql.execution.streaming.Sink {
@@ -179,11 +178,9 @@ private[sources] class DeltaBridgeStreamSink(
   override def addBatch(batchId: Long,
                         data: org.apache.spark.sql.DataFrame): Unit = {
     val batch = org.apache.spark.sql.GraftSqlBridge.asBatch(data)
+    // replay-safe: a re-delivered batch commits nothing
     TxLog.appendBatch(spark, batch, table, batchId,
-      partitionCols = partitionCols)
-    // replay-safe: a re-delivered batch committed nothing above, and the
-    // export cursor makes re-exporting published versions a no-op
-    DeltaBridge.exportLog(spark, table)
+      partitionCols = partitionCols): Unit
   }
 
   override def toString: String = s"DeltaBridgeStreamSink[$table]"

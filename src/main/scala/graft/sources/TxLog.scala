@@ -1,28 +1,40 @@
 package graft.sources
 
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths}
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-/** A minimal parquet TRANSACTION LOG — the Delta/Iceberg commit protocol
-  * re-implemented on plain files, closing SURVEY §2's K4 row (the gold
-  * layer's transactional writes) functionally while the environment lacks
-  * a lake-format jar. Everything is the real protocol in miniature:
+import DeltaBridge.LogState
+
+/** A parquet TRANSACTION LOG writer that speaks the Delta protocol
+  * (https://github.com/delta-io/delta/blob/master/PROTOCOL.md) without the
+  * Delta jar — the gold layer's transactional writes (the reference
+  * writes Delta, BuildGoldLayer.py:219-235):
   *
   *  - A table is a directory; each write lands its parquet part-files in a
   *    fresh `stage-*` subdirectory (data files are IMMUTABLE — never
   *    appended to, never deleted by writers).
-  *  - State is the replay of `_graft_log/vNNNNN.json` commit records, each
-  *    holding `add` / `remove` file lists (relative paths). Version k's
-  *    snapshot = replay of v1..vk.
+  *  - Each commit publishes one Delta version `_delta_log/%020d.json`:
+  *    `protocol` + `metaData` at version 0 (the metaData configuration
+  *    carries [[Marker]]), a fresh `metaData` whenever the schema changes,
+  *    `txn` for a streaming batch, `remove` and `add` actions (with
+  *    `partitionValues`, footer `stats`, deletion vectors, and the entry's
+  *    typed stats in `tags`). TxLog version k is Delta version k−1; every
+  *    [[CheckpointInterval]]th version also writes a checkpoint. State is
+  *    read back only through [[DeltaBridge]]'s replayer, so TxLog and any
+  *    Delta reader see the same snapshot the moment a commit lands.
   *  - A commit is published by HARD-LINKING a temp file onto its version
   *    name — link(2) fails with EEXIST if the target exists, so the
   *    filesystem is the arbiter: two writers racing for version k cannot
   *    both win, the loser re-reads the log and retries at k+1 (optimistic
-  *    concurrency, the Delta protocol's core). NOT rename: POSIX
-  *    rename(2) silently REPLACES an existing target, so an ATOMIC_MOVE
-  *    "arbiter" would let both racers succeed and destroy the winner's
-  *    commit record (verified empirically on this filesystem).
+  *    concurrency; the protocol's put-if-absent log-store rule). NOT
+  *    rename: POSIX rename(2) silently REPLACES an existing target, so an
+  *    ATOMIC_MOVE "arbiter" would let both racers succeed and destroy the
+  *    winner's commit (verified empirically on this filesystem).
   *  - Readers never lock: a snapshot is a pure function of the immutable
   *    log prefix, so TIME TRAVEL (`read(asOf = k)`) and concurrent-writer
   *    isolation come for free. Half-written commits are invisible (temps
@@ -30,19 +42,31 @@ import scala.jdk.CollectionConverters._
   *
   * At 100 TB the same design holds because commits are metadata-sized (file
   * LISTS, not data) and data files are immutable: the only serialization
-  * point is the version-name rename. Cited shape: the reference gold layer
-  * writes Delta (BuildGoldLayer.py:219-235); this supplies the semantics
-  * those writes rely on (atomic replace, schema-stable appends, versioned
-  * reads) without the jar.
+  * point is the version-name link.
   */
 object TxLog {
 
-  private val LogDir = "_graft_log"
+  /** The `metaData.configuration` key TxLog writes at version 0. A Delta
+    * table without it is foreign: the DML, catalog and streaming write
+    * paths mount it read-only ([[owns]]). */
+  val Marker = "graft.txlog"
 
-  private def logPath(table: String): Path = Paths.get(table, LogDir)
+  /** The on-disk log format. Persisted layouts holding TxLog tables fold
+    * it into their artifact key ([[layoutArtifact]]), so a copy built
+    * under an older format is rebuilt instead of served. */
+  val LogFormat = "delta1"
 
-  private def versionFile(table: String, v: Int): Path =
-    logPath(table).resolve(f"v$v%05d.json")
+  /** The add `tags` key holding an entry's typed stats (`lo#hi`). */
+  private val StatsTag = "graft.stats"
+
+  /** The `txn` appId of an appId-less (V1 foreachBatch sink) batch. */
+  private val V1AppId = "graft-stream-v1"
+
+  /** Checkpoint cadence — the delta-spark default. */
+  private val CheckpointInterval = 10
+
+  /** An empty struct: the schema of a zero-add version 0. */
+  private val EmptySchema = new StructType().json
 
   /** List a directory with the stream CLOSED (Files.list leaks a directory
     * fd until GC otherwise — and versions() runs on every commit attempt
@@ -53,38 +77,54 @@ object TxLog {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
-  private val VersionName = "v(\\d+)\\.json".r
+  /** Committed versions whose JSON is present, ascending (TxLog version k
+    * is Delta version k−1). Versions a [[DeltaBridge.vacuumLog]] retired
+    * under a checkpoint are absent. */
+  def versions(table: String): Seq[Int] =
+    DeltaBridge.versions(table).map(_.toInt + 1)
 
-  /** Committed versions, ascending (replay order). Width-agnostic: the
-    * writer zero-pads to 5 digits but versions past 99999 grow wider, and
-    * a fixed-width match would make them invisible to replay. */
-  def versions(table: String): Seq[Int] = {
-    val lp = logPath(table)
-    if (!Files.isDirectory(lp)) Seq.empty
-    else listDir(lp)
-      .map(_.getFileName.toString)
-      .collect { case VersionName(d) => d.toInt }
-      .sorted
-  }
+  /** The head version, 0 for an empty log. The checkpoint counts, so a
+    * log whose covered JSON was retired is not empty and keeps committing
+    * above it. */
+  def head(table: String): Int =
+    DeltaBridge.headVersion(table).toInt + 1
+
+  /** The replayed log state at `asOf` (None = head; 0 = the empty log).
+    * Only a checkpoint bootstrap needs the session. */
+  private def state(table: String, asOf: Option[Int]): LogState =
+    if (asOf.contains(0) || head(table) == 0) LogState()
+    else DeltaBridge.readState(SparkSession.active, table, asOf.map(_ - 1L))
+
+  /** The live entries of a replayed state: path, then the `tags` stats,
+    * then the deletion vector — the same string the commit was given. */
+  private def entries(st: LogState): Seq[String] =
+    st.live.toSeq.map { case (p, e) =>
+      val dv = e.dv.map { d =>
+        require(d.storageType == "u" && d.pathOrInlineDv.length == 20 &&
+            d.offset.isDefined,
+          s"$p carries a deletion vector TxLog did not write (${d.storageType})")
+        "#" + DvRef(DeletionVectors.uuidOfZ85(d.pathOrInlineDv).toString,
+          d.offset.get, d.sizeInBytes, d.cardinality).enc
+      }
+      p + e.tags.get(StatsTag).fold("")("#" + _) + dv.getOrElse("")
+    }
+
+  /** True iff `table` is a TxLog table: its log carries [[Marker]]. */
+  def owns(table: String): Boolean =
+    head(table) > 0 && state(table, None).configuration.contains(Marker)
+
+  /** A persisted layout artifact holding TxLog tables, keyed by
+    * [[LogFormat]] as well as kind and corpus (see
+    * [[graft.SparkSupport.layoutArtifact]]). */
+  def layoutArtifact(kind: String, dir: String)(build: String => Unit): String =
+    graft.SparkSupport.layoutArtifact(s"${kind}_$LogFormat", dir)(build)
 
   /** Live data-file ENTRIES (relative path, optionally suffixed
     * `#min#max` file statistics) at `asOf` (None = HEAD). Remove lists
     * match entries verbatim, so entries — not bare paths — are the unit
     * of log bookkeeping; use [[entryPath]] to resolve a path. */
-  def liveFiles(table: String, asOf: Option[Int] = None): Seq[String] = {
-    val vs = versions(table)
-    val replay = asOf match {
-      case Some(v) => vs.filter(_ <= v)
-      case None    => vs
-    }
-    val live = scala.collection.mutable.LinkedHashSet[String]()
-    replay.foreach { v =>
-      val (add, remove) = readCommit(table, v)
-      remove.foreach(live -= _)
-      add.foreach(live += _)
-    }
-    live.toSeq
-  }
+  def liveFiles(table: String, asOf: Option[Int] = None): Seq[String] =
+    entries(state(table, asOf))
 
   /** The data-file path of an add/live entry (strips the stats suffix). */
   def entryPath(entry: String): String = entry.takeWhile(_ != '#')
@@ -194,9 +234,9 @@ object TxLog {
   /** A WRITER-SIDE deletion vector riding a log entry — merge-on-read
     * DELETE ([[deleteWhereDv]]): the entry's data file stays in place and
     * the DV names the deleted row indices in a spec-format sidecar
-    * ([[DeletionVectors.writeDvFile]]'s layout, so [[DeltaBridge
-    * .exportLog]] republishes it verbatim as a Delta `deletionVector`
-    * descriptor). Wire form, one `#`-separated entry field:
+    * ([[DeletionVectors.writeDvFile]]'s layout, committed as the add's
+    * Delta `deletionVector` descriptor). Wire form, one `#`-separated
+    * entry field:
     * `dv:<uuid-hex>:<offset>:<size>:<cardinality>` — the uuid in HEX, not
     * z85 (the z85 alphabet contains both '#' and ':'). Unlike stats, a
     * malformed DV field FAILS LOUD: dropping it silently would resurrect
@@ -267,31 +307,7 @@ object TxLog {
            asOf: Option[Int] = None): DataFrame = {
     val entries = liveFiles(table, asOf)
     require(entries.nonEmpty, s"no live files in $table at $asOf")
-    readFlatEntries(spark, table, entries)
-  }
-
-  /** Flat (no partition re-attach) read of entries with DV filtering:
-    * clean files as one scan; each DV'd file as its own scan branch with
-    * the vector's row indices dropped via `_metadata.row_index` (the
-    * same predicate [[DeltaBridge]]'s extended read uses). DV'd files
-    * are the merge-on-read minority by construction, so the plan stays
-    * metadata-sized. */
-  private def readFlatEntries(spark: SparkSession, table: String,
-                              entries: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, udf}
-    val (dvd, clean) = entries.partition(e => entryDv(e).isDefined)
-    val cleanDf =
-      if (clean.isEmpty) Seq.empty[DataFrame]
-      else Seq(graft.Tables.parquet(spark,
-        clean.map(e => s"$table/${entryPath(e)}"): _*))
-    val dvDfs = dvd.map { e =>
-      val deleted = DeletionVectors.load(table, entryDv(e).get.descriptor)
-      val dropped = udf((i: Long) =>
-        java.util.Arrays.binarySearch(deleted, i) >= 0)
-      graft.Tables.parquet(spark, s"$table/${entryPath(e)}")
-        .filter(!dropped(col("_metadata.row_index")))
-    }
-    (cleanDf ++ dvDfs).reduce(_.unionByName(_))
+    readEntries(spark, table, entries, Seq.empty, Map.empty)
   }
 
   /** Paths of live files whose [min, max] stats intersect [lo, hi) — the
@@ -327,8 +343,9 @@ object TxLog {
                  asOf: Option[Int] = None): DataFrame = {
     val kept = pruneFiles(table, lo, hi, asOf).toSet
     require(kept.nonEmpty, s"no candidate files in $table for [$lo, $hi)")
-    readFlatEntries(spark, table,
-      liveFiles(table, asOf).filter(e => kept.contains(entryPath(e))))
+    readEntries(spark, table,
+      liveFiles(table, asOf).filter(e => kept.contains(entryPath(e))),
+      Seq.empty, Map.empty)
   }
 
   /** Append `df` as a new commit; returns the committed version. */
@@ -373,9 +390,9 @@ object TxLog {
   /** Append `df` as a new commit with HIVE-LAYOUT partitioning: part files
     * land under `stage-&#42;` + `col1=v1/col2=v2` + `part-&#42;.parquet`,
     * so each entry's relative path itself carries the partition values — the layout
-    * [[DeltaBridge.exportLog]] parses into per-add `partitionValues` and
-    * any Hive-aware reader prunes on. The commit protocol is unchanged
-    * (entries are opaque relative paths); only staging differs. */
+    * the commit parses into per-add `partitionValues` and any Hive-aware
+    * reader prunes on. The commit protocol is unchanged (entries are
+    * opaque relative paths); only staging differs. */
   def appendPartitioned(spark: SparkSession, df: DataFrame, table: String,
                         partitionCols: Seq[String]): Int =
     commit(table, add = stagePartitioned(df, table, partitionCols),
@@ -386,7 +403,7 @@ object TxLog {
   def overwritePartitioned(spark: SparkSession, df: DataFrame, table: String,
                            partitionCols: Seq[String]): Int = {
     val staged = stagePartitioned(df, table, partitionCols)
-    commitWith(table) { head => (staged, liveFiles(table, asOf = Some(head))) }
+    commitWith(table)((_, st) => (staged, entries(st)))
   }
 
   /** Stage df partitioned by `cols` into a fresh immutable stage dir;
@@ -411,8 +428,8 @@ object TxLog {
     walk(dir).map(f => Paths.get(table).relativize(f).toString).sorted
   }
 
-  /** EXACTLY-ONCE batch append for streaming sinks: the commit record
-    * carries the micro-batch id, and a re-delivered batch (foreachBatch
+  /** EXACTLY-ONCE batch append for streaming sinks: the commit carries
+    * the micro-batch id as a Delta `txn` action, and a re-delivered batch (foreachBatch
     * replays after restart) is recognized and skipped — the
     * idempotent-sink contract Structured Streaming requires from
     * foreachBatch targets. Returns the version holding the batch (new or
@@ -456,38 +473,37 @@ object TxLog {
     var attempts = 0
     while (attempts < 100) {
       attempts += 1
-      val vs = versions(table)
-      vs.filter(_ > checked)
+      val h = head(table)
+      versions(table).filter(_ > checked)
         .find(hasBatchId(table, _, batchId, appId)) match {
         case Some(v) => // racer won
           return recordBatch(table, batchId, v, appId)
         case None =>
-          checked = vs.lastOption.getOrElse(0)
-          if (tryCommitAt(table, checked + 1, staged, Seq.empty,
+          checked = h
+          if (tryCommitAt(table, h + 1, staged, Seq.empty,
               Some(batchId), appId))
-            return recordBatch(table, batchId, checked + 1, appId)
+            return recordBatch(table, batchId, h + 1, appId)
       }
     }
     occExhausted("appendBatch", table, 100)
   }
 
+  /** Whether version `v`'s `txn` action holds `batchId`. The two id
+    * spaces are DISJOINT: an appId-less probe (the V1 foreachBatch sink,
+    * committed under [[V1AppId]]) must not match a V2 streaming query's
+    * commit that happens to share the numeric id, and vice versa — both
+    * start at 0, and a cross-match silently swallows a batch. */
   private def hasBatchId(table: String, v: Int, batchId: Long,
-                         appId: Option[String]): Boolean = {
-    val txt = Files.readString(versionFile(table, v))
-    s""""batchId":$batchId[,}]""".r.findFirstIn(txt).isDefined &&
-      // the two id spaces are DISJOINT: an appId-less probe (the V1
-      // foreachBatch sink) must not match a V2 streaming query's commit
-      // that happens to share the numeric id, and vice versa — both
-      // start at 0, and a cross-match silently swallows a batch
-      (appId match {
-        case Some(a) => txt.contains(s""""appId":"$a"""")
-        case None    => !txt.contains("\"appId\":")
-      })
-  }
+                         appId: Option[String]): Boolean =
+    DeltaBridge.versionDelta(table, v - 1L).txns
+      .get(appId.getOrElse(V1AppId)).contains(batchId)
 
+  /** The batchId → version side index lives beside `_delta_log`, not in
+    * it: neither [[DeltaBridge.versions]] nor a foreign Delta reader
+    * lists it. */
   private def batchIndexFile(table: String, batchId: Long,
                              appId: Option[String]): Path =
-    logPath(table).resolve("_batch_index")
+    Paths.get(table, "_batch_index")
       .resolve(appId.fold(s"b$batchId")(a => s"a${a}_b$batchId"))
 
   /** Cache batchId → version in the side index (a batch id maps to exactly
@@ -519,8 +535,8 @@ object TxLog {
     * batch index, falling back to the O(versions) log scan (and
     * backfilling the index) for commits that predate the index or crashed
     * before recording it. The index is authoritative-if-present: entries
-    * are written only after the commit record is durable, and commit
-    * records are never rewritten. */
+    * are written only after the commit is durable, and commits are never
+    * rewritten. */
   def committedBatch(table: String, batchId: Long,
                      appId: Option[String] = None): Option[Int] = {
     val f = batchIndexFile(table, batchId, appId)
@@ -534,14 +550,14 @@ object TxLog {
                 partFiles: Int = 2): Int = {
     val staged = stage(df, table, partFiles)
     // remove is computed INSIDE the commit loop FROM THE SAME log read
-    // that picks the version: commitWith replays liveFiles pinned to the
-    // head it observed (asOf), so the remove list and the claimed version
+    // that picks the version: commitWith replays the state pinned to the
+    // head it observed, so the remove list and the claimed version
     // describe one snapshot. Re-reading the log separately here would
     // race: an append landing between the two reads would survive the
     // "replace everything" commit (its files missing from remove) — the
     // lost-update the OCC protocol exists to prevent. On a lost race the
     // loop recomputes both from the new head.
-    commitWith(table) { head => (staged, liveFiles(table, asOf = Some(head))) }
+    commitWith(table)((_, st) => (staged, entries(st)))
   }
 
   /** Write df's part-files into a fresh immutable stage dir; returns their
@@ -557,36 +573,323 @@ object TxLog {
       .map(f => s"$name/$f")
   }
 
-  /** Publish a commit record at exactly `v` — true iff WE created it.
+  /** Publish the commit at exactly TxLog version `v` (Delta version
+    * v−1) over `st`, the replayed state at v−1 — true iff WE created it.
     * The arbitration primitive is createLink (link(2)): it fails with
     * EEXIST when the version name is taken, atomically. rename(2) would
-    * silently REPLACE the winner's record (verified on this filesystem —
+    * silently REPLACE the winner's commit (verified on this filesystem —
     * both racers would "succeed" and one commit would be destroyed). */
-  private def publish(table: String, v: Int, json: String): Boolean = {
-    Files.createDirectories(logPath(table))
-    val tmp = Files.createTempFile(logPath(table), ".tmp-", ".json")
+  private def publish(table: String, v: Int, st: LogState,
+                      add: Seq[String], remove: Seq[String],
+                      txn: Option[(String, Long)]): Boolean = {
+    val json = deltaActions(table, v, st, add, remove, txn)
+    val dir = DeltaBridge.deltaLogDir(table)
+    Files.createDirectories(dir)
+    val tmp = Files.createTempFile(dir, ".tmp-", ".json")
     Files.writeString(tmp, json)
-    try {
-      Files.createLink(versionFile(table, v), tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally Files.deleteIfExists(tmp)
+    val won =
+      try {
+        Files.createLink(DeltaBridge.deltaVersionFile(table, v - 1L), tmp)
+        true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException => false
+      } finally Files.deleteIfExists(tmp)
+    if (won) checkpointCadence(table, v - 1L)
+    won
   }
 
+  /** Every [[CheckpointInterval]] versions, checkpoint the log (what
+    * delta-spark writers do): readers then bootstrap in O(live files)
+    * and the covered JSON becomes vacuum-able. Never at or below a
+    * published checkpoint — an explicit `CALL graft.checkpoint` can pin
+    * one above the cadence, and moving `_last_checkpoint` back would,
+    * after a vacuumLog, point readers at a version the log can no longer
+    * reconstruct. Best effort: the commit is already durable, so a
+    * failed checkpoint only leaves the next commit to write it. */
+  private def checkpointCadence(table: String, dv: Long): Unit = {
+    val cv = dv / CheckpointInterval * CheckpointInterval
+    if (cv > 0 && DeltaBridge.lastCheckpointVersion(table).forall(_ < cv))
+      try DeltaBridge.writeCheckpoint(SparkSession.active, table, cv)
+      catch { case NonFatal(_) => () }
+  }
+
+  /** The Delta actions of TxLog version `v` over the head state `st`, one
+    * JSON object per line:
+    *
+    *  - `protocol` at version 0, and the deletion-vector upgrade (reader
+    *    3 / writer 7) when the table first gets a vector;
+    *  - `metaData` at version 0 (a fresh table id, [[Marker]] in its
+    *    configuration) and whenever the schema of the commit's first
+    *    add differs from the head's — how Delta encodes
+    *    `overwriteSchema`; time travel then resolves each version under
+    *    the schema it was written with;
+    *  - `txn` for a streaming batch;
+    *  - `remove` per removed entry, dated for tombstone retention;
+    *  - `add` per added entry: `partitionValues` from the Hive path,
+    *    footer `stats`, the entry's typed stats in `tags`, and its
+    *    `deletionVector`.
+    *
+    * Partition columns are fixed by the first data-bearing commit; an
+    * add whose layout disagrees fails the commit loud (mixed layouts
+    * cannot share one Delta log). A file that does not exist commits
+    * with size 0 and no stats or schema, and needs no session. */
+  private def deltaActions(table: String, v: Int, st: LogState,
+                           add: Seq[String], remove: Seq[String],
+                           txn: Option[(String, Long)]): String = {
+    lazy val spark = SparkSession.active
+    lazy val footerConf = spark.sessionState.newHadoopConf()
+    val now = java.lang.Long.valueOf(System.currentTimeMillis())
+    val addPaths = add.map(entryPath)
+    val footers = addPaths.map(p => Some(Paths.get(table, p))
+      .filter(Files.exists(_)).flatMap(readFooter(footerConf, _)))
+    val partCols =
+      if (st.schemaJson != null && st.schemaJson != EmptySchema) st.partitionCols
+      else addPaths.headOption.map(DeltaBridge.splitHivePath(_)._2.map(_._1))
+        .getOrElse(Seq.empty)
+    val addPvs = addPaths.map { p =>
+      val pvs = DeltaBridge.splitHivePath(p)._2
+      require(pvs.map(_._1) == partCols,
+        s"commit to $table: file $p has partition layout " +
+          s"[${pvs.map(_._1).mkString(",")}], table is " +
+          s"[${partCols.mkString(",")}] — mixed layouts cannot share one " +
+          "Delta log")
+      pvs.toMap
+    }
+    val schemaJson = addPaths.headOption.flatMap(schemaOf(spark, table, _, footers.head))
+      .orElse(if (v == 1) Some(EmptySchema) else None)
+    val hasDv = add.exists(e => entryDv(e).isDefined)
+    val actions = Seq.newBuilder[(String, AnyRef)]
+    if (v == 1 || (hasDv && !st.readerFeatures.contains("deletionVectors")))
+      // moving to table features (writer 7) must ENUMERATE the legacy
+      // features the replaced minWriterVersion=2 implied (appendOnly,
+      // invariants) — the spec's upgrade rule, and what delta-spark lists
+      // on the same (1,2)→(3,7) step; reader 1 implies none, so
+      // readerFeatures carries only the new feature
+      actions += "protocol" -> (
+        if (hasDv) Map[String, AnyRef](
+          "minReaderVersion" -> Integer.valueOf(3),
+          "minWriterVersion" -> Integer.valueOf(7),
+          "readerFeatures" -> java.util.List.of("deletionVectors"),
+          "writerFeatures" -> java.util.List.of(
+            "appendOnly", "invariants", "deletionVectors"))
+        else Map[String, AnyRef](
+          "minReaderVersion" -> Integer.valueOf(1),
+          "minWriterVersion" -> Integer.valueOf(2))).asJava
+    schemaJson.filter(s => v == 1 || s != st.schemaJson).foreach { s =>
+      actions += "metaData" -> Map[String, AnyRef](
+        "id" -> (if (v == 1 || st.metaId == null)
+          java.util.UUID.randomUUID().toString else st.metaId),
+        "format" -> Map[String, AnyRef]("provider" -> "parquet",
+          "options" -> Map.empty[String, String].asJava).asJava,
+        "schemaString" -> s,
+        "partitionColumns" -> partCols.asJava,
+        "configuration" ->
+          (if (v == 1) Map(Marker -> "true") else st.configuration).asJava
+      ).asJava
+    }
+    txn.foreach { case (appId, batchId) =>
+      actions += "txn" -> Map[String, AnyRef]("appId" -> appId,
+        "version" -> java.lang.Long.valueOf(batchId), "lastUpdated" -> now).asJava
+    }
+    remove.foreach { e =>
+      actions += "remove" -> Map[String, AnyRef]("path" -> entryPath(e),
+        "deletionTimestamp" -> now, "dataChange" -> java.lang.Boolean.TRUE).asJava
+    }
+    add.lazyZip(addPvs).lazyZip(footers).foreach { (e, pv, footer) =>
+      val f = Paths.get(table, entryPath(e))
+      val exists = Files.exists(f)
+      val dv = entryDv(e)
+      val stats = entryWithoutDv(e).drop(1).mkString("#")
+      val fields = ListMap[String, AnyRef](
+        "path" -> entryPath(e),
+        "partitionValues" -> pv.asJava,
+        "size" -> java.lang.Long.valueOf(if (exists) Files.size(f) else 0L),
+        "modificationTime" -> java.lang.Long.valueOf(
+          if (exists) Files.getLastModifiedTime(f).toMillis else 0L),
+        "dataChange" -> java.lang.Boolean.TRUE) ++
+        // a DV'd add keeps numRecords as the file's PHYSICAL count, with
+        // tightBounds=false: the extreme row may be deleted
+        footer.flatMap(fileStatsJson(_, tight = dv.isEmpty)).map("stats" -> _) ++
+        Option.when(stats.nonEmpty)(
+          "tags" -> java.util.Map.of(StatsTag, stats)) ++
+        dv.map { ref =>
+          val d = ref.descriptor
+          "deletionVector" -> Map[String, AnyRef](
+            "storageType" -> d.storageType,
+            "pathOrInlineDv" -> d.pathOrInlineDv,
+            "offset" -> Integer.valueOf(d.offset.get),
+            "sizeInBytes" -> Integer.valueOf(d.sizeInBytes),
+            "cardinality" -> java.lang.Long.valueOf(d.cardinality)).asJava
+        }
+      actions += "add" -> fields.asJava
+    }
+    actions.result().map { case (k, body) =>
+      DeltaBridge.mapper.writeValueAsString(java.util.Map.of(k, body)) + "\n"
+    }.mkString
+  }
+
+  /** The Spark schema JSON of one added file, partition columns appended
+    * Hive-style for partitioned layouts (types inferred from the path the
+    * way any Spark reader of the layout infers them). The Spark schema a
+    * Spark writer stores in the footer goes in as the user schema, so no
+    * schema-inference job runs; a footer without one (a foreign writer),
+    * or one that also stores a partition column, is inferred. None for a
+    * file that does not exist. */
+  private def schemaOf(spark: => SparkSession, table: String, p: String,
+                       footer: Option[ParquetMetadata]): Option[String] =
+    Option.when(Files.exists(Paths.get(table, p))) {
+      val (prefix, pvs) = DeltaBridge.splitHivePath(p)
+      val partNames = pvs.map(_._1.toLowerCase).toSet
+      val stored = footer.flatMap(sparkSchemaOf)
+        .filterNot(_.fieldNames.exists(n => partNames.contains(n.toLowerCase)))
+      val options =
+        if (pvs.isEmpty) Map.empty[String, String]
+        else Map("basePath" -> (if (prefix.isEmpty) table else s"$table/$prefix"))
+      (stored match {
+        case Some(schema) => spark.read.options(options).schema(schema).parquet(s"$table/$p")
+        case None         => graft.Tables.parquet(spark, options, s"$table/$p")
+      }).schema.json
+    }
+
+  /** Per-add `stats` JSON — the Delta data-skipping payload
+    * (`numRecords` + per-column `minValues`/`maxValues`/`nullCount`)
+    * external readers (delta-rs, DuckDB delta, delta-spark) prune files
+    * on, computed from the parquet FOOTER alone (row-group metadata —
+    * never a data scan, so a commit stays metadata-priced). Columns
+    * covered: top-level int/long (as JSON numbers), float/double (as
+    * numbers, NaN-bearing groups skipped — NaN bounds are unordered and
+    * a reader skipping on them would be unsound), and UTF-8 strings
+    * (parquet's truncation keeps truncated bounds SOUND: min truncates
+    * down, max rounds up). Other types contribute nullCount only.
+    * Best-effort: any footer surprise yields an add without stats —
+    * stats are an optimization, never a correctness dependency. */
+  private def fileStatsJson(footer: ParquetMetadata,
+                            tight: Boolean): Option[String] = try {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val msgType = footer.getFileMetaData.getSchema
+    val blocks = footer.getBlocks.asScala.toSeq
+    val numRecords = blocks.map(_.getRowCount).sum
+    val mins = new java.util.LinkedHashMap[String, AnyRef]()
+    val maxs = new java.util.LinkedHashMap[String, AnyRef]()
+    val nulls = new java.util.LinkedHashMap[String, AnyRef]()
+    // top-level primitive columns only (nested stats need the full
+    // dotted-path schema walk delta-spark does — scope cut)
+    msgType.getFields.asScala.filter(_.isPrimitive).foreach { field =>
+      val name = field.getName
+      val chunks = blocks.flatMap(_.getColumns.asScala.filter { c =>
+        c.getPath.size() == 1 && c.getPath.toDotString == name })
+      val stats = chunks.map(_.getStatistics)
+      if (stats.nonEmpty && stats.forall(s =>
+          s != null && !s.isEmpty && s.isNumNullsSet)) {
+        nulls.put(name,
+          java.lang.Long.valueOf(stats.map(_.getNumNulls).sum))
+        val valued = stats.filter(_.hasNonNullValue)
+        if (valued.nonEmpty) {
+          val prim = field.asPrimitiveType().getPrimitiveTypeName
+          val logical = field.asPrimitiveType().getLogicalTypeAnnotation
+          prim match {
+            // SIGNED ints only: parquet ranks an UNSIGNED-annotated
+            // column unsigned, so genericGetMin/Max reinterpreted as
+            // signed longs can invert (max = -1 for a column holding
+            // 2^32-1) and a later statsExclude would "prove"
+            // disjointness and UNSOUNDLY drop the file. Unreachable
+            // via Spark-written stages, but TxLog commits carry opaque
+            // paths — foreign parquet can enter — so unsigned falls to
+            // nullCount-only coverage (skipping may only under-prune).
+            case INT32 | INT64
+                if logical == null || (logical match {
+                  case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
+                    i.isSigned
+                  case _ => false
+                }) =>
+              val lo = valued.map(
+                _.genericGetMin.asInstanceOf[Number].longValue()).min
+              val hi = valued.map(
+                _.genericGetMax.asInstanceOf[Number].longValue()).max
+              mins.put(name, java.lang.Long.valueOf(lo))
+              maxs.put(name, java.lang.Long.valueOf(hi))
+            case FLOAT | DOUBLE =>
+              val los = valued.map(
+                _.genericGetMin.asInstanceOf[Number].doubleValue())
+              val his = valued.map(
+                _.genericGetMax.asInstanceOf[Number].doubleValue())
+              if (!los.exists(_.isNaN) && !his.exists(_.isNaN)) {
+                mins.put(name, java.lang.Double.valueOf(los.min))
+                maxs.put(name, java.lang.Double.valueOf(his.max))
+              }
+            case BINARY
+                if logical.isInstanceOf[
+                  LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
+              def byteMin(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+                if (java.util.Arrays.compareUnsigned(a, b) <= 0) a else b
+              val lo = valued.map(_.genericGetMin
+                .asInstanceOf[org.apache.parquet.io.api.Binary]
+                .getBytes).reduce(byteMin)
+              val hi = valued.map(_.genericGetMax
+                .asInstanceOf[org.apache.parquet.io.api.Binary]
+                .getBytes).reduce((a, b) =>
+                  if (java.util.Arrays.compareUnsigned(a, b) >= 0) a else b)
+              mins.put(name, new String(lo, "UTF-8"))
+              maxs.put(name, new String(hi, "UTF-8"))
+            case _ => () // nullCount-only coverage
+          }
+        }
+      }
+    }
+    val payload = new java.util.LinkedHashMap[String, AnyRef]()
+    payload.put("numRecords", java.lang.Long.valueOf(numRecords))
+    payload.put("minValues", mins)
+    payload.put("maxValues", maxs)
+    payload.put("nullCount", nulls)
+    // DV'd adds: numRecords stays the file's PHYSICAL count, but the
+    // footer min/max may be loose over the LIVE rows (the extreme row
+    // may be deleted) — the spec's tightBounds=false says exactly that
+    if (!tight) payload.put("tightBounds", java.lang.Boolean.FALSE)
+    Some(DeltaBridge.mapper.writeValueAsString(payload))
+  } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** One parquet file's footer; None when it cannot be read (the add
+    * then commits without stats, and its schema is inferred). The read
+    * options wrap `conf` itself: parquet's default options would build a
+    * fresh Hadoop conf, re-parsing its XML resources, per file. */
+  private def readFooter(conf: org.apache.hadoop.conf.Configuration,
+                         f: Path): Option[ParquetMetadata] = try {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf),
+      HadoopReadOptions.builder(conf).build())
+    try Some(r.getFooter) finally r.close()
+  } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The Spark schema a Spark writer stores in the footer's key-value
+    * metadata (what Spark's own schema inference reads back); None for a
+    * foreign writer's file or an unparseable value. */
+  private def sparkSchemaOf(footer: ParquetMetadata): Option[StructType] =
+    Option(footer.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+
+
   /** Optimistic-concurrency commit: claim the next version by atomic
-    * rename; on a collision re-read and retry. */
+    * link; on a collision re-read and retry. */
   def commit(table: String, add: Seq[String], remove: Seq[String]): Int =
-    commitWith(table)(_ => (add, remove))
+    commitWith(table)((_, _) => (add, remove))
 
   /** Claim EXACTLY version `v` — returns false if another writer got
-    * there first. The primitive snapshot-isolation conflict detection
-    * builds on: a writer that staged work against version v−1 must NOT
-    * blindly land at a later version (its inputs may be stale). */
+    * there first (or `v` is not the next version). The primitive
+    * snapshot-isolation conflict detection builds on: a writer that
+    * staged work against version v−1 must NOT blindly land at a later
+    * version (its inputs may be stale). */
   def tryCommitAt(table: String, v: Int, add: Seq[String],
                   remove: Seq[String], batchId: Option[Long] = None,
                   appId: Option[String] = None): Boolean =
-    publish(table, v, commitJson(v, add, remove, batchId, appId))
+    head(table) == v - 1 &&
+      publish(table, v, state(table, Some(v - 1)), add, remove,
+        batchId.map((appId.getOrElse(V1AppId), _)))
 
   /** Uniform OCC-exhaustion failure for every write loop: the claim
     * loop re-reads the head and retries, so reaching the attempt budget
@@ -610,8 +913,10 @@ object TxLog {
     * `retainVersions` versions stay fully time-travelable (the keep set
     * is the union of their live sets); reading an OLDER version
     * afterwards fails at scan time on the missing files, exactly like a
-    * vacuumed Delta table. Commit RECORDS are never deleted — they are
-    * metadata-sized and replay + OCC arbitration need the full chain.
+    * vacuumed Delta table. Commits are never deleted here (log retention
+    * is [[DeltaBridge.vacuumLog]]'s); versions whose JSON it retired are
+    * past time travel already, so the retained window starts no lower
+    * than the oldest version the log can still reconstruct.
     * Files younger than `minAgeMs` survive unconditionally: a concurrent
     * writer's staged-but-uncommitted files must not be swept, the same
     * modification-time discipline behind Delta VACUUM's retention window
@@ -623,31 +928,25 @@ object TxLog {
     * retained version references sweep under the same age guard.
     * Returns the deleted table-relative paths.
     *
-    * Scale: one log replay (metadata), one filesystem walk of the stage
-    * dirs; at 10⁵ files this is driver-side listing arithmetic, and the
-    * deletes are per-file — no data is read or moved. */
+    * Scale: one log replay (metadata) per retained version, one
+    * filesystem walk of the stage dirs; at 10⁵ files this is driver-side
+    * listing arithmetic, and the deletes are per-file — no data is read
+    * or moved. */
   def vacuum(table: String, retainVersions: Int = 2,
              minAgeMs: Long = 0): Seq[String] = {
     require(retainVersions >= 1, "vacuum must retain at least the head")
-    val vs = versions(table)
-    if (vs.isEmpty) return Seq.empty
-    val cutoff = vs.drop(math.max(0, vs.length - retainVersions)).head
-    // ONE replay pass, snapshotting the live set at every retained version
-    val live = scala.collection.mutable.LinkedHashSet[String]()
-    val keep = scala.collection.mutable.HashSet[String]()
-    val keepDv = scala.collection.mutable.HashSet[String]()
-    vs.foreach { v =>
-      val (add, remove) = readCommit(table, v)
-      remove.foreach(live -= _)
-      add.foreach(live += _)
-      if (v >= cutoff) {
-        keep ++= live.iterator.map(entryPath)
-        // deletion-vector sidecars referenced by any retained version
-        // survive; superseded vectors (re-deleted or rewritten files)
-        // become sweepable like any unreferenced stage file
-        keepDv ++= live.iterator.flatMap(e => entryDv(e).map(_.uuid))
-      }
-    }
+    val h = head(table)
+    if (h == 0) return Seq.empty
+    val floor =
+      if (versions(table).headOption.contains(1)) 1
+      else DeltaBridge.lastCheckpointVersion(table).fold(1)(_.toInt + 1)
+    val live = (math.max(h - retainVersions + 1, floor) to h)
+      .flatMap(v => liveFiles(table, Some(v)))
+    val keep = live.map(entryPath).toSet
+    // deletion-vector sidecars referenced by any retained version survive;
+    // superseded vectors (re-deleted or rewritten files) become sweepable
+    // like any unreferenced stage file
+    val keepDv = live.flatMap(e => entryDv(e).map(_.uuid)).toSet
     val root = Paths.get(table)
     val deadline = System.currentTimeMillis() - minAgeMs
     def walk(p: Path): Seq[Path] = listDir(p).flatMap { c =>
@@ -714,7 +1013,7 @@ object TxLog {
     * rewrites must re-attach them on read and re-derive the layout on
     * stage — a flat rewrite would silently drop the partition column.
     * Mixed layouts fail loud (they cannot share one rewritten table; the
-    * export enforces the same invariant per commit). */
+    * commit enforces the same invariant). */
   private def livePartitionCols(table: String, live: Seq[String],
                                 op: String): Seq[String] = {
     val layouts = live
@@ -857,6 +1156,11 @@ object TxLog {
     try Option(new java.net.URI(s).getPath).getOrElse(s)
     catch { case _: java.net.URISyntaxException => s }
 
+  /** The entry of the file a scan probed at `abs` (decoded). */
+  private def entryOf(entries: Seq[String], abs: String, op: String): String =
+    entries.find(e => abs.endsWith(entryPath(e))).getOrElse(
+      throw new IllegalStateException(s"$op: probed file $abs is not an entry"))
+
   private def hitEntries(live: Seq[String], hitAbs: Set[String]): Seq[String] = {
     val decoded = hitAbs.map(decodeFileUri)
     live.filter(e => decoded.exists(_.endsWith(entryPath(e))))
@@ -866,8 +1170,9 @@ object TxLog {
     var attempts = 0
     while (attempts < 20) {
       attempts += 1
-      val base = versions(table).lastOption.getOrElse(0)
-      val live = liveFiles(table, Some(base))
+      val base = head(table)
+      val st = state(table, Some(base))
+      val live = entries(st)
       require(live.nonEmpty, s"optimize: $table is empty")
       // partitioned: compaction PRESERVES the layout — `partFiles` caps
       // files PER PARTITION (default 1 = the per-partition compaction
@@ -877,7 +1182,7 @@ object TxLog {
       val partTypes = partitionTypesOf(live, partCols)
       val snapshot = readEntries(spark, table, live, partCols, partTypes)
       val staged = stageLike(snapshot, table, partCols, partFiles)
-      if (tryCommitAt(table, base + 1, add = staged, remove = live))
+      if (publish(table, base + 1, st, add = staged, remove = live, None))
         return base + 1
       // lost the race: staged files become unreferenced garbage for vacuum
     }
@@ -900,8 +1205,9 @@ object TxLog {
     var attempts = 0
     while (attempts < 20) {
       attempts += 1
-      val base = versions(table).lastOption.getOrElse(0)
-      val live = liveFiles(table, Some(base))
+      val base = head(table)
+      val st = state(table, Some(base))
+      val live = entries(st)
       val partCols = livePartitionCols(table, live, "merge")
       val partTypes = partitionTypesOf(live, partCols)
       val keys = updates.select(key).distinct()
@@ -923,7 +1229,7 @@ object TxLog {
         case None     => updates
       }
       val staged = stageLike(rewrite, table, partCols, partFiles)
-      if (tryCommitAt(table, base + 1, add = staged, remove = hitRel))
+      if (publish(table, base + 1, st, add = staged, remove = hitRel, None))
         return base + 1
       // lost the race: staged files become vacuum-collectable garbage
     }
@@ -1010,8 +1316,9 @@ object TxLog {
     var attempts = 0
     while (attempts < 20) {
       attempts += 1
-      val base = versions(table).lastOption.getOrElse(0)
-      val live = liveFiles(table, Some(base))
+      val base = head(table)
+      val st = state(table, Some(base))
+      val live = entries(st)
       val partCols = livePartitionCols(table, live, "merge")
       val partTypes = partitionTypesOf(live, partCols)
       val keyRows = source.select(keys.map(col): _*)
@@ -1140,18 +1447,15 @@ object TxLog {
           .collect()
           .map(r => (decodeFileUri(r.getString(0)),
             r.getLong(1), r.getLong(2), r.getLong(3)))
-        def entryOf(abs: String): String =
-          hitRel.find(e => abs.endsWith(entryPath(e))).getOrElse(
-            throw new IllegalStateException(
-              s"mergeClauses: probed file $abs not in the hit set"))
         val dvBound = stats.filter { case (_, dels, upds, nrows) =>
           upds == 0 && dels > 0 && dels.toDouble <= maxDvFraction * nrows }
         val untouched = stats.filter { case (_, dels, upds, _) =>
           dels == 0 && upds == 0 }
         val dropRel = (dvBound ++ untouched)
-          .map { case (abs, _, _, _) => entryOf(abs) }.toSet
+          .map { case (abs, _, _, _) => entryOf(hitRel, abs, "mergeClauses") }.toSet
         rwRel = hitRel.filterNot(dropRel.contains)
-        dvOldEntries = dvBound.toSeq.map { case (abs, _, _, _) => entryOf(abs) }
+        dvOldEntries = dvBound.toSeq.map { case (abs, _, _, _) =>
+          entryOf(hitRel, abs, "mergeClauses") }
         if (dvOldEntries.nonEmpty) {
           // deleted PHYSICAL row indices, driver-sized by the threshold;
           // vector union + sidecar publish shared with deleteWhereDv
@@ -1274,8 +1578,8 @@ object TxLog {
         return base // DV probe proved the whole statement a no-op
       // remove = rewritten files + DV-superseded entries; hit files the
       // DV probe proved untouched carry over by reference
-      if (tryCommitAt(table, base + 1, add = dvAdds ++ staged,
-          remove = rwRel ++ dvOldEntries))
+      if (publish(table, base + 1, st, add = dvAdds ++ staged,
+          remove = rwRel ++ dvOldEntries, None))
         return base + 1
       // lost the race: staged files / sidecars become vacuum-collectable
       // garbage
@@ -1339,8 +1643,8 @@ object TxLog {
     * deletions UNION into a fresh vector (the old sidecar becomes
     * unreferenced garbage, like any superseded stage file). Every read
     * path honors the vectors — [[read]]/[[readPruned]]/the rewrite
-    * kernels here, and [[DeltaBridge.exportLog]] republishes them as
-    * Delta `deletionVector` descriptors (with the protocol upgraded to
+    * kernels here, and the commit publishes them as Delta
+    * `deletionVector` descriptors (with the protocol upgraded to
     * readerVersion 3 + deletionVectors), so foreign readers and the
     * native catalog mounts agree. ONE commit, OCC-safe; stats fields
     * survive (deletion only shrinks the value set — bounds stay sound).
@@ -1360,8 +1664,9 @@ object TxLog {
     var attempts = 0
     while (attempts < 20) {
       attempts += 1
-      val base = versions(table).lastOption.getOrElse(0)
-      val live = liveFiles(table, Some(base))
+      val base = head(table)
+      val st = state(table, Some(base))
+      val live = entries(st)
       val partCols = livePartitionCols(table, live, "delete")
       val partTypes = partitionTypesOf(live, partCols)
       if (live.isEmpty) return base
@@ -1377,14 +1682,10 @@ object TxLog {
         .collect().map(r => (decodeFileUri(r.getString(0)),
           r.getLong(1), r.getLong(2)))
       if (counts.isEmpty) return base // no row matches: the commit is a no-op
-      def entryOf(abs: String): String =
-        live.find(e => abs.endsWith(entryPath(e))).getOrElse(
-          throw new IllegalStateException(
-            s"deleteWhereDv: hit file $abs not in the live set"))
       val (dvBound, rwBound) = counts.partition { case (_, hits, rows) =>
         hits.toDouble <= maxDvFraction * rows }
-      val dvEntriesOld = dvBound.map { case (abs, _, _) => entryOf(abs) }
-      val rwEntriesOld = rwBound.map { case (abs, _, _) => entryOf(abs) }
+      val dvEntriesOld = dvBound.map { case (abs, _, _) => entryOf(live, abs, "deleteWhereDv") }
+      val rwEntriesOld = rwBound.map { case (abs, _, _) => entryOf(live, abs, "deleteWhereDv") }
       // deleted PHYSICAL row indices per DV-bound file — driver-sized by
       // the threshold; unioned with any existing vector's indices
       val newDvAdds: Seq[String] =
@@ -1408,8 +1709,8 @@ object TxLog {
           readEntries(spark, table, rwEntriesOld, partCols, partTypes)
             .where(s"NOT coalesce(($predicate), false)"),
           table, partCols, partFiles)
-      if (tryCommitAt(table, base + 1, add = newDvAdds ++ staged,
-          remove = dvEntriesOld ++ rwEntriesOld))
+      if (publish(table, base + 1, st, add = newDvAdds ++ staged,
+          remove = dvEntriesOld ++ rwEntriesOld, None))
         return base + 1
       // lost the race: staged files / sidecars become unreferenced garbage
     }
@@ -1458,8 +1759,9 @@ object TxLog {
     var attempts = 0
     while (attempts < 20) {
       attempts += 1
-      val base = versions(table).lastOption.getOrElse(0)
-      val live = liveFiles(table, Some(base))
+      val base = head(table)
+      val st = state(table, Some(base))
+      val live = entries(st)
       // partitioned tables flow through the same file-granular kernel:
       // partition columns re-attach on read (so predicates over them
       // evaluate — and a pure partition predicate's hit scan prunes to
@@ -1484,7 +1786,7 @@ object TxLog {
         case None          => survivors
       }
       val staged = stageLike(rewrite, table, partCols, partFiles)
-      if (tryCommitAt(table, base + 1, add = staged, remove = hitRel))
+      if (publish(table, base + 1, st, add = staged, remove = hitRel, None))
         return base + 1
       // lost the race: staged files become vacuum-collectable garbage
     }
@@ -1521,76 +1823,33 @@ object TxLog {
     // restoring to the state the head already has is a no-op, not an
     // empty commit cluttering the history
     if (liveFiles(table).toSet == target.toSet)
-      return versions(table).last
-    commitWith(table) { head =>
-      val current = liveFiles(table, Some(head)).toSet
+      return head(table)
+    commitWith(table) { (_, st) =>
+      val current = entries(st)
       val want = target.toSet
-      (target.filterNot(current), // re-add in the target's replay order
-        liveFiles(table, Some(head)).filterNot(want))
+      (target.filterNot(current.toSet), // re-add in the target's replay order
+        current.filterNot(want))
     }
   }
 
   /** OCC claim loop. `actions` receives the HEAD version this attempt
-    * observed (0 = empty log) and must derive any state-dependent lists
-    * (overwrite's remove set) pinned to that head via asOf — one log read
-    * per attempt decides both the inputs and the claimed version, so a
-    * commit landing in between forces a retry instead of being silently
-    * overwritten out of the remove list. */
+    * observed (0 = empty log) and the log state replayed at it, and must
+    * derive any state-dependent lists (overwrite's remove set) from that
+    * state — one log read per attempt decides both the inputs and the
+    * claimed version, so a commit landing in between forces a retry
+    * instead of being silently overwritten out of the remove list. */
   private def commitWith(table: String)
-                        (actions: Int => (Seq[String], Seq[String])): Int = {
+                        (actions: (Int, LogState) => (Seq[String], Seq[String])): Int = {
     var attempts = 0
     while (attempts < 100) {
       attempts += 1
-      val head = versions(table).lastOption.getOrElse(0)
-      val (add, remove) = actions(head)
-      if (publish(table, head + 1, commitJson(head + 1, add, remove)))
-        return head + 1
+      val h = head(table)
+      val st = state(table, Some(h))
+      val (add, remove) = actions(h, st)
+      if (publish(table, h + 1, st, add, remove, None))
+        return h + 1
       // lost the race — re-read the log, recompute actions, retry
     }
     occExhausted("commit", table, 100)
-  }
-
-  private def commitJson(v: Int, add: Seq[String], remove: Seq[String],
-                         batchId: Option[Long] = None,
-                         appId: Option[String] = None): String = {
-    def arr(xs: Seq[String]) = xs.map(x => "\"" + x + "\"").mkString("[", ",", "]")
-    val bid = batchId.map(b => s""","batchId":$b""").getOrElse("")
-    // appId is a streaming query id (UUID alphabet) — JSON-safe verbatim
-    val aid = appId.map(a => s""","appId":"$a"""").getOrElse("")
-    s"""{"version":$v,"add":${arr(add)},"remove":${arr(remove)}$bid$aid}"""
-  }
-
-  /** The (add, remove) entry lists of commit `v` — the unit
-    * [[DeltaBridge.exportLog]] maps onto Delta-protocol actions. */
-  def commitActions(table: String, v: Int): (Seq[String], Seq[String]) =
-    readCommit(table, v)
-
-  /** The (appId, batchId) a STREAMING commit recorded, if any —
-    * [[DeltaBridge.exportLog]] republishes it as a Delta `txn`
-    * (SetTransaction) action, so a foreign engine resuming the same
-    * streaming query against the exported log sees the exactly-once
-    * frontier the TxLog enforces (the spec's appId/version contract;
-    * checkpoints preserve it through the r15 txn replay). V1-sink
-    * commits carry a batchId with NO appId — one shared id space by
-    * [[appendBatch]]'s replay rule — so they export under the stable
-    * synthetic appId `graft-stream-v1`. */
-  def commitTxn(table: String, v: Int): Option[(String, Long)] = {
-    val txt = Files.readString(versionFile(table, v))
-    """"batchId":(\d+)""".r.findFirstMatchIn(txt).map { m =>
-      val aid = """"appId":"([^"]+)"""".r.findFirstMatchIn(txt)
-        .map(_.group(1)).getOrElse("graft-stream-v1")
-      (aid, m.group(1).toLong)
-    }
-  }
-
-  private def readCommit(table: String, v: Int): (Seq[String], Seq[String]) = {
-    val txt = Files.readString(versionFile(table, v))
-    def list(key: String): Seq[String] = {
-      val m = s""""$key":\\[([^\\]]*)\\]""".r.findFirstMatchIn(txt)
-      m.map(_.group(1)).filter(_.nonEmpty)
-        .map(_.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")))
-        .getOrElse(Seq.empty)
-    }
-    (list("add"), list("remove"))
   }
 }

@@ -1,7 +1,6 @@
 package graft.sources.v2
 
 import java.util
-import scala.jdk.CollectionConverters._
 
 import graft.sources.{DeltaBridge, TxLog}
 import org.apache.hadoop.fs.{Path => HPath}
@@ -46,8 +45,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * pruning + stats skipping — [[DeltaLogV2Index]] delegates listing to
   * [[graft.sources.DeltaLogFileIndex]]) feeding Spark's own V2 parquet
   * scan. Writes are the V1-fallback bridge (`V1Write`) onto the
-  * transactional TxLog append/overwrite + `_delta_log` export — one
-  * write path, not two drifting ones. SQL DELETE routes the pushed V2
+  * transactional TxLog append/overwrite, which commits the `_delta_log`
+  * directly — one write path, not two drifting ones. SQL DELETE routes the pushed V2
   * predicates through a CLOSED-WORLD translator ([[V2PredicateSql]]) to
   * [[graft.sources.TxLog.deleteWhere]]'s file-granular copy-on-write:
   * anything the translator cannot prove it renders exactly makes
@@ -99,26 +98,18 @@ class GraftDeltaCatalog extends TableCatalog
     new HPath(ident.name()).toUri.getPath
   }
 
-  /** Existence check + TxLog→log export, shared by every load form. Runs
-    * BEFORE any timestamp/version resolution so commits not yet exported
-    * are addressable by `TIMESTAMP AS OF` too (resolution reads the
-    * exported `_delta_log`), and a never-exported TxLog table fails with
-    * NoSuchTable semantics, not a confusing 'no JSON commits' require. */
-  private def resolveAndExport(ident: Identifier): String = {
+  /** Existence check shared by every load form: a path without a
+    * `_delta_log` fails with NoSuchTable semantics, not a confusing
+    * 'no JSON commits' require. */
+  private def resolve(ident: Identifier): String = {
     val path = pathOf(ident)
-    val hasDelta =
-      java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path, "_delta_log"))
-    if (!hasDelta && TxLog.versions(path).isEmpty)
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path, "_delta_log")))
       throw new NoSuchTableException(Seq(catalogName, ident.name()))
-    // TxLog-backed tables serve their freshest state: export any
-    // versions committed since the last export before pinning a snapshot
-    if (TxLog.versions(path).nonEmpty)
-      DeltaBridge.exportLog(SparkSession.active, path)
     path
   }
 
   private def load(ident: Identifier, versionAsOf: Option[Long]): Table =
-    new GraftDeltaTable(resolveAndExport(ident), versionAsOf)
+    new GraftDeltaTable(resolve(ident), versionAsOf)
 
   override def loadTable(ident: Identifier): Table = load(ident, None)
 
@@ -129,7 +120,7 @@ class GraftDeltaCatalog extends TableCatalog
   /** SQL `TIMESTAMP AS OF ts` — Spark hands epoch MICROseconds; commit
     * time is the `_delta_log` file mtime ([[DeltaBridge.versionAtTimestamp]]). */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val path = resolveAndExport(ident)
+    val path = resolve(ident)
     new GraftDeltaTable(path,
       Some(DeltaBridge.versionAtTimestamp(path, timestamp / 1000L)))
   }
@@ -228,14 +219,14 @@ private[v2] class GraftDeltaTable(path: String, versionAsOf: Option[Long])
   private def mutable(op: String): Unit = {
     require(versionAsOf.isEmpty,
       s"$op on ${name()}: a VERSION/TIMESTAMP AS OF load is read-only")
-    require(TxLog.versions(path).nonEmpty,
+    require(TxLog.owns(path),
       s"$op on ${name()}: not a TxLog-backed table (a foreign _delta_log " +
         "mounts read-only; its writer owns its commits)")
   }
 
   /** INSERT INTO / INSERT OVERWRITE — the V1 write bridge: Spark has
     * already validated the input schema against [[schema]]; the insert
-    * lands as one transactional TxLog commit + `_delta_log` export, the
+    * lands as one transactional TxLog commit (one Delta version), the
     * same path as `df.write.format("graft-delta")`. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
@@ -250,7 +241,6 @@ private[v2] class GraftDeltaTable(path: String, versionAsOf: Option[Long])
               val s = data.sparkSession
               if (overwrite || ovr) TxLog.overwrite(s, data, path)
               else TxLog.append(s, data, path)
-              DeltaBridge.exportLog(s, path)
             }
           }
         /** `writeStream.toTable` — the exactly-once V2 streaming sink
@@ -272,7 +262,7 @@ private[v2] class GraftDeltaTable(path: String, versionAsOf: Option[Long])
     }
 
   override def canDeleteWhere(predicates: Array[Predicate]): Boolean =
-    versionAsOf.isEmpty && TxLog.versions(path).nonEmpty &&
+    versionAsOf.isEmpty && TxLog.owns(path) &&
       predicates.forall(V2PredicateSql.toSql(_).isDefined)
 
   /** SQL `DELETE FROM ... WHERE` — the pushed predicates conjoin into
@@ -289,7 +279,6 @@ private[v2] class GraftDeltaTable(path: String, versionAsOf: Option[Long])
     }
     val sql = if (parts.isEmpty) "true" else parts.mkString("(", ") AND (", ")")
     TxLog.deleteWhere(spark, path, sql)
-    DeltaBridge.exportLog(spark, path)
   }
 
   override def toString: String = name()

@@ -4,7 +4,7 @@ import java.util.UUID
 
 import scala.collection.mutable
 
-import graft.sources.{DeltaBridge, TxLog}
+import graft.sources.TxLog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -31,15 +31,15 @@ import org.apache.spark.util.SerializableConfiguration
   *    partition values ride the PATH (escaped exactly like Spark's own
   *    partitioned writer: [[ExternalCatalogUtils.escapePathName]]), and
   *    the data files exclude the partition columns, so the layout is
-  *    byte-identical to [[TxLog.appendPartitioned]]'s and exportLog's
+  *    byte-identical to [[TxLog.appendPartitioned]]'s and the commit's
   *    `partitionValues` parse applies unchanged;
   *  - the driver's `commit(epoch)` lands the file list as ONE TxLog
   *    commit via [[TxLog.appendBatchStaged]] — the epoch id rides the
-  *    commit record, so a restart's replayed epoch is recognized and
-  *    creates no second version (its re-staged files are vacuum-
-  *    collectable orphans) — then exports the `_delta_log`, one
-  *    mountable Delta version per micro-batch. Zero-row epochs commit
-  *    NOTHING (no version churn on idle triggers).
+  *    commit's `txn` action, so a restart's replayed epoch is recognized
+  *    and creates no second version (its re-staged files are vacuum-
+  *    collectable orphans) — one mountable Delta version per
+  *    micro-batch. Zero-row epochs commit NOTHING (no version churn on
+  *    idle triggers).
   *
   * Scale shape: the data path is executor-parallel parquet encoding; the
   * driver handles only file NAMES per epoch. Writers open lazily per
@@ -79,7 +79,7 @@ private[v2] case class GraftDeltaStreamingWrite(table: String,
       .collect { case m: GraftDeltaFileCommit => m.relPaths }
       .flatten.sorted
     // a ZERO-ROW epoch commits nothing: an idle trigger must not mint a
-    // TxLog version + an empty exported commit file per tick (version
+    // Delta version with an empty commit file per tick (version
     // churn; some foreign Delta readers reject empty commits — ADVICE
     // r13). Replay-safe either way: a replayed empty epoch is a no-op
     // whether or not its id was ever recorded.
@@ -90,10 +90,7 @@ private[v2] case class GraftDeltaStreamingWrite(table: String,
       // batches (review finding r13); queryId is the STABLE streaming id
       // (checkpoint-persisted), so a restart's replayed epoch still dedups
       TxLog.appendBatchStaged(table, epochId, staged.toIndexedSeq,
-        appId = Some(queryId))
-      // replay-safe: a re-delivered epoch committed nothing above, and the
-      // export cursor makes re-exporting published versions a no-op
-      DeltaBridge.exportLog(SparkSession.active, table)
+        appId = Some(queryId)): Unit
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import graft.sources.{DeltaBridge, TxLog}
+import graft.sources.TxLog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, Literal}
@@ -107,7 +107,6 @@ object GraftDmlStrategy extends SparkStrategy {
       if (dup.nonEmpty) refuse(table, "UPDATE",
         s"duplicate SET targets ${dup.mkString(",")}")
       TxLog.updateWhere(spark, table.dmlPath, condSql, set.toMap)
-      DeltaBridge.exportLog(spark, table.dmlPath)
     })
 
   // -------------------------------------------------------------- MERGE
@@ -275,7 +274,6 @@ object GraftDmlStrategy extends SparkStrategy {
           keyAttrs.map(_.name), tableCols,
           matchedClauses, insertClauses, bySourceClauses)
       } finally src.unpersist(blocking = false)
-      DeltaBridge.exportLog(spark, table.dmlPath)
     })
 
   // ---------------------------------------------------------- rendering

@@ -28,8 +28,8 @@ import org.apache.spark.sql.types._
   * read/write paths already follow) and returns its result as driver-
   * local rows ([[LocalScan]] — lifecycle output is metadata-sized by
   * construction: history is O(versions), vacuum returns counts).
-  * Mutating procedures export the `_delta_log` afterwards so the SQL
-  * surface and foreign readers always see the post-verb state. */
+  * Mutating procedures commit straight into the `_delta_log`, so the
+  * SQL surface and foreign readers always see the post-verb state. */
 private[v2] object GraftProcedures {
 
   val names: Seq[String] =
@@ -65,15 +65,8 @@ private[v2] object GraftProcedures {
     Collections.singletonList(scan).iterator()
   }
 
-  /** TxLog-backed tables export pending commits first (the same
-    * prologue as catalog loads), so procedures see fresh state; foreign
-    * `_delta_log`-only tables pass through untouched. */
-  private def exportIfTx(table: String): Unit =
-    if (TxLog.versions(table).nonEmpty)
-      DeltaBridge.exportLog(spark, table)
-
   private def requireTx(table: String, proc: String): Unit =
-    require(TxLog.versions(table).nonEmpty,
+    require(TxLog.owns(table),
       s"CALL $proc('$table'): not a TxLog-backed table (a foreign " +
         "_delta_log mounts read-only; its writer owns its lifecycle)")
 
@@ -100,7 +93,6 @@ private[v2] object GraftProcedures {
       StructField("checkpointed", BooleanType)))
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val table = input.getUTF8String(0).toString
-      exportIfTx(table)
       val rows = DeltaBridge.history(spark, table).collect().map { r =>
         InternalRow(r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getBoolean(4), r.getBoolean(5))
@@ -109,10 +101,10 @@ private[v2] object GraftProcedures {
     }
   }
 
-  /** CHECKPOINT: pin a log checkpoint at the exported head
+  /** CHECKPOINT: pin a log checkpoint at the head
     * ([[DeltaBridge.checkpoint]]) — readers then bootstrap in O(live
     * files) and `CALL vacuum` may retire the covered JSON prefix.
-    * Works on TxLog-backed tables (exported first) AND foreign
+    * Works on TxLog-backed tables AND foreign
     * `_delta_log`s (a checkpoint is a READER-side compaction: it adds
     * derived metadata without touching the writer's commits). */
   private object CheckpointProc extends SimpleProc("checkpoint") {
@@ -122,7 +114,6 @@ private[v2] object GraftProcedures {
       StructType(Seq(StructField("version", LongType)))
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val table = input.getUTF8String(0).toString
-      exportIfTx(table)
       result(schema,
         Seq(InternalRow(DeltaBridge.checkpoint(spark, table))))
     }
@@ -143,13 +134,7 @@ private[v2] object GraftProcedures {
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val table = input.getUTF8String(0).toString
       requireTx(table, "vacuum")
-      exportIfTx(table)
-      val logGone =
-        if (DeltaBridge.versions(table).nonEmpty ||
-            java.nio.file.Files.isDirectory(
-              java.nio.file.Paths.get(table, "_delta_log")))
-          DeltaBridge.vacuumLog(table).length.toLong
-        else 0L
+      val logGone = DeltaBridge.vacuumLog(table).length.toLong
       val dataGone =
         TxLog.vacuum(table, input.getInt(1), input.getLong(2)).length.toLong
       result(schema, Seq(InternalRow(dataGone, logGone)))
@@ -168,7 +153,6 @@ private[v2] object GraftProcedures {
       val table = input.getUTF8String(0).toString
       requireTx(table, "optimize")
       val v = TxLog.optimize(spark, table, input.getInt(1))
-      DeltaBridge.exportLog(spark, table)
       result(schema, Seq(InternalRow(v.toLong)))
     }
   }
@@ -192,7 +176,6 @@ private[v2] object GraftProcedures {
       requireTx(table, "delete_dv")
       val v = TxLog.deleteWhereDv(spark, table,
         input.getUTF8String(1).toString, input.getDouble(2))
-      DeltaBridge.exportLog(spark, table)
       result(schema, Seq(InternalRow(v.toLong)))
     }
   }
@@ -208,7 +191,6 @@ private[v2] object GraftProcedures {
       val table = input.getUTF8String(0).toString
       requireTx(table, "restore")
       val v = TxLog.restore(spark, table, input.getInt(1))
-      DeltaBridge.exportLog(spark, table)
       result(schema, Seq(InternalRow(v.toLong)))
     }
   }

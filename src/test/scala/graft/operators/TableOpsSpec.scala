@@ -78,7 +78,7 @@ class TableOpsSpec extends SparkSpec {
       .orderBy("o_orderpriority").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(out.toSeq == full.toSeq)
-    val t = graft.SparkSupport.layoutArtifact("ivm_agg", sf)(_ => ()) + "/agg"
+    val t = graft.sources.TxLog.layoutArtifact("ivm_agg", sf)(_ => ()) + "/agg"
     assert(graft.sources.TxLog.versions(t) == Seq(1, 2),
       "lifecycle must be exactly base-append then merged-overwrite")
     // v1 = base fold only (the 90% slice)
@@ -120,7 +120,7 @@ class TableOpsSpec extends SparkSpec {
       (((x >> i) & 1L) << (2 * i)) + (((y >> i) & 1L) << (2 * i + 1))).sum
     val zLo = morton(nrm(k1, klo, khi), nrm(d1, dlo, dhi))
     val zHi = morton(nrm(k2, klo, khi), nrm(d2, dlo, dhi)) + 1
-    val ztab = graft.SparkSupport.layoutArtifact("zorder_tbl", sf)(_ => ())
+    val ztab = graft.sources.TxLog.layoutArtifact("zorder_tbl", sf)(_ => ())
     val zKept = TxLog.pruneFiles(ztab, zLo, zHi).size
     assert(zKept < TxLog.liveFiles(ztab).size,
       "z-layout must skip files for the 2-D box")

@@ -606,21 +606,20 @@ class DeltaBridgeSpec extends SparkSpec {
       .map(_.getLong(0)).toSeq == Seq(100L, 101L, 102L))
   }
 
-  test("a ZERO-ADD first commit still exports a spec-compliant version 0: " +
-    "metaData is borrowed from the first data-bearing commit; a log with " +
-    "no data anywhere defers export instead of publishing schema-less") {
+  test("a ZERO-ADD first commit is a spec-compliant version 0 (protocol + " +
+    "metaData with an empty schema); the first data-bearing commit " +
+    "declares the real schema and partition layout") {
     import spark.implicits._
     val t = freshTable()
     // partitionBy staging writes files lazily, so an empty frame commits
     // a version with ZERO adds — an empty first micro-batch's shape
     val empty = Seq.empty[(Long, String)].toDF("id", "state")
     TxLog.appendPartitioned(spark, empty, t, Seq("state"))
-    assert(DeltaBridge.exportLog(spark, t) == 0,
-      "no data-bearing commit yet: export must defer, not publish")
-    assert(DeltaBridge.versions(t).isEmpty)
+    assert(DeltaBridge.versions(t) == Seq(0L),
+      "the empty commit is Delta version 0 as soon as it lands")
     TxLog.appendPartitioned(spark,
       Seq((1L, "CA")).toDF("id", "state"), t, Seq("state"))
-    DeltaBridge.exportLog(spark, t)
+    assert(DeltaBridge.streamSnapshot(spark, t, None).partitionCols == Seq("state"))
     val v0 = Files.readAllLines(
       Paths.get(t, "_delta_log", f"${0L}%020d.json")).asScala
       .filter(_.nonEmpty)
@@ -630,7 +629,7 @@ class DeltaBridgeSpec extends SparkSpec {
     assert(DeltaBridge.read(spark, t).collect()
       .map(_.getAs[Long]("id")).toSeq == Seq(1L))
     assert(DeltaBridge.read(spark, t, versionAsOf = Some(0L)).count() == 0,
-      "time travel to the empty version resolves under the borrowed schema")
+      "time travel to the empty version resolves under its empty schema")
   }
 
   test("STREAMING over a CHECKPOINT-ONLY log (JSON commits cleaned up) " +

@@ -107,8 +107,9 @@ class TxLogSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark, df(1L -> "a"), t)
     // a crashed writer's temp commit file — replay must ignore it
-    Files.writeString(Paths.get(t, "_graft_log", ".tmp-crashed.json"),
-      """{"version":99,"add":["bogus/part-x.parquet"],"remove":[]}""")
+    Files.writeString(Paths.get(t, "_delta_log", ".tmp-crashed.json"),
+      """{"add":{"path":"bogus/part-x.parquet","partitionValues":{},""" +
+        """"size":1,"modificationTime":1,"dataChange":true}}""" + "\n")
     // a fully staged but never-committed data dir — also invisible
     df(666L -> "ghost").write.parquet(Paths.get(t, "stage-ghost").toString)
     assert(TxLog.versions(t) == Seq(1))
@@ -333,7 +334,7 @@ class TxLogSpec extends SparkSpec {
     "backfills scan hits, and survives a missing entry") {
     val t = freshTable()
     val v = TxLog.appendBatch(spark, df(1L -> "a"), t, batchId = 7L)
-    val idx = Paths.get(t, "_graft_log", "_batch_index", "b7")
+    val idx = Paths.get(t, "_batch_index", "b7")
     assert(Files.exists(idx), "appendBatch must record the batch index entry")
     assert(TxLog.committedBatch(t, 7L).contains(v))
     assert(TxLog.committedBatch(t, 8L).isEmpty)
@@ -774,18 +775,21 @@ class TxLogSpec extends SparkSpec {
       "the update's re-stage must also preserve the raw value")
   }
 
-  test("rewrite ops refuse a table MIXING flat and partitioned layouts " +
-    "(one consistent layout is required to re-stage)") {
+  test("a commit that would MIX flat and partitioned layouts fails loud " +
+    "(one Delta log has one partition layout) and leaves the table as it was") {
     import spark.implicits._
     val t = freshTable()
     TxLog.append(spark, df(1L -> "a"), t)
-    TxLog.appendPartitioned(spark,
-      Seq((2L, "b", "US")).toDF("k", "s", "country"), t, Seq("country"))
     val e = intercept[IllegalArgumentException] {
-      TxLog.deleteWhere(spark, t, "k = 1")
+      TxLog.appendPartitioned(spark,
+        Seq((2L, "b", "US")).toDF("k", "s", "country"), t, Seq("country"))
     }
     assert(e.getMessage.contains("layout"),
       s"mixed layouts must fail loud, got: $e")
+    assert(TxLog.versions(t) == Seq(1), "the refused commit lands nothing")
+    TxLog.deleteWhere(spark, t, "k = 1")
+    assert(TxLog.read(spark, t).count() == 0,
+      "rewrite ops still run on the one consistent layout")
   }
 
   test("restore: one metadata-only commit rolls the live set back; " +
@@ -806,8 +810,8 @@ class TxLogSpec extends SparkSpec {
       "history must survive the restore")
     // restore's commit must be pure log arithmetic: v4's add entries are
     // exactly v2's live minus v3's live — no fresh files staged
-    val (add4, _) = TxLog.commitActions(t, 4)
-    assert(add4.forall(TxLog.liveFiles(t, Some(2)).contains),
+    val add4 = DeltaBridge.versionDelta(t, 3L).adds.map(_._1)
+    assert(add4.forall(TxLog.liveFiles(t, Some(2)).map(TxLog.entryPath).contains),
       "restore must re-add the ORIGINAL entries, never copies")
     // vacuum away the pre-restore generations, then ask for one: loud
     TxLog.overwrite(spark, df(9L -> "z"), t)           // v5

@@ -131,10 +131,8 @@ class GraftDeltaCatalogSpec extends SparkSpec {
     val f = tmpDir("graft_foreign")
     TxLog.append(spark, Seq((5L, "q")).toDF("id", "v"), f)
     DeltaBridge.exportLog(spark, f)
-    // strip the TxLog: what remains is a foreign-producer Delta table
-    val lg = Paths.get(f, "_graft_log")
-    graft.sources.TxLog.listDir(lg).foreach(Files.delete)
-    Files.delete(lg)
+    // strip the TxLog marker: what remains is a foreign-producer Delta table
+    graft.sources.ForeignLog.strip(f)
     assert(sqlDf(s"SELECT id FROM graft.`$f`").head().getLong(0) == 5L,
       "foreign logs read fine")
     intercept[Exception] {
@@ -311,9 +309,8 @@ class GraftDeltaCatalogSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
     DeltaBridge.exportLog(spark, t)
-    // strip the TxLog: what remains is a foreign _delta_log mount
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(t, "_graft_log"))
+    // strip the TxLog marker: what remains is a foreign _delta_log mount
+    graft.sources.ForeignLog.strip(t)
     val mem = MemoryStream[(Long, String)]
     mem.addData((2L, "b"))
     val q = mem.toDF().toDF("id", "v")

@@ -141,8 +141,7 @@ class GraftDmlStrategySpec extends SparkSpec {
       val f = tmpDir("graft_dml_foreign")
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(t), new java.io.File(f))
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(f, "_graft_log"))
+      graft.sources.ForeignLog.strip(f)
       f
     }
     val e = intercept[Exception] {

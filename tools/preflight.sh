@@ -5,7 +5,7 @@
 # this script makes "compile green before snapshot" mechanical.
 #
 # Usage: tools/preflight.sh [--test]
-#   default : session/install and parquet reader guards + sbt compile +
+#   default : session/install, parquet reader and one-log guards + sbt compile +
 #             Test/compile (fast, the r9 failure class)
 #   --test  : additionally runs the full ScalaTest suite
 set -euo pipefail
@@ -36,6 +36,20 @@ untyped=$(grep -rnE '\.read(\.options?\([^()]*\))*\.parquet\(' src/main \
 if [[ -n "$untyped" ]]; then
   echo "schema-less parquet read outside graft.Tables.parquet:"
   echo "$untyped"
+  exit 1
+fi
+
+# One transaction log (TxLog commits the Delta `_delta_log` directly): a
+# second on-disk log, or a revived export call, brings back two replayers
+# that must agree and a window where Delta readers lag a commit.
+echo "[preflight] one-log guard"
+second_log=$(grep -rn '_graft_log' src || true)
+exports=$(grep -rn 'exportLog(' src/main | grep -v 'def exportLog(' || true)
+if [[ -n "$second_log$exports" ]]; then
+  [[ -n "$second_log" ]] && echo "second transaction log (_graft_log):" \
+    && echo "$second_log"
+  [[ -n "$exports" ]] && echo "exportLog call in src/main (commits write _delta_log):" \
+    && echo "$exports"
   exit 1
 fi
 
