@@ -5,12 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Layer paths + end-to-end orchestration: bronze → silver → gold
   * (/root/reference/pipelineApplication/pipeline1.py:42-46).
   *
-  * Gold writes: the reference writes Delta (BuildGoldLayer.py:217-236); the
-  * Delta jar is not on this classpath, so gold lands as parquet with the
-  * same `partitionBy` layout — semantics are identical for this pipeline
-  * (no MERGE/time-travel is used; `overwriteSchema` degrades to plain
-  * overwrite, which parquet's dynamic schema already is). See SURVEY.md
-  * §7.3.4.
+  * Gold writes: the reference writes Delta (BuildGoldLayer.py:217-236), and
+  * so does [[Medallion.updateGoldLayerDelta]]: each gold table is a
+  * [[graft.sources.TxLog]] table whose commits are `_delta_log` versions,
+  * partitioned tables with the reference's `partitionBy` layout and the
+  * wide tables with `overwriteSchema` semantics. See SURVEY.md §7.3.4.
   */
 final case class LayerPaths(base: String) {
   def bronze(table: String): String = s"$base/bronze/$table"
@@ -27,12 +26,7 @@ object Medallion {
   def readSilver(spark: SparkSession, paths: LayerPaths): DataFrame =
     Bronze.readBronze(spark, paths.silver, Schemas.silver)
 
-  /** K3: partitioned gold write — Hive-style dirs drive partition pruning
-    * for downstream readers (BuildGoldLayer.py:217-226). */
-  def writeGoldPartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** K3, Delta form: the reference's gold partitioned writes ARE Delta
+  /** K3: the reference's gold partitioned writes ARE Delta
     * (`partitionBy(institution_type, state)` / `(year, quarter, state)`,
     * BuildGoldLayer.py:217-226) — published here as ONE transactional
     * Hive-layout TxLog overwrite, committed as a `_delta_log` version
@@ -53,12 +47,8 @@ object Medallion {
                                partitionFilter: Map[String, String] = Map.empty): DataFrame =
     graft.sources.DeltaBridge.read(spark, path, None, partitionFilter)
 
-  /** K4: wide-table write — the column set varies per run (one column per
-    * quarter), i.e. schema evolution by overwrite (BuildGoldLayer.py:227-236). */
-  def writeGoldWide(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  /** K4, Delta form: the reference writes the wide tables as Delta with
+  /** K4: the column set varies per run (one column per quarter), i.e.
+    * schema evolution by overwrite; the reference writes the wide tables as Delta with
     * `overwriteSchema` (BuildGoldLayer.py:227-236). Without the delta jar
     * the transactional overwrite runs through [[graft.sources.TxLog]] (the
     * same snapshot-isolated replace semantics — a new column set in a new
@@ -94,34 +84,18 @@ object Medallion {
     writeSilver(silver, paths)
   }
 
-  /** Gold layer end-to-end (update_gold_layer, BuildGoldLayer.py:212-237).
-    * Silver is read once and cached across the four tables — the reference
-    * re-scans it up to N+2 times per wide table (SURVEY.md §4.3) — and the
-    * pivot quarters are discovered once for both wide tables. */
-  def updateGoldLayer(spark: SparkSession, paths: LayerPaths): Unit = {
-    val silver = readSilver(spark, paths).cache()
-    try {
-      val qs = Some(Gold.quarters(silver))
-      writeGoldPartitioned(Gold.institutionDirectoryByType(silver),
-        paths.gold("institution_directory_by_type"), Seq("institution_type", "state"))
-      writeGoldPartitioned(Gold.assetsDepositsByState(silver),
-        paths.gold("assets_deposits_by_state"), Seq("year", "quarter", "state"))
-      writeGoldWide(Gold.quarterlyWide(silver, "assets_total", qs),
-        paths.gold("quarterly_assets_table"))
-      writeGoldWide(Gold.quarterlyWide(silver, "deposits_total", qs),
-        paths.gold("quarterly_deposits_table"))
-    } finally silver.unpersist()
-  }
-
-  /** Gold layer in the reference's EXACT wire shape: all four tables as
+  /** Gold layer end-to-end (update_gold_layer, BuildGoldLayer.py:212-237),
+    * in the reference's EXACT wire shape: all four tables as
     * DELTA — the two directory/state tables partitioned
     * (`partitionBy(institution_type, state)` / `(year, quarter, state)`,
     * BuildGoldLayer.py:217-226) and the two quarterly wide tables with
     * overwriteSchema semantics (BuildGoldLayer.py:227-236) — published
     * through the transactional TxLog, which commits the `_delta_log`
     * directly, so every refresh is a new mountable Delta version with time travel across
-    * quarters. A user of the reference switches to this function and
-    * keeps their downstream Delta readers unchanged. */
+    * quarters. Silver is read once and cached across the four tables —
+    * the reference re-scans it up to N+2 times per wide table (SURVEY.md
+    * §4.3) — and the pivot quarters are discovered once for both wide
+    * tables. */
   def updateGoldLayerDelta(spark: SparkSession, paths: LayerPaths): Unit = {
     val silver = readSilver(spark, paths).cache()
     try {

@@ -33,6 +33,10 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *    returns the DataFrame an earlier identical call planned (the cache
   *    contract — key, token, 64-entry LRU bound, what a hit skips — is
   *    on [[read]]);
+  *  - [[buildDataFrame]] is the one builder that turns a replayed set of
+  *    adds into rows — [[read]], every [[TxLog]] read and rewrite scan
+  *    ([[scanLive]]) and the streaming source's batches go through it, so
+  *    the two APIs never disagree on a table's schema or rows;
   *  - [[writeCheckpoint]] compacts the log (TxLog calls it every 10
   *    versions, `CALL graft.checkpoint` on demand) and [[vacuumLog]]
   *    retires the JSON a checkpoint covers.
@@ -45,7 +49,11 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * and [[read]] prunes add actions against a `partitionFilter` at the
   * METADATA level — the same log-level pruning a real Delta reader
   * performs before planning any scan — then reconstructs partition
-  * columns from the layout.
+  * columns from the layout under their logged types. TxLog fixes those
+  * types at commit over every value of the post-commit snapshot (INT,
+  * BIGINT, DATE, else STRING — the narrowest type that renders each
+  * value back identically), so `code=0123` reads as the string "0123"
+  * and a mixed `7`/`abc` column as STRING, never as a failed cast.
   *
   * Scale: the log is metadata — actions are O(files), the checkpoint
   * bootstrap reads one parquet, and data files are never touched until
@@ -699,7 +707,7 @@ object DeltaBridge {
       : (DataFrame, Seq[Path]) = {
     val st = readState(spark, table, versionAsOf)
     require(st.schemaJson != null, s"$table: no metaData action in log")
-    val schema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
+    val schema = schemaOf(st)
     val badKeys = partitionFilter.keySet -- st.partitionCols.toSet
     require(badKeys.isEmpty,
       s"$table: partitionFilter on non-partition columns " +
@@ -724,12 +732,8 @@ object DeltaBridge {
           e.stats.exists(st => statsExclude(st, physOf(c), ">=", lo) ||
             statsExclude(st, physOf(c), "<", hi)) }
     }
-    val df =
-      if (mapping == "none" && live.forall(_._2.dv.isEmpty))
-        buildDataFrame(spark, table, schema, st.partitionCols,
-          live.map { case (p, e) => (p, e.pv) })
-      else
-        extendedRead(spark, table, schema, mapping, st.partitionCols, live)
+    val df = buildDataFrame(spark, table, schema, st.partitionCols, mapping,
+      live.map { case (p, e) => (p, e.pv, e.dv) })
     (df, live.map { case (p, _) => Paths.get(table, p) } ++
       live.flatMap(_._2.dv).flatMap(DeletionVectors.sidecarPath(table, _)))
   }
@@ -767,29 +771,60 @@ object DeltaBridge {
     StructField(physicalName(f), physType(f.dataType), f.nullable, meta)
   }
 
-  /** Snapshot read for tables using reader features the FAST path can't
-    * serve — column mapping and/or deletion vectors:
+  /** THE builder: the DataFrame over a set of live adds (path,
+    * partitionValues, deletion vector) under the logged `schema` — the
+    * one place a replayed add set becomes rows, shared by [[read]], every
+    * [[TxLog]] read and rewrite scan ([[scanLive]]) and the streaming
+    * source's batches. Its branches:
     *
-    *  - data files read under the PHYSICAL schema (name mode: physical
-    *    names match the parquet columns; id mode: `parquet.field.id`
-    *    metadata + Spark's field-id matching), then each top-level
-    *    column casts back to its logical field — struct casts rename
-    *    nested fields positionally, so nested mapping comes free;
-    *  - a file with a deletion vector reads with `_metadata.row_index`
-    *    and drops exactly the indices the DV stores (sorted-array
-    *    binary-search predicate — DV cardinality is bounded by the
-    *    file's row count, metadata-sized next to the data);
-    *  - partition columns attach from the log's partitionValues as
-    *    typed literals (the layout-agnostic branch — a mapped table's
-    *    directory names are physical and untrustworthy for discovery).
-    *
-    * One scan branch per (partition tuple) plus one per DV'd file; DV'd
-    * files are the copy-on-write minority by construction, so the plan
-    * stays metadata-sized. */
-  private def extendedRead(spark: SparkSession, table: String,
-                           schema: StructType, mapping: String,
-                           partitionCols: Seq[String],
-                           live: Seq[(String, AddEntry)]): DataFrame = {
+    *  - clean files of an unmapped table read through Spark's own
+    *    parquet scan under the logged schema: one scan for a flat table;
+    *    for a Hive-consistent layout one scan per non-partition path
+    *    PREFIX (the TxLog stage dir; empty for delta-spark's layout,
+    *    which puts partition dirs at the table root), rooted there with
+    *    `basePath` so discovery re-attaches the partition columns under
+    *    their logged types and Catalyst prunes directories — one branch
+    *    per commit's stage, not per partition;
+    *  - clean files of any other layout (a foreign log whose paths do
+    *    not encode its partitionValues, or a column-mapped table whose
+    *    directory names are physical): one scan branch per live
+    *    partition tuple, the log's values attached as typed literals;
+    *  - each file with a deletion vector: one [[dvFilteredScan]] branch,
+    *    its partition values attached as literals (DV'd files are the
+    *    copy-on-write minority by construction, so the plan stays
+    *    metadata-sized);
+    *  - under column mapping, data files read under the PHYSICAL schema
+    *    (name mode: physical names match the parquet columns; id mode:
+    *    `parquet.field.id` metadata + Spark's field-id matching), then
+    *    each top-level column casts back to its logical field — struct
+    *    casts rename nested fields positionally, so nested mapping comes
+    *    free. */
+  private[sources] def buildDataFrame(
+      spark: SparkSession, table: String, schema: StructType,
+      partitionCols: Seq[String], mapping: String,
+      files: Seq[(String, Map[String, String],
+        Option[DeletionVectors.Descriptor])]): DataFrame = {
+    if (files.isEmpty)
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val (clean, dvd) = files.partition(_._3.isEmpty)
+    def paths(fs: Seq[(String, _, _)]): Seq[String] = fs.map(f => s"$table/${f._1}")
+    val ordered: Seq[Column] = schema.fieldNames.toSeq.map(col)
+    val fast: Option[DataFrame] =
+      if (mapping != "none" || clean.isEmpty) None
+      else if (partitionCols.isEmpty)
+        Some(spark.read.schema(schema).parquet(paths(clean): _*))
+      else if (clean.forall { case (p, pv, _) =>
+          val layout = splitHivePath(p)._2
+          layout.toMap == pv && layout.map(_._1) == partitionCols })
+        Some(splitByPrefix(clean.map(_._1)).map { case (prefix, ps) =>
+          val basePath = if (prefix.isEmpty) table else s"$table/$prefix"
+          spark.read.schema(schema).option("basePath", basePath)
+            .parquet(ps.map(p => s"$table/$p"): _*)
+            .select(ordered: _*)
+        }.reduce(_ unionByName _))
+      else None
+    if (dvd.isEmpty && fast.isDefined) return fast.get
     val idMode = mapping == "id"
     // field-id matching is conf-gated in the parquet reader and consulted
     // lazily at scan time FROM THE RELATION'S OWN SESSION — so id-mode
@@ -802,42 +837,35 @@ object DeltaBridge {
       if (idMode) org.apache.spark.sql.GraftSqlBridge.sessionWithConf(
         spark, "spark.sql.parquet.fieldId.read.enabled", "true")
       else spark
+    def phys(f: StructField): String =
+      if (mapping == "none") f.name else physicalName(f)
     val dataFields = schema.fields.filterNot(f => partitionCols.contains(f.name))
-    val physDataSchema = StructType(dataFields.map(f =>
+    val dataSchema = StructType(dataFields.map(f =>
       if (mapping == "none") f else physicalField(f, idMode)))
-    val physOfData: Map[String, String] = dataFields.map(f =>
-      f.name -> (if (mapping == "none") f.name else physicalName(f))).toMap
-    val physOfPart: Map[String, String] = partitionCols.map { c =>
-      c -> (if (mapping == "none") c else physicalName(schema(c)))
-    }.toMap
-    def finishBranch(raw: DataFrame, pv: Map[String, String]): DataFrame = {
-      val withParts = withPartitionValues(raw, schema, partitionCols,
-        c => pv.getOrElse(physOfPart(c), null))
-      withParts.select(schema.fields.toIndexedSeq.map { f =>
-        if (partitionCols.contains(f.name)) col(f.name)
-        else col(s"`${physOfData(f.name)}`").cast(f.dataType).as(f.name)
-      }: _*)
-    }
-    if (live.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val (clean, dvd) = live.partition(_._2.dv.isEmpty)
-    val cleanBranches = clean.groupBy(_._2.pv).toSeq.map { case (pv, files) =>
-      finishBranch(
-        rspark.read.schema(physDataSchema)
-          .parquet(files.map { case (p, _) => s"$table/$p" }: _*), pv)
-    }
-    val dvBranches = dvd.map { case (p, e) =>
-      finishBranch(
-        dvFilteredScan(rspark, table, physDataSchema, p, e.dv.get), e.pv)
+    // a branch over files sharing one partition tuple: partition values
+    // attach as literals cast to their logged types, data columns cast
+    // back from their physical names
+    def finish(raw: DataFrame, pv: Map[String, String]): DataFrame =
+      partitionCols.foldLeft(raw)((d, c) => d.withColumn(c,
+          lit(pv.getOrElse(phys(schema(c)), null)).cast(schema(c).dataType)))
+        .select(schema.fields.toIndexedSeq.map { f =>
+          if (mapping == "none" || partitionCols.contains(f.name)) col(f.name)
+          else col(s"`${phys(f)}`").cast(f.dataType).as(f.name)
+        }: _*)
+    val cleanBranches = fast.map(Seq(_)).getOrElse(
+      clean.groupBy(_._2).toSeq.map { case (pv, fs) =>
+        finish(rspark.read.schema(dataSchema).parquet(paths(fs): _*), pv)
+      })
+    val dvBranches = dvd.map { case (p, pv, d) =>
+      finish(dvFilteredScan(rspark, table, dataSchema, p, d.get), pv)
     }
     (cleanBranches ++ dvBranches).reduce(_ unionByName _)
   }
 
-  /** ONE definition of the per-file vector filter (shared by the
-    * extended read and the streaming builder): scan the file under
-    * `dataSchema` and drop rows whose PHYSICAL `_metadata.row_index`
-    * the loaded deletion vector marks. */
+  /** The per-file vector filter: scan the file under `dataSchema` and
+    * drop rows whose PHYSICAL `_metadata.row_index` the loaded deletion
+    * vector marks (sorted-array binary search — DV cardinality is
+    * bounded by the file's row count, metadata-sized next to the data). */
   private def dvFilteredScan(s: SparkSession, table: String,
                              dataSchema: StructType, path: String,
                              d: DeletionVectors.Descriptor): DataFrame = {
@@ -849,68 +877,20 @@ object DeltaBridge {
       .filter(!dropped(col("_metadata.row_index")))
   }
 
-  /** `df` with each partition column attached as a literal of its logged
-    * value (`value(column)`, null for a null partition) cast to the
-    * column's type — the layout-agnostic partition reconstruction. */
-  private def withPartitionValues(df: DataFrame, schema: StructType,
-                                  partitionCols: Seq[String],
-                                  value: String => String): DataFrame =
-    partitionCols.foldLeft(df)((d, c) =>
-      d.withColumn(c, lit(value(c)).cast(schema(c).dataType)))
+  /** The logical schema of a replayed state. */
+  private[sources] def schemaOf(st: LogState): StructType =
+    DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
 
-  /** Construct the DataFrame over a set of (path, partitionValues) files
-    * under `schema` — shared by the snapshot [[read]] and the streaming
-    * source's per-version batches. */
-  private[sources] def buildDataFrame(
-      spark: SparkSession, table: String, schema: StructType,
-      partitionCols: Seq[String],
-      live: Seq[(String, Map[String, String])]): DataFrame = {
-    if (partitionCols.isEmpty) {
-      if (live.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else
-        spark.read.schema(schema)
-          .parquet(live.map { case (p, _) => s"$table/$p" }: _*)
-    } else {
-      val ordered: Seq[Column] = schema.fieldNames.toSeq.map(col)
-      if (live.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else if (live.forall { case (p, pv) =>
-          splitHivePath(p)._2.toMap == pv &&
-            splitHivePath(p)._2.map(_._1) == partitionCols }) {
-        // Hive-consistent layout: partition columns come back through
-        // Spark's own discovery (types per the declared schema — the
-        // user-specified schema overrides inference), with directory
-        // pruning handled by Catalyst. Discovery demands ONE consistent
-        // root above the k=v run, so files group by their non-partition
-        // PREFIX (the TxLog stage dir; empty for delta-spark's layout,
-        // which puts partition dirs at the table root) — one scan branch
-        // per commit's stage, NOT per partition, metadata-sized.
-        splitByPrefix(live).map { case (prefix, files) =>
-          val basePath = if (prefix.isEmpty) table else s"$table/$prefix"
-          spark.read.schema(schema).option("basePath", basePath)
-            .parquet(files.map(p => s"$table/$p"): _*)
-            .select(ordered: _*)
-        }.reduce(_ unionByName _)
-      } else {
-        // layout-agnostic fallback: the log's partitionValues are
-        // authoritative — group files by partition tuple, attach the
-        // values as typed literals, union. One scan branch per live
-        // tuple: correct for any foreign layout, sized by the
-        // POST-FILTER partition count.
-        val dataSchema = StructType(
-          schema.fields.filterNot(f => partitionCols.contains(f.name)))
-        val byTuple = live.groupBy(_._2).toSeq
-        byTuple.map { case (pv, files) =>
-          withPartitionValues(spark.read.schema(dataSchema)
-            .parquet(files.map { case (p, _) => s"$table/$p" }: _*),
-            schema, partitionCols, pv.getOrElse(_, null))
-        }.reduce(_ unionByName _).select(ordered: _*)
-      }
-    }
-  }
+  /** The rows of the live adds at `paths` in a replayed state, through
+    * [[buildDataFrame]] under the state's schema, partition columns and
+    * column-mapping mode — [[TxLog]]'s one read. */
+  private[sources] def scanLive(spark: SparkSession, table: String,
+                                st: LogState, paths: Seq[String]): DataFrame =
+    buildDataFrame(spark, table, schemaOf(st), st.partitionCols,
+      columnMappingMode(st), paths.map { p =>
+        val e = st.live(p)
+        (p, e.pv, e.dv)
+      })
 
   /** One version's actions, parsed for the streaming source: its add
     * files (path, partitionValues, deletion-vector descriptor — a DV
@@ -984,7 +964,7 @@ object DeltaBridge {
       live: Seq[(String, Map[String, String], Option[String])])
 
   /** The STREAMING snapshot — tolerates deletion vectors (the stream
-    * serves their post-DV row sets through [[buildDataFrameWithDvs]]; a
+    * serves their post-DV row sets through [[buildDataFrame]]; a
     * batch-zero or recovery snapshot over a table that took a DV delete
     * must not brick the stream) but refuses
     * column mapping, whose physical-name scans the streaming source
@@ -1002,45 +982,15 @@ object DeltaBridge {
     require(st.schemaJson != null, s"$table: no metaData action in log")
     require(columnMappingMode(st) == "none",
       s"$table: column-mapped snapshots have no parquet-index form — " +
-        "batch mounts serve them via the extended read (DeltaBridge.mount);" +
+        "batch mounts serve them through DeltaBridge.read (DeltaBridge.mount);" +
         " streaming over a mapped table is unsupported")
     StreamSnapshot(st.schemaJson, st.partitionCols,
       st.live.toSeq.map { case (p, e) => (p, e.pv, e.dv) })
   }
 
-  /** [[buildDataFrame]] extended with per-file deletion-vector
-    * filtering: DV-free files go through the shared builder untouched
-    * (one scan branch per stage prefix); each DV'd file reads its data
-    * schema with `_metadata.row_index` filtered against the loaded
-    * vector (the extended-read discipline), partition columns attached
-    * as typed literals from the log. The DV branches are bounded by the
-    * batch's own DV'd-file count — a streaming micro-batch shape, never
-    * O(table). */
-  private[sources] def buildDataFrameWithDvs(
-      spark: SparkSession, table: String, schema: StructType,
-      partitionCols: Seq[String],
-      files: Seq[(String, Map[String, String],
-        Option[DeletionVectors.Descriptor])]): DataFrame = {
-    val (dvd, clean) = files.partition(_._3.isDefined)
-    val cleanDf = buildDataFrame(spark, table, schema, partitionCols,
-      clean.map { case (p, pv, _) => (p, pv) })
-    if (dvd.isEmpty) cleanDf
-    else {
-      val dataSchema = StructType(
-        schema.filterNot(f => partitionCols.contains(f.name)))
-      val ordered: Seq[Column] = schema.fieldNames.toSeq.map(col)
-      val branches = dvd.map { case (p, pv, d) =>
-        withPartitionValues(dvFilteredScan(spark, table, dataSchema, p, d.get),
-          schema, partitionCols, pv.getOrElse(_, null)).select(ordered: _*)
-      }
-      ((if (clean.nonEmpty) Seq(cleanDf) else Seq.empty) ++ branches)
-        .reduce(_ unionByName _)
-    }
-  }
-
   /** ONE log replay deciding the mount: Right(snapshot) for the fast
     * parquet-index path, Left(logical schema, partition columns) when
-    * the snapshot needs the extended read — the relation and catalog
+    * the snapshot needs [[read]]'s mapped or DV branches — the relation and catalog
     * branch on this single call instead of probing and then replaying
     * again. */
   private[sources] def mount(spark: SparkSession, table: String,
@@ -1050,8 +1000,7 @@ object DeltaBridge {
     require(st.schemaJson != null, s"$table: no metaData action in log")
     if (columnMappingMode(st) != "none" ||
         st.live.values.exists(_.dv.isDefined))
-      Left((DataType.fromJson(st.schemaJson).asInstanceOf[StructType],
-        st.partitionCols))
+      Left((schemaOf(st), st.partitionCols))
     else Right(Snapshot(st.schemaJson, st.partitionCols,
       st.live.toSeq.map { case (p, e) => (p, e.pv, e.stats) }))
   }
@@ -1103,13 +1052,12 @@ object DeltaBridge {
                  versionAsOf: Option[Long] = None): DataFrame =
     read(spark, table, versionAsOf, Map.empty, Some((column, lo, hi)))
 
-  /** Group live (path, pv) entries by their non-partition path prefix,
+  /** Group live paths by their non-partition path prefix,
     * preserving first-seen order on both levels. */
-  private def splitByPrefix(live: Seq[(String, Map[String, String])])
-      : Seq[(String, Seq[String])] = {
+  private def splitByPrefix(live: Seq[String]): Seq[(String, Seq[String])] = {
     val out = scala.collection.mutable.LinkedHashMap[String,
       scala.collection.mutable.Buffer[String]]()
-    live.foreach { case (p, _) =>
+    live.foreach { p =>
       out.getOrElseUpdate(splitHivePath(p)._1,
         scala.collection.mutable.Buffer.empty) += p
     }

@@ -376,8 +376,8 @@ private[sources] class DeltaBridgeStreamSource(
     if (files.isEmpty)
       org.apache.spark.sql.GraftSqlBridge.emptyStreaming(spark, schema)
     else org.apache.spark.sql.GraftSqlBridge.asStreaming(
-      DeltaBridge.buildDataFrameWithDvs(spark, table, schema,
-        snap0.partitionCols, files))
+      DeltaBridge.buildDataFrame(spark, table, schema,
+        snap0.partitionCols, "none", files))
   }
 
   /** V1 commit callback — the engine signals `end` durable, here and
@@ -396,8 +396,8 @@ private[sources] class DeltaBridgeStreamSource(
 }
 
 /** The EXTENDED-read mount as a native relation: column-mapped and/or
-  * DV'd snapshots served through [[DeltaBridge.read]]'s proven extended
-  * branch (physical-schema scans cast back to logical names; per-file
+  * DV'd snapshots served through [[DeltaBridge.read]]'s mapped and DV
+  * branches (physical-schema scans cast back to logical names; per-file
   * `_metadata.row_index` DV filtering), wrapped as a `PrunedFilteredScan`
   * so `spark.read.format("graft-delta")` works identically on them:
   *

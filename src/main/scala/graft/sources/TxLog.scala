@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StringType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
@@ -39,6 +40,15 @@ import DeltaBridge.LogState
   *    log prefix, so TIME TRAVEL (`read(asOf = k)`) and concurrent-writer
   *    isolation come for free. Half-written commits are invisible (temps
   *    live under a name the replay ignores).
+  *  - One reader: [[read]], [[readPruned]] and every rewrite scan turn
+  *    live adds into rows through [[DeltaBridge]]'s one builder
+  *    ([[DeltaBridge.scanLive]]) under the replayed schema and partition
+  *    columns, so `read(asOf = k)` is `DeltaBridge.read` of version k−1.
+  *  - Partition types are fixed at commit: each partition column is
+  *    logged with the narrowest type that renders every value of the
+  *    post-commit snapshot back identically ([[partitionType]]: INT,
+  *    BIGINT, DATE, else STRING), so `code=0123` stays the string
+  *    "0123" on every read and every rewrite.
   *
   * At 100 TB the same design holds because commits are metadata-sized (file
   * LISTS, not data) and data files are immutable: the only serialization
@@ -54,7 +64,7 @@ object TxLog {
   /** The on-disk log format. Persisted layouts holding TxLog tables fold
     * it into their artifact key ([[layoutArtifact]]), so a copy built
     * under an older format is rebuilt instead of served. */
-  val LogFormat = "delta1"
+  val LogFormat = "delta3"
 
   /** The add `tags` key holding an entry's typed stats (`lo#hi`). */
   private val StatsTag = "graft.stats"
@@ -278,7 +288,11 @@ object TxLog {
     * ever over-approximate). */
   def liveFilesWithTypedStats(table: String, asOf: Option[Int] = None)
       : Seq[(String, Option[(StatValue, StatValue)])] =
-    liveFiles(table, asOf).map { e =>
+    typedStats(liveFiles(table, asOf))
+
+  private def typedStats(entries: Seq[String])
+      : Seq[(String, Option[(StatValue, StatValue)])] =
+    entries.map { e =>
       e.split('#').filterNot(_.startsWith("dv:")) match {
         case Array(p, lo, hi) =>
           (StatValue.decode(lo), StatValue.decode(hi)) match {
@@ -301,14 +315,23 @@ object TxLog {
     }
 
   /** Snapshot read; empty-schema-safe only when the table has data.
-    * DV-bearing entries ([[deleteWhereDv]]) drop exactly their deleted
-    * row indices. */
+    * The same DataFrame [[DeltaBridge.read]] builds for Delta version
+    * `asOf` − 1: the logged schema, partition columns re-attached under
+    * their logged types, and DV-bearing entries ([[deleteWhereDv]])
+    * dropping exactly their deleted row indices. */
   def read(spark: SparkSession, table: String,
            asOf: Option[Int] = None): DataFrame = {
-    val entries = liveFiles(table, asOf)
-    require(entries.nonEmpty, s"no live files in $table at $asOf")
-    readEntries(spark, table, entries, Seq.empty, Map.empty)
+    val st = state(table, asOf)
+    require(st.live.nonEmpty, s"no live files in $table at $asOf")
+    scan(spark, table, st, entries(st))
   }
+
+  /** The rows of `entries`, live in `st`, through [[DeltaBridge]]'s one
+    * builder ([[DeltaBridge.scanLive]]) — every read and rewrite scan
+    * here. */
+  private def scan(spark: SparkSession, table: String, st: LogState,
+                   entries: Seq[String]): DataFrame =
+    DeltaBridge.scanLive(spark, table, st, entries.map(entryPath))
 
   /** Paths of live files whose [min, max] stats intersect [lo, hi) — the
     * lakehouse DATA-SKIPPING read: predicate bounds prune at the manifest
@@ -325,14 +348,19 @@ object TxLog {
     * drop is backed by a definite comparison. */
   def pruneFilesTyped(table: String, lo: StatValue, hi: StatValue,
                       asOf: Option[Int] = None): Seq[String] =
-    liveFilesWithTypedStats(table, asOf).collect {
-      case (p, Some((mn, mx)))
+    prune(liveFiles(table, asOf), lo, hi).map(entryPath)
+
+  /** The entries whose typed stats do not prove them outside [lo, hi). */
+  private def prune(entries: Seq[String], lo: StatValue,
+                    hi: StatValue): Seq[String] =
+    entries.zip(typedStats(entries)).collect {
+      case (e, (_, Some((mn, mx))))
           if StatValue.lteq(lo, mx).contains(true) &&
-             StatValue.lteq(hi, mn).contains(false) => p
-      case (p, None) => p
-      case (p, Some((mn, mx)))
+             StatValue.lteq(hi, mn).contains(false) => e
+      case (e, (_, None)) => e
+      case (e, (_, Some((mn, mx))))
           if StatValue.lteq(lo, mx).isEmpty ||
-             StatValue.lteq(hi, mn).isEmpty => p
+             StatValue.lteq(hi, mn).isEmpty => e
     }
 
   /** Stats-pruned snapshot read over [lo, hi) of the stats column. The
@@ -341,11 +369,10 @@ object TxLog {
     * entries among the survivors filter their deleted rows. */
   def readPruned(spark: SparkSession, table: String, lo: Long, hi: Long,
                  asOf: Option[Int] = None): DataFrame = {
-    val kept = pruneFiles(table, lo, hi, asOf).toSet
+    val st = state(table, asOf)
+    val kept = prune(entries(st), StatValue.L(lo), StatValue.L(hi))
     require(kept.nonEmpty, s"no candidate files in $table for [$lo, $hi)")
-    readEntries(spark, table,
-      liveFiles(table, asOf).filter(e => kept.contains(entryPath(e))),
-      Seq.empty, Map.empty)
+    scan(spark, table, st, kept)
   }
 
   /** Append `df` as a new commit; returns the committed version. */
@@ -619,10 +646,11 @@ object TxLog {
     *  - `protocol` at version 0, and the deletion-vector upgrade (reader
     *    3 / writer 7) when the table first gets a vector;
     *  - `metaData` at version 0 (a fresh table id, [[Marker]] in its
-    *    configuration) and whenever the schema of the commit's first
-    *    add differs from the head's — how Delta encodes
-    *    `overwriteSchema`; time travel then resolves each version under
-    *    the schema it was written with;
+    *    configuration) and whenever the commit's schema — the first
+    *    add's data schema, partition columns typed by [[partitionType]]
+    *    over the post-commit snapshot — differs from the head's: how
+    *    Delta encodes `overwriteSchema`; time travel then resolves each
+    *    version under the schema it was written with;
     *  - `txn` for a streaming batch;
     *  - `remove` per removed entry, dated for tombstone retention;
     *  - `add` per added entry: `partitionValues` from the Hive path,
@@ -655,7 +683,15 @@ object TxLog {
           "Delta log")
       pvs.toMap
     }
-    val schemaJson = addPaths.headOption.flatMap(schemaOf(spark, table, _, footers.head))
+    // each partition column typed over its values in the post-commit
+    // snapshot: the head's live files the commit keeps, plus its adds
+    val removed = remove.map(entryPath).toSet
+    val snapshotPvs =
+      st.live.collect { case (p, e) if !removed(p) => e.pv } ++ addPvs
+    val partFields = partCols.map(c =>
+      StructField(c, partitionType(snapshotPvs.map(_.getOrElse(c, null)))))
+    val schemaJson = addPaths.headOption
+      .flatMap(schemaOf(spark, table, _, footers.head, partFields))
       .orElse(if (v == 1) Some(EmptySchema) else None)
     val hasDv = add.exists(e => entryDv(e).isDefined)
     val actions = Seq.newBuilder[(String, AnyRef)]
@@ -728,28 +764,43 @@ object TxLog {
     }.mkString
   }
 
-  /** The Spark schema JSON of one added file, partition columns appended
-    * Hive-style for partitioned layouts (types inferred from the path the
-    * way any Spark reader of the layout infers them). The Spark schema a
-    * Spark writer stores in the footer goes in as the user schema, so no
-    * schema-inference job runs; a footer without one (a foreign writer),
-    * or one that also stores a partition column, is inferred. None for a
-    * file that does not exist. */
+  /** The schema JSON of a commit whose first add is `p`: the data
+    * schema from its parquet footer (the Spark schema a Spark writer
+    * stores there, else the converted parquet schema — what Spark's own
+    * schema inference reads, without its job), fields named like a
+    * partition column dropped, then `partFields`. None for a file that
+    * does not exist; a file whose footer cannot be read fails the
+    * commit. */
   private def schemaOf(spark: => SparkSession, table: String, p: String,
-                       footer: Option[ParquetMetadata]): Option[String] =
+                       footer: Option[ParquetMetadata],
+                       partFields: Seq[StructField]): Option[String] =
     Option.when(Files.exists(Paths.get(table, p))) {
-      val (prefix, pvs) = DeltaBridge.splitHivePath(p)
-      val partNames = pvs.map(_._1.toLowerCase).toSet
-      val stored = footer.flatMap(sparkSchemaOf)
-        .filterNot(_.fieldNames.exists(n => partNames.contains(n.toLowerCase)))
-      val options =
-        if (pvs.isEmpty) Map.empty[String, String]
-        else Map("basePath" -> (if (prefix.isEmpty) table else s"$table/$prefix"))
-      (stored match {
-        case Some(schema) => spark.read.options(options).schema(schema).parquet(s"$table/$p")
-        case None         => graft.Tables.parquet(spark, options, s"$table/$p")
-      }).schema.json
+      val data = GraftParquetBridge.schemaOf(spark, footer.getOrElse(
+        throw new IllegalArgumentException(
+          s"commit to $table: $p is not a readable parquet file")))
+      val partNames = partFields.map(_.name.toLowerCase).toSet
+      StructType(data.fields.filterNot(f => partNames(f.name.toLowerCase)) ++
+        partFields).json
     }
+
+  /** The logged type of a partition column over its values in the
+    * post-commit snapshot: the narrowest type whose rendering is the
+    * IDENTITY on every non-null value — INT, then BIGINT, when each
+    * value equals `v.toInt.toString` (`toLong`), DATE for canonical ISO
+    * dates, else STRING, which keeps anything (leading zeros, spaces,
+    * mixed shapes). Every live value then parses under its column's
+    * type, and a rewrite re-stages it under the byte-identical path.
+    * Nulls (`__HIVE_DEFAULT_PARTITION__`) render the same under every
+    * type. */
+  private def partitionType(values: Iterable[String]): DataType = {
+    val nn = values.filter(_ != null)
+    def stable(parse: String => Any)(v: String): Boolean =
+      try parse(v).toString == v catch { case NonFatal(_) => false }
+    Seq[(String => Any, DataType)]((_.toInt, IntegerType),
+        (_.toLong, LongType), (java.time.LocalDate.parse(_), DateType))
+      .collectFirst { case (parse, t) if nn.nonEmpty && nn.forall(stable(parse)) => t }
+      .getOrElse(StringType)
+  }
 
   /** Per-add `stats` JSON — the Delta data-skipping payload
     * (`numRecords` + per-column `minValues`/`maxValues`/`nullCount`)
@@ -850,9 +901,9 @@ object TxLog {
   } catch { case scala.util.control.NonFatal(_) => None }
 
   /** One parquet file's footer; None when it cannot be read (the add
-    * then commits without stats, and its schema is inferred). The read
-    * options wrap `conf` itself: parquet's default options would build a
-    * fresh Hadoop conf, re-parsing its XML resources, per file. */
+    * then commits without stats). The read options wrap `conf` itself:
+    * parquet's default options would build a fresh Hadoop conf,
+    * re-parsing its XML resources, per file. */
   private def readFooter(conf: org.apache.hadoop.conf.Configuration,
                          f: Path): Option[ParquetMetadata] = try {
     import org.apache.parquet.HadoopReadOptions
@@ -863,16 +914,6 @@ object TxLog {
       HadoopReadOptions.builder(conf).build())
     try Some(r.getFooter) finally r.close()
   } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** The Spark schema a Spark writer stores in the footer's key-value
-    * metadata (what Spark's own schema inference reads back); None for a
-    * foreign writer's file or an unparseable value. */
-  private def sparkSchemaOf(footer: ParquetMetadata): Option[StructType] =
-    Option(footer.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata"))
-      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
-      .collect { case s: StructType => s }
-
 
   /** Optimistic-concurrency commit: claim the next version by atomic
     * link; on a collision re-read and retry. */
@@ -996,131 +1037,6 @@ object TxLog {
     deleted.sorted
   }
 
-  /** OPTIMIZE: rewrite the live set into `partFiles` compacted files and
-    * publish as ONE commit — q113's small-file compaction under
-    * transactional visibility (readers see the old layout or the new,
-    * never a mix). Conflict-safe: the compacted data is staged from a
-    * specific snapshot version, and the commit must land at EXACTLY the
-    * next version — if any concurrent write intervenes, the staged
-    * compaction is discarded and the whole operation re-runs against the
-    * new head (rewriting stale data would silently drop the concurrent
-    * commit's rows). */
-  /** Partition columns of a live snapshot, parsed from the trailing
-    * `col=value` path segments ([[DeltaBridge.splitHivePath]] — the same
-    * trailing-run walk Spark's own partition discovery does). Empty for
-    * flat tables. Rewrite ops branch on this: a Hive-partitioned table's
-    * partition values live in its PATHS, not its data files, so its
-    * rewrites must re-attach them on read and re-derive the layout on
-    * stage — a flat rewrite would silently drop the partition column.
-    * Mixed layouts fail loud (they cannot share one rewritten table; the
-    * commit enforces the same invariant). */
-  private def livePartitionCols(table: String, live: Seq[String],
-                                op: String): Seq[String] = {
-    val layouts = live
-      .map(e => DeltaBridge.splitHivePath(entryPath(e))._2.map(_._1))
-      .distinct
-    require(layouts.size <= 1,
-      s"$op: $table mixes partition layouts " +
-        s"${layouts.map(_.mkString("(", ",", ")")).mkString(" vs ")} — " +
-        "a rewrite requires one consistent Hive layout")
-    layouts.headOption.getOrElse(Seq.empty)
-  }
-
-  /** Read live entries AS THE TABLE'S ROWS: flat entries read directly;
-    * Hive-layout entries read per stage root with `basePath` and an
-    * EXPLICIT schema, so Spark's partition discovery re-attaches the
-    * path-borne partition columns under [[roundTripStableType]]s —
-    * types the re-staging write renders back to the IDENTICAL path
-    * string (free inference would silently rewrite `code=0123` to
-    * `code=123` on any rewrite op; review finding r13). Predicates and
-    * merge keys over partition columns therefore evaluate on typed
-    * values, and untouched rows' partition values survive rewrites
-    * byte-for-byte. */
-  /** Round-trip-stable partition types derived from a REFERENCE entry
-    * set — always the FULL live snapshot, so the hit-discovery scan and
-    * the hit-subset rewrite read type (and therefore evaluate predicates
-    * over) partition columns identically; typing each read from its own
-    * subset could diverge (review finding r13). */
-  private def partitionTypesOf(entries: Seq[String], partCols: Seq[String])
-      : Map[String, org.apache.spark.sql.types.DataType] = {
-    val byCol = entries
-      .flatMap(e => DeltaBridge.splitHivePath(entryPath(e))._2)
-      .groupBy(_._1)
-    partCols.map(c => c -> roundTripStableType(
-      byCol.getOrElse(c, Seq.empty).map(_._2))).toMap
-  }
-
-  private def readEntries(spark: SparkSession, table: String,
-                          entries: Seq[String],
-                          partCols: Seq[String],
-                          partTypes: Map[String, org.apache.spark.sql.types.DataType])
-      : DataFrame = {
-    import org.apache.spark.sql.functions.{col, udf}
-    val (dvd, clean) = entries.partition(e => entryDv(e).isDefined)
-    val parts =
-      (if (clean.isEmpty) Seq.empty[DataFrame]
-       else Seq(readEntriesRaw(spark, table, clean, partCols, partTypes))) ++
-        dvd.map { e =>
-          val deleted = DeletionVectors.load(table, entryDv(e).get.descriptor)
-          val dropped = udf((i: Long) =>
-            java.util.Arrays.binarySearch(deleted, i) >= 0)
-          // the DV names PHYSICAL row indices, so the filter sits on the
-          // raw per-file scan; every kernel above (hit discovery,
-          // survivors, merges) then sees only the live rows — and any
-          // REWRITE of a DV'd file materializes the deletion away
-          readEntriesRaw(spark, table, Seq(e), partCols, partTypes)
-            .filter(!dropped(col("_metadata.row_index")))
-        }
-    parts.reduce(_.unionByName(_))
-  }
-
-  private def readEntriesRaw(spark: SparkSession, table: String,
-                             entries: Seq[String],
-                             partCols: Seq[String],
-                             partTypes: Map[String, org.apache.spark.sql.types.DataType])
-      : DataFrame = {
-    if (partCols.isEmpty)
-      graft.Tables.parquet(spark, entries.map(e => s"$table/${entryPath(e)}"): _*)
-    else {
-      entries
-        .groupBy(e => DeltaBridge.splitHivePath(entryPath(e))._1)
-        .toSeq.sortBy(_._1)
-        .map { case (stage, es) =>
-          val files = es.map(e => s"$table/${entryPath(e)}")
-          // per-group data schema from the group's own footer (a stage
-          // dir is one write → uniform), partition columns appended in
-          // discovery order with the stable types
-          val dataSchema = graft.Tables.parquet(spark, files.head).schema
-          val full = org.apache.spark.sql.types.StructType(
-            dataSchema.fields ++ partCols.map(c =>
-              org.apache.spark.sql.types.StructField(c, partTypes(c))))
-          spark.read.schema(full).option("basePath", s"$table/$stage")
-            .parquet(files: _*)
-        }
-        .reduce(_.unionByName(_))
-    }
-  }
-
-  /** The narrowest partition-column type whose Spark path rendering is
-    * the IDENTITY on every observed value — BIGINT only when each value
-    * round-trips `v == v.toLong.toString`, DATE only for canonical
-    * ISO dates, else STRING (which preserves anything: leading zeros,
-    * spaces, mixed shapes). Nulls (`__HIVE_DEFAULT_PARTITION__`) are
-    * render-stable under every type. */
-  private def roundTripStableType(values: Seq[String])
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types.{DateType, LongType, StringType}
-    val nn = values.filter(_ != null)
-    def stableLong(v: String) =
-      try v.toLong.toString == v catch { case _: NumberFormatException => false }
-    def stableDate(v: String) =
-      try java.time.LocalDate.parse(v).toString == v
-      catch { case _: java.time.format.DateTimeParseException => false }
-    if (nn.nonEmpty && nn.forall(stableLong)) LongType
-    else if (nn.nonEmpty && nn.forall(stableDate)) DateType
-    else StringType
-  }
-
   /** Re-stage a rewrite preserving the table's Hive layout. Rows shuffle
     * onto (partition values[, deterministic row-hash salt]) so each
     * partition directory gets at most `partFiles` files — bounded file
@@ -1166,6 +1082,15 @@ object TxLog {
     live.filter(e => decoded.exists(_.endsWith(entryPath(e))))
   }
 
+  /** OPTIMIZE: rewrite the live set into `partFiles` compacted files and
+    * publish as ONE commit — q113's small-file compaction under
+    * transactional visibility (readers see the old layout or the new,
+    * never a mix). Conflict-safe: the compacted data is staged from a
+    * specific snapshot version, and the commit must land at EXACTLY the
+    * next version — if any concurrent write intervenes, the staged
+    * compaction is discarded and the whole operation re-runs against the
+    * new head (rewriting stale data would silently drop the concurrent
+    * commit's rows). */
   def optimize(spark: SparkSession, table: String, partFiles: Int = 1): Int = {
     var attempts = 0
     while (attempts < 20) {
@@ -1178,9 +1103,8 @@ object TxLog {
       // files PER PARTITION (default 1 = the per-partition compaction
       // delta-spark's OPTIMIZE performs), and partition values ride the
       // re-derived paths, never the data files
-      val partCols = livePartitionCols(table, live, "optimize")
-      val partTypes = partitionTypesOf(live, partCols)
-      val snapshot = readEntries(spark, table, live, partCols, partTypes)
+      val partCols = st.partitionCols
+      val snapshot = scan(spark, table, st, live)
       val staged = stageLike(snapshot, table, partCols, partFiles)
       if (publish(table, base + 1, st, add = staged, remove = live, None))
         return base + 1
@@ -1208,12 +1132,11 @@ object TxLog {
       val base = head(table)
       val st = state(table, Some(base))
       val live = entries(st)
-      val partCols = livePartitionCols(table, live, "merge")
-      val partTypes = partitionTypesOf(live, partCols)
+      val partCols = st.partitionCols
       val keys = updates.select(key).distinct()
       val hitAbs: Set[String] =
         if (live.isEmpty) Set.empty
-        else readEntries(spark, table, live, partCols, partTypes)
+        else scan(spark, table, st, live)
           .withColumn("_graft_file", input_file_name())
           .join(keys, Seq(key), "left_semi")
           .select("_graft_file").distinct()
@@ -1221,7 +1144,7 @@ object TxLog {
       val hitRel = hitEntries(live, hitAbs)
       val survivors =
         if (hitRel.isEmpty) None
-        else Some(readEntries(spark, table, hitRel, partCols, partTypes)
+        else Some(scan(spark, table, st, hitRel)
           .join(keys, Seq(key), "left_anti"))
       val rewrite = survivors match {
         case Some(sv) =>
@@ -1319,8 +1242,7 @@ object TxLog {
       val base = head(table)
       val st = state(table, Some(base))
       val live = entries(st)
-      val partCols = livePartitionCols(table, live, "merge")
-      val partTypes = partitionTypesOf(live, partCols)
+      val partCols = st.partitionCols
       val keyRows = source.select(keys.map(col): _*)
         .where(allKeysNonNull(keys)).distinct()
       val needTargetRewrite = matched.nonEmpty || notMatchedBySource.nonEmpty
@@ -1331,7 +1253,7 @@ object TxLog {
         if (live.isEmpty || !needTargetRewrite) Seq.empty
         else if (notMatchedBySource.nonEmpty) live
         else {
-          val hitAbs = readEntries(spark, table, live, partCols, partTypes)
+          val hitAbs = scan(spark, table, st, live)
             .withColumn("_graft_file", input_file_name())
             .join(keyRows, keys, "left_semi")
             .select("_graft_file").distinct()
@@ -1435,7 +1357,7 @@ object TxLog {
           if (matchedUpdIdx.isEmpty) lit(false)
           else side(matchedSide = true) &&
             col("__clause").isin(matchedUpdIdx.map(Int.box): _*)
-        val probe = readEntries(spark, table, hitRel, partCols, partTypes)
+        val probe = scan(spark, table, st, hitRel)
           .withColumn("__graft_file", input_file_name())
           .join(joinRight, joinOn, "left_outer")
           .withColumn("__matched", matchedCol)
@@ -1459,8 +1381,7 @@ object TxLog {
         if (dvOldEntries.nonEmpty) {
           // deleted PHYSICAL row indices, driver-sized by the threshold;
           // vector union + sidecar publish shared with deleteWhereDv
-          val byFile = readEntries(spark, table, dvOldEntries, partCols,
-              partTypes)
+          val byFile = scan(spark, table, st, dvOldEntries)
             .withColumn("__graft_file", input_file_name())
             .withColumn("__graft_ridx", col("_metadata.row_index"))
             .join(joinRight, joinOn, "left_outer")
@@ -1476,13 +1397,13 @@ object TxLog {
       }
       val targetOpt =
         if (rwRel.isEmpty) None
-        else Some(readEntries(spark, table, rwRel, partCols, partTypes))
+        else Some(scan(spark, table, st, rwRel))
       // the insert anti-join needs the matched keys of EVERY hit file —
       // including DV'd and carried-over ones the rewrite no longer reads
       val hitKeysOpt: Option[DataFrame] =
         if (hitRel.isEmpty) None
         else if (rwRel == hitRel) targetOpt.map(_.select(keys.map(col): _*))
-        else Some(readEntries(spark, table, hitRel, partCols, partTypes)
+        else Some(scan(spark, table, st, hitRel)
           .select(keys.map(col): _*))
       targetOpt.foreach { target =>
         // ONE pass over the rewrite-bound files (delta-spark's
@@ -1504,15 +1425,6 @@ object TxLog {
             c, notMatchedBySource, matchedSide = false).as(c)
         }: _*)
       }
-      // reference schema for the type-stability check below: the hit rows
-      // when any were read, else the live snapshot (an insert-only merge
-      // must not land mistyped files under a silently different schema)
-      var schemaRef: Option[org.apache.spark.sql.types.StructType] =
-        targetOpt.map(_.schema)
-          // all hit files DV'd or carried over: pin from one hit file
-          // (footer-priced) so INSERT typing is still enforced
-          .orElse(hitRel.headOption.map(h => readEntries(spark, table,
-            Seq(h), partCols, partTypes).schema))
       if (notMatchedInsert.nonEmpty) {
         val src0 = source.select(source.columns.toIndexedSeq.map(c =>
           col(c).as(s"__src_$c")): _*)
@@ -1524,15 +1436,7 @@ object TxLog {
         val tKeys: Option[DataFrame] = hitKeysOpt match {
           case Some(tk) => Some(tk)
           case None if live.nonEmpty && !needTargetRewrite =>
-            val fullLive = readEntries(spark, table, live, partCols, partTypes)
-            schemaRef = schemaRef.orElse(Some(fullLive.schema))
-            Some(fullLive.select(keys.map(col): _*))
-          case None if live.nonEmpty =>
-            // keys provably absent; still pin the schema for the type
-            // check from ONE live file (footer-priced, no scan job)
-            schemaRef = schemaRef.orElse(Some(readEntries(spark, table,
-              Seq(live.head), partCols, partTypes).schema))
-            None
+            Some(scan(spark, table, st, live).select(keys.map(col): _*))
           case None => None
         }
         val insBase = tKeys match {
@@ -1561,9 +1465,11 @@ object TxLog {
           // ENFORCE type stability like [[updateWhere]]: a widening SET
           // or a mistyped INSERT value must not land rewritten files
           // under a silently different parquet type than the carried-over
-          // files
-          schemaRef.foreach { ref =>
-            val tTypes = ref.fields.map(f => f.name -> f.dataType).toMap
+          // files — the replayed schema is the reference, so an
+          // insert-only statement is checked too
+          Option(st.schemaJson).foreach { _ =>
+            val tTypes = DeltaBridge.schemaOf(st).fields
+              .map(f => f.name -> f.dataType).toMap
             rewrite.schema.fields.foreach { f =>
               require(tTypes.get(f.name).forall(_ == f.dataType),
                 s"mergeClauses: clause changes ${f.name}: " +
@@ -1667,12 +1573,11 @@ object TxLog {
       val base = head(table)
       val st = state(table, Some(base))
       val live = entries(st)
-      val partCols = livePartitionCols(table, live, "delete")
-      val partTypes = partitionTypesOf(live, partCols)
+      val partCols = st.partitionCols
       if (live.isEmpty) return base
       // ONE scan: per-file matching and total LIVE row counts (DV-read,
       // so already-deleted rows never re-match or re-count)
-      val counts = readEntries(spark, table, live, partCols, partTypes)
+      val counts = scan(spark, table, st, live)
         .withColumn("_graft_file", input_file_name())
         .groupBy("_graft_file")
         .agg(sum(when(expr(s"coalesce(($predicate), false)"), lit(1L))
@@ -1691,8 +1596,7 @@ object TxLog {
       val newDvAdds: Seq[String] =
         if (dvEntriesOld.isEmpty) Seq.empty
         else {
-          val byFile = readEntries(spark, table, dvEntriesOld, partCols,
-              partTypes)
+          val byFile = scan(spark, table, st, dvEntriesOld)
             .withColumn("_graft_file", input_file_name())
             .withColumn("_graft_ridx", col("_metadata.row_index"))
             .where(s"coalesce(($predicate), false)")
@@ -1706,7 +1610,7 @@ object TxLog {
       val staged: Seq[String] =
         if (rwEntriesOld.isEmpty) Seq.empty
         else stageLike(
-          readEntries(spark, table, rwEntriesOld, partCols, partTypes)
+          scan(spark, table, st, rwEntriesOld)
             .where(s"NOT coalesce(($predicate), false)"),
           table, partCols, partFiles)
       if (publish(table, base + 1, st, add = newDvAdds ++ staged,
@@ -1769,17 +1673,16 @@ object TxLog {
       // updates re-stage under re-derived `col=value` paths. A SET on a
       // partition column MOVES rows between partitions, delta-spark's
       // UPDATE semantics, because paths derive from the updated values.
-      val partCols = livePartitionCols(table, live, op)
-      val partTypes = partitionTypesOf(live, partCols)
+      val partCols = st.partitionCols
       val hitAbs: Set[String] =
         if (live.isEmpty) Set.empty
-        else readEntries(spark, table, live, partCols, partTypes)
+        else scan(spark, table, st, live)
           .where(predicate)
           .select(input_file_name()).distinct()
           .collect().map(_.getString(0)).toSet
       val hitRel = hitEntries(live, hitAbs)
       if (hitRel.isEmpty) return base // no row matches: the commit is a no-op
-      val hitDf = readEntries(spark, table, hitRel, partCols, partTypes)
+      val hitDf = scan(spark, table, st, hitRel)
       val survivors = hitDf.where(s"NOT coalesce(($predicate), false)")
       val rewrite = transform(hitDf.where(s"($predicate)")) match {
         case Some(updated) => survivors.unionByName(updated)

@@ -92,22 +92,23 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("silver → gold: directory, state table, quarterly wide tables") {
-    Medallion.updateGoldLayer(spark, paths)
+    Medallion.updateGoldLayerDelta(spark, paths)
+    import graft.sources.{DeltaBridge, TxLog}
 
-    val dir = spark.read.parquet(paths.gold("institution_directory_by_type"))
+    val dir = DeltaBridge.read(spark, paths.gold("institution_directory_by_type"))
     assert(dir.count() == 3)
     assert(dir.columns.toSet ==
       Set("name", "charter_number", "institution_type", "city", "state", "website"))
-    // partitionBy(institution_type, state) → Hive-style dirs exist
-    assert(Files.exists(Paths.get(
-      paths.gold("institution_directory_by_type"),
-      "institution_type=credit union", "state=Virginia")))
+    // partitionBy(institution_type, state) → a live add under Hive-style dirs
+    assert(TxLog.liveFiles(paths.gold("institution_directory_by_type"))
+      .map(TxLog.entryPath)
+      .exists(_.contains("institution_type=credit union/state=Virginia/")))
 
-    val byState = spark.read.parquet(paths.gold("assets_deposits_by_state"))
+    val byState = DeltaBridge.read(spark, paths.gold("assets_deposits_by_state"))
     val q2 = byState.filter("year = 2020 AND quarter = 2").collect()
     assert(q2.map(_.getAs[Long]("assets_total")).toSet == Set(1100L, 5500L))
 
-    val qa = spark.read.parquet(paths.gold("quarterly_assets_table"))
+    val qa = DeltaBridge.read(spark, paths.gold("quarterly_assets_table"))
     // pinned cols first, then date cols sorted desc (P8)
     assert(qa.columns.toSeq == Seq("charter_number", "institution_type", "name",
       "2020-06-30", "2020-03-31"))
@@ -329,7 +330,6 @@ class MedallionSpec extends SparkSpec {
       .containsKey("org.apache.spark.sql.parquet.row.metadata"))
     finally r.close()
     graft.sources.TxLog.commit(t, Seq("stage-foreign/part-0.parquet"), Seq.empty)
-    graft.sources.DeltaBridge.exportLog(spark, t)
     val (schemaString, add) = exported(t)
     assert(schemaString == inferred(t, add))
     assert(graft.sources.DeltaBridge.read(spark, t).collect().map(_.getString(1)).toSeq == Seq("a"))

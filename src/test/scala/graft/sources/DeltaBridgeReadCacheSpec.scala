@@ -32,7 +32,6 @@ class DeltaBridgeReadCacheSpec extends SparkSpec {
     "second collect runs exactly one job") {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val a = DeltaBridge.read(spark, t)
     assert(ids(a) == Set(1L, 2L))
     val b = DeltaBridge.read(spark, t)
@@ -46,11 +45,9 @@ class DeltaBridgeReadCacheSpec extends SparkSpec {
     "old version still returns the old rows") {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     assert(ids(DeltaBridge.read(spark, t)) == Set(1L, 2L))
     assert(ids(DeltaBridge.read(spark, t, Some(0L))) == Set(1L, 2L))
     TxLog.append(spark, Seq((3L, "c")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     assert(ids(DeltaBridge.read(spark, t)) == Set(1L, 2L, 3L))
     assert(ids(DeltaBridge.read(spark, t, Some(0L))) == Set(1L, 2L))
   }
@@ -60,7 +57,6 @@ class DeltaBridgeReadCacheSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
     TxLog.append(spark, Seq((2L, "b")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     assert(ids(DeltaBridge.read(spark, t, Some(0L))) == Set(1L))
     assert(DeltaBridge.checkpoint(spark, t) == 1L)
     assert(DeltaBridge.vacuumLog(t) == Seq(0L, 1L))
@@ -74,7 +70,6 @@ class DeltaBridgeReadCacheSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
     TxLog.append(spark, Seq((2L, "b")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     DeltaBridge.checkpoint(spark, t, partRows = 1)
     assert(ids(DeltaBridge.read(spark, t)) == Set(1L, 2L))
     val ld = Paths.get(t, "_delta_log")
@@ -90,7 +85,6 @@ class DeltaBridgeReadCacheSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
     TxLog.overwrite(spark, Seq((2L, "b")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val log = TxLog.listDir(Paths.get(t, "_delta_log")).map(_.getFileName.toString).toSet
     assert(ids(DeltaBridge.read(spark, t, Some(0L))) == Set(1L))
     assert(TxLog.vacuum(t, retainVersions = 1).nonEmpty)
@@ -105,7 +99,6 @@ class DeltaBridgeReadCacheSpec extends SparkSpec {
     TxLog.append(spark,
       (0L until 50L).map(i => (i, s"v$i")).toDF("id", "v"), t, partFiles = 1)
     TxLog.deleteWhereDv(spark, t, "id IN (3, 7)", maxDvFraction = 0.2)
-    DeltaBridge.exportLog(spark, t)
     assert(ids(DeltaBridge.read(spark, t)) == (0L until 50L).toSet -- Set(3L, 7L))
     val sidecars = TxLog.listDir(Paths.get(t))
       .filter(_.getFileName.toString.startsWith("deletion_vector_"))
@@ -117,7 +110,6 @@ class DeltaBridgeReadCacheSpec extends SparkSpec {
   test("a spark.sql.caseSensitive change re-resolves the read") {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val before = DeltaBridge.read(spark, t)
     assert(DeltaBridge.read(spark, t) eq before)
     val flipped = (!spark.conf.get("spark.sql.caseSensitive").toBoolean).toString
@@ -132,7 +124,6 @@ class DeltaBridgeReadCacheSpec extends SparkSpec {
     "a DataFrame of its own") {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val mine = DeltaBridge.read(spark, t)
     val other = spark.newSession()
     // static and core confs are shared and refuse a set; the rest copy
@@ -150,7 +141,6 @@ class DeltaBridgeReadCacheSpec extends SparkSpec {
     val t = freshTable()
     TxLog.overwritePartitioned(spark,
       Seq((1L, "k0"), (2L, "k1")).toDF("id", "p"), t, Seq("p"))
-    DeltaBridge.exportLog(spark, t)
     DeltaBridge.clearReadCache()
     def readKey(i: Int): DataFrame =
       DeltaBridge.read(spark, t, partitionFilter = Map("p" -> s"k$i"))

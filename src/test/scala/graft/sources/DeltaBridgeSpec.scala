@@ -20,7 +20,7 @@ class DeltaBridgeSpec extends SparkSpec {
     TxLog.append(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t)
     TxLog.append(spark, Seq((3L, "c")).toDF("id", "v"), t)
     TxLog.overwrite(spark, Seq((9L, "z")).toDF("id", "v"), t)
-    val n = DeltaBridge.exportLog(spark, t)
+    val n = DeltaBridge.versions(t).size
     assert(n == 3)
     // delta versions are 0-based and contiguous regardless of TxLog's own
     assert(DeltaBridge.versions(t) == Seq(0L, 1L, 2L))
@@ -34,7 +34,6 @@ class DeltaBridgeSpec extends SparkSpec {
     // re-export is idempotent: version files are immutable
     val before = Files.readString(
       Paths.get(t, "_delta_log", f"${0L}%020d.json"))
-    DeltaBridge.exportLog(spark, t)
     assert(Files.readString(
       Paths.get(t, "_delta_log", f"${0L}%020d.json")) == before)
   }
@@ -44,7 +43,6 @@ class DeltaBridgeSpec extends SparkSpec {
     "size/modificationTime/dataChange") {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val lines = Files.readAllLines(
       Paths.get(t, "_delta_log", f"${0L}%020d.json"))
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -232,7 +230,6 @@ class DeltaBridgeSpec extends SparkSpec {
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t, partFiles = 1)
     TxLog.append(spark, Seq((2L, "b")).toDF("id", "v"), t, partFiles = 1)
     TxLog.append(spark, Seq((3L, "c")).toDF("id", "v"), t, partFiles = 1)
-    DeltaBridge.exportLog(spark, t)
     // head is version 2 — far below the automatic 10-version cadence
     assert(DeltaBridge.checkpoint(spark, t) == 2L)
     assert(Files.exists(
@@ -253,7 +250,6 @@ class DeltaBridgeSpec extends SparkSpec {
     TxLog.append(spark,
       (0L until 50L).map(i => (i, s"v$i")).toDF("id", "v"), t, partFiles = 1)
     TxLog.deleteWhereDv(spark, t, "id IN (3, 7)", maxDvFraction = 0.2)
-    DeltaBridge.exportLog(spark, t)
     assert(DeltaBridge.checkpoint(spark, t) == 1L)
     assert(DeltaBridge.vacuumLog(t).nonEmpty,
       "the covered JSON retires — the snapshot must survive on the " +
@@ -275,7 +271,6 @@ class DeltaBridgeSpec extends SparkSpec {
     (1 to 11).foreach { i =>
       TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "v"), t)
     }
-    DeltaBridge.exportLog(spark, t)
     val ld = Paths.get(t, "_delta_log")
     assert(Files.exists(ld.resolve(f"${10L}%020d.checkpoint.parquet")))
     assert(Files.exists(ld.resolve("_last_checkpoint")))
@@ -289,7 +284,6 @@ class DeltaBridgeSpec extends SparkSpec {
     assert(back.map(_.getString(1)).toSeq == (1 to 11).map(i => s"v$i"))
     // a 12th commit after the vacuum: export extends, replay starts at 11
     TxLog.append(spark, Seq((12L, "v12")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     assert(DeltaBridge.read(spark, t).count() == 12)
   }
 
@@ -299,7 +293,6 @@ class DeltaBridgeSpec extends SparkSpec {
     TxLog.append(spark,
       Seq((5L, "bb", 2.5d), (1L, "aa", -0.5d), (9L, "zz", 7.25d))
         .toDF("id", "v", "x").coalesce(1), t, partFiles = 1)
-    DeltaBridge.exportLog(spark, t)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val add = Files.readAllLines(
       Paths.get(t, "_delta_log", f"${0L}%020d.json")).asScala
@@ -333,7 +326,6 @@ class DeltaBridgeSpec extends SparkSpec {
       Seq((10L, "c"), (15L, "d")).toDF("id", "v").coalesce(1), t, 1)
     TxLog.append(spark,
       Seq((20L, "e"), (25L, "f")).toDF("id", "v").coalesce(1), t, 1)
-    DeltaBridge.exportLog(spark, t)
     val full = DeltaBridge.read(spark, t)
     assert(full.inputFiles.length == 3)
     val pruned = DeltaBridge.readPruned(spark, t, "id", 10L, 16L)
@@ -377,7 +369,6 @@ class DeltaBridgeSpec extends SparkSpec {
       Seq((1L, 1.1f), (2L, 2.2f)).toDF("id", "f").coalesce(1), t, 1)
     TxLog.append(spark,
       Seq((9L, 9.9f)).toDF("id", "f").coalesce(1), t, 1)
-    DeltaBridge.exportLog(spark, t)
     val hit = spark.read.format("graft-delta").load(t)
       .filter($"f" === 1.1f)
     assert(hit.collect().map(_.getLong(0)).toSeq == Seq(1L),
@@ -404,7 +395,6 @@ class DeltaBridgeSpec extends SparkSpec {
       (1L, "a", "CA"), (2L, "b", "CA"), (3L, "c", "NY"), (4L, "d", "TX"))
       .toDF("id", "v", "state")
     TxLog.appendPartitioned(spark, df0, t, Seq("state"))
-    DeltaBridge.exportLog(spark, t)
 
     val full = spark.read.format(fmt).load(t)
     assert(full.schema.fieldNames.toSeq == Seq("id", "v", "state"))
@@ -434,7 +424,6 @@ class DeltaBridgeSpec extends SparkSpec {
       .coalesce(1), t2, 1)
     TxLog.append(spark, Seq((20L, "x"), (25L, "y")).toDF("id", "v")
       .coalesce(1), t2, 1)
-    DeltaBridge.exportLog(spark, t2)
     val ranged = spark.read.format(fmt).load(t2)
       .filter($"id" >= 10L && $"id" < 16L)
     assert(ranged.collect().map(_.getLong(0)).sorted.toSeq ==
@@ -447,7 +436,6 @@ class DeltaBridgeSpec extends SparkSpec {
 
     // versionAsOf rides the same option surface
     TxLog.overwrite(spark, Seq((9L, "z")).toDF("id", "v"), t2)
-    DeltaBridge.exportLog(spark, t2)
     assert(spark.read.format(fmt).load(t2).count() == 1)
     assert(spark.read.format(fmt).option("versionAsOf", "2")
       .load(t2).count() == 6)
@@ -501,7 +489,6 @@ class DeltaBridgeSpec extends SparkSpec {
     (1 to 5).foreach { i =>
       TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "v"), t)
     } // delta versions 0..4
-    DeltaBridge.exportLog(spark, t)
     // a fresh source instance pins head=4, but the engine recovers an
     // offset-log entry from a crashed run whose batch zero ended at 1
     val src = new DeltaBridgeStreamSource(spark, t,
@@ -532,7 +519,6 @@ class DeltaBridgeSpec extends SparkSpec {
     (1 to 6).foreach { i =>
       TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "v"), t)
     }
-    DeltaBridge.exportLog(spark, t) // delta versions 0..5
     val ckpt = Files.createTempDirectory("delta_paced_ckpt").toString
     val seen = java.util.Collections.synchronizedList(
       new java.util.ArrayList[Long]())
@@ -578,14 +564,12 @@ class DeltaBridgeSpec extends SparkSpec {
     (1 to 11).foreach { i =>
       TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "v"), t)
     }
-    DeltaBridge.exportLog(spark, t) // writes ckpt@10
     assert(DeltaBridge.vacuumLog(t) == (0L to 10L))
     assert(DeltaBridge.versions(t).isEmpty)
     // head read bootstraps from the checkpoint
     assert(DeltaBridge.read(spark, t).count() == 11)
     // a new commit exports WITHOUT recreating the covered prefix
     TxLog.append(spark, Seq((12L, "v12")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     assert(DeltaBridge.versions(t) == Seq(11L),
       "export must not undo log retention by recreating covered versions")
     assert(DeltaBridge.read(spark, t).count() == 12)
@@ -594,14 +578,12 @@ class DeltaBridgeSpec extends SparkSpec {
     // make removable garbage with an overwrite first
     TxLog.overwrite(spark,
       Seq((100L, "w1"), (101L, "w2")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val dropped = TxLog.vacuum(t, retainVersions = 1)
     assert(dropped.nonEmpty, "the pre-overwrite files are unreferenced now")
     assert(DeltaBridge.read(spark, t).count() == 2)
     assert(spark.read.format("graft-delta").load(t).count() == 2)
     // export still extends cleanly after BOTH vacuum halves
     TxLog.append(spark, Seq((102L, "w3")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     assert(DeltaBridge.read(spark, t).orderBy("id").collect()
       .map(_.getLong(0)).toSeq == Seq(100L, 101L, 102L))
   }
@@ -639,7 +621,6 @@ class DeltaBridgeSpec extends SparkSpec {
     (1 to 11).foreach { i =>
       TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "v"), t)
     }
-    DeltaBridge.exportLog(spark, t)
     val ld = Paths.get(t, "_delta_log")
     (0L to 10L).foreach { v =>
       Files.deleteIfExists(ld.resolve(f"$v%020d.json"))
@@ -817,7 +798,6 @@ class DeltaBridgeSpec extends SparkSpec {
     val df = nasty.zipWithIndex.map { case (s, i) => (i.toLong, s) }
       .toDF("id", "k")
     TxLog.appendPartitioned(spark, df, t, Seq("k"))
-    DeltaBridge.exportLog(spark, t)
     // log values must be the RAW strings (unescaped), path-parse = log
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val pvs = Files.readAllLines(
@@ -886,7 +866,6 @@ class DeltaBridgeSpec extends SparkSpec {
     TxLog.append(spark, Seq((3L, "c")).toDF("id", "v"), t)
     TxLog.overwrite(spark, Seq((7L, "x"), (8L, "y")).toDF("id", "v"), t)
     TxLog.append(spark, Seq((9L, "z")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val txVersions = TxLog.versions(t)
     txVersions.zipWithIndex.foreach { case (txv, dv) =>
       val viaTx = TxLog.read(spark, t, asOf = Some(txv))
@@ -907,10 +886,8 @@ class DeltaBridgeSpec extends SparkSpec {
     (1 to 11).foreach { i =>
       TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "v"), t)
     }
-    DeltaBridge.exportLog(spark, t)
     // commit 12: schema B (new column) -> delta 11 carries metaData B
     TxLog.append(spark, Seq((12L, "v12", 1.5)).toDF("id", "v", "w"), t)
-    DeltaBridge.exportLog(spark, t)
     val ld = Paths.get(t, "_delta_log")
     // vacuum the checkpoint-covered JSON prefix, as the long-lived-table
     // workflow invites; delta 11 (the schema-B metaData) survives
@@ -922,7 +899,6 @@ class DeltaBridgeSpec extends SparkSpec {
     // dv10's A, omit the action, and readers would resolve dv12's files
     // under schema B
     TxLog.append(spark, Seq((13L, "v13")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val md12 = Files.readAllLines(ld.resolve(f"${12L}%020d.json")).asScala
       .filter(_.nonEmpty)
@@ -946,7 +922,6 @@ class DeltaBridgeSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark,
       Seq((big + 1, "x")).toDF("id", "v").coalesce(1), t, 1)
-    DeltaBridge.exportLog(spark, t)
     // value big+1: [big+1, big+2) keeps, adjacent windows drop — each
     // verdict hinges on a ±1 comparison at 2^53 where doubles cannot
     // represent the boundary
@@ -983,7 +958,6 @@ class DeltaBridgeSpec extends SparkSpec {
       Seq("state", "year"))
     TxLog.appendPartitioned(spark, df.filter($"id" > 2), t,
       Seq("state", "year"))
-    DeltaBridge.exportLog(spark, t)
     // log contents: the external-reader contract
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val v0 = Files.readAllLines(
@@ -1026,7 +1000,6 @@ class DeltaBridgeSpec extends SparkSpec {
     val df = Seq((1L, "CA"), (2L, "CA"), (3L, "NY"), (4L, "TX"))
       .toDF("id", "state")
     TxLog.appendPartitioned(spark, df, t, Seq("state"))
-    DeltaBridge.exportLog(spark, t)
     val pruned = DeltaBridge.read(spark, t,
       partitionFilter = Map("state" -> "CA"))
     assert(pruned.orderBy("id").collect().map(_.getAs[Long]("id")).toSeq ==
@@ -1048,7 +1021,6 @@ class DeltaBridgeSpec extends SparkSpec {
     val df = Seq((1L, Some("CA")), (2L, None), (3L, Some("NY")))
       .toDF("id", "state")
     TxLog.appendPartitioned(spark, df, t, Seq("state"))
-    DeltaBridge.exportLog(spark, t)
     val back = DeltaBridge.read(spark, t).orderBy("id").collect()
     assert(back.map(r => Option(r.getAs[String]("state"))).toSeq ==
       Seq(Some("CA"), None, Some("NY")))
@@ -1082,7 +1054,6 @@ class DeltaBridgeSpec extends SparkSpec {
     "emits metaData only on schema change — the immutable-id rule") {
     val t = freshTable()
     TxLog.overwrite(spark, Seq((1L, "a")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def metaOf(v: Long): Option[java.util.Map[String, AnyRef]] = {
       val f = Paths.get(t, "_delta_log", f"$v%020d.json")
@@ -1096,12 +1067,10 @@ class DeltaBridgeSpec extends SparkSpec {
     // metaData action (redundant metaData on an unchanged schema is spec
     // noise, and a fresh id would change the table's identity mid-log)
     TxLog.overwrite(spark, Seq((2L, "b")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     assert(metaOf(1L).isEmpty,
       "unchanged schema must not re-emit metaData on re-export")
     // third refresh with a NEW column → metaData fires, id is STABLE
     TxLog.overwrite(spark, Seq((3L, "c", 1.5)).toDF("id", "v", "w"), t)
-    DeltaBridge.exportLog(spark, t)
     val md2 = metaOf(2L).get
     assert(md2.get("id").asInstanceOf[String] == id0,
       "schema evolution must keep version 0's immutable table id")
@@ -1119,7 +1088,6 @@ class DeltaBridgeSpec extends SparkSpec {
       partFiles = 1)                                        // delta 1
     TxLog.append(spark, Seq((4L, "d", 1.5)).toDF("id", "v", "w"), t,
       partFiles = 1)                                        // delta 2: schema B
-    DeltaBridge.exportLog(spark, t)
     val h = DeltaBridge.history(spark, t).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getBoolean(4)))
     assert(h.toSeq == Seq(
@@ -1136,7 +1104,6 @@ class DeltaBridgeSpec extends SparkSpec {
     (1 to 11).foreach { i =>
       TxLog.append(spark, Seq((10L + i, "x", 0.0)).toDF("id", "v", "w"), t)
     }
-    DeltaBridge.exportLog(spark, t)
     DeltaBridge.vacuumLog(t)
     val left = DeltaBridge.history(spark, t).collect().map(_.getLong(0))
     assert(left.nonEmpty && left.forall(_ > 10L),
@@ -1151,7 +1118,6 @@ class DeltaBridgeSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
     TxLog.append(spark, Seq((2L, "b")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t) // delta 0, 1
     // pin deterministic commit times an hour apart
     val ld = Paths.get(t, "_delta_log")
     val t0 = 1700000000000L; val t1 = t0 + 3600000L
@@ -1192,7 +1158,6 @@ class DeltaBridgeSpec extends SparkSpec {
     TxLog.deleteWhere(spark, t, "id = 1")                // tx v3 → delta 2
     TxLog.updateWhere(spark, t, "id = 2", Map("v" -> "upper(v)")) // delta 3
     TxLog.restore(spark, t, 2)                           // tx v5 → delta 4
-    DeltaBridge.exportLog(spark, t)
     def stateAt(dv: Long): Map[Long, String] =
       DeltaBridge.read(spark, t, versionAsOf = Some(dv)).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -1213,7 +1178,6 @@ class DeltaBridgeSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     TxLog.append(spark, Seq((0L, "base")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t) // delta version 0
     val ckpt = Files.createTempDirectory("delta_latest_ckpt").toString
     val seen = java.util.Collections.synchronizedList(
       new java.util.ArrayList[Long]())
@@ -1257,7 +1221,6 @@ class DeltaBridgeSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t) // delta version 0, schema (id, v)
     val ckpt = Files.createTempDirectory("delta_schema_ckpt").toString
     val seen = java.util.Collections.synchronizedList(
       new java.util.ArrayList[Long]())
@@ -1285,7 +1248,6 @@ class DeltaBridgeSpec extends SparkSpec {
     // restarted instance pins — the shape the != check alone misses)
     TxLog.append(spark, Seq((3L, "c")).toDF("id", "v"), t)
     TxLog.append(spark, Seq((4L, "d", 1.5)).toDF("id", "v", "w"), t)
-    DeltaBridge.exportLog(spark, t) // delta versions 2 (no meta), 3 (meta)
     val q2 = start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       try q2.processAllAvailable() finally q2.stop()
@@ -1307,7 +1269,6 @@ class DeltaBridgeSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
     TxLog.append(spark, Seq((2L, "b", 1.5)).toDF("id", "v", "w"), t)
-    DeltaBridge.exportLog(spark, t) // delta 0 schema A, delta 1 schema B
     // fresh instance pins head=1 (schema B); the engine recovers an
     // uncommitted batch zero that ended at offset 0 (schema A)
     val src = new DeltaBridgeStreamSource(spark, t, Map.empty)
@@ -1327,7 +1288,6 @@ class DeltaBridgeSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
     TxLog.append(spark, Seq((2L, "b")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t) // delta 0, 1
     // a restored/copied log: version 1's mtime is BEHIND version 0's
     val ld = Paths.get(t, "_delta_log")
     Files.setLastModifiedTime(ld.resolve(f"${0L}%020d.json"),
@@ -1636,7 +1596,6 @@ class DeltaBridgeSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark,
       (0L until 100L).map(i => (i, s"v$i")).toDF("k", "s"), t, partFiles = 1)
-    DeltaBridge.exportLog(spark, t)
     // stream 1: default start, no opt-in — the DV delete (a logical
     // remove) must fail the stream loud, like any remove-bearing version
     val ckpt1 = Files.createTempDirectory("dv_stream_ckpt1").toString
@@ -1648,7 +1607,6 @@ class DeltaBridgeSpec extends SparkSpec {
       assert(spark.sql("SELECT count(*) FROM dv_tail1").head().getLong(0)
         == 100)
       TxLog.deleteWhereDv(spark, t, "k IN (5, 17)", maxDvFraction = 0.05)
-      DeltaBridge.exportLog(spark, t)
       val err = intercept[Exception](q1.processAllAvailable())
       assert(err.getMessage.contains("ignoreChanges") ||
         Option(err.getCause).exists(_.getMessage.contains("ignoreChanges")),
@@ -1670,7 +1628,6 @@ class DeltaBridgeSpec extends SparkSpec {
       // re-delivers the file's POST-DELETE rows (the documented
       // ignoreChanges trade) — never the raw physical rows
       TxLog.deleteWhereDv(spark, t, "k = 30", maxDvFraction = 0.05)
-      DeltaBridge.exportLog(spark, t)
       q2.processAllAvailable()
       val byK = spark.sql("SELECT k, count(*) AS n FROM dv_tail2 GROUP BY k")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1694,7 +1651,6 @@ class DeltaBridgeSpec extends SparkSpec {
       TxLog.append(spark, Seq((i.toLong, "x")).toDF("id", "v"), t,
         partFiles = 1)
     }
-    DeltaBridge.exportLog(spark, t) // head 11, cadence checkpoint at 10
     def lcVersion(): Long = {
       val m = new com.fasterxml.jackson.databind.ObjectMapper().readValue(
         Files.readString(Paths.get(t, "_delta_log", "_last_checkpoint")),
@@ -1705,7 +1661,6 @@ class DeltaBridgeSpec extends SparkSpec {
     assert(DeltaBridge.checkpoint(spark, t) == 11L) // explicit pin above
     assert(DeltaBridge.vacuumLog(t).nonEmpty)       // JSON 0..11 retired
     TxLog.append(spark, Seq((13L, "x")).toDF("id", "v"), t, partFiles = 1)
-    DeltaBridge.exportLog(spark, t) // head 12 → cadence 10 < pinned 11
     assert(lcVersion() == 11L,
       "the cadence checkpoint below the pin must be skipped")
     assert(DeltaBridge.read(spark, t).count() == 13,
@@ -1730,7 +1685,6 @@ class DeltaBridgeSpec extends SparkSpec {
     }
     TxLog.appendBatch(spark, Seq((100L, "s")).toDF("id", "v"), t,
       batchId = 3L)
-    DeltaBridge.exportLog(spark, t)
     // protocol + metaData + 7 adds + 1 txn = 10 rows; 3 rows/part → 4
     assert(DeltaBridge.checkpoint(spark, t, partRows = 3) == 6L)
     val ld = Paths.get(t, "_delta_log")
@@ -1768,9 +1722,7 @@ class DeltaBridgeSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark,
       (0L until 50L).map(i => (i, s"v$i")).toDF("k", "s"), t, partFiles = 1)
-    DeltaBridge.exportLog(spark, t) // v0
     TxLog.deleteWhereDv(spark, t, "k = 5", maxDvFraction = 0.1)
-    DeltaBridge.exportLog(spark, t) // v1: remove + DV'd re-add
     // v2: a foreign writer re-declares the SAME schema alongside an add
     // — the shape that flips the range-start schema check on
     val schemaJson = DeltaBridge.streamSnapshot(spark, t, None).schemaJson
@@ -1801,7 +1753,6 @@ class DeltaBridgeSpec extends SparkSpec {
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
     TxLog.appendBatch(spark, Seq((2L, "b")).toDF("id", "v"), t, batchId = 6L)
     TxLog.appendBatch(spark, Seq((3L, "c")).toDF("id", "v"), t, batchId = 7L)
-    DeltaBridge.exportLog(spark, t)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val txns = (0L to 2L).flatMap { v =>
       Files.readAllLines(Paths.get(t, "_delta_log", f"$v%020d.json"))

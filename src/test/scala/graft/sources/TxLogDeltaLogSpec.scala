@@ -15,9 +15,9 @@ class TxLogDeltaLogSpec extends SparkSpec {
   private def freshTable(): String = tmpDir("txlog_delta")
 
   /** At every TxLog version v (Delta version v − 1): the same live paths,
-    * the same deletion-vector cardinalities, and the same row count. */
+    * the same deletion-vector cardinalities, and the same schema and rows
+    * from `TxLog.read` and `DeltaBridge.read`. */
   private def assertAgree(t: String, from: Int = 1): Unit = {
-    DeltaBridge.exportLog(spark, t)
     val vs = TxLog.versions(t).filter(_ >= from)
     assert(vs.nonEmpty && vs == DeltaBridge.versions(t).map(_.toInt + 1)
       .filter(_ >= from), s"versions of $t")
@@ -27,9 +27,15 @@ class TxLogDeltaLogSpec extends SparkSpec {
       val delta = DeltaBridge.streamSnapshot(spark, t, Some(v - 1L)).live
         .map { case (p, _, dv) => p -> dv.map(_.cardinality) }
       assert(tx.sorted == delta.sorted, s"live files of $t at version $v")
-      assert(TxLog.read(spark, t, Some(v)).count() ==
-        DeltaBridge.read(spark, t, Some(v - 1L)).count(),
-        s"row count of $t at version $v")
+      val bridge = DeltaBridge.read(spark, t, Some(v - 1L))
+      if (tx.isEmpty) assert(bridge.count() == 0, s"rows of $t at version $v")
+      else {
+        val txlog = TxLog.read(spark, t, Some(v))
+        assert(txlog.schema == bridge.schema, s"schema of $t at version $v")
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+        assert(rows(txlog) == rows(bridge), s"rows of $t at version $v")
+      }
     }
   }
 
@@ -67,6 +73,20 @@ class TxLogDeltaLogSpec extends SparkSpec {
     TxLog.appendPartitioned(spark, byState, p, Seq("state"))
     TxLog.overwritePartitioned(spark, byState.filter($"k" > 1), p, Seq("state"))
     assertAgree(p)
+
+    // partition values whose type only the whole snapshot decides
+    val zeros = freshTable()
+    TxLog.appendPartitioned(spark, Seq((1L, "0123"), (2L, "7")).toDF("k", "code"),
+      zeros, Seq("code"))
+    val mixed = freshTable()
+    TxLog.appendPartitioned(spark, Seq((1L, "7"), (2L, "abc")).toDF("k", "code"),
+      mixed, Seq("code"))
+    val years = freshTable()
+    TxLog.appendPartitioned(spark, Seq((1L, 2024), (2L, 2025)).toDF("k", "year"),
+      years, Seq("year"))
+    TxLog.appendPartitioned(spark, Seq((3L, "2026a")).toDF("k", "year"),
+      years, Seq("year"))
+    Seq(zeros, mixed, years).foreach(assertAgree(_))
   }
 
   test("a comma inside a partition value survives the log: TxLog.read " +
@@ -74,12 +94,10 @@ class TxLogDeltaLogSpec extends SparkSpec {
     val t = freshTable()
     TxLog.appendPartitioned(spark, Seq((1L, "a,b"), (2L, "c")).toDF("k", "p"),
       t, Seq("p"))
-    DeltaBridge.exportLog(spark, t)
-    // TxLog.read is the flat read (partition values stay in the paths)
-    assert(TxLog.read(spark, t).orderBy("k").as[Long].collect().toSeq ==
-      Seq(1L, 2L))
-    assert(DeltaBridge.read(spark, t).select("k", "p").orderBy("k")
-      .as[(Long, String)].collect().toSeq == Seq((1L, "a,b"), (2L, "c")))
+    Seq(TxLog.read(spark, t), DeltaBridge.read(spark, t)).foreach { df =>
+      assert(df.select("k", "p").orderBy("k").as[(Long, String)].collect()
+        .toSeq == Seq((1L, "a,b"), (2L, "c")))
+    }
   }
 
   test("a TxLog commit is a Delta version the moment it lands — no " +
@@ -92,6 +110,29 @@ class TxLogDeltaLogSpec extends SparkSpec {
     assert(DeltaBridge.read(spark, t).orderBy("k").as[(Long, String)]
       .collect().toSeq == Seq((1L, "a"), (2L, "b")))
     assert(TxLog.owns(t), "version 0's metaData carries the TxLog marker")
+  }
+
+  test("partition columns are typed over every value in the snapshot: " +
+    "both readers keep '0123' and 'abc' as strings and integer years as INT") {
+    val zeros = freshTable()
+    TxLog.appendPartitioned(spark, Seq((1L, "0123"), (2L, "7")).toDF("k", "code"),
+      zeros, Seq("code"))
+    Seq(TxLog.read(spark, zeros), DeltaBridge.read(spark, zeros)).foreach { df =>
+      assert(df.schema("code").dataType == org.apache.spark.sql.types.StringType)
+      assert(df.orderBy("k").select("code").as[String].collect().toSeq == Seq("0123", "7"))
+    }
+    val mixed = freshTable()
+    TxLog.appendPartitioned(spark, Seq((1L, "7"), (2L, "abc")).toDF("k", "code"),
+      mixed, Seq("code"))
+    assert(DeltaBridge.read(spark, mixed).orderBy("k").select("code").as[String]
+      .collect().toSeq == Seq("7", "abc"))
+    val years = freshTable()
+    TxLog.appendPartitioned(spark, Seq((1L, 2024), (2L, 2025)).toDF("k", "year"),
+      years, Seq("year"))
+    Seq(TxLog.read(spark, years), DeltaBridge.read(spark, years)).foreach { df =>
+      assert(df.schema("year").dataType == org.apache.spark.sql.types.IntegerType)
+      assert(df.orderBy("k").select("year").as[Int].collect().toSeq == Seq(2024, 2025))
+    }
   }
 
   test("a log whose JSON a checkpoint retired is not empty: head counts " +

@@ -494,7 +494,6 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.versions(t).last == vBefore)
     // export republishes the descriptors + the protocol upgrade; the
     // bridge and the DV-aware stats read agree with TxLog.read
-    DeltaBridge.exportLog(spark, t)
     val lines = Files.readAllLines(
       Paths.get(t, "_delta_log", f"${2L}%020d.json"))
     assert(lines.toString.contains("deletionVectors") &&
@@ -563,7 +562,6 @@ class TxLogSpec extends SparkSpec {
     assert(out(5000L) == "ins", "the unmatched source row inserted")
     assert(out.size == 98 + 10 + 50 + 1, s"row count, got ${out.size}")
     // export + bridge agreement over the merge-written vectors
-    DeltaBridge.exportLog(spark, t)
     val viaBridge = DeltaBridge.read(spark, t).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(viaBridge == out, "bridge read must equal the TxLog read")
@@ -605,7 +603,6 @@ class TxLogSpec extends SparkSpec {
     assert(!TxLog.liveFiles(a).exists(_.contains("#dv:")),
       "sanity: the baseline run did not")
     // and the exported logs agree with their own tables
-    DeltaBridge.exportLog(spark, a); DeltaBridge.exportLog(spark, b)
     assert(DeltaBridge.read(spark, b).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet == state(a))
   }
@@ -618,14 +615,22 @@ class TxLogSpec extends SparkSpec {
       (0L until 50L).map(i => (i, s"v$i")).toDF("k", "s"), t, partFiles = 1)
     val beforeRows = TxLog.read(spark, t).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
-    // the racer claims every next version with a no-op commit the moment
-    // it becomes claimable — updateWhere's scan+stage window is orders of
-    // magnitude longer than the racer's loop, so every attempt loses
+    // the racer claims the next version with a no-op commit each time a
+    // new stage directory appears: every updateWhere attempt stages its
+    // rewrite into a fresh `stage-*` dir before it publishes, so every
+    // attempt loses whatever its scan and stage cost
+    def stages(): Set[String] = TxLog.listDir(java.nio.file.Paths.get(t))
+      .map(_.getFileName.toString).filter(_.startsWith("stage-")).toSet
     @volatile var stop = false
     val racer = new Thread(() => {
+      var seen = stages()
       while (!stop) {
-        val v = TxLog.versions(t).lastOption.getOrElse(0) + 1
-        TxLog.tryCommitAt(t, v, add = Seq.empty, remove = Seq.empty)
+        val now = stages()
+        if (!now.subsetOf(seen)) {
+          seen = now
+          while (!TxLog.tryCommitAt(t, TxLog.head(t) + 1, add = Seq.empty,
+              remove = Seq.empty)) ()
+        }
         Thread.sleep(1)
       }
     })
@@ -689,7 +694,6 @@ class TxLogSpec extends SparkSpec {
           (4L, "d", null.asInstanceOf[String]))
         .toDF("k", "s", "country"), t, Seq("country"))
     def snap(): Set[(Long, String, String)] = {
-      DeltaBridge.exportLog(spark, t)
       DeltaBridge.read(spark, t).collect()
         .map(r => (r.getAs[Long]("k"), r.getAs[String]("s"),
           r.getAs[String]("country"))).toSet
@@ -742,13 +746,10 @@ class TxLogSpec extends SparkSpec {
       Seq((1L, "a", "NORTH AMERICA", "0123"), (2L, "b", "EUROPE", "7"),
           (3L, "c", "NORTH AMERICA", "0123"))
         .toDF("k", "s", "region", "code"), t, Seq("region", "code"))
-    // export-tier typing is a SEPARATE (pre-existing) contract: the
-    // declared schema re-infers from the layout, so `code` reads as an
-    // integer there; this test pins the TxLog tier — raw path VALUES
-    // must survive rewrites, and hit discovery must work through the
-    // URI encoding input_file_name applies
+    // raw path VALUES must survive rewrites, `code` is logged as a
+    // STRING (so every reader returns "0123"), and hit discovery must
+    // work through the URI encoding input_file_name applies
     def snap(): Set[(Long, String, String)] = {
-      DeltaBridge.exportLog(spark, t)
       DeltaBridge.read(spark, t).collect()
         .map(r => (r.getAs[Long]("k"), r.getAs[String]("s"),
           r.getAs[String]("region"))).toSet
@@ -773,6 +774,11 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.liveFiles(t).map(TxLog.entryPath)
         .exists(_.contains("code=0123")),
       "the update's re-stage must also preserve the raw value")
+    val codes = DeltaBridge.read(spark, t)
+    assert(codes.schema("code").dataType ==
+      org.apache.spark.sql.types.StringType, "code is logged as a STRING")
+    assert(codes.where("k = 3").select("code").as[String].collect().toSeq ==
+      Seq("0123"), "DeltaBridge.read returns the raw value")
   }
 
   test("a commit that would MIX flat and partitioned layouts fails loud " +

@@ -25,7 +25,6 @@ class GraftDeltaCatalogSpec extends SparkSpec {
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t)
     TxLog.overwrite(spark, Seq((3L, "c")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t) // delta 0 (two rows), delta 1 (one)
     assert(sqlDf(s"SELECT id, v FROM graft.`$t` ORDER BY id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       == Seq((3L, "c")))
@@ -73,7 +72,6 @@ class GraftDeltaCatalogSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     sqlDf(s"INSERT INTO graft.`$t` VALUES (2L, 'b')")
     assert(sqlDf(s"SELECT id FROM graft.`$t` ORDER BY id")
       .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
@@ -97,7 +95,6 @@ class GraftDeltaCatalogSpec extends SparkSpec {
     TxLog.append(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t,
       partFiles = 1)
     TxLog.append(spark, Seq((10L, "x")).toDF("id", "v"), t, partFiles = 1)
-    DeltaBridge.exportLog(spark, t)
     val filesBefore = TxLog.liveFiles(t)
     sqlDf(s"DELETE FROM graft.`$t` WHERE id = 1 AND v = 'a'")
     assert(sqlDf(s"SELECT id FROM graft.`$t` ORDER BY id")
@@ -121,7 +118,6 @@ class GraftDeltaCatalogSpec extends SparkSpec {
     import spark.implicits._
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "ab")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val e = intercept[Exception] {
       sqlDf(s"DELETE FROM graft.`$t` WHERE length(v) > 1")
     }
@@ -130,7 +126,6 @@ class GraftDeltaCatalogSpec extends SparkSpec {
     // a foreign _delta_log (no TxLog behind it) mounts read-only
     val f = tmpDir("graft_foreign")
     TxLog.append(spark, Seq((5L, "q")).toDF("id", "v"), f)
-    DeltaBridge.exportLog(spark, f)
     // strip the TxLog marker: what remains is a foreign-producer Delta table
     graft.sources.ForeignLog.strip(f)
     assert(sqlDf(s"SELECT id FROM graft.`$f`").head().getLong(0) == 5L,
@@ -196,7 +191,6 @@ class GraftDeltaCatalogSpec extends SparkSpec {
     val t = freshTable()
     // the table must exist (the catalog creates through writes, not DDL)
     TxLog.append(spark, Seq((0L, "seed")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val ckpt = Files.createTempDirectory("cat_sink_ckpt").toString
     val mem = MemoryStream[(Long, String)]
     def start() = mem.toDF().toDF("id", "v")
@@ -237,7 +231,6 @@ class GraftDeltaCatalogSpec extends SparkSpec {
       spark.sqlContext.asInstanceOf[org.apache.spark.sql.SQLContext]
     val t = freshTable()
     TxLog.append(spark, Seq((200L, "seed")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     val mem = MemoryStream[(Long, String)]
     // the filter drops everything below 100 — epochs still FIRE, with
     // zero rows after the transform
@@ -270,7 +263,6 @@ class GraftDeltaCatalogSpec extends SparkSpec {
     val t = freshTable()
     TxLog.appendPartitioned(spark,
       Seq((1L, "a", "US")).toDF("id", "v", "country"), t, Seq("country"))
-    DeltaBridge.exportLog(spark, t)
     val ckpt = Files.createTempDirectory("cat_sink_part").toString
     val mem = MemoryStream[(Long, String, String)]
     def start() = mem.toDF().toDF("id", "v", "country")
@@ -308,7 +300,6 @@ class GraftDeltaCatalogSpec extends SparkSpec {
       spark.sqlContext.asInstanceOf[org.apache.spark.sql.SQLContext]
     val t = freshTable()
     TxLog.append(spark, Seq((1L, "a")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     // strip the TxLog marker: what remains is a foreign _delta_log mount
     graft.sources.ForeignLog.strip(t)
     val mem = MemoryStream[(Long, String)]
@@ -403,7 +394,6 @@ class GraftDeltaCatalogSpec extends SparkSpec {
       spark.sqlContext.asInstanceOf[org.apache.spark.sql.SQLContext]
     val t = freshTable()
     TxLog.append(spark, Seq((0L, "seed")).toDF("id", "v"), t)
-    DeltaBridge.exportLog(spark, t)
     def runOne(tag: String, k: Long): Unit = {
       val mem = MemoryStream[(Long, String)]
       mem.addData((k, tag))

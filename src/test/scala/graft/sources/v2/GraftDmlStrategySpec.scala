@@ -136,7 +136,6 @@ class GraftDmlStrategySpec extends SparkSpec {
       "duplicate source join keys (SQL MERGE cardinality)")
     // a FOREIGN _delta_log mount (no TxLog behind it) is read-only:
     // its writer owns its commits
-    graft.sources.DeltaBridge.exportLog(spark, t)
     val foreign = {
       val f = tmpDir("graft_dml_foreign")
       org.apache.commons.io.FileUtils.copyDirectory(

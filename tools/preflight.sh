@@ -5,7 +5,8 @@
 # this script makes "compile green before snapshot" mechanical.
 #
 # Usage: tools/preflight.sh [--test]
-#   default : session/install, parquet reader and one-log guards + sbt compile +
+#   default : session/install, parquet reader, one-log and one-reader guards +
+#             sbt compile +
 #             Test/compile (fast, the r9 failure class)
 #   --test  : additionally runs the full ScalaTest suite
 set -euo pipefail
@@ -44,12 +45,24 @@ fi
 # that must agree and a window where Delta readers lag a commit.
 echo "[preflight] one-log guard"
 second_log=$(grep -rn '_graft_log' src || true)
-exports=$(grep -rn 'exportLog(' src/main | grep -v 'def exportLog(' || true)
+exports=$(grep -rn 'exportLog(' src | grep -v 'def exportLog(' || true)
 if [[ -n "$second_log$exports" ]]; then
   [[ -n "$second_log" ]] && echo "second transaction log (_graft_log):" \
     && echo "$second_log"
-  [[ -n "$exports" ]] && echo "exportLog call in src/main (commits write _delta_log):" \
+  [[ -n "$exports" ]] && echo "exportLog call in src/ (commits write _delta_log):" \
     && echo "$exports"
+  exit 1
+fi
+
+# One reader for TxLog tables (DeltaBridge.buildDataFrame, reached through
+# DeltaBridge.scanLive): a Spark read or a revived private entry reader in
+# TxLog.scala brings back a second path from live adds to rows that can
+# type or drop partition columns differently from DeltaBridge.read.
+echo "[preflight] one-reader guard"
+readers=$(grep -nE '\.read\.|readEntries' src/main/scala/graft/sources/TxLog.scala || true)
+if [[ -n "$readers" ]]; then
+  echo "read outside DeltaBridge.scanLive in TxLog.scala:"
+  echo "$readers"
   exit 1
 fi
 
