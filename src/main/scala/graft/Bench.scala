@@ -137,11 +137,16 @@ object Bench {
       .mkString("{", ",", "}")
     val stagesJson = fullResults.map { case (k, v) => s"\"$k\":${v._3}" }
       .mkString("{", ",", "}")
+    // each layout kind's own build seconds (they sum to warmup_layout_sec)
+    // and the bytes its artifacts hold
+    val layoutsJson = SparkSupport.layoutBuilds.toSeq.sorted.map {
+      case (k, (sec, bytes)) => s"\"$k\":{\"build_s\":$sec,\"bytes\":$bytes}"
+    }.mkString("{", ",", "}")
     val fullJson = results.map { case (k, v) => s"\"$k\":$v" }
       .mkString("{\"queries\":{", ",",
         s"},\"jobs\":$jobsJson,\"stages\":$stagesJson" +
           s",\"total\":$total,\"warmup_sec\":$warmupSec" +
-          s",\"warmup_layout_sec\":$warmupLayoutSec" +
+          s",\"warmup_layout_sec\":$warmupLayoutSec,\"layouts\":$layoutsJson" +
           s",\"warmup_jit_sec\":$warmupJitSec,\"reps\":$reps" +
           s",\"floor_sec\":$floorSec" +
           s",\"stage_floor_incr_sec\":$stageFloorIncrSec" +

@@ -135,26 +135,49 @@ object SparkSupport {
     * auditable (the two costs trend differently as queries are added). */
   val layoutBuildNanos = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Account `f`'s wall-clock to the layout-build total (for build sites,
-    * e.g. bucketed catalog tables, that cannot route through
-    * [[layoutArtifact]]'s path contract). Reentrancy-aware: a layout build
-    * that triggers another (dupPairs → d31 → shingleIndex) accrues only the
-    * OUTERMOST wall-clock, so the total is real elapsed time, not a
-    * double-count of nested builds. */
-  def timedLayoutBuild[T](f: => T): T =
-    if (layoutDepth.get > 0) f
-    else {
-      layoutDepth.set(1)
-      val t0 = System.nanoTime()
-      try f finally {
-        layoutDepth.set(0)
-        layoutBuildNanos.addAndGet(System.nanoTime() - t0): Unit
-      }
+  /** Account `f`'s wall-clock to the layout-build total and to `kind`'s
+    * own tally (for build sites, e.g. bucketed catalog tables, that cannot
+    * route through [[layoutArtifact]]'s path contract). Reentrancy-aware:
+    * a layout build that triggers another (dupPairs → d31 → docHashArrays)
+    * accrues only the OUTERMOST wall-clock to [[layoutBuildNanos]], and
+    * each kind only its own time with nested builds subtracted, so the
+    * per-kind tallies sum to the total. */
+  def timedLayoutBuild[T](kind: String)(f: => T): T = {
+    val outer = nestedNanos.get // null when this build is outermost
+    val inner = Array(0L)
+    nestedNanos.set(inner)
+    val t0 = System.nanoTime()
+    try f finally {
+      val dt = System.nanoTime() - t0
+      nestedNanos.set(outer)
+      tally(kind, dt - inner(0), 0L)
+      if (outer == null) layoutBuildNanos.addAndGet(dt): Unit
+      else outer(0) += dt
     }
-
-  private val layoutDepth = new ThreadLocal[Integer] {
-    override def initialValue: Integer = 0
   }
+
+  private val nestedNanos = new ThreadLocal[Array[Long]]
+
+  private val kindTally =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+
+  private def tally(kind: String, nanos: Long, bytes: Long): Unit =
+    kindTally.merge(kind, (nanos, bytes), (a, b) => (a._1 + b._1, a._2 + b._2)): Unit
+
+  /** Per-kind layout builds this JVM: kind → (own build seconds, bytes
+    * the completed artifacts hold on disk). */
+  def layoutBuilds: Map[String, (Double, Long)] = {
+    import scala.jdk.CollectionConverters._
+    kindTally.asScala.map { case (k, (ns, b)) => k -> (ns / 1e9, b) }.toMap
+  }
+
+  /** A persisted layout kind and the version of the code that builds it,
+    * declared once beside that code. [[layoutArtifact]] folds both into
+    * the artifact key: a build change that alters what it writes bumps
+    * `version`, so an artifact an older build left in the shared scratch
+    * dir is never served to the new readers (that build's directory stays
+    * where it is, still serving the old version). */
+  final case class Layout(kind: String, version: Int)
 
   private val artifactCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -177,18 +200,21 @@ object SparkSupport {
     * table). Returns the artifact directory for (kind, corpus dir); `build`
     * runs at most once per (corpus dir CONTENT, kind) per scratch dir:
     *
-    *  - the path key folds in [[corpusFingerprint]], so a regenerated
-    *    corpus builds fresh instead of serving stale data;
+    *  - the path key folds in [[corpusFingerprint]] and the layout's build
+    *    version, so a regenerated corpus or a changed build runs fresh
+    *    instead of serving stale data;
     *  - `build` writes into a UNIQUE temp dir that is renamed into place —
     *    concurrent JVMs on the same corpus race on the rename, not on the
     *    bytes, so a reader never sees a half-written artifact (the loser's
     *    temp dir is discarded and the winner's artifact is used);
     *  - a destination left incomplete by a crashed builder (no _SUCCESS
     *    marker) is cleared and rebuilt rather than trusted;
-    *  - build wall-clock accrues to [[layoutBuildNanos]].
+    *  - build wall-clock accrues to [[layoutBuildNanos]], and build time
+    *    and artifact bytes to the kind's [[layoutBuilds]] entry.
     */
-  def layoutArtifact(kind: String, dir: String)(build: String => Unit): String = {
-    val key = s"$kind|$dir|${corpusFingerprint(dir)}"
+  def layoutArtifact(layout: Layout, dir: String)(build: String => Unit): String = {
+    val kind = layout.kind
+    val key = s"$kind|v${layout.version}|$dir|${corpusFingerprint(dir)}"
     val cached = artifactCache.get(key)
     if (cached != null) return cached
     val lock = artifactLocks.computeIfAbsent(key, _ => new Object)
@@ -196,7 +222,7 @@ object SparkSupport {
       val again = artifactCache.get(key) // built while we waited on the lock
       if (again != null) return again
       val dest = new java.io.File(s"$scratchDir/graft_${kind}_${pathKey(key)}")
-      if (!new java.io.File(dest, "_SUCCESS").isFile) timedLayoutBuild {
+      if (!new java.io.File(dest, "_SUCCESS").isFile) timedLayoutBuild(kind) {
         var complete = false
         if (dest.exists()) {
           // suspected crashed half-build: evict by ATOMIC rename-to-trash —
@@ -236,6 +262,7 @@ object SparkSupport {
             require(new java.io.File(dest, "_SUCCESS").isFile,
               s"layout artifact $dest: rename failed and no complete artifact present")
           }
+          tally(kind, 0L, org.apache.commons.io.FileUtils.sizeOfDirectory(dest))
         }
       }
       artifactCache.put(key, dest.getPath)

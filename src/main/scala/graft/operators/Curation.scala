@@ -27,6 +27,7 @@ object Curation {
        |  list_transform(string_split($sExpr,''), c -> CAST(ascii(c) AS BIGINT))),
        |  (acc, x) -> (acc * 31 + x) % $P)""".stripMargin
 
+  private[graft] val GramIdxLayout = graft.SparkSupport.Layout("gram_idx", 1)
   /** t92: train/eval contamination detection — the n-gram-overlap check run
     * before any benchmark number is trusted: does an eval document's content
     * appear in the training set? Eval = every 7th doc; overlap unit = the
@@ -45,7 +46,7 @@ object Curation {
     * shared with t219's splice) — materialized per corpus dir exactly like
     * Dedup's shingle index, then read back columnar. */
   private[operators] def gramIndex(s: SparkSession, dir: String): DataFrame = {
-    val gramPath = graft.SparkSupport.layoutArtifact("gram_idx", dir) { p =>
+    val gramPath = graft.SparkSupport.layoutArtifact(GramIdxLayout, dir) { p =>
       Tables.documents(s, dir)
         // shingles() already degrades sub-5-token docs to an empty array
         // (see its scaladoc); this filter is a pure work-skip before the

@@ -493,7 +493,7 @@ object Curation3 {
     // the prefix is a pure column filter on the df-annotated layout — the
     // dfreq join and the two per-doc windows this used to re-run per
     // query are paid once in the shared shingle_idx_df build (d225 and
-    // the plain-index consumers read the same artifact)
+    // d268 read the same artifact)
     d181Core(Dedup.shingleIndexAnnotated(s, dir), Dedup.docHashArrays(s, dir), t)
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.PortableHash._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -60,52 +60,29 @@ object Dedup {
        |  count(*) AS n_copies
        |FROM corpus GROUP BY md5(text) ORDER BY keep_id""".stripMargin
 
-  /** Per-doc distinct 3-shingles exploded and HASHED → the inverted index
-    * keyed by the portable 8-byte hash, not the ~18-byte shingle string:
-    * the polyHash char fold runs exactly once per (doc, shingle) row as a
-    * scalar projection, and every downstream join/shuffle carries a long.
-    * The fold is the native codegen'd [[graft.catalyst.PolyHash]] — same
-    * arithmetic as the HOF spec in [[graft.functions.PortableHash]], compiled
-    * to a Java loop. (Hash collisions are possible at P=1e9+7 — and identical
-    * in the oracle, which uses the same arithmetic, so results still
-    * hash-match.) */
-  /** The shingle inverted index is a PERSISTED corpus artifact, not a
-    * per-query derivation — that is the d142 premise ("the band index of
-    * the existing corpus is a persisted table") applied to its parent
-    * structure: every near-dup query (d30/d31/d141/d142) consumes the same
-    * (doc_id, shingle-hash) table, so it is materialized once per corpus
-    * to scratch parquet and read back, exactly like the silver layout in
-    * [[PipelineQueries.silverMaterialized]]. The tokenize→shingle→hash
-    * projection still runs distributed on first build; rebuilds trigger
-    * only when the corpus dir (or its CONTENT — see
-    * [[graft.SparkSupport.layoutArtifact]]) changes. */
+  /** The shingle inverted index (doc_id, h): [[docHashArrays]] exploded,
+    * one row per (doc, distinct 3-shingle). Every near-dup query
+    * (d30/d31/d141…) reads it off the one persisted per-doc layout, so the
+    * tokenize → shingle → hash projection runs once per corpus (hash
+    * collisions at P=1e9+7 are identical in the oracle, which uses the
+    * same arithmetic). */
   private[operators] def shingleIndex(s: SparkSession, dir: String): DataFrame =
-    shingleIndexAnnotated(s, dir).select("doc_id", "h")
+    docHashArrays(s, dir).selectExpr("doc_id", "explode(hs) AS h")
 
-  /** The DF-ANNOTATED shingle index: (doc_id, h, df, ns, pos) where df is
-    * h's document frequency, ns the doc's shingle count, and pos the
-    * doc's rarest-first rank (ordered by df then h — total within a doc,
-    * h is distinct there). One persisted layout serves every consumer:
-    * the prefix-filter joins (d181/d225) read their prefixes as a pure
-    * COLUMN FILTER on pos — the df join and both per-doc windows they
-    * used to re-run per query are paid once at layout build — while the
-    * plain-index consumers (d30/d31/d141/d142…) project (doc_id, h) and
-    * parquet column pruning keeps their scan cost unchanged. Build cost
-    * is one dfreq shuffle + one doc-keyed window pass, accrued to
-    * layoutBuildNanos like every corpus layout. */
   /** Enforce the PER-DOC-DISTINCT premise under the d181/d225 prefix prune
-    * bounds (r16, VERDICT r15 item 7): the shingle build dedups per-doc
-    * shingle STRINGS, so a duplicate (doc_id, h) row can only mean
+    * bounds (r16, VERDICT r15 item 7): the array build dedups per-doc
+    * shingle STRINGS, so a repeated hash in a doc's `hs` can only mean
     * poly_hash collided on two distinct strings within one document. The
     * prune bounds (and the prefix-completeness pigeonhole itself) are
     * sound on distinct postings but NOT under the oracle's
     * product-counting join semantics on duplicates — Curation3Spec carries
     * the concrete miss counterexample — so a colliding corpus must fail
-    * the build loudly, never silently drop pairs. One aggregate over the
-    * index, paid at layout build (untimed warm-up), never per query. */
-  private[operators] def assertPerDocDistinct(idx: DataFrame): Unit = {
-    val dups = idx.groupBy("doc_id", "h").agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).count()
+    * the build loudly, never silently drop pairs. Checked on the per-doc
+    * arrays (doc_id, hs, ns) as `size(array_distinct(hs)) = ns`: a
+    * map-side projection and one global sum, paid at layout build. */
+  private[operators] def assertPerDocDistinct(arrs: DataFrame): Unit = {
+    val dups = arrs.agg(coalesce(
+      sum(col("ns") - size(array_distinct(col("hs")))), lit(0L))).head().getLong(0)
     require(dups == 0L,
       s"shingle index premise violated: $dups duplicate (doc_id, h) rows — " +
         "poly_hash collided on distinct shingle strings within a document; " +
@@ -114,71 +91,72 @@ object Dedup {
         "wider hash.")
   }
 
+  private[graft] val ShingleIdxDfLayout = graft.SparkSupport.Layout("shingle_idx_df", 2)
+  /** The DF-ANNOTATED shingle index: (doc_id, h, df, ns, pos) where df is
+    * h's document frequency, ns the doc's shingle count, and pos the
+    * doc's rarest-first rank (ordered by df then h — total within a doc,
+    * h is distinct there). The prefix-filter joins (d181/d225/d268) read
+    * their prefixes as a pure COLUMN FILTER on pos. Derived from the
+    * exploded [[docHashArrays]] (ns rides the arrays), so its build is one
+    * dfreq shuffle + one doc-keyed window pass and no second tokenize. */
   private[operators] def shingleIndexAnnotated(
       s: SparkSession, dir: String): DataFrame = {
-    val path = graft.SparkSupport.layoutArtifact("shingle_idx_df", dir) { p =>
-      val idx = Tables.documents(s, dir)
-        // shingles() itself already degrades sub-3-token docs to an empty
-        // array (no crash, no rows — see its scaladoc); this filter is a
-        // pure work-skip: drop short docs before the per-doc transform
-        // rather than building and exploding empty arrays for them
-        .filter(expr(s"size(${graft.functions.PortableHash.tokens}) >= 3"))
-        .selectExpr("doc_id", s"explode(${shingles(3)}) AS sh")
-        .selectExpr("doc_id", "poly_hash(sh) AS h")
-      assertPerDocDistinct(idx)
+    val path = graft.SparkSupport.layoutArtifact(ShingleIdxDfLayout, dir) { p =>
+      val idx = docHashArrays(s, dir).selectExpr("doc_id", "ns", "explode(hs) AS h")
       val dfreq = idx.groupBy("h").agg(count(lit(1)).as("df"))
-      val byDoc = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
       idx.join(dfreq, "h")
-        .withColumn("ns", count(lit(1)).over(byDoc))
-        .withColumn("pos", row_number().over(byDoc.orderBy("df", "h")))
+        .withColumn("pos", row_number().over(
+          Window.partitionBy("doc_id").orderBy("df", "h")))
         .select("doc_id", "h", "df", "ns", "pos")
         .write.mode("overwrite").parquet(p)
     }
     Tables.parquet(s, path)
   }
 
-
-  /** Per-doc SORTED shingle-hash arrays: (doc_id, hs, ns) with
-    * hs = sort_array(collect_list(h)) and ns = |hs|. The verification-side
-    * twin of the inverted index: a candidate pair's common-shingle count
-    * is `sorted_multiset_common(hs_a, hs_b)` — one codegen'd merge per
-    * pair — instead of re-joining both docs' posting rows on h and hash-
-    * aggregating the (|cand| · n̄)-row stream. ~n̄ longs per doc, so the
-    * whole table is megabytes per million docs per ~50 shingles and
-    * broadcast-joins against the candidate list; at corpus sizes where it
-    * outgrows the broadcast threshold the joins degrade gracefully to
-    * shuffled joins of |cand| rows, still never the exploded posting
-    * stream. */
+  private[graft] val DocHashArraysLayout = graft.SparkSupport.Layout("doc_hash_arrays", 2)
+  /** Per-doc SORTED shingle-hash arrays (doc_id, hs, ns): hs the poly_hash
+    * of each distinct 3-shingle, sorted, and ns = |hs| — the ROOT of the
+    * near-dup layouts, built straight from the documents in one map-side
+    * projection (no per-doc regroup shuffle). The inverted index
+    * ([[shingleIndex]], [[shingleIndexAnnotated]]) is these arrays
+    * exploded, the band chain ([[bandsOf]], [[historyBandIndex]],
+    * [[admittedBandIndex]]) folds minhash16 over them, and verification
+    * counts a candidate pair's common shingles as
+    * `sorted_multiset_common(hs_a, hs_b)` — one codegen'd merge per pair.
+    * ~n̄ longs per doc, so the table broadcast-joins against candidate
+    * lists; past the broadcast threshold the joins degrade to shuffled
+    * joins of |cand| rows. Docs under 3 tokens have no shingle and no row
+    * (the oracle's `bandCtes` mirrors this). */
   private[operators] def docHashArrays(s: SparkSession, dir: String): DataFrame = {
-    // r16-opt (VERDICT r15 "what's wrong" §3): persisted corpus layout, like
-    // the shingle/band indexes it derives from — every verification-side
-    // consumer (d181/d225, and r16's d142/d185/d189 rebuilds) was paying the
-    // corpus-wide sort_array(collect_list) build per query; at 100 TB the
-    // array table is exactly the kind of one-time physical organization the
-    // layout convention amortizes (built in the untimed warm-up, disclosed
-    // via warmup_layout_sec).
-    val path = graft.SparkSupport.layoutArtifact("doc_hash_arrays", dir) { p =>
-      shingleIndex(s, dir).groupBy("doc_id")
-        .agg(sort_array(collect_list(col("h"))).as("hs"),
-          count(lit(1)).as("ns"))
-        .write.mode("overwrite").parquet(p)
+    val path = graft.SparkSupport.layoutArtifact(DocHashArraysLayout, dir) { p =>
+      val arrs = Tables.documents(s, dir)
+        .filter(expr(s"size($tokens) >= 3")) // work-skip: no shingle below 3
+        .selectExpr("doc_id",
+          s"sort_array(transform(${shingles(3)}, sh -> poly_hash(sh))) AS hs")
+        .selectExpr("doc_id", "hs", "CAST(size(hs) AS BIGINT) AS ns")
+      arrs.write.mode("overwrite").parquet(p)
+      assertPerDocDistinct(s.read.schema(arrs.schema).parquet(p)) // no inference job
     }
     Tables.parquet(s, path)
   }
 
-  /** Attach both docs' shingle-set sizes and score Jaccard from the
-    * integer common count — THE candidate-verification scorer every
-    * near-dup path shares (d30/d31/d141/d142/d185/d189 here, d181 in
-    * Curation3). One definition: a change to the formula or its rounding
-    * must reach every sibling or none (the pairExplodeExpr rationale).
-    * Expects (id1, id2, common, ...); `n` is (doc_id, ns); adds n1, n2,
-    * jac. Curried for `.transform(jaccardScored(n))` composition. */
+  /** Jaccard from the integer common count and both shingle-set sizes
+    * (common, n1, n2), rounded to 6 places — the scoring formula of
+    * [[jaccardScored]] (d30/d141) and [[scoredOnArrays]]
+    * (d31/d142/d185/d189). One definition: a change to the formula or its
+    * rounding must reach every sibling or none (the pairExplodeExpr
+    * rationale). */
+  private val jaccardOf: Column =
+    round(col("common") / (col("n1") + col("n2") - col("common")), 6)
+
+  /** Attach both docs' shingle-set sizes and score [[jaccardOf]]. Expects
+    * (id1, id2, common, ...); `n` is (doc_id, ns); adds n1, n2, jac.
+    * Curried for `.transform(jaccardScored(n))` composition. */
   private[graft] def jaccardScored(n: DataFrame)(pairs: DataFrame): DataFrame =
     pairs
       .join(n.withColumnRenamed("doc_id", "id1").withColumnRenamed("ns", "n1"), "id1")
       .join(n.withColumnRenamed("doc_id", "id2").withColumnRenamed("ns", "n2"), "id2")
-      .withColumn("jac",
-        round(col("common") / (col("n1") + col("n2") - col("common")), 6))
+      .withColumn("jac", jaccardOf)
 
   /** C(n,2) ordered-pair explosion over a sorted `ids` array column — THE
     * bucket pair generator every near-dup candidate/verification stage
@@ -283,66 +261,20 @@ object Dedup {
 
   /** MinHash+LSH near-dup: band-bucket candidate generation (docs agreeing
     * on any 4-row band), then exact Jaccard verification of candidates only
-    * — the standard sketch → candidate → verify pipeline. Verification joins
-    * the candidate set against the shingle index, so the expensive exact
+    * — the standard sketch → candidate → verify pipeline, so the exact
     * measure runs on |candidates|, not |pairs|.
     *
-    * Cost structure is load-bearing, twice over:
-    *  1. The char-level polyHash fold runs ONCE per (doc, shingle) row in
-    *     the hashed index (a scalar projection), and the 16 permutation
-    *     hashes h_i(x) = (a_i·x + b_i) mod P are cheap integer maps over the
-    *     collected hash list. Inlining polyHash into the 16-hash lambda
-    *     re-runs the fold 16-64× per shingle — and chained projections do
-    *     NOT protect against that (CollapseProject inlines single-use
-    *     aliases back into the lambdas; measured 20×+ slower at sf0.1).
-    *  2. The index feeds four plan branches (band signatures, both sides of
-    *     the verification join, the per-doc sizes). Spark does not share
-    *     subplans, so without an explicit persist the whole
-    *     tokenize→shingle→hash pipeline re-runs per branch — 16 document
-    *     scans in the physical plan, measured 10×+ slower at sf0.1. At
-    *     100 TB the same structure holds with the index staged to a parquet
-    *     intermediate instead of executor memory.
-    * Candidates come from group-by-band + C(n,2) pair explosion (same shape
-    * as d30) rather than a band self-join — one shuffle, no second pass. */
+    * Both halves read the one per-doc layout, [[docHashArrays]]: the
+    * char-level polyHash fold ran once per (doc, shingle) when it was built,
+    * the 16 permutation hashes are one codegen'd minhash16 pass per array
+    * ([[bandsOf]], map-side), and verification is [[scoredOnArrays]].
+    * Candidates come from group-by-band + C(n,2) pair explosion
+    * ([[bucketPairs]], the same shape as d30) rather than a band self-join —
+    * one shuffle, no second pass, with [[BandBucketCap]] bounding each
+    * bucket. */
   def d31MinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    val idx = shingleIndex(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-    val sigs = idx.groupBy("doc_id")
-      .agg(collect_list(col("h")).as("hs"), count(lit(1)).as("ns"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // 16 permutation-min hashes via the native codegen'd MinHash16 — one
-    // pass over the hash list instead of 16 interpreted transform() lambdas
-    val cand = sigs.selectExpr("doc_id", "minhash16(hs) AS mh")
-      .selectExpr("doc_id", bandKeyExpr) // the ONE band layout (see bandKeyExpr)
-      .groupBy("band_key")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= BandBucketCap) // see BandBucketCap
-      .selectExpr(s"$pairExplodeExpr AS p")
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK) // scoring side + candDocs side
-    val n = sigs.select(col("doc_id"), col("ns"))
-    // Shared-shingle counts from CANDIDATE-REDUCED shingle buckets (the
-    // d142 shape): the index semi-joins down to docs that appear in some
-    // candidate pair BEFORE bucketing, so bucket size — and the C(n,2)
-    // explosion — is bounded by the post-band-cap candidate universe, not
-    // the corpus (an uncapped corpus-wide bucket explosion was the other
-    // half of the r10 flag). Values are exact by construction: every
-    // scored pair has both endpoints inside the reduced index. Joining
-    // cand against the full index twice would be worse still — AQE
-    // materializes the whole index as a broadcast hash table (driver-side
-    // build, 2× per run); the bucket explosion shuffles only (id1, id2)
-    // longs, keyed by shingle hash.
-    val candDocs = cand
-      .select(explode(array(col("id1"), col("id2"))).as("doc_id")).distinct()
-    val common = idx.join(candDocs, Seq("doc_id"), "left_semi")
-      .groupBy("h")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .selectExpr(s"$pairExplodeExpr AS p")
-      .groupBy(col("p.id1").as("id1"), col("p.id2").as("id2"))
-      .agg(count(lit(1)).as("common"))
-    cand.join(common, Seq("id1", "id2"), "left").na.fill(0L, Seq("common"))
-      .transform(jaccardScored(n))
-      .withColumn("is_dup", (col("jac") >= 0.2).cast("int"))
+    val docs = docHashArrays(s, dir)
+    scoredOnArrays(bucketPairs(bandsOf(docs)).distinct(), docs, identity)
       .select("id1", "id2", "jac", "is_dup")
       .orderBy("id1", "id2")
   }
@@ -765,13 +697,12 @@ object Dedup {
     * history×history pair is ever generated, so each ingest costs
     * O(delta × bands), not O(corpus²) or even O(corpus × bands).
     *
-    * Verification joins candidate doc ids back to the shingle index
-    * (semi-join reduces the index to candidate docs first), computes common
-    * counts from the reduced buckets, and scores Jaccard exactly as d31 —
-    * the admitted batch's bands are what the index-maintenance write would
-    * append. `src` labels which side each pair hit. */
+    * Verification is [[scoredOnArrays]] over [[docHashArrays]], scoring
+    * Jaccard exactly as d31 — the admitted batch's bands are what the
+    * index-maintenance write would append. `src` labels which side each
+    * pair hit. */
   def d142IncrementalMinhash(s: SparkSession, dir: String): DataFrame = {
-    val idx = shingleIndex(s, dir)
+    val docs = docHashArrays(s, dir)
     // the history side comes from the PERSISTED band index — the premise
     // made literal (round 4; d185 shares the artifact): history signatures
     // are never recomputed in-query, only the batch pays minhash+banding.
@@ -782,34 +713,13 @@ object Dedup {
       .groupBy("band_key")
       .agg(sort_array(collect_list(col("doc_id"))).as("hist_ids"))
       .filter(size(col("hist_ids")) <= BandBucketCap) // see BandBucketCap
-    val deltaBands = bandsOf(idx.filter(col("doc_id") % 7 === 0))
+    val deltaBands = bandsOf(docs.filter(col("doc_id") % 7 === 0))
       .persist(StorageLevel.MEMORY_AND_DISK) // probe side + delta-delta side
     val deltaHist = deltaBands.join(histIndex, "band_key")
       .selectExpr("doc_id AS did", "explode(hist_ids) AS hid")
       .selectExpr("least(did, hid) AS id1", "greatest(did, hid) AS id2")
-    val deltaDelta = deltaBands.groupBy("band_key")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= BandBucketCap) // see BandBucketCap
-      .selectExpr(s"$pairExplodeExpr AS p")
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
-    val cand = deltaHist.unionByName(deltaDelta).distinct()
-    // r16-opt: broadcast-array verification (the d181/d225/d185 rebuild) —
-    // the old path semi-join-reduced the index to candidate docs, rebuilt
-    // per-h buckets and re-exploded C(bucket,2) pairs just to count shared
-    // hashes; sorted_multiset_common over [[docHashArrays]] computes the
-    // identical multiset count (a per-h bucket re-explosion counts
-    // cnt_a(h)·cnt_b(h) pairs, the kernel's Σ per equal run) in one
-    // codegen'd merge per candidate, and ns rides the same arrays.
-    val docs = docHashArrays(s, dir)
-    cand
-      .join(broadcast(docs.select(col("doc_id").as("id1"),
-        col("hs").as("h1"), col("ns").as("n1"))), "id1")
-      .join(broadcast(docs.select(col("doc_id").as("id2"),
-        col("hs").as("h2"), col("ns").as("n2"))), "id2")
-      .withColumn("common", expr("sorted_multiset_common(h1, h2)"))
-      .withColumn("jac",
-        round(col("common") / (col("n1") + col("n2") - col("common")), 6))
-      .withColumn("is_dup", (col("jac") >= 0.2).cast("int"))
+    val cand = deltaHist.unionByName(bucketPairs(deltaBands)).distinct()
+    scoredOnArrays(cand, docs, identity)
       .withColumn("src",
         when(col("id1") % 7 === 0 && col("id2") % 7 === 0, "delta_delta")
           .otherwise("delta_hist"))
@@ -868,23 +778,62 @@ object Dedup {
       |  concat_ws('-', transform(slice(mh, b*4 + 1, 4),
       |    x -> CAST(x AS STRING)))))) AS band_key""".stripMargin
 
-  /** LSH band derivation shared by d142/d185: per-doc minhash16 signature
-    * over the hashed shingle rows, cut into 4 bands of 4. */
-  private[operators] def bandsOf(idx: DataFrame): DataFrame =
-    idx.groupBy("doc_id").agg(collect_list(col("h")).as("hs"))
-      .selectExpr("doc_id", "minhash16(hs) AS mh")
+  /** LSH bands (doc_id, band_key) of per-doc hash arrays (doc_id, hs) —
+    * [[docHashArrays]] or a re-keyed slice of it: the minhash16 signature
+    * of each array cut into 4 bands of 4. minhash16 is a min-fold, so the
+    * signature does not depend on element order and banding needs no
+    * per-doc regroup: it is one map-side projection. */
+  private[operators] def bandsOf(arrs: DataFrame): DataFrame =
+    arrs.selectExpr("doc_id", "minhash16(hs) AS mh")
       .selectExpr("doc_id", bandKeyExpr)
 
-  /** The corpus LSH band index (band_key, doc_id) as a PERSISTED artifact —
+  /** Within-batch candidates: C(n,2) ordered pairs (id1, id2) over each
+    * band bucket of at most [[BandBucketCap]] docs. */
+  private[operators] def bucketPairs(bands: DataFrame): DataFrame =
+    bands.groupBy("band_key")
+      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+      .filter(size(col("ids")) <= BandBucketCap) // see BandBucketCap
+      .selectExpr(s"$pairExplodeExpr AS p")
+      .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
+
+  /** The re-ingested batch `doc_id % m = 0` of hash arrays `docs`, under
+    * fresh keys doc_id + `shift` (the re-crawl case: content returns
+    * unchanged under a new key, so its arrays need no second tokenize). */
+  private[operators] def rekeyed(docs: DataFrame, m: Int, shift: Long): DataFrame =
+    docs.filter(col("doc_id") % m === 0)
+      .select((col("doc_id") + shift).as("doc_id"), col("hs"))
+
+  /** Verify candidate pairs (id1, id2) on [[docHashArrays]] `docs`: each
+    * end's sorted array and size join in by broadcast on `key(id)` (a
+    * re-keyed batch id maps back to its original doc — content unchanged,
+    * only the key moved), and sorted_multiset_common counts the common
+    * shingles exactly (multiplicities included — SortedMultisetCommonSpec)
+    * in one codegen'd merge per pair; no (|cand|·n̄)-row posting join.
+    * Adds common, jac and is_dup (jac ≥ 0.2), as d31 scores them. */
+  private def scoredOnArrays(cand: DataFrame, docs: DataFrame,
+      key: Column => Column): DataFrame = {
+    def end(i: Int) = broadcast(docs.select(col("doc_id").as(s"k$i"),
+      col("hs").as(s"h$i"), col("ns").as(s"n$i")))
+    cand
+      .join(end(1), key(col("id1")) === col("k1"))
+      .join(end(2), key(col("id2")) === col("k2"))
+      .withColumn("common", expr("sorted_multiset_common(h1, h2)"))
+      .withColumn("jac", jaccardOf)
+      .withColumn("is_dup", (col("jac") >= 0.2).cast("int"))
+  }
+
+  private[graft] val BandIdxLayout = graft.SparkSupport.Layout("band_idx", 2)
+  /** The corpus LSH band index (doc_id, band_key) as a PERSISTED artifact —
     * what d142 calls "the band index of the existing corpus is a persisted
     * table", made literal: built once per corpus dir to scratch parquet
-    * (one distributed pass over [[shingleIndex]]), read back columnar by
-    * every ingest batch. This is the index-maintenance contract at 100 TB:
-    * the write that admits a batch appends its bands here; no later batch
-    * ever recomputes history's signatures. */
+    * ([[bandsOf]] over [[docHashArrays]]: one map-side pass, no shuffle),
+    * read back columnar by every ingest batch and, in place, as the
+    * history generation of d189's admitted index. This is the
+    * index-maintenance contract at 100 TB: no later batch ever recomputes
+    * history's signatures, and no admit ever copies them. */
   private[operators] def historyBandIndex(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.SparkSupport.layoutArtifact("band_idx", dir) { p =>
-      bandsOf(shingleIndex(s, dir)).write.mode("overwrite").parquet(p)
+    val path = graft.SparkSupport.layoutArtifact(BandIdxLayout, dir) { p =>
+      bandsOf(docHashArrays(s, dir)).write.mode("overwrite").parquet(p)
     }
     Tables.parquet(s, path)
   }
@@ -898,57 +847,27 @@ object Dedup {
     * under a fresh key, so exact-id dedup is blind to it). Candidates:
     * batch bands probe the persisted index (delta×history equi-join) plus
     * within-batch band buckets (delta×delta); history never self-joins.
-    * Verification is candidate-bounded (the d181 form): per-pair shingle
-    * matches over the semi-join-reduced union of history shingles and the
-    * batch's own shingle rows. Every re-ingested doc must surface its
+    * The batch's bands come from its slice of [[docHashArrays]] re-keyed
+    * (content unchanged, so no second tokenize), and verification is
+    * [[scoredOnArrays]] with id % 10⁷ resolving each endpoint to its
+    * original doc's array. Every re-ingested doc must surface its
     * original at jac = 1.0 (asserted in IncrementalSpec) alongside any
     * genuine near-dups — the admitted-batch bands are what the
     * index-maintenance write appends.
     *
     * Scale shape: batch work is O(delta × bands) probes + Σ C(batch
     * bucket, 2) pairs; the only history-sized reads are the two persisted
-    * columnar artifacts, both pruned to candidate docs before any
-    * per-pair work. */
+    * columnar artifacts, the arrays broadcast against the candidate list. */
   def d185SnapshotIncremental(s: SparkSession, dir: String): DataFrame = {
+    val docs = docHashArrays(s, dir)
     val histBands = historyBandIndex(s, dir)
       .withColumnRenamed("doc_id", "hist_id")
-    val histShingles = shingleIndex(s, dir)
-    // the batch's own shingle table: identical rows to re-tokenizing the
-    // re-crawled texts (content is unchanged — only the key moved), so the
-    // persisted index supplies them without a second tokenize pass
-    val deltaShingles = histShingles.filter(col("doc_id") % 3 === 0)
-      .select((col("doc_id") + 10000000L).as("doc_id"), col("h"))
-    val deltaBands = bandsOf(deltaShingles)
+    val deltaBands = bandsOf(rekeyed(docs, 3, 10000000L))
       .persist(StorageLevel.MEMORY_AND_DISK) // probe side + delta-delta side
     val deltaHist = deltaBands.join(histBands, "band_key")
       .select(col("hist_id").as("id1"), col("doc_id").as("id2"))
-    val deltaDelta = deltaBands.groupBy("band_key")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= BandBucketCap) // see BandBucketCap
-      .selectExpr(s"$pairExplodeExpr AS p")
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
-    val cand = deltaHist.unionByName(deltaDelta).distinct()
-    // r16-opt: verification on broadcast per-doc sorted hash arrays (the
-    // d181/d225 rebuild, guide §3/§4): a re-keyed id's shingle multiset IS
-    // its original's (content unchanged, only the key moved), so id % 10⁷
-    // maps every candidate endpoint back to its row in [[docHashArrays]].
-    // sorted_multiset_common reproduces the old semi-join+re-join+hash-agg
-    // count exactly (multiplicities included — SortedMultisetCommonSpec),
-    // and ns rides the same arrays; the (|cand|·n̄)-row verify join, the
-    // candDocs distinct, the semi-join reduction and both jaccardScored
-    // joins collapse to two broadcast hash joins over the candidate list.
-    val docs = docHashArrays(s, dir)
-    cand
-      .join(broadcast(docs.select(col("doc_id").as("k1"),
-        col("hs").as("h1"), col("ns").as("n1"))),
-        col("id1") % 10000000L === col("k1"))
-      .join(broadcast(docs.select(col("doc_id").as("k2"),
-        col("hs").as("h2"), col("ns").as("n2"))),
-        col("id2") % 10000000L === col("k2"))
-      .withColumn("common", expr("sorted_multiset_common(h1, h2)"))
-      .withColumn("jac",
-        round(col("common") / (col("n1") + col("n2") - col("common")), 6))
-      .withColumn("is_dup", (col("jac") >= 0.2).cast("int"))
+    val cand = deltaHist.unionByName(bucketPairs(deltaBands)).distinct()
+    scoredOnArrays(cand, docs, _ % 10000000L)
       .withColumn("src",
         when(col("id1") >= 10000000L, "delta_delta").otherwise("delta_hist"))
       .select("id1", "id2", "jac", "is_dup", "src")
@@ -989,103 +908,93 @@ object Dedup {
        |ORDER BY id1, id2""".stripMargin
   }
 
+  private[graft] val BandIdxG2Layout = graft.SparkSupport.Layout("band_idx_g2", 2)
   /** The WRITE side of the band-index lifecycle (SURVEY §9d round-6
     * candidate 1): d142/d185 prove the PROBE side (an ingest batch never
     * rescans history); this artifact is the index MAINTENANCE that makes
     * that probe possible across batches — admit a batch by APPENDING its
-    * bands as a new generation, then COMPACT the accumulated small
-    * generations (the q113 small-file pattern applied to the dedup index).
+    * bands as new generations ([[admitGenerations]]), then COMPACT the
+    * accumulated small generations ([[compactGenerations]], the q113
+    * small-file pattern applied to the dedup index).
     *
-    * Layout under the artifact root:
-    *  - `gen0/`           — the standing history index (at scale these
-    *    files already exist on the lake; staged once here so the artifact
-    *    is self-contained and cross-JVM readable),
-    *  - `delta_gen{0,1,2}/` — the admitted batch (d185's re-keyed
-    *    snapshot, doc_id % 3 = 0 under id + 10⁷) written as three
-    *    micro-batch generations, i.e. the many-small-files state a
-    *    streaming admit loop actually produces,
-    *  - `compact/`        — those delta generations folded into one
-    *    band_key-clustered generation (few files, sorted within
-    *    partitions so band probes touch contiguous row groups).
-    *
-    * Readers consume `gen0 ∪ compact`; the staged generations are retained
-    * so IncrementalSpec can assert compaction is row-set-identical and
-    * actually reduces file count. History is NEVER rewritten by an admit
-    * or a compact — only delta generations fold, so at 100 TB the write
-    * amplification is O(batch), not O(corpus). */
-  private[operators] def admittedBandIndex(s: SparkSession, dir: String): String = {
-    graft.SparkSupport.layoutArtifact("band_idx_g2", dir) { p =>
-      historyBandIndex(s, dir).write.parquet(s"$p/gen0")
-      val g1 = bandsOf(shingleIndex(s, dir).filter(col("doc_id") % 3 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("h")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      (0 to 2).foreach { g =>
-        g1.filter(pmod(floor(col("doc_id") / 3), lit(3)) === g)
-          .write.parquet(s"$p/delta_gen$g")
-      }
-      g1.unpersist()
-      Tables.parquet(s, (0 to 2).map(g => s"$p/delta_gen$g"): _*)
-        .repartition(4, col("band_key"))
-        .sortWithinPartitions("band_key")
-        .write.parquet(s"$p/compact")
+    * The artifact root holds only `compact/` (and `_SUCCESS`): the
+    * admitted batch (d185's re-keyed snapshot, doc_id % 3 = 0 under
+    * id + 10⁷) folded into one band_key-clustered generation. History is
+    * not part of it: readers consume [[historyBandIndex]] IN PLACE ∪
+    * `compact/`, so neither an admit nor a compact ever rewrites history —
+    * at 100 TB the write amplification is O(batch), not O(corpus). The
+    * staged generations are deleted by the compaction that folded them,
+    * inside the build's temp dir, so no reader ever sees them (the
+    * tmp-then-rename protocol of [[graft.SparkSupport.layoutArtifact]]). */
+  private[operators] def admittedBandIndex(s: SparkSession, dir: String): String =
+    graft.SparkSupport.layoutArtifact(BandIdxG2Layout, dir) { p =>
+      admitGenerations(s, dir, p)
+      compactGenerations(s, p)
       // multi-directory artifact: layoutArtifact's completeness contract
-      // wants a root _SUCCESS; each Spark write marked its own subdir, so
-      // the root marker lands only after every generation is in place
+      // wants a root _SUCCESS, landed only once compaction is in place
       new java.io.File(p, "_SUCCESS").createNewFile(): Unit
     }
+
+  private val stagedGenerations = (0 to 2).map(g => s"delta_gen$g")
+
+  /** Admit d185's re-keyed batch under `root` as three micro-batch
+    * generations `delta_gen{0,1,2}/` — the many-small-files state a
+    * streaming admit loop actually produces. */
+  private[operators] def admitGenerations(s: SparkSession, dir: String,
+      root: String): Unit = {
+    val g1 = bandsOf(rekeyed(docHashArrays(s, dir), 3, 10000000L))
+    stagedGenerations.zipWithIndex.foreach { case (gen, g) =>
+      g1.filter(pmod(floor(col("doc_id") / 3), lit(3)) === g)
+        .write.parquet(s"$root/$gen")
+    }
+  }
+
+  /** Fold the staged generations under `root` into one `compact/`
+    * generation (files of up to ~128 MB, band_key-clustered and sorted
+    * within partitions so band probes touch contiguous row groups), then
+    * delete the generations it folded. */
+  private[operators] def compactGenerations(s: SparkSession, root: String): Unit = {
+    val staged = stagedGenerations.map(g => s"$root/$g")
+    val bytes = staged.map(g =>
+      org.apache.commons.io.FileUtils.sizeOfDirectory(new java.io.File(g))).sum
+    s.read.schema("doc_id BIGINT, band_key STRING").parquet(staged: _*)
+      .repartition((bytes >> 27).toInt + 1, col("band_key"))
+      .sortWithinPartitions("band_key")
+      .write.parquet(s"$root/compact")
+    staged.foreach(g =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(g)))
   }
 
   /** d189: probe the ADMITTED-AND-COMPACTED index with a SECOND batch —
     * the gate that proves the [[admittedBandIndex]] write lifecycle
     * round-trips. Batch 2 (doc_id % 5 = 0 re-keyed under id + 2·10⁷)
     * generates candidates exactly as d185 does, but its index probe reads
-    * `gen0 ∪ compact` — so any hit on an id in [10⁷, 2·10⁷) can only have
-    * come through the append→compact path (batch 1's bands survive
-    * admission and compaction, or those pairs vanish and the oracle
-    * catches it). Docs with doc_id % 15 = 0 are in BOTH batches and must
-    * surface their cross-generation twin at jac = 1.0. `src` labels
-    * which index generation served each pair: delta_hist (gen0),
-    * delta_gen1 (the compacted admit), delta_delta (within batch 2).
+    * [[historyBandIndex]] ∪ `compact/` — so any hit on an id in
+    * [10⁷, 2·10⁷) can only have come through the append→compact path
+    * (batch 1's bands survive admission and compaction, or those pairs
+    * vanish and the oracle catches it). Docs with doc_id % 15 = 0 are in
+    * BOTH batches and must surface their cross-generation twin at
+    * jac = 1.0. `src` labels which index generation served each pair:
+    * delta_hist (history), delta_gen1 (the compacted admit), delta_delta
+    * (within batch 2).
     *
     * Scale shape: identical to d185 — O(batch2 × bands) probes plus
-    * Σ C(batch2 bucket, 2) pairs; the index read is columnar and pruned
-    * to matching band keys; verification is candidate-bounded over
-    * semi-join-reduced shingle rows. */
+    * Σ C(batch2 bucket, 2) pairs; the index reads are columnar, and every
+    * band and verification input is a slice of the one [[docHashArrays]]
+    * layout. */
   def d189AdmitCompact(s: SparkSession, dir: String): DataFrame = {
-    val root = admittedBandIndex(s, dir)
-    val index = Tables.parquet(s, s"$root/gen0", s"$root/compact")
+    val docs = docHashArrays(s, dir)
+    val index = historyBandIndex(s, dir)
+      .unionByName(Tables.parquet(s, s"${admittedBandIndex(s, dir)}/compact"))
       .withColumnRenamed("doc_id", "idx_id")
-    val histShingles = shingleIndex(s, dir)
-    // the batch re-ingests unchanged content under fresh keys, so the
-    // persisted shingle index supplies its rows without re-tokenizing
-    val batch2Shingles = histShingles.filter(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + 20000000L).as("doc_id"), col("h"))
-    val b2Bands = bandsOf(batch2Shingles)
+    val b2Bands = bandsOf(rekeyed(docs, 5, 20000000L))
       .persist(StorageLevel.MEMORY_AND_DISK) // probe side + delta-delta side
     val probe = b2Bands.join(index, "band_key")
       .select(col("idx_id").as("id1"), col("doc_id").as("id2"))
-    val within = b2Bands.groupBy("band_key")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= BandBucketCap) // see BandBucketCap
-      .selectExpr(s"$pairExplodeExpr AS p")
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
-    val cand = probe.unionByName(within).distinct()
-    // r16-opt: broadcast-array verification, exactly the d185 rebuild above
-    // — all three key ranges (history, admitted gen1 at +10⁷, batch 2 at
-    // +2·10⁷) carry their original doc's shingle multiset, so id % 10⁷
-    // resolves each endpoint's sorted array and size in one broadcast probe.
-    val docs = docHashArrays(s, dir)
-    cand
-      .join(broadcast(docs.select(col("doc_id").as("k1"),
-        col("hs").as("h1"), col("ns").as("n1"))),
-        col("id1") % 10000000L === col("k1"))
-      .join(broadcast(docs.select(col("doc_id").as("k2"),
-        col("hs").as("h2"), col("ns").as("n2"))),
-        col("id2") % 10000000L === col("k2"))
-      .withColumn("common", expr("sorted_multiset_common(h1, h2)"))
-      .withColumn("jac",
-        round(col("common") / (col("n1") + col("n2") - col("common")), 6))
-      .withColumn("is_dup", (col("jac") >= 0.2).cast("int"))
+    val cand = probe.unionByName(bucketPairs(b2Bands)).distinct()
+    // all three key ranges (history, admitted gen1 at +10⁷, batch 2 at
+    // +2·10⁷) carry their original doc's shingle multiset
+    scoredOnArrays(cand, docs, _ % 10000000L)
       .withColumn("src",
         when(col("id1") >= 20000000L, "delta_delta")
           .when(col("id1") >= 10000000L, "delta_gen1")
@@ -1137,6 +1046,7 @@ object Dedup {
        |ORDER BY id1, id2""".stripMargin
   }
 
+  private[graft] val DupPairsLayout = graft.SparkSupport.Layout("dup_pairs", 1)
   /** Confirmed near-dup pairs (d31's verified output, is_dup rows) as a
     * PERSISTED corpus artifact — the same layout premise as [[shingleIndex]]
     * and d142's band index: the dedup stage's pair list is a table the
@@ -1144,7 +1054,7 @@ object Dedup {
     * selection) consume, not a per-query derivation. Built once per corpus
     * by the full d31 pipeline, then read back as columnar (id1, id2, jac). */
   private[operators] def dupPairs(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.SparkSupport.layoutArtifact("dup_pairs", dir) { p =>
+    val path = graft.SparkSupport.layoutArtifact(DupPairsLayout, dir) { p =>
       d31MinhashLsh(s, dir).filter(col("is_dup") === 1)
         .select("id1", "id2", "jac")
         .write.mode("overwrite").parquet(p)
@@ -1152,13 +1062,14 @@ object Dedup {
     Tables.parquet(s, path)
   }
 
+  private[graft] val ExactPairsLayout = graft.SparkSupport.Layout("exact_pairs", 1)
   /** d30's exact-Jaccard pair list (J ≥ 0.2) as a PERSISTED corpus
     * artifact — the ground-truth twin of [[dupPairs]]: index-quality
     * evaluations (d162's recall denominator) consume the truth table, not
     * a per-query re-derivation of the full bucket join. d30 itself still
     * computes live as the detection gate. */
   private[operators] def exactPairs(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.SparkSupport.layoutArtifact("exact_pairs", dir) { p =>
+    val path = graft.SparkSupport.layoutArtifact(ExactPairsLayout, dir) { p =>
       d30NgramJaccard(s, dir).select("id1", "id2", "jac")
         .write.mode("overwrite").parquet(p)
     }
@@ -1277,6 +1188,7 @@ object Dedup {
       |FROM sk GROUP BY skeleton_md5 HAVING count(*) >= 2
       |ORDER BY keep_id""".stripMargin
 
+  private[graft] val Gram8SharedLayout = graft.SparkSupport.Layout("gram8_shared", 1)
   /** d302: EXACT-SUBSTRING span dedup — the repeated-passage surface of
     * Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
     * Better"), whose suffix-array formulation doesn't distribute; the
@@ -1319,7 +1231,7 @@ object Dedup {
     // TWICE (df-cut aggregate + join back), re-running the gram kernel per
     // branch; now the stream is consumed exactly once and the corpus-wide
     // countDistinct exchange leaves the query.
-    val sharedPath = graft.SparkSupport.layoutArtifact("gram8_shared", dir) { p =>
+    val sharedPath = graft.SparkSupport.layoutArtifact(Gram8SharedLayout, dir) { p =>
       graft.SparkSupport.parallelized(Tables.documents(s, dir))
         .filter(expr(s"size($toks) >= $K"))
         .selectExpr("doc_id", s"explode(gram_hashes($toks, $K)) AS h")

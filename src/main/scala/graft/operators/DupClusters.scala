@@ -287,6 +287,7 @@ object DupClusters {
 
   // ---------------------------------------------------------------- d218
 
+  private[graft] val CcLabelsLayout = graft.SparkSupport.Layout("cc_labels", 1)
   /** d218: INCREMENTAL component maintenance — the clustering half of the
     * d135/d142/d185 incremental-dedup story: the standing corpus's
     * duplicate components are a PERSISTED labeling; when a batch arrives,
@@ -319,7 +320,7 @@ object DupClusters {
       .filter(col("id1") % 7 =!= 0 && col("id2") % 7 =!= 0)
     // the standing labeling is a persisted corpus artifact, like the band
     // index it derives from
-    val path = graft.SparkSupport.layoutArtifact("cc_labels", dir) { p =>
+    val path = graft.SparkSupport.layoutArtifact(CcLabelsLayout, dir) { p =>
       val ends = standingPairs.select(col("id1").as("id"))
         .unionByName(standingPairs.select(col("id2").as("id"))).distinct()
       connectedComponents(ends,

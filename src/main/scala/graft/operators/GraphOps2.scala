@@ -85,6 +85,7 @@ object GraphOps2 {
       .orderBy("node")
   }
 
+  private[graft] val CoEdgesLayout = graft.SparkSupport.Layout("co_edges", 1)
   /** The q117/q148/q198 co-occurrence edge list: parts sharing an order
     * with l_quantity ≥ 40, canonical u < v, distinct — one definition so
     * the graph primitives provably analyze the SAME graph. PERSISTED as
@@ -96,7 +97,7 @@ object GraphOps2 {
     * artifact key folds in the corpus fingerprint, so a regenerated
     * corpus rebuilds it. */
   private[operators] def coEdges(s: SparkSession, dir: String): DataFrame = {
-    val root = graft.SparkSupport.layoutArtifact("co_edges", dir) { p =>
+    val root = graft.SparkSupport.layoutArtifact(CoEdgesLayout, dir) { p =>
       val hi = Tables.lineitem(s, dir)
         .filter(col("l_quantity") >= 40)
         .select("l_orderkey", "l_partkey").distinct()

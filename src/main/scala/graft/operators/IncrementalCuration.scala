@@ -91,14 +91,13 @@ object IncrementalCuration {
     import graft.sources.TxLog
     val histc = curatedHistory(s, dir)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val histShingles = Dedup.shingleIndex(s, dir)
+    val histArrays = Dedup.docHashArrays(s, dir)
       .join(histc.select("doc_id"), Seq("doc_id"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
     TxLog.append(s, histc.select("h").distinct(), s"$root/fp", partFiles = 2)
-    TxLog.append(s, histShingles, s"$root/shingles", partFiles = 2)
-    TxLog.append(s, Dedup.bandsOf(histShingles), s"$root/bands", partFiles = 2)
+    TxLog.append(s, histArrays.selectExpr("doc_id", "explode(hs) AS h"),
+      s"$root/shingles", partFiles = 2)
+    TxLog.append(s, Dedup.bandsOf(histArrays), s"$root/bands", partFiles = 2)
     TxLog.append(s, statsOf(histc), s"$root/stats", partFiles = 1)
-    histShingles.unpersist()
     histc.unpersist()
   }
 
@@ -114,10 +113,11 @@ object IncrementalCuration {
     val batch = scoredDocs(s, dir).filter(batchPred)
       .withColumn("doc_id", col("doc_id") + shift)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val batchShingles = Dedup.shingleIndex(s, dir).filter(batchPred)
-      .select((col("doc_id") + shift).as("doc_id"), col("h"))
+    val batchArrays = Dedup.docHashArrays(s, dir).filter(batchPred)
+      .select((col("doc_id") + shift).as("doc_id"), col("hs"))
+    val batchShingles = batchArrays.selectExpr("doc_id", "explode(hs) AS h")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val batchBands = Dedup.bandsOf(batchShingles)
+    val batchBands = Dedup.bandsOf(batchArrays)
       .persist(StorageLevel.MEMORY_AND_DISK) // probe side + within-batch side
     // candidates: batch × index (equi-join on band key — history never
     // self-joins) plus within-batch buckets; reject the LARGER id of a
@@ -125,11 +125,8 @@ object IncrementalCuration {
     val idxBands = TxLog.read(s, s"$root/bands").withColumnRenamed("doc_id", "oid")
     val candIdx = batchBands.join(idxBands, "band_key")
       .select(col("doc_id").as("bid"), col("oid"))
-    val candBatch = batchBands.groupBy("band_key")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= Dedup.BandBucketCap) // see BandBucketCap
-      .selectExpr(s"${Dedup.pairExplodeExpr} AS p")
-      .select(col("p.id2").as("bid"), col("p.id1").as("oid"))
+    val candBatch = Dedup.bucketPairs(batchBands)
+      .select(col("id2").as("bid"), col("id1").as("oid"))
     val cand = candIdx.unionByName(candBatch).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // exact-Jaccard verification, candidate-bounded (the d185 form): the
@@ -188,9 +185,10 @@ object IncrementalCuration {
     status
   }
 
+  private[graft] val IncrCurationLayout = graft.SparkSupport.Layout("incr_curation", 1)
   /** The gate: init + one admitted batch, output the post-commit stats. */
   def q313IncrementalCuration(s: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TxLog.layoutArtifact("incr_curation", dir) { p =>
+    val root = graft.sources.TxLog.layoutArtifact(IncrCurationLayout, dir) { p =>
       initState(s, dir, p)
       admitBatch(s, dir, p, col("doc_id") % 5 === 3, 0L).unpersist()
       java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "_SUCCESS"))

@@ -113,6 +113,7 @@ object PipelineQueries {
     Silver.conformed(bank, cu)
   }
 
+  private[graft] val SilverLayout = graft.SparkSupport.Layout("silver", 1)
   /** Materialized silver — the medallion contract made literal: silver is
     * written ONCE per corpus and every gold build READS the shared layout
     * instead of re-deriving the whole bronze→silver dataflow per query
@@ -126,7 +127,7 @@ object PipelineQueries {
     * multi-key (name+charter+…), so bucket metadata on one key removes no
     * exchange here (q50 covers the bucketed-layout path). */
   def silverMaterialized(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.SparkSupport.layoutArtifact("silver", dir) { p =>
+    val path = graft.SparkSupport.layoutArtifact(SilverLayout, dir) { p =>
       silverUnified(s, dir).write.mode("overwrite").parquet(p)
     }
     Tables.parquet(s, path)

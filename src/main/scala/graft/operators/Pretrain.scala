@@ -156,6 +156,7 @@ object Pretrain {
 
   // ---------------------------------------------------------------- t154
 
+  private[graft] val Gram5CarrierLayout = graft.SparkSupport.Layout("gram5_carrier", 2)
   /** t154: duplicate-span profiling — for every document, the fraction of
     * its overlapping 5-token windows whose hash also occurs in ANOTHER
     * document, and the longest consecutive run of such windows (the span a
@@ -163,38 +164,39 @@ object Pretrain {
     * signal: dup_frac ≈ 1 marks a near-clone, a long max_run with low
     * dup_frac marks an embedded boilerplate block.
     *
-    * Scale shape: one shuffle keyed by gram hash for carrier counts, one
-    * equi-join back, then doc-keyed aggregation; the run detection is a
-    * per-doc window function over ONLY the duplicated positions
-    * (islands-by-offset: pos − row_number is constant within a run). No
-    * doc×doc product anywhere. */
+    * The gram hashes carried by ≥ 2 documents are a PERSISTED corpus
+    * layout (the gram-index family, like Curation's gram_idx) holding only
+    * those hashes: built by one shuffle keyed by gram hash, where
+    * min(doc) ≠ max(doc) is the same predicate as count(DISTINCT doc_id)
+    * ≥ 2 but partial-aggregates map-side in one phase. The query
+    * left-joins the positional gram stream to it once (isdup = matched),
+    * then runs [[t154Spans]]. No doc×doc product anywhere. */
   def t154DupSpans(s: SparkSession, dir: String): DataFrame = {
-    val grams = Dedup.corpusWithCopies(s, dir)
-      // r15-opt: native gram_hashes (empty array on sub-5-token docs, like
-      // the seqAsc form it replaces; hash-identical per TextKernelExprsSpec)
-      .selectExpr("doc_id", s"posexplode(gram_hashes($tokens, 5)) AS (p, h)")
-      .selectExpr("doc_id", "p + 1 AS pos", "h")
-    // "in another doc" ⇔ min(doc) ≠ max(doc) per hash: same predicate as
-    // count(DISTINCT doc_id) >= 2 but min/max partial-aggregate map-side
-    // in one phase, where countDistinct pays a distinct-expand (second
-    // shuffle-width) — the cheaper form at any scale.
-    // r16-opt (VERDICT r15 item 5): the per-hash carrier range is a
-    // PERSISTED corpus layout (the gram-index family, like Curation's
-    // gram_idx) — it is pure physical organization of the dup-span corpus,
-    // so the query no longer pays the corpus-wide carrier aggregate, and
-    // the positional gram stream (which used to feed carrier-count AND
-    // flags, forcing a persist) is consumed exactly once.
-    val carrierPath = graft.SparkSupport.layoutArtifact("gram5_carrier", dir) { p =>
+    val dupPath = graft.SparkSupport.layoutArtifact(Gram5CarrierLayout, dir) { p =>
       Dedup.corpusWithCopies(s, dir)
         .selectExpr("doc_id", s"explode(gram_hashes($tokens, 5)) AS h")
         .groupBy("h")
         .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
+        .filter(col("mn") =!= col("mx"))
+        .select("h")
         .write.mode("overwrite").parquet(p)
     }
-    val carriers = Tables.parquet(s, carrierPath)
-    val flagged = grams.join(carriers, "h")
-      .selectExpr("doc_id", "pos", "CAST(mn <> mx AS INT) AS isdup")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    Dedup.corpusWithCopies(s, dir)
+      // native gram_hashes: empty on sub-5-token docs, hash-identical per
+      // TextKernelExprsSpec
+      .selectExpr("doc_id", s"posexplode(gram_hashes($tokens, 5)) AS (p, h)")
+      .selectExpr("doc_id", "p + 1 AS pos", "h")
+      .join(Tables.parquet(s, dupPath).withColumn("isdup", lit(1)), Seq("h"), "left")
+      .select(col("doc_id"), col("pos"), coalesce(col("isdup"), lit(0)).as("isdup"))
+      .transform(t154Spans)
+  }
+
+  /** t154's per-doc profile of flagged windows (doc_id, pos, isdup): the
+    * window counts, and the longest run by a per-doc window function over
+    * ONLY the duplicated positions (islands-by-offset: pos − row_number is
+    * constant within a run). */
+  private[operators] def t154Spans(flags: DataFrame): DataFrame = {
+    val flagged = flags.persist(StorageLevel.MEMORY_AND_DISK)
     val base = flagged.groupBy("doc_id")
       .agg(count(lit(1)).as("n_windows"), sum(col("isdup")).as("n_dup"))
     val runs = flagged.filter(col("isdup") === 1)

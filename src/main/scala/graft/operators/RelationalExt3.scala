@@ -548,6 +548,7 @@ object RelationalExt3 {
       |  CAST(sum(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS sum_bal
       |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin
 
+  private[graft] val DeltaDvCmLayout = graft.SparkSupport.Layout("delta_dv_cm", 1)
   /** q342: FOREIGN Delta reader features — a reader-version-3 table with
     * COLUMN MAPPING (name mode: parquet columns under physical names,
     * logical names only in the logged schema) and a DELETION VECTOR
@@ -565,7 +566,7 @@ object RelationalExt3 {
     * through the bridge API; q345 through the native relation and the
     * SQL catalog — one fixture, three mounts that must agree). */
   private def dvCmTable(s: SparkSession, dir: String): String =
-    graft.SparkSupport.layoutArtifact("delta_dv_cm", dir) { p =>
+    graft.SparkSupport.layoutArtifact(DeltaDvCmLayout, dir) { p =>
       import java.nio.file.{Files => JF, Paths => JP}
       JF.createDirectories(JP.get(p))
       def stageOne(df: DataFrame, name: String): String = {

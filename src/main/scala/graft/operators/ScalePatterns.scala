@@ -94,7 +94,7 @@ object ScalePatterns {
     // CATALOG too and rebuild into the fresh session when it was reset
     bucketedLock.synchronized { if (bucketedFor != key ||
         !s.catalog.tableExists("graft_lineitem_b") ||
-        !s.catalog.tableExists("graft_orders_b")) SparkSupport.timedLayoutBuild {
+        !s.catalog.tableExists("graft_orders_b")) SparkSupport.timedLayoutBuild("bucketed") {
       val base = s"${SparkSupport.scratchDir}/bucketed"
       // pre-partition on the bucket key so each task owns exactly one bucket:
       // without this, every input task writes a file per bucket it touches —

@@ -586,6 +586,7 @@ object Similarity2 {
 
   // ---------------------------------------------------------------- s275
 
+  private[graft] val IvfpqIndexLayout = graft.SparkSupport.Layout("ivfpq_index", 1)
   /** s275: the IVF-PQ index AS VERSIONED DATA — centroids, codebook, and
     * cell-tagged posting/code table are committed to three
     * [[graft.sources.TxLog]] tables once per corpus, and the SEARCHER
@@ -605,7 +606,7 @@ object Similarity2 {
   private def persistedIvfpqIndex(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     import graft.sources.TxLog
-    val root = graft.sources.TxLog.layoutArtifact("ivfpq_index", dir) { p =>
+    val root = graft.sources.TxLog.layoutArtifact(IvfpqIndexLayout, dir) { p =>
       val ix = ivfpqBuild(s, dir) // the ONE build definition s206 also runs
       TxLog.append(s, ix.cent, s"$p/centroids", partFiles = 1)
       TxLog.append(s, ix.cb, s"$p/codebook", partFiles = 1)
@@ -637,6 +638,7 @@ object Similarity2 {
 
   // ---------------------------------------------------------------- s299
 
+  private[graft] val AnnTombstonesLayout = graft.SparkSupport.Layout("ann_tombstones", 1)
   /** s299: ANN search under LOGICAL DELETES — the index-maintenance
     * operation a production vector store cannot avoid: documents get
     * taken down (DMCA, PII, opt-out) faster than a billion-vector index
@@ -660,7 +662,7 @@ object Similarity2 {
   def s299AnnWithDeletes(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
     val (cent, cb, postings) = persistedIvfpqIndex(s, dir)
-    val troot = graft.sources.TxLog.layoutArtifact("ann_tombstones", dir) { p =>
+    val troot = graft.sources.TxLog.layoutArtifact(AnnTombstonesLayout, dir) { p =>
       TxLog.append(s,
         Similarity.vecs(s, dir)
           .filter(col("vec_id") >= 16 && col("vec_id") % 7 === 3)
@@ -803,9 +805,10 @@ object Similarity2 {
       .join(batchCell, "vec_id")
   }
 
+  private[graft] val IvfpqFreshLayout = graft.SparkSupport.Layout("ivfpq_fresh", 1)
   def s319FreshIndexSearch(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val root = graft.sources.TxLog.layoutArtifact("ivfpq_fresh", dir) { p =>
+    val root = graft.sources.TxLog.layoutArtifact(IvfpqFreshLayout, dir) { p =>
       val all = Similarity.vecs(s, dir)
         .selectExpr("vec_id", "v", s"${Similarity.signCellExpr} AS cell")
         .persist(StorageLevel.MEMORY_AND_DISK)

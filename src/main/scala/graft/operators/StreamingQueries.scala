@@ -188,6 +188,7 @@ object StreamingQueries {
       |  CAST(sum(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS sum_bal
       |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin
 
+  private[graft] val StreamDvSrcLayout = graft.SparkSupport.Layout("stream_dv_src", 1)
   /** q350: STREAMING over a DELETION-VECTOR delete — the readStream
     * contract of [[graft.sources.DeltaBridgeRelation]] extended to
     * merge-on-read tables (VERDICT r14 directive 6): the fixture's
@@ -203,7 +204,7 @@ object StreamingQueries {
     * fresh memory sink over the build-once fixture. */
   def q350StreamDvDelete(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.sources.TxLog.layoutArtifact("stream_dv_src", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact(StreamDvSrcLayout, dir) { p =>
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
         .filter(col("c_custkey") % 5 === 0)

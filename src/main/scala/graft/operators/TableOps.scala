@@ -84,8 +84,9 @@ object TableOps {
   // serving stale files after the driver regenerates the corpus in place.
   // layoutArtifact folds in the corpus fingerprint, builds into a temp dir
   // renamed atomically, and distrusts _SUCCESS-less leftovers.
+  private[graft] val SkipidxLayout = graft.SparkSupport.Layout("skipidx", 1)
   def q112FileSkipping(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.SparkSupport.layoutArtifact("skipidx", dir) { p =>
+    val tmp = graft.SparkSupport.layoutArtifact(SkipidxLayout, dir) { p =>
       Tables.lineitem(s, dir)
         .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag",
           "l_shipdate")
@@ -143,9 +144,10 @@ object TableOps {
   // leaves behind) — synthesized once per corpus via layoutArtifact (see
   // q112's guard note); the operator under measurement is the list + size
   // + compaction rewrite, which stays per-query
+  private[graft] val FragLayout = graft.SparkSupport.Layout("frag", 1)
   def q113Compaction(s: SparkSession, dir: String): DataFrame = {
     val comp = graft.SparkSupport.roundtripPath("compact", dir)
-    val frag = graft.SparkSupport.layoutArtifact("frag", dir) { p =>
+    val frag = graft.SparkSupport.layoutArtifact(FragLayout, dir) { p =>
       Tables.orders(s, dir).repartition(64).write.mode("overwrite").parquet(p)
     }
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -176,6 +178,7 @@ object TableOps {
       |  TRUE AS compacted
       |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
 
+  private[graft] val EvolvingLayout = graft.SparkSupport.Layout("evolving", 1)
   /** q186: schema evolution on a plain-parquet table — the non-Delta half
     * of the reference's `overwriteSchema=True` story (BuildGoldLayer.py:
     * 230,235; K4 in SURVEY §2). A v1 producer writes (o_orderkey,
@@ -197,7 +200,7 @@ object TableOps {
     // generation writes per invocation charged two table writes to every
     // q186 timing, and concurrent invocations could interleave the
     // overwrite/append pair (double-appended v2 files)
-    val tmp = graft.SparkSupport.layoutArtifact("evolving", dir) { p =>
+    val tmp = graft.SparkSupport.layoutArtifact(EvolvingLayout, dir) { p =>
       Tables.orders(s, dir).filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_totalprice")
         .write.mode("overwrite").parquet(p)
@@ -223,6 +226,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q251
 
+  private[graft] val TxlogDemoLayout = graft.SparkSupport.Layout("txlog_demo", 1)
   /** q251: transaction-log time travel — the K4 (transactional gold
     * writes) semantics on plain parquet via [[graft.sources.TxLog]]: a
     * versioned table is built once per corpus with the gold layer's write
@@ -243,7 +247,7 @@ object TableOps {
     * gold-layer history in miniature), built once per corpus; shared by
     * q251 (time travel) and q252 (version-diff CDC). */
   private def txlogDemo(s: SparkSession, dir: String): String =
-    graft.sources.TxLog.layoutArtifact("txlog_demo", dir) { p =>
+    graft.sources.TxLog.layoutArtifact(TxlogDemoLayout, dir) { p =>
       import graft.sources.TxLog
       val o = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
       TxLog.append(s, o.filter(col("o_orderkey") % 4 === 0), p)
@@ -323,6 +327,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q253
 
+  private[graft] val TxlogMergeLayout = graft.SparkSupport.Layout("txlog_merge", 1)
   /** q253: transactional MERGE on the log — q127 shows what MERGE compiles
     * to; this RUNS one under [[graft.sources.TxLog]]'s commit protocol:
     * base = the %4=0 order slice; the upsert batch doubles the price of
@@ -334,7 +339,7 @@ object TableOps {
     * have replaced, inserted, and preserved exactly the right rows. */
   def q253TxlogMerge(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.sources.TxLog.layoutArtifact("txlog_merge", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact(TxlogMergeLayout, dir) { p =>
       val o = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
       TxLog.append(s, o.filter(col("o_orderkey") % 4 === 0), p)
       val updates = o.filter(col("o_orderkey") % 8 === 0)
@@ -362,6 +367,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q254
 
+  private[graft] val TxlogStatsLayout = graft.SparkSupport.Layout("txlog_stats", 1)
   /** q254: manifest-level data skipping on the log — q112's min/max file
     * pruning INTEGRATED with the transaction log: [[graft.sources.TxLog
     * .appendWithStats]] records per-file (min, max) of the key in the
@@ -374,7 +380,7 @@ object TableOps {
     * the oracle's direct recomputation. */
   def q254TxlogSkipping(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.sources.TxLog.layoutArtifact("txlog_stats", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact(TxlogStatsLayout, dir) { p =>
       val o = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
         .repartitionByRange(16, col("o_orderkey"))
       TxLog.appendWithStats(s, o, p, "o_orderkey", partFiles = 8)
@@ -404,6 +410,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q300
 
+  private[graft] val IvmAggLayout = graft.SparkSupport.Layout("ivm_agg", 1)
   /** q300: incremental view maintenance on the log — a standing
     * aggregate view is MAINTAINED by merging a delta batch's partial
     * aggregate into the materialized state, never re-aggregating the
@@ -422,7 +429,7 @@ object TableOps {
     * travel still shows the pre-merge state. */
   def q300IvmAgg(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val root = graft.sources.TxLog.layoutArtifact("ivm_agg", dir) { p =>
+    val root = graft.sources.TxLog.layoutArtifact(IvmAggLayout, dir) { p =>
       val t = s"$p/agg"
       def aggOf(df: org.apache.spark.sql.DataFrame) =
         df.groupBy("o_orderpriority")
@@ -484,6 +491,7 @@ object TableOps {
   private[operators] def nrm(v: Long, lo: Long, hi: Long): Long =
     (v - lo) * 65535 / math.max(hi - lo, 1L)
 
+  private[graft] val ZorderTblLayout = graft.SparkSupport.Layout("zorder_tbl", 1)
   /** q301: Z-ORDER clustering for multi-dimensional data skipping — the
     * Delta/Iceberg OPTIMIZE ZORDER capability on the log: orders are
     * rewritten in Morton order of (custkey, order-day), each file's
@@ -506,7 +514,7 @@ object TableOps {
         s"min($day) AS dlo", s"max($day) AS dhi").head()
     val (klo, khi, dlo, dhi) =
       (b.getLong(0), b.getLong(1), b.getInt(2).toLong, b.getInt(3).toLong)
-    val table = graft.sources.TxLog.layoutArtifact("zorder_tbl", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact(ZorderTblLayout, dir) { p =>
       val z = Tables.orders(s, dir)
         .selectExpr("o_custkey", s"$day AS oday", "o_totalprice",
           s"${mortonExpr(normExpr("o_custkey", klo, khi),
@@ -549,6 +557,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q307
 
+  private[graft] val BloomidxLayout = graft.SparkSupport.Layout("bloomidx", 1)
   /** q307: per-file BLOOM-FILTER skipping index — the point-lookup
     * complement to min/max skipping (q112) and z-range pruning (q301).
     * The layout is range-clustered by ship date, so a point lookup on
@@ -575,7 +584,7 @@ object TableOps {
     * lakehouse stores next to its min/max stats for exactly the
     * high-cardinality point-lookup columns clustering can't serve. */
   def q307BloomSkipping(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.SparkSupport.layoutArtifact("bloomidx", dir) { p =>
+    val tmp = graft.SparkSupport.layoutArtifact(BloomidxLayout, dir) { p =>
       Tables.lineitem(s, dir)
         .select("l_orderkey", "l_quantity", "l_extendedprice", "l_shipdate")
         .repartitionByRange(16, col("l_shipdate"))
@@ -647,6 +656,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q336
 
+  private[graft] val TxlogDeleteLayout = graft.SparkSupport.Layout("txlog_delete", 1)
   /** q336: transactional DELETE WHERE on the log — the takedown verb an
     * LLM-training-data table runs daily (GDPR erasure, license removal,
     * contamination purges): [[graft.sources.TxLog.deleteWhere]] removes
@@ -659,7 +669,7 @@ object TableOps {
     * have removed exactly the TRUE-predicate rows. */
   def q336TxlogDelete(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.sources.TxLog.layoutArtifact("txlog_delete", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact(TxlogDeleteLayout, dir) { p =>
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       // two generations → several files, so file-granularity is real
@@ -687,6 +697,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q337
 
+  private[graft] val TxlogUpdateLayout = graft.SparkSupport.Layout("txlog_update", 1)
   /** q337: transactional UPDATE WHERE on the log — label/score rewrites in
     * place (re-scored quality tiers, corrected licenses) without touching
     * non-matching rows or files: [[graft.sources.TxLog.updateWhere]]
@@ -696,7 +707,7 @@ object TableOps {
     * post-update decimal sums are oracle-exact without a cents detour. */
   def q337TxlogUpdate(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.sources.TxLog.layoutArtifact("txlog_update", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact(TxlogUpdateLayout, dir) { p =>
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderpriority", "o_orderstatus",
           "o_totalprice")
@@ -727,6 +738,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q338
 
+  private[graft] val TxlogRestoreLayout = graft.SparkSupport.Layout("txlog_restore", 1)
   /** q338: RESTORE — roll the table back to a pre-mutation version as ONE
     * new commit of pure log arithmetic ([[graft.sources.TxLog.restore]]):
     * no data file is read or copied, so un-doing a bad 100 TB mutation is
@@ -736,7 +748,7 @@ object TableOps {
     * back the COMPLETE original table. */
   def q338TxlogRestore(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.TxLog
-    val table = graft.sources.TxLog.layoutArtifact("txlog_restore", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact(TxlogRestoreLayout, dir) { p =>
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       TxLog.append(s, o.filter(col("o_orderkey") % 2 === 0), p)
@@ -759,6 +771,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q340
 
+  private[graft] val TxlogPartDmlLayout = graft.SparkSupport.Layout("txlog_part_dml", 1)
   /** q340: partition-aware DML — DELETE WHERE and UPDATE WHERE on a
     * HIVE-PARTITIONED log table, the reference's actual gold shape
     * (`partitionBy(institution_type, state)` / `(year, quarter, state)`,
@@ -772,7 +785,7 @@ object TableOps {
     * the data files — and checks per-partition counts and exact sums. */
   def q340PartitionedDml(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.{DeltaBridge, TxLog}
-    val table = graft.sources.TxLog.layoutArtifact("txlog_part_dml", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact(TxlogPartDmlLayout, dir) { p =>
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       // two generations per partition → file-granularity is real
@@ -807,6 +820,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q347
 
+  private[graft] val TxlogDvDeleteLayout = graft.SparkSupport.Layout("txlog_dv_delete", 1)
   /** q347: WRITER-SIDE DELETION VECTORS — merge-on-read DELETE
     * ([[graft.sources.TxLog.deleteWhereDv]]): a takedown hitting ~1% of
     * rows across an 8-file table writes spec-format sidecar vectors and
@@ -822,7 +836,7 @@ object TableOps {
     import graft.sources.{DeltaBridge, TxLog}
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.v2.GraftDeltaCatalog].getName)
-    val table = graft.sources.TxLog.layoutArtifact("txlog_dv_delete", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact(TxlogDvDeleteLayout, dir) { p =>
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
         .repartitionByRange(8, col("c_custkey"))
@@ -857,6 +871,7 @@ object TableOps {
 
   // ---------------------------------------------------------------- q349
 
+  private[graft] val TxlogDvMergeLayout = graft.SparkSupport.Layout("txlog_dv_merge", 1)
   /** q349: DELETION VECTORS FROM MERGE — the q347 economics applied to
     * `MERGE … WHEN MATCHED THEN DELETE` ([[graft.sources.TxLog
     * .mergeClauses]]'s maxDvFraction): a takedown-shaped merge whose
@@ -874,7 +889,7 @@ object TableOps {
     import graft.sources.{DeltaBridge, TxLog}
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.v2.GraftDeltaCatalog].getName)
-    val table = graft.sources.TxLog.layoutArtifact("txlog_dv_merge", dir) { p =>
+    val table = graft.sources.TxLog.layoutArtifact(TxlogDvMergeLayout, dir) { p =>
       val c = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
         .repartitionByRange(8, col("c_custkey"))

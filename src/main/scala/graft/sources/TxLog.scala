@@ -126,8 +126,9 @@ object TxLog {
   /** A persisted layout artifact holding TxLog tables, keyed by
     * [[LogFormat]] as well as kind and corpus (see
     * [[graft.SparkSupport.layoutArtifact]]). */
-  def layoutArtifact(kind: String, dir: String)(build: String => Unit): String =
-    graft.SparkSupport.layoutArtifact(s"${kind}_$LogFormat", dir)(build)
+  def layoutArtifact(layout: graft.SparkSupport.Layout, dir: String)(
+      build: String => Unit): String = graft.SparkSupport.layoutArtifact(
+    layout.copy(kind = s"${layout.kind}_$LogFormat"), dir)(build)
 
   /** Live data-file ENTRIES (relative path, optionally suffixed
     * `#min#max` file statistics) at `asOf` (None = HEAD). Remove lists

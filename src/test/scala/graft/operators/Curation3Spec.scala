@@ -260,10 +260,42 @@ class Curation3Spec extends SparkSpec {
         "the build refusal below can be relaxed")
     // the build-side guard refuses exactly this shape, and passes the
     // premise-respecting index untouched
-    intercept[IllegalArgumentException] {
-      Dedup.assertPerDocDistinct(dupRows)
+    // (the check runs on the per-doc arrays the layouts derive from)
+    val refused = intercept[IllegalArgumentException] {
+      Dedup.assertPerDocDistinct(dupArrs)
     }
-    Dedup.assertPerDocDistinct(rows) // distinct index: no-op
+    assert(refused.getMessage.contains("shingle index premise violated"))
+    Dedup.assertPerDocDistinct(arrs) // distinct index: no-op
+  }
+
+  test("a corpus whose shingles collide under poly_hash fails the " +
+    "shingle_idx_df build with the premise message") {
+    import spark.implicits._
+    // two distinct 3-shingles with one poly_hash: a birthday search over
+    // seeded random shingles finds a pair in ~40k draws (P ≈ 1e9)
+    def poly(sh: String): Long = sh.foldLeft(7L)((h, c) => (h * 31 + c) % 1000000007L)
+    val rnd = new scala.util.Random(7)
+    def word() = (1 to 4).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
+    val seen = scala.collection.mutable.HashMap.empty[Long, String]
+    var pair: Option[(String, String)] = None
+    while (pair.isEmpty) {
+      val sh = Seq.fill(3)(word()).mkString(" ")
+      seen.get(poly(sh)) match {
+        case Some(other) if other != sh => pair = Some(other -> sh)
+        case _ => seen(poly(sh)) = sh
+      }
+    }
+    val (a, b) = pair.get
+    val corpus = java.nio.file.Files.createTempDirectory("colliding").toString
+    Seq((1L, s"$a $b", "en", "web", 80L),
+        (2L, "plain distinct words in one row", "en", "web", 80L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$corpus/documents.parquet")
+    val refused = intercept[IllegalArgumentException] {
+      Dedup.shingleIndexAnnotated(spark, corpus)
+    }
+    assert(refused.getMessage.contains("shingle index premise violated: 1 " +
+      "duplicate (doc_id, h) rows"), refused.getMessage)
   }
 
   test("match evidence: every confirmed pair gets 1-3 ranked rows, the " +

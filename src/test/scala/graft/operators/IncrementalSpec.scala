@@ -212,10 +212,14 @@ class IncrementalSpec extends SparkSpec {
       assert(plan.contains("graft_band_idx_"),
         s"expected a scan of the persisted band index:\n${plan.take(2000)}")
     }
-    // d189's probe side must likewise read the admitted artifact (gen0 +
-    // compact), not recompute history's bands
+    // d189's probe side must likewise read the history index in place
+    // AND the admitted artifact's compact generation, not recompute bands
     val p189 = Dedup.d189AdmitCompact(spark, sf)
       .queryExecution.executedPlan.toString
+    // (a hex key follows the history index's kind; `g2_` follows the
+    // admitted one's — plan strings truncate long locations)
+    assert("graft_band_idx_[0-9a-f]".r.findFirstIn(p189).isDefined,
+      s"expected a scan of the history band index:\n${p189.take(2000)}")
     assert(p189.contains("graft_band_idx_g2_"),
       s"expected a scan of the admitted band index:\n${p189.take(2000)}")
   }
@@ -248,26 +252,36 @@ class IncrementalSpec extends SparkSpec {
 
   test("d189 admit+compact: compaction is row-set-identical, reduces file " +
     "count, and batch 2 rediscovers gen-1 twins through the compacted index") {
-    val root = Dedup.admittedBandIndex(spark, sf)
-    // compaction invariance: the folded generation carries exactly the
-    // rows of the staged micro-batch generations
-    val staged = spark.read
-      .parquet((0 to 2).map(g => s"$root/delta_gen$g"): _*)
+    def bandRows(paths: String*) = spark.read.parquet(paths: _*)
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    val compact = spark.read.parquet(s"$root/compact")
-      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    assert(compact === staged, "compaction changed the band row set")
-    // ...and actually compacts: fewer data files than the staged gens
     def parquetFiles(p: String): Int =
       Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
         .count(f => f.getName.endsWith(".parquet") && f.length > 0)
-    val stagedFiles = (0 to 2).map(g => parquetFiles(s"$root/delta_gen$g")).sum
-    assert(parquetFiles(s"$root/compact") < stagedFiles,
-      s"compact has ${parquetFiles(s"$root/compact")} files vs $stagedFiles staged")
-    // history is never rewritten: gen0 matches the standing history index
-    val gen0 = spark.read.parquet(s"$root/gen0").count()
+    // admit, then read the staged micro-batch generations before the
+    // compaction that folds them retires them
+    val scratch = Files.createTempDirectory("admit_compact").toString
+    Dedup.admitGenerations(spark, sf, scratch)
+    val stagedDirs = (0 to 2).map(g => s"$scratch/delta_gen$g")
+    val staged = bandRows(stagedDirs: _*)
+    val stagedFiles = stagedDirs.map(parquetFiles).sum
+    Dedup.compactGenerations(spark, scratch)
+    // compaction invariance: the folded generation carries exactly the
+    // rows of the staged generations, in fewer data files, and the staged
+    // generations are gone
+    val compact = bandRows(s"$scratch/compact")
+    assert(compact === staged, "compaction changed the band row set")
+    assert(parquetFiles(s"$scratch/compact") < stagedFiles,
+      s"compact has ${parquetFiles(s"$scratch/compact")} files vs $stagedFiles staged")
+    assert(stagedDirs.forall(d => !new java.io.File(d).exists),
+      "compaction must delete the generations it folded")
+    // the built artifact holds only the compacted generation: history is
+    // read in place, never copied into it
+    val root = Dedup.admittedBandIndex(spark, sf)
+    assert(new java.io.File(root).list().toSet == Set("compact", "_SUCCESS"))
+    assert(bandRows(s"$root/compact") === staged)
+    val hist = Dedup.historyBandIndex(spark, sf).count()
     // probe gate: docs in BOTH batches (doc_id % 15 == 0) must surface the
-    // original (gen0 path) AND the batch-1 twin (append→compact path),
+    // original (history path) AND the batch-1 twin (append→compact path),
     // both exact — if compaction dropped batch 1's bands, the gen1 pair
     // vanishes here before the oracle ever sees it
     val rows = Dedup.d189AdmitCompact(spark, sf).collect()
@@ -284,12 +298,12 @@ class IncrementalSpec extends SparkSpec {
     val bothIds = Dedup.shingleIndex(spark, sf)
       .filter(col("doc_id") % 15 === 0)
       .select("doc_id").distinct().collect().map(_.getLong(0))
-    assert(bothIds.nonEmpty && gen0 > 0)
+    assert(bothIds.nonEmpty && hist > 0)
     bothIds.foreach { id =>
       val viaHist = (id, id + 20000000L)
       val viaGen1 = (id + 10000000L, id + 20000000L)
       assert(rows.contains(viaHist) && rows(viaHist)._1 == 1.0,
-        s"original $viaHist not recovered exact via gen0")
+        s"original $viaHist not recovered exact via the history index")
       assert(rows.contains(viaGen1) && rows(viaGen1)._1 == 1.0,
         s"twin $viaGen1 not recovered exact via the compacted admit")
     }

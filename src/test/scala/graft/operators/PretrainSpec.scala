@@ -55,6 +55,26 @@ class PretrainSpec extends SparkSpec {
     out.unpersist()
   }
 
+  test("dup spans over the dup-only gram set return the carrier form's " +
+    "rows") {
+    // the carrier form: every gram hash with its (min, max) doc id, a
+    // window flagged iff its hash's carriers differ
+    val grams = Dedup.corpusWithCopies(spark, dir)
+      .selectExpr("doc_id",
+        s"posexplode(gram_hashes(${graft.functions.PortableHash.tokens}, 5)) AS (p, h)")
+      .selectExpr("doc_id", "p + 1 AS pos", "h")
+    val carriers = grams.groupBy("h")
+      .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
+    val carrierForm = Pretrain.t154Spans(grams.join(carriers, "h")
+      .selectExpr("doc_id", "pos", "CAST(mn <> mx AS INT) AS isdup")).cache()
+    val out = Pretrain.t154DupSpans(spark, dir).cache()
+    assert(out.schema == carrierForm.schema)
+    assert(out.exceptAll(carrierForm).count() == 0)
+    assert(carrierForm.exceptAll(out).count() == 0)
+    assert(out.filter(col("n_dup") > 0).count() > 0, "the corpus plants dups")
+    out.unpersist(); carrierForm.unpersist()
+  }
+
   test("semdedup: no semantic-duplicate pair survives with both members " +
     "kept, and only pair members are ever dropped") {
     val dropped = Pretrain.d155SemDedup(spark, dir).cache()

@@ -355,7 +355,8 @@ class Similarity2Spec extends SparkSpec {
     // id somewhere (else this operator demonstrates nothing at this SF)
     assert(base.filter(col("nid") >= 16 && col("nid") % 7 === 3).count() > 0)
     // and the tombstone table is a real committed TxLog table
-    val troot = graft.sources.TxLog.layoutArtifact("ann_tombstones", dir)(_ => ())
+    val troot = graft.sources.TxLog.layoutArtifact(
+      Similarity2.AnnTombstonesLayout, dir)(_ => ())
     assert(graft.sources.TxLog.versions(s"$troot/tombstones") == Seq(1))
     out.unpersist(); base.unpersist()
   }
@@ -368,7 +369,8 @@ class Similarity2Spec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(fromTable == inMemory)
     // the artifact contains three committed TxLog tables
-    val root = graft.sources.TxLog.layoutArtifact("ivfpq_index", dir)(_ => ())
+    val root = graft.sources.TxLog.layoutArtifact(
+      Similarity2.IvfpqIndexLayout, dir)(_ => ())
     for (t <- Seq("centroids", "codebook", "postings"))
       assert(graft.sources.TxLog.versions(s"$root/$t") == Seq(1),
         s"$t must be one committed version")
@@ -389,7 +391,8 @@ class Similarity2Spec extends SparkSpec {
     // the posting log holds exactly TWO commits: the history build and the
     // exactly-once admit (the build replays the batch id and requires the
     // version unchanged, so a third version would mean replay re-committed)
-    val root = graft.sources.TxLog.layoutArtifact("ivfpq_fresh", dir)(_ => ())
+    val root = graft.sources.TxLog.layoutArtifact(
+      Similarity2.IvfpqFreshLayout, dir)(_ => ())
     assert(graft.sources.TxLog.versions(s"$root/postings") == Seq(1, 2))
     // the admit is IN the index: the committed postings contain every
     // batch vector with its full 8-subspace code row set

@@ -47,7 +47,7 @@ class TableOpsSpec extends SparkSpec {
     TableOps.q186SchemaEvolution(spark, sf).count() // writes both generations
     // resolve the artifact through the same helper the operator uses; the
     // build closure must never run — the artifact exists after the call above
-    val tmp = graft.SparkSupport.layoutArtifact("evolving", sf)(_ =>
+    val tmp = graft.SparkSupport.layoutArtifact(TableOps.EvolvingLayout, sf)(_ =>
       fail("q186 artifact should already have been built"))
     val merged = spark.read.option("mergeSchema", "true").parquet(tmp)
     // the union schema carries the evolved column
@@ -78,7 +78,8 @@ class TableOpsSpec extends SparkSpec {
       .orderBy("o_orderpriority").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(out.toSeq == full.toSeq)
-    val t = graft.sources.TxLog.layoutArtifact("ivm_agg", sf)(_ => ()) + "/agg"
+    val t = graft.sources.TxLog.layoutArtifact(
+      TableOps.IvmAggLayout, sf)(_ => ()) + "/agg"
     assert(graft.sources.TxLog.versions(t) == Seq(1, 2),
       "lifecycle must be exactly base-append then merged-overwrite")
     // v1 = base fold only (the 90% slice)
@@ -120,7 +121,8 @@ class TableOpsSpec extends SparkSpec {
       (((x >> i) & 1L) << (2 * i)) + (((y >> i) & 1L) << (2 * i + 1))).sum
     val zLo = morton(nrm(k1, klo, khi), nrm(d1, dlo, dhi))
     val zHi = morton(nrm(k2, klo, khi), nrm(d2, dlo, dhi)) + 1
-    val ztab = graft.sources.TxLog.layoutArtifact("zorder_tbl", sf)(_ => ())
+    val ztab = graft.sources.TxLog.layoutArtifact(
+      TableOps.ZorderTblLayout, sf)(_ => ())
     val zKept = TxLog.pruneFiles(ztab, zLo, zHi).size
     assert(zKept < TxLog.liveFiles(ztab).size,
       "z-layout must skip files for the 2-D box")
@@ -164,7 +166,7 @@ class TableOpsSpec extends SparkSpec {
     // the index must reject a key that is in no file (false positives are
     // allowed per-file at ~1%, but an absent key cannot be admitted by
     // EVERY file — that would mean the index skips nothing for misses)
-    val layout = graft.SparkSupport.layoutArtifact("bloomidx", sf)(_ => ())
+    val layout = graft.SparkSupport.layoutArtifact(TableOps.BloomidxLayout, sf)(_ => ())
     val blooms = spark.read.parquet(layout)
       .groupBy(input_file_name().as("f"))
       .agg(expr("bloom_filter_agg(l_orderkey, CAST(50000 AS BIGINT), " +

@@ -156,8 +156,9 @@ class TxLogDeltaLogSpec extends SparkSpec {
       Files.writeString(Paths.get(p, "built_by"), tag)
       Files.createFile(Paths.get(p, "_SUCCESS")): Unit
     }
-    val old = graft.SparkSupport.layoutArtifact("txlog_demo", corpus)(build("old"))
-    val fresh = TxLog.layoutArtifact("txlog_demo", corpus)(build("new"))
+    val demo = graft.operators.TableOps.TxlogDemoLayout
+    val old = graft.SparkSupport.layoutArtifact(demo, corpus)(build("old"))
+    val fresh = TxLog.layoutArtifact(demo, corpus)(build("new"))
     try {
       assert(fresh != old)
       assert(Files.readString(Paths.get(fresh, "built_by")) == "new",

@@ -5,7 +5,8 @@
 # this script makes "compile green before snapshot" mechanical.
 #
 # Usage: tools/preflight.sh [--test]
-#   default : session/install, parquet reader, one-log and one-reader guards +
+#   default : session/install, parquet reader, one-log, one-reader and
+#             layout-kind guards +
 #             sbt compile +
 #             Test/compile (fast, the r9 failure class)
 #   --test  : additionally runs the full ScalaTest suite
@@ -63,6 +64,27 @@ readers=$(grep -nE '\.read\.|readEntries' src/main/scala/graft/sources/TxLog.sca
 if [[ -n "$readers" ]]; then
   echo "read outside DeltaBridge.scanLive in TxLog.scala:"
   echo "$readers"
+  exit 1
+fi
+
+# One build per layout kind, each with a build version: a kind is declared
+# once as `graft.SparkSupport.Layout("<kind>", <version>)` beside the code
+# that builds it, and that declaration is passed to exactly one
+# `layoutArtifact(` call site. A kind declared or built twice lets two
+# build paths race for one artifact key; a call site that passes a bare
+# kind string declares no version, so changed build code would be served
+# the bytes an older build left in the shared scratch dir.
+echo "[preflight] layout kind guard"
+twice=$(grep -rhoE 'Layout\("[A-Za-z0-9_]+"' src/main | sort | uniq -d || true)
+reused=$(grep -rhoE 'layoutArtifact\([A-Za-z0-9_.]+,' src/main \
+  | sed -E 's/.*[(.]([A-Za-z0-9_]+),$/\1/' | sort | uniq -d || true)
+unversioned=$(grep -rnE 'layoutArtifact\(\s*s?"' src/main || true)
+if [[ -n "$twice$reused$unversioned" ]]; then
+  [[ -n "$twice" ]] && echo "layout kind declared more than once:" && echo "$twice"
+  [[ -n "$reused" ]] && echo "layout declaration built at more than one call site:" \
+    && echo "$reused"
+  [[ -n "$unversioned" ]] && echo "layoutArtifact call site with no build version:" \
+    && echo "$unversioned"
   exit 1
 fi
 
