@@ -367,32 +367,33 @@ object TableOps {
 
   // ---------------------------------------------------------------- q254
 
-  private[graft] val TxlogStatsLayout = graft.SparkSupport.Layout("txlog_stats", 1)
+  private[graft] val TxlogStatsLayout = graft.SparkSupport.Layout("txlog_stats", 2)
   /** q254: manifest-level data skipping on the log — q112's min/max file
-    * pruning INTEGRATED with the transaction log: [[graft.sources.TxLog
-    * .appendWithStats]] records per-file (min, max) of the key in the
-    * COMMIT itself (the Iceberg-manifest shape, collected in one
-    * distributed pass at write time), and a bounded read prunes files
-    * from metadata alone — no footer reads, no directory listing, no
-    * scan of non-matching files. The write range-partitions by the key so
-    * file ranges are tight; the gate reads keys below max/4, which must
-    * both SKIP files (spec-asserted via the require here) and agree with
-    * the oracle's direct recomputation. */
+    * pruning INTEGRATED with the transaction log: every
+    * [[graft.sources.TxLog.append]] commit logs each file's footer
+    * (min, max) as the add's Delta `stats` (read from the footers the
+    * write just produced — no extra job), and a bounded read
+    * ([[graft.sources.DeltaBridge.readPruned]]) prunes files from
+    * metadata alone — no footer reads at read time, no directory
+    * listing, no scan of non-matching files. The write range-partitions
+    * by the key so file ranges are tight; the gate reads keys below
+    * max/4, which must both SKIP files (spec-asserted via the require
+    * here) and agree with the oracle's direct recomputation. */
   def q254TxlogSkipping(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLog
+    import graft.sources.{DeltaBridge, TxLog}
     val table = graft.sources.TxLog.layoutArtifact(TxlogStatsLayout, dir) { p =>
       val o = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
         .repartitionByRange(16, col("o_orderkey"))
-      TxLog.appendWithStats(s, o, p, "o_orderkey", partFiles = 8)
+      TxLog.append(s, o, p, partFiles = 8)
       java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "_SUCCESS"))
     }
     // the one driver scalar (metadata-sized, the q117 convention)
     val hi = Tables.orders(s, dir).agg(max(col("o_orderkey"))).head().getLong(0) / 4
     val total = TxLog.liveFiles(table).size
-    val kept = TxLog.pruneFiles(table, 0L, hi)
+    val kept = DeltaBridge.filesInRange(s, table, "o_orderkey", 0L, hi)
     require(kept.nonEmpty && kept.size < total,
       s"stats pruning kept ${kept.size}/$total files — nothing skipped")
-    TxLog.readPruned(s, table, 0L, hi)
+    DeltaBridge.readPruned(s, table, "o_orderkey", 0L, hi)
       .filter(col("o_orderkey") < hi)
       .agg(count(lit(1)).as("n_rows"),
         sum(col("o_orderkey")).as("sum_key"),
@@ -491,12 +492,14 @@ object TableOps {
   private[operators] def nrm(v: Long, lo: Long, hi: Long): Long =
     (v - lo) * 65535 / math.max(hi - lo, 1L)
 
-  private[graft] val ZorderTblLayout = graft.SparkSupport.Layout("zorder_tbl", 1)
+  private[graft] val ZorderTblLayout = graft.SparkSupport.Layout("zorder_tbl", 2)
   /** q301: Z-ORDER clustering for multi-dimensional data skipping — the
     * Delta/Iceberg OPTIMIZE ZORDER capability on the log: orders are
     * rewritten in Morton order of (custkey, order-day), each file's
-    * commit records its z-range ([[graft.sources.TxLog.appendWithStats]]),
-    * and a 2-D box query prunes files from METADATA via the box corners'
+    * commit logs its z-range in the add's Delta `stats`
+    * ([[graft.sources.TxLog.append]]), and a 2-D box query
+    * ([[graft.sources.DeltaBridge.readPruned]]) prunes files from
+    * METADATA via the box corners'
     * z-interval (sound by Morton monotonicity — the Scaladoc on
     * [[mortonExpr]]) before a residual in-box filter. A 1-D sort layout
     * can only skip along its own dimension; Z-order skips along BOTH —
@@ -507,7 +510,7 @@ object TableOps {
     * the rewrite is one range-partitioned write; the read opens only
     * z-intersecting files. */
   def q301ZorderBox(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLog
+    import graft.sources.{DeltaBridge, TxLog}
     val day = "datediff(o_orderdate, DATE '1970-01-01')"
     val b = Tables.orders(s, dir)
       .selectExpr("min(o_custkey) AS klo", "max(o_custkey) AS khi",
@@ -520,7 +523,7 @@ object TableOps {
           s"${mortonExpr(normExpr("o_custkey", klo, khi),
             normExpr(s"($day)", dlo, dhi))} AS z")
         .repartitionByRange(16, col("z"))
-      TxLog.appendWithStats(s, z, p, "z", partFiles = 8)
+      TxLog.append(s, z, p, partFiles = 8)
       java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "_SUCCESS"))
     }
     // the 2-D box: middle quartile of custkey × middle third of days
@@ -529,10 +532,10 @@ object TableOps {
     val zLo = mortonOf(nrm(k1, klo, khi), nrm(d1, dlo, dhi))
     val zHi = mortonOf(nrm(k2, klo, khi), nrm(d2, dlo, dhi))
     val total = TxLog.liveFiles(table).size
-    val kept = TxLog.pruneFiles(table, zLo, zHi + 1)
+    val kept = DeltaBridge.filesInRange(s, table, "z", zLo, zHi + 1)
     require(kept.nonEmpty && kept.size < total,
       s"z-range pruning kept ${kept.size}/$total files — nothing skipped")
-    TxLog.readPruned(s, table, zLo, zHi + 1)
+    DeltaBridge.readPruned(s, table, "z", zLo, zHi + 1)
       .filter(col("o_custkey").between(k1, k2) && col("oday").between(d1, d2))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("o_custkey")).as("sum_cust"),

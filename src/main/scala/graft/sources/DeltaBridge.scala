@@ -204,8 +204,7 @@ object DeltaBridge {
           StructField("pathOrInlineDv", StringType),
           StructField("offset", IntegerType),
           StructField("sizeInBytes", IntegerType),
-          StructField("cardinality", LongType)))),
-        StructField("tags", MapType(StringType, StringType))))),
+          StructField("cardinality", LongType))))))),
       // the spec's two non-file state carriers a checkpoint must keep
       // (ADVICE r14): SetTransaction idempotence state and in-retention
       // remove tombstones (vacuum's worklist)
@@ -252,8 +251,7 @@ object DeltaBridge {
           e.stats.orNull,
           e.dv.map(d => Row(d.storageType, d.pathOrInlineDv,
             d.offset.map(Int.box).orNull, d.sizeInBytes,
-            d.cardinality)).orNull,
-          if (e.tags.isEmpty) null else e.tags), null, null)
+            d.cardinality)).orNull), null, null)
       } ++
       st.txns.toSeq.map { case (appId, (v, lu)) =>
         Row(null, null, null, Row(appId, v, lu.map(Long.box).orNull), null)
@@ -323,15 +321,15 @@ object DeltaBridge {
     * from pre-round-14 checkpoints of this bridge, which did not carry
     * stats — such files are simply never skipped, the conservative
     * direction; checkpoints written now preserve them), its deletion
-    * vector, its logged size and modification time (republished verbatim
-    * by [[writeCheckpoint]]), and its `tags` ([[TxLog]] keeps its typed
-    * entry stats there). */
+    * vector, and its logged size and modification time (republished
+    * verbatim by [[writeCheckpoint]]). `stats` is the one statistics
+    * format: [[filesInRange]], [[read]]'s `statsFilter` and the native
+    * relation's pushed filters all prune on it. */
   private[sources] case class AddEntry(pv: Map[String, String],
                                        stats: Option[String],
                                        dv: Option[DeletionVectors.Descriptor] = None,
                                        size: Long = 0L,
-                                       modificationTime: Long = 0L,
-                                       tags: Map[String, String] = Map.empty)
+                                       modificationTime: Long = 0L)
 
   private[sources] case class LogState(
       var schemaJson: String = null,
@@ -427,12 +425,9 @@ object DeltaBridge {
       }
       def long(k: String): Long =
         Option(am.get(k)).map(_.asInstanceOf[Number].longValue()).getOrElse(0L)
-      val tags = Option(am.get("tags"))
-        .map(_.asInstanceOf[java.util.Map[String, String]].asScala.toMap)
-        .getOrElse(Map.empty[String, String])
       val path = am.get("path").asInstanceOf[String]
       st.live += (path -> AddEntry(pv, stats, dv, long("size"),
-        long("modificationTime"), tags))
+        long("modificationTime")))
       st.tombstones -= path // a re-added path is live, not a tombstone
     }
     Option(m.get("txn")).foreach { tx =>
@@ -714,23 +709,15 @@ object DeltaBridge {
         s"${badKeys.mkString(",")} (partitioned by " +
         s"${st.partitionCols.mkString(",")})")
     val mapping = columnMappingMode(st)
-    // under column mapping the log's partitionValues / stats keys are
-    // PHYSICAL names — translate the caller's logical names once
-    val physOf: String => String =
-      if (mapping == "none") identity
-      else {
-        val m = schema.fields.map(f => f.name -> physicalName(f)).toMap
-        n => m.getOrElse(n, n)
-      }
+    val physOf = physicalNames(st)
     // metadata-level pruning: drop non-matching add actions before the
     // scan — partition values exactly, then stats bounds (files are kept
     // unless their stats PROVE disjointness — sound for stats-less adds)
-    val live = st.live.toSeq.filter { case (_, e) =>
+    val inRange = statsFilter.map { case (c, lo, hi) =>
+      filesInRange(st, c, lo, hi).toSet }
+    val live = st.live.toSeq.filter { case (p, e) =>
       partitionFilter.forall { case (k, v) =>
-        e.pv.get(physOf(k)).contains(v) } &&
-        !statsFilter.exists { case (c, lo, hi) =>
-          e.stats.exists(st => statsExclude(st, physOf(c), ">=", lo) ||
-            statsExclude(st, physOf(c), "<", hi)) }
+        e.pv.get(physOf(k)).contains(v) } && inRange.forall(_(p))
     }
     val df = buildDataFrame(spark, table, schema, st.partitionCols, mapping,
       live.map { case (p, e) => (p, e.pv, e.dv) })
@@ -740,6 +727,16 @@ object DeltaBridge {
 
   private def columnMappingMode(st: LogState): String =
     st.configuration.getOrElse("delta.columnMapping.mode", "none")
+
+  /** Logical → physical column names of a replayed state: under column
+    * mapping the log's partitionValues and stats keys are PHYSICAL
+    * names; otherwise the identity. */
+  private def physicalNames(st: LogState): String => String =
+    if (columnMappingMode(st) == "none") identity
+    else {
+      val m = schemaOf(st).fields.map(f => f.name -> physicalName(f)).toMap
+      n => m.getOrElse(n, n)
+    }
 
   private def physicalName(f: StructField): String =
     if (f.metadata.contains("delta.columnMapping.physicalName"))
@@ -931,8 +928,10 @@ object DeltaBridge {
     * data skipping can never have), so mixed numbers compare as
     * BigDecimal of their decimal rendering (driver-side, metadata-sized
     * — cost is irrelevant). Strings compare in UTF-8 byte order (what
-    * parquet ranked the rows by). NaN or a type mismatch is
-    * incomparable: None, the caller keeps the file. */
+    * parquet ranked the rows by). A `java.sql.Date` or `LocalDate`
+    * bound meets a logged `yyyy-MM-dd` string as a date. NaN, an
+    * unparseable date or a type mismatch is incomparable: None, the
+    * caller keeps the file. */
   private def numCmp(a: Any, b: Any): Option[Int] = (a, b) match {
     case (x: java.lang.Double, _) if x.isNaN => None
     case (_, y: java.lang.Double) if y.isNaN => None
@@ -952,8 +951,16 @@ object DeltaBridge {
     case (x: String, y: String) =>
       Some(java.util.Arrays.compareUnsigned(
         x.getBytes("UTF-8"), y.getBytes("UTF-8")))
+    case (x: java.sql.Date, y) => numCmp(x.toLocalDate, y)
+    case (x, y: java.sql.Date) => numCmp(x, y.toLocalDate)
+    case (x: String, y: java.time.LocalDate) => dateOf(x).map(_.compareTo(y))
+    case (x: java.time.LocalDate, y: String) => dateOf(y).map(x.compareTo(_))
     case _ => None
   }
+
+  private def dateOf(s: String): Option[java.time.LocalDate] =
+    try Some(java.time.LocalDate.parse(s))
+    catch { case _: java.time.format.DateTimeParseException => None }
 
   /** Replayed snapshot state for external composition —
     * [[DeltaBridgeSource]]'s FileIndex builds Catalyst-native partition
@@ -1005,33 +1012,56 @@ object DeltaBridge {
       st.live.toSeq.map { case (p, e) => (p, e.pv, e.stats) }))
   }
 
-  /** True iff `statsJson` PROVES no value of `column` satisfies
-    * `column <op> v` — the planner-facing generalization of
-    * [[readPruned]]'s `[lo, hi)` bounds ([[DeltaBridgeSource]]'s file
-    * skipping).
-    * Comparisons follow the same Number/UTF-8-string rules; anything
-    * unprovable keeps the file. */
-  private[sources] def statsExclude(statsJson: String, column: String,
-                                    op: String, v: Any): Boolean = try {
-    val stats = mapper.readValue(statsJson,
-      classOf[java.util.Map[String, AnyRef]])
-    def bound(key: String): Option[AnyRef] =
-      Option(stats.get(key))
-        .map(_.asInstanceOf[java.util.Map[String, AnyRef]])
-        .flatMap(m => Option(m.get(column)))
-    def cmp(a: Any, b: Any): Option[Int] = numCmp(a, b)
-    (bound("minValues"), bound("maxValues")) match {
-      case (Some(mn), Some(mx)) => op match {
-        case "="  => cmp(mx, v).exists(_ < 0) || cmp(mn, v).exists(_ > 0)
-        case ">"  => cmp(mx, v).exists(_ <= 0)
-        case ">=" => cmp(mx, v).exists(_ < 0)
-        case "<"  => cmp(mn, v).exists(_ >= 0)
-        case "<=" => cmp(mn, v).exists(_ > 0)
-        case _    => false
+  /** True iff `statsJson` PROVES some `(column, op, v)` check
+    * unsatisfiable — no value of `column` satisfies `column <op> v` —
+    * so a file that must pass every check can be skipped. The JSON is
+    * parsed once for all checks. [[filesInRange]]'s `[lo, hi)` bound is
+    * the checks `>= lo` and `< hi`; [[DeltaBridgeSource]]'s file
+    * skipping passes its pushed comparisons. Comparisons follow
+    * [[numCmp]]; anything unprovable keeps the file. */
+  private[sources] def statsExclude(statsJson: String,
+                                    checks: Seq[(String, String, Any)]): Boolean =
+    checks.nonEmpty && (try {
+      val stats = mapper.readValue(statsJson,
+        classOf[java.util.Map[String, AnyRef]])
+      def bound(key: String, column: String): Option[AnyRef] =
+        Option(stats.get(key))
+          .map(_.asInstanceOf[java.util.Map[String, AnyRef]])
+          .flatMap(m => Option(m.get(column)))
+      checks.exists { case (column, op, v) =>
+        (bound("minValues", column), bound("maxValues", column)) match {
+          case (Some(mn), Some(mx)) => op match {
+            case "="  => numCmp(mx, v).exists(_ < 0) || numCmp(mn, v).exists(_ > 0)
+            case ">"  => numCmp(mx, v).exists(_ <= 0)
+            case ">=" => numCmp(mx, v).exists(_ < 0)
+            case "<"  => numCmp(mn, v).exists(_ >= 0)
+            case "<=" => numCmp(mn, v).exists(_ > 0)
+            case _    => false
+          }
+          case _ => false
+        }
       }
-      case _ => false
-    }
-  } catch { case scala.util.control.NonFatal(_) => false }
+    } catch { case scala.util.control.NonFatal(_) => false })
+
+  /** The live paths of `st` whose logged `stats` do not prove `column`
+    * (a logical name) outside `[lo, hi)` — THE stats range check every
+    * stats-pruned read goes through. */
+  private def filesInRange(st: LogState, column: String, lo: Any,
+                           hi: Any): Seq[String] = {
+    val c = physicalNames(st)(column)
+    val checks = Seq((c, ">=", lo), (c, "<", hi))
+    st.live.iterator.collect {
+      case (p, e) if !e.stats.exists(statsExclude(_, checks)) => p
+    }.toSeq
+  }
+
+  /** The live paths at `versionAsOf` (None = head) that a
+    * [[readPruned]] of the same bound scans: every add whose logged
+    * `stats` do not prove `max < lo ∨ min >= hi` for `column`. */
+  def filesInRange(spark: SparkSession, table: String, column: String,
+                   lo: Any, hi: Any,
+                   versionAsOf: Option[Long] = None): Seq[String] =
+    filesInRange(readState(spark, table, versionAsOf), column, lo, hi)
 
   /** Stats-pruned snapshot read over `[lo, hi)` of `column` — the READER
     * half of Delta data skipping, consuming the same per-add `stats`
@@ -1043,10 +1073,11 @@ object DeltaBridge {
     * conservatively — every drop is proof-backed, so pruning is sound
     * for any log. Bounds compare numerically when the logged values and
     * the given bounds are both numbers, and in UTF-8 byte order when
-    * both are strings (the order parquet ranked the rows by). The caller
-    * still applies the row-level filter — pruning is file-granular, the
-    * same contract as [[TxLog.readPruned]] and every production Delta
-    * reader. */
+    * both are strings (the order parquet ranked the rows by), and as
+    * dates when a date bound meets a DATE column's logged `yyyy-MM-dd`.
+    * The caller still applies the row-level filter — pruning is
+    * file-granular, the contract of every production Delta reader. The
+    * files it scans are [[filesInRange]]'s. */
   def readPruned(spark: SparkSession, table: String, column: String,
                  lo: Any, hi: Any,
                  versionAsOf: Option[Long] = None): DataFrame =
@@ -1230,9 +1261,7 @@ object DeltaBridge {
         st.live += (a.getAs[String]("path") ->
           AddEntry(pv, field[String](a, "stats"), dv,
             field[Long](a, "size").getOrElse(0L),
-            field[Long](a, "modificationTime").getOrElse(0L),
-            field[scala.collection.Map[String, String]](a, "tags")
-              .map(_.toMap).getOrElse(Map.empty)))
+            field[Long](a, "modificationTime").getOrElse(0L)))
       }
       // remove tombstones: no-ops for the LIVE set in a fresh bootstrap
       // (see Scaladoc) but carried as state so a LATER checkpoint built

@@ -541,10 +541,11 @@ private[sources] class DeltaLogFileIndex(
     * (Spark re-applies them row-level anyway). */
   private def statsChecks(dataFilters: Seq[Expression])
       : Seq[(String, String, Any)] = {
-    def litOf(l: Literal): Option[Any] = l.value match {
-      case u: UTF8String => Some(u.toString)
-      case n: Number     => Some(n)
-      case _             => None
+    def litOf(l: Literal): Option[Any] = (l.value, l.dataType) match {
+      case (d: Integer, DateType) => Some(java.time.LocalDate.ofEpochDay(d.toLong))
+      case (u: UTF8String, _)     => Some(u.toString)
+      case (n: Number, _)         => Some(n)
+      case _                      => None
     }
     def flip(op: String): String = op match {
       case ">" => "<" case ">=" => "<=" case "<" => ">" case "<=" => ">="
@@ -583,8 +584,7 @@ private[sources] class DeltaLogFileIndex(
     val checks = statsChecks(dataFilters)
     val kept = entries.filter { case (_, pv, stats) =>
       partPred.forall(_.eval(rowOf(pv))) &&
-        !checks.exists { case (c, op, v) =>
-          stats.exists(DeltaBridge.statsExclude(_, c, op, v)) }
+        !stats.exists(DeltaBridge.statsExclude(_, checks))
     }
     kept.groupBy(_._2).toSeq.map { case (pv, files) =>
       PartitionDirectory(rowOf(pv), files.map(_._1).toArray)

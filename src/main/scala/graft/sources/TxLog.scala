@@ -23,8 +23,9 @@ import DeltaBridge.LogState
   *    `protocol` + `metaData` at version 0 (the metaData configuration
   *    carries [[Marker]]), a fresh `metaData` whenever the schema changes,
   *    `txn` for a streaming batch, `remove` and `add` actions (with
-  *    `partitionValues`, footer `stats`, deletion vectors, and the entry's
-  *    typed stats in `tags`). TxLog version k is Delta version k−1; every
+  *    `partitionValues`, deletion vectors, and footer `stats`: the one
+  *    statistics format, which [[DeltaBridge.filesInRange]] and every
+  *    Delta reader prune on). TxLog version k is Delta version k−1; every
   *    [[CheckpointInterval]]th version also writes a checkpoint. State is
   *    read back only through [[DeltaBridge]]'s replayer, so TxLog and any
   *    Delta reader see the same snapshot the moment a commit lands.
@@ -40,7 +41,7 @@ import DeltaBridge.LogState
   *    log prefix, so TIME TRAVEL (`read(asOf = k)`) and concurrent-writer
   *    isolation come for free. Half-written commits are invisible (temps
   *    live under a name the replay ignores).
-  *  - One reader: [[read]], [[readPruned]] and every rewrite scan turn
+  *  - One reader: [[read]] and every rewrite scan turn
   *    live adds into rows through [[DeltaBridge]]'s one builder
   *    ([[DeltaBridge.scanLive]]) under the replayed schema and partition
   *    columns, so `read(asOf = k)` is `DeltaBridge.read` of version k−1.
@@ -65,9 +66,6 @@ object TxLog {
     * it into their artifact key ([[layoutArtifact]]), so a copy built
     * under an older format is rebuilt instead of served. */
   val LogFormat = "delta3"
-
-  /** The add `tags` key holding an entry's typed stats (`lo#hi`). */
-  private val StatsTag = "graft.stats"
 
   /** The `txn` appId of an appId-less (V1 foreachBatch sink) batch. */
   private val V1AppId = "graft-stream-v1"
@@ -105,8 +103,8 @@ object TxLog {
     if (asOf.contains(0) || head(table) == 0) LogState()
     else DeltaBridge.readState(SparkSession.active, table, asOf.map(_ - 1L))
 
-  /** The live entries of a replayed state: path, then the `tags` stats,
-    * then the deletion vector — the same string the commit was given. */
+  /** The live entries of a replayed state: path, then the deletion
+    * vector — the same string the commit was given. */
   private def entries(st: LogState): Seq[String] =
     st.live.toSeq.map { case (p, e) =>
       val dv = e.dv.map { d =>
@@ -116,7 +114,7 @@ object TxLog {
         "#" + DvRef(DeletionVectors.uuidOfZ85(d.pathOrInlineDv).toString,
           d.offset.get, d.sizeInBytes, d.cardinality).enc
       }
-      p + e.tags.get(StatsTag).fold("")("#" + _) + dv.getOrElse("")
+      p + dv.getOrElse("")
     }
 
   /** True iff `table` is a TxLog table: its log carries [[Marker]]. */
@@ -131,116 +129,14 @@ object TxLog {
     layout.copy(kind = s"${layout.kind}_$LogFormat"), dir)(build)
 
   /** Live data-file ENTRIES (relative path, optionally suffixed
-    * `#min#max` file statistics) at `asOf` (None = HEAD). Remove lists
+    * `#dv:…`, its deletion vector) at `asOf` (None = HEAD). Remove lists
     * match entries verbatim, so entries — not bare paths — are the unit
     * of log bookkeeping; use [[entryPath]] to resolve a path. */
   def liveFiles(table: String, asOf: Option[Int] = None): Seq[String] =
     entries(state(table, asOf))
 
-  /** The data-file path of an add/live entry (strips the stats suffix). */
+  /** The data-file path of an add/live entry (strips the DV suffix). */
   def entryPath(entry: String): String = entry.takeWhile(_ != '#')
-
-  /** A TYPED per-file min/max statistic — the Iceberg-manifest value
-    * shape, self-describing in the entry suffix so a reader prunes
-    * without consulting the data schema. Wire form `<tag>:<enc>`:
-    * `l:` 64-bit integer (also covers int/short/byte), `d:` double
-    * (`java.lang.Double.toString`, exact round-trip), `s:` string
-    * (percent-encoded — '#', ':', quotes and non-ASCII can't corrupt
-    * the entry or the commit JSON), `a:` date as epoch days, `t:`
-    * timestamp as epoch micros. A bare untagged number (the original
-    * long-only format) still parses as `l` — old logs stay readable.
-    *
-    * Comparability is WITHIN a tag only: a bound of one type never
-    * prunes a file whose stats carry another (the reader keeps the file
-    * conservatively — pruning is an optimization, never a filter).
-    * String order is UTF-8 byte order (what parquet/Spark min/max use),
-    * NOT UTF-16 `compareTo` — they disagree above the BMP, and pruning
-    * must rank bounds exactly like the writer ranked rows. */
-  sealed trait StatValue {
-    def tag: Char
-    private[TxLog] def encBody: String
-    final def enc: String = s"$tag:$encBody"
-  }
-  object StatValue {
-    import java.nio.charset.StandardCharsets.UTF_8
-    final case class L(v: Long) extends StatValue {
-      val tag = 'l'; def encBody = v.toString
-    }
-    final case class D(v: Double) extends StatValue {
-      val tag = 'd'; def encBody = v.toString
-    }
-    final case class S(v: String) extends StatValue {
-      val tag = 's'
-      def encBody = java.net.URLEncoder.encode(v, UTF_8)
-    }
-    final case class Dt(epochDay: Long) extends StatValue {
-      val tag = 'a'; def encBody = epochDay.toString
-    }
-    final case class Ts(micros: Long) extends StatValue {
-      val tag = 't'; def encBody = micros.toString
-    }
-
-    /** A collected Spark value as a StatValue; None = type unsupported
-      * (decimal, binary, nested) → the file commits without stats and
-      * every read keeps it. Float widens to double exactly (binary32 ⊂
-      * binary64). */
-    def of(x: Any): Option[StatValue] = x match {
-      case null                     => None
-      case v: Long                  => Some(L(v))
-      case v: Int                   => Some(L(v.toLong))
-      case v: Short                 => Some(L(v.toLong))
-      case v: Byte                  => Some(L(v.toLong))
-      case v: Double                => Some(D(v))
-      case v: Float                 => Some(D(v.toDouble))
-      case v: String                => Some(S(v))
-      case v: java.sql.Date         => Some(Dt(v.toLocalDate.toEpochDay))
-      case v: java.time.LocalDate   => Some(Dt(v.toEpochDay))
-      case v: java.sql.Timestamp =>
-        val i = v.toInstant
-        Some(Ts(i.getEpochSecond * 1000000L + i.getNano / 1000L))
-      case v: java.time.Instant =>
-        Some(Ts(v.getEpochSecond * 1000000L + v.getNano / 1000L))
-      case _                        => None
-    }
-
-    /** Parse one entry field; bare numbers are legacy long stats. */
-    def decode(field: String): Option[StatValue] = {
-      def num(s: String): Option[Long] =
-        try Some(s.toLong) catch { case _: NumberFormatException => None }
-      if (field.length >= 2 && field(1) == ':') {
-        val body = field.substring(2)
-        field(0) match {
-          case 'l' => num(body).map(L(_))
-          case 'a' => num(body).map(Dt(_))
-          case 't' => num(body).map(Ts(_))
-          case 'd' =>
-            try Some(D(body.toDouble))
-            catch { case _: NumberFormatException => None }
-          case 's' =>
-            // a corrupt percent sequence ('%', '%zz') must degrade to None
-            // like every other malformed suffix — one bad log entry must
-            // never fail a whole liveFilesWithTypedStats/read
-            try Some(S(java.net.URLDecoder.decode(body, UTF_8)))
-            catch { case _: IllegalArgumentException => None }
-          case _ => None
-        }
-      } else num(field).map(L(_))
-    }
-
-    /** a <= b within a tag; None when incomparable (different tags, or a
-      * NaN bound/stat — the caller keeps the file in both cases). */
-    def lteq(a: StatValue, b: StatValue): Option[Boolean] = (a, b) match {
-      case (L(x), L(y))   => Some(x <= y)
-      case (Dt(x), Dt(y)) => Some(x <= y)
-      case (Ts(x), Ts(y)) => Some(x <= y)
-      case (D(x), D(y)) =>
-        if (x.isNaN || y.isNaN) None else Some(x <= y)
-      case (S(x), S(y)) =>
-        val (bx, by) = (x.getBytes(UTF_8), y.getBytes(UTF_8))
-        Some(java.util.Arrays.compareUnsigned(bx, by) <= 0)
-      case _ => None
-    }
-  }
 
   /** A WRITER-SIDE deletion vector riding a log entry — merge-on-read
     * DELETE ([[deleteWhereDv]]): the entry's data file stays in place and
@@ -249,9 +145,9 @@ object TxLog {
     * Delta `deletionVector` descriptor). Wire form, one `#`-separated
     * entry field:
     * `dv:<uuid-hex>:<offset>:<size>:<cardinality>` — the uuid in HEX, not
-    * z85 (the z85 alphabet contains both '#' and ':'). Unlike stats, a
-    * malformed DV field FAILS LOUD: dropping it silently would resurrect
-    * deleted rows. */
+    * z85 (the z85 alphabet contains both '#' and ':'). A malformed DV
+    * field FAILS LOUD: dropping it silently would resurrect deleted
+    * rows. */
   private[sources] final case class DvRef(uuid: String, offset: Int,
                                           size: Int, cardinality: Long) {
     def enc: String = s"dv:$uuid:$offset:$size:$cardinality"
@@ -276,45 +172,6 @@ object TxLog {
       }
     }
 
-  /** The non-DV fields of an entry (path + stats) — what a DV update
-    * preserves when it re-publishes the entry under a new vector. */
-  private def entryWithoutDv(entry: String): Seq[String] =
-    entry.split('#').toSeq.filterNot(_.startsWith("dv:"))
-
-  /** Live (path, Option(min, max)) pairs with TYPED statistics — what an
-    * [[appendWithStats]] writer recorded in its commit, any supported
-    * column type. Malformed or legacy-unparseable suffixes degrade to
-    * None (file kept on every read), never to an error. DV fields are
-    * transparent here (stats stay sound under deletion — bounds only
-    * ever over-approximate). */
-  def liveFilesWithTypedStats(table: String, asOf: Option[Int] = None)
-      : Seq[(String, Option[(StatValue, StatValue)])] =
-    typedStats(liveFiles(table, asOf))
-
-  private def typedStats(entries: Seq[String])
-      : Seq[(String, Option[(StatValue, StatValue)])] =
-    entries.map { e =>
-      e.split('#').filterNot(_.startsWith("dv:")) match {
-        case Array(p, lo, hi) =>
-          (StatValue.decode(lo), StatValue.decode(hi)) match {
-            case (Some(a), Some(b)) => (p, Some((a, b)))
-            case _                  => (p, None)
-          }
-        case _ => (entryPath(e), None)
-      }
-    }
-
-  /** Live (path, Option(min, max)) pairs of LONG statistics — the original
-    * stats API, kept for integer-keyed tables. Non-long typed stats parse
-    * to None here (the caller keeps those files conservatively). */
-  def liveFilesWithStats(table: String, asOf: Option[Int] = None)
-      : Seq[(String, Option[(Long, Long)])] =
-    liveFilesWithTypedStats(table, asOf).map {
-      case (p, Some((StatValue.L(lo), StatValue.L(hi)))) =>
-        (p, Some((lo, hi)))
-      case (p, _) => (p, None)
-    }
-
   /** Snapshot read; empty-schema-safe only when the table has data.
     * The same DataFrame [[DeltaBridge.read]] builds for Delta version
     * `asOf` − 1: the logged schema, partition columns re-attached under
@@ -334,86 +191,10 @@ object TxLog {
                    entries: Seq[String]): DataFrame =
     DeltaBridge.scanLive(spark, table, st, entries.map(entryPath))
 
-  /** Paths of live files whose [min, max] stats intersect [lo, hi) — the
-    * lakehouse DATA-SKIPPING read: predicate bounds prune at the manifest
-    * (metadata) level before any scan. Files committed without stats are
-    * conservatively kept. */
-  def pruneFiles(table: String, lo: Long, hi: Long,
-                 asOf: Option[Int] = None): Seq[String] =
-    pruneFilesTyped(table, StatValue.L(lo), StatValue.L(hi), asOf)
-
-  /** Typed-bound pruning: keep a file unless its stats PROVE
-    * max < lo ∨ min >= hi (the [lo, hi) half-open complement). Proof
-    * requires same-tag comparability — stats of another type, absent
-    * stats, or NaN anywhere keep the file. Sound by construction: every
-    * drop is backed by a definite comparison. */
-  def pruneFilesTyped(table: String, lo: StatValue, hi: StatValue,
-                      asOf: Option[Int] = None): Seq[String] =
-    prune(liveFiles(table, asOf), lo, hi).map(entryPath)
-
-  /** The entries whose typed stats do not prove them outside [lo, hi). */
-  private def prune(entries: Seq[String], lo: StatValue,
-                    hi: StatValue): Seq[String] =
-    entries.zip(typedStats(entries)).collect {
-      case (e, (_, Some((mn, mx))))
-          if StatValue.lteq(lo, mx).contains(true) &&
-             StatValue.lteq(hi, mn).contains(false) => e
-      case (e, (_, None)) => e
-      case (e, (_, Some((mn, mx))))
-          if StatValue.lteq(lo, mx).isEmpty ||
-             StatValue.lteq(hi, mn).isEmpty => e
-    }
-
-  /** Stats-pruned snapshot read over [lo, hi) of the stats column. The
-    * caller still applies the row-level filter — pruning is file-granular
-    * and sound (never drops a file that could match), not exact. DV'd
-    * entries among the survivors filter their deleted rows. */
-  def readPruned(spark: SparkSession, table: String, lo: Long, hi: Long,
-                 asOf: Option[Int] = None): DataFrame = {
-    val st = state(table, asOf)
-    val kept = prune(entries(st), StatValue.L(lo), StatValue.L(hi))
-    require(kept.nonEmpty, s"no candidate files in $table for [$lo, $hi)")
-    scan(spark, table, st, kept)
-  }
-
   /** Append `df` as a new commit; returns the committed version. */
   def append(spark: SparkSession, df: DataFrame, table: String,
              partFiles: Int = 2): Int =
     commit(table, add = stage(df, table, partFiles), remove = Seq.empty)
-
-  /** Append with per-file (min, max) statistics of `statsCol` recorded in
-    * the commit — the Iceberg-manifest shape: stats are collected in ONE
-    * distributed pass over the just-staged files (group by
-    * input_file_name) at WRITE time, so every later [[readPruned]] /
-    * [[pruneFilesTyped]] prunes from metadata alone. Any [[StatValue]]-
-    * supported column type (integer, double, string, date, timestamp)
-    * records typed stats; unsupported types (decimal, binary, nested)
-    * commit without stats and stay un-prunable — never an error.
-    * Range-partition `df` by the stats column first and the per-file
-    * ranges come out tight (disjoint), which is what makes the pruning
-    * selective. */
-  def appendWithStats(spark: SparkSession, df: DataFrame, table: String,
-                      statsCol: String, partFiles: Int = 8): Int = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    val rels = stage(df, table, partFiles)
-    val stats = graft.Tables.parquet(spark, rels.map(f => s"$table/$f"): _*)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col(statsCol)).as("lo"), max(col(statsCol)).as("hi"))
-      .collect()
-      .flatMap { r =>
-        (StatValue.of(r.get(1)), StatValue.of(r.get(2))) match {
-          case (Some(lo), Some(hi)) => Some((r.getString(0), lo, hi))
-          case _                    => None // all-null or unsupported type
-        }
-      }
-    val entries = rels.map { rel =>
-      stats.find(_._1.endsWith(rel)) match {
-        case Some((_, lo, hi)) => s"$rel#${lo.enc}#${hi.enc}"
-        case None              => rel // zero-row file: no stats, kept conservatively
-      }
-    }
-    commit(table, add = entries, remove = Seq.empty)
-  }
 
   /** Append `df` as a new commit with HIVE-LAYOUT partitioning: part files
     * land under `stage-&#42;` + `col1=v1/col2=v2` + `part-&#42;.parquet`,
@@ -655,11 +436,12 @@ object TxLog {
     *  - `txn` for a streaming batch;
     *  - `remove` per removed entry, dated for tombstone retention;
     *  - `add` per added entry: `partitionValues` from the Hive path,
-    *    footer `stats`, the entry's typed stats in `tags`, and its
-    *    `deletionVector`.
+    *    footer `stats` ([[fileStatsJson]] — the table's one statistics
+    *    format) and its `deletionVector`.
     *
-    * Partition columns are fixed by the first data-bearing commit; an
-    * add whose layout disagrees fails the commit loud (mixed layouts
+    * An added entry is `path[#dv:…]`; any other suffix fails the commit
+    * loud. Partition columns are fixed by the first data-bearing commit;
+    * an add whose layout disagrees fails the commit loud (mixed layouts
     * cannot share one Delta log). A file that does not exist commits
     * with size 0 and no stats or schema, and needs no session. */
   private def deltaActions(table: String, v: Int, st: LogState,
@@ -667,6 +449,9 @@ object TxLog {
                            txn: Option[(String, Long)]): String = {
     lazy val spark = SparkSession.active
     lazy val footerConf = spark.sessionState.newHadoopConf()
+    add.foreach(e => require(e.split('#').drop(1).forall(_.startsWith("dv:")),
+      s"commit to $table: entry $e carries a field other than its " +
+        "deletion vector (entries are path[#dv:…])"))
     val now = java.lang.Long.valueOf(System.currentTimeMillis())
     val addPaths = add.map(entryPath)
     val footers = addPaths.map(p => Some(Paths.get(table, p))
@@ -736,7 +521,6 @@ object TxLog {
       val f = Paths.get(table, entryPath(e))
       val exists = Files.exists(f)
       val dv = entryDv(e)
-      val stats = entryWithoutDv(e).drop(1).mkString("#")
       val fields = ListMap[String, AnyRef](
         "path" -> entryPath(e),
         "partitionValues" -> pv.asJava,
@@ -747,8 +531,6 @@ object TxLog {
         // a DV'd add keeps numRecords as the file's PHYSICAL count, with
         // tightBounds=false: the extreme row may be deleted
         footer.flatMap(fileStatsJson(_, tight = dv.isEmpty)).map("stats" -> _) ++
-        Option.when(stats.nonEmpty)(
-          "tags" -> java.util.Map.of(StatsTag, stats)) ++
         dv.map { ref =>
           val d = ref.descriptor
           "deletionVector" -> Map[String, AnyRef](
@@ -810,9 +592,10 @@ object TxLog {
     * never a data scan, so a commit stays metadata-priced). Columns
     * covered: top-level int/long (as JSON numbers), float/double (as
     * numbers, NaN-bearing groups skipped — NaN bounds are unordered and
-    * a reader skipping on them would be unsound), and UTF-8 strings
-    * (parquet's truncation keeps truncated bounds SOUND: min truncates
-    * down, max rounds up). Other types contribute nullCount only.
+    * a reader skipping on them would be unsound), dates (as Delta's
+    * `yyyy-MM-dd` strings) and UTF-8 strings (parquet's truncation keeps
+    * truncated bounds SOUND: min truncates down, max rounds up). Other
+    * types, TIMESTAMP among them, contribute nullCount only.
     * Best-effort: any footer surprise yields an add without stats —
     * stats are an optimization, never a correctness dependency. */
   private def fileStatsJson(footer: ParquetMetadata,
@@ -861,6 +644,14 @@ object TxLog {
                 _.genericGetMax.asInstanceOf[Number].longValue()).max
               mins.put(name, java.lang.Long.valueOf(lo))
               maxs.put(name, java.lang.Long.valueOf(hi))
+            case INT32
+                if logical.isInstanceOf[
+                  LogicalTypeAnnotation.DateLogicalTypeAnnotation] =>
+              def day(v: Any): Int = v.asInstanceOf[Number].intValue()
+              mins.put(name, java.time.LocalDate.ofEpochDay(
+                valued.map(s => day(s.genericGetMin)).min).toString)
+              maxs.put(name, java.time.LocalDate.ofEpochDay(
+                valued.map(s => day(s.genericGetMax)).max).toString)
             case FLOAT | DOUBLE =>
               val los = valued.map(
                 _.genericGetMin.asInstanceOf[Number].doubleValue())
@@ -1532,9 +1323,8 @@ object TxLog {
     val (uuid, spans) = DeletionVectors.writeDvFileRef(table,
       ordered.map(_._2))
     ordered.zip(spans).map { case ((e, vals), (off, sz)) =>
-      (entryWithoutDv(e) :+
-        DvRef(uuid.toString, off, sz, vals.length.toLong).enc)
-        .mkString("#")
+      entryPath(e) + "#" +
+        DvRef(uuid.toString, off, sz, vals.length.toLong).enc
     }
   }
 
@@ -1549,12 +1339,13 @@ object TxLog {
     * (a mostly-deleted file SHOULD compact). An already-DV'd file's new
     * deletions UNION into a fresh vector (the old sidecar becomes
     * unreferenced garbage, like any superseded stage file). Every read
-    * path honors the vectors — [[read]]/[[readPruned]]/the rewrite
-    * kernels here, and the commit publishes them as Delta
+    * path honors the vectors — [[read]], the rewrite kernels here and
+    * [[DeltaBridge.read]], and the commit publishes them as Delta
     * `deletionVector` descriptors (with the protocol upgraded to
     * readerVersion 3 + deletionVectors), so foreign readers and the
-    * native catalog mounts agree. ONE commit, OCC-safe; stats fields
-    * survive (deletion only shrinks the value set — bounds stay sound).
+    * native catalog mounts agree. ONE commit, OCC-safe; the re-published
+    * add keeps its footer `stats` under `tightBounds=false` (deletion
+    * only shrinks the value set — bounds stay sound).
     *
     * Scale shape: one predicate scan computes per-file hit/total counts
     * (metadata-sized result); row INDICES come to the driver only for

@@ -184,7 +184,7 @@ class OperatorPropertiesSpec extends SparkSpec {
       val (yl, yh) = (math.min(y1, y2), math.max(y1, y2))
       assert(TableOps.mortonOf(xl, yl) <= TableOps.mortonOf(xh, yh))
       // any in-box point's z lies within the corner z-interval — the
-      // exact property pruneFiles relies on
+      // exact property z-range pruning (DeltaBridge.filesInRange) relies on
       val (px, py) = ((xl + xh) / 2, (yl + yh) / 2)
       val z = TableOps.mortonOf(px, py)
       assert(TableOps.mortonOf(xl, yl) <= z && z <= TableOps.mortonOf(xh, yh))

@@ -96,7 +96,7 @@ class TableOpsSpec extends SparkSpec {
   test("q301 zorder: the box result equals a full-scan filter, files are " +
     "skipped, and z-clustering out-prunes a 1-D custkey sort layout") {
     import org.apache.spark.sql.functions._
-    import graft.sources.TxLog
+    import graft.sources.{DeltaBridge, TxLog}
     val out = TableOps.q301ZorderBox(spark, sf).head()
     assert(out.getAs[Boolean]("files_skipped"))
     // ground truth: full-scan box filter
@@ -123,7 +123,7 @@ class TableOpsSpec extends SparkSpec {
     val zHi = morton(nrm(k2, klo, khi), nrm(d2, dlo, dhi)) + 1
     val ztab = graft.sources.TxLog.layoutArtifact(
       TableOps.ZorderTblLayout, sf)(_ => ())
-    val zKept = TxLog.pruneFiles(ztab, zLo, zHi).size
+    val zKept = DeltaBridge.filesInRange(spark, ztab, "z", zLo, zHi).size
     assert(zKept < TxLog.liveFiles(ztab).size,
       "z-layout must skip files for the 2-D box")
     // contrast: the SAME z column + stats over a custkey-SORTED layout —
@@ -141,8 +141,8 @@ class TableOpsSpec extends SparkSpec {
         s"CAST((oday - $dlo) * 65535L DIV ${math.max(dhi - dlo, 1L)}L AS INT) AS yn")
       .selectExpr("o_custkey", "oday", zn)
       .repartitionByRange(16, col("o_custkey")) // 1-D layout
-    TxLog.appendWithStats(spark, linear, linT, "z", partFiles = 8)
-    val linKept = TxLog.pruneFiles(linT, zLo, zHi).size
+    TxLog.append(spark, linear, linT, partFiles = 8)
+    val linKept = DeltaBridge.filesInRange(spark, linT, "z", zLo, zHi).size
     assert(zKept < linKept,
       s"z-layout ($zKept files) must out-prune the 1-D sort ($linKept)")
   }

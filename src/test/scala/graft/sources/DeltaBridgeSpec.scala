@@ -385,6 +385,36 @@ class DeltaBridgeSpec extends SparkSpec {
         s"${scan.metrics("numFiles").value}")
   }
 
+  test("DATE bounds reach the planner: readPruned and a native scan with " +
+    "d >= DATE skip a disjoint file, an all-null date file is kept") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val t = freshTable()
+    def dated(id0: Long, ds: String*) = ds.zipWithIndex.map { case (d, i) =>
+      (id0 + i, Option(d).map(java.sql.Date.valueOf)) }.toDF("id", "d").coalesce(1)
+    TxLog.append(spark, dated(0L, "2024-01-01", "2024-03-31"), t, 1)
+    TxLog.append(spark, dated(10L, "2024-07-01", "2024-09-30"), t, 1)
+    TxLog.append(spark, dated(20L, null, null), t, 1)
+    val day = java.time.LocalDate.parse(_: String)
+    // [2024-06-01, 2025-01-01): the Q1 file drops, the null file stays
+    val pruned = DeltaBridge.readPruned(spark, t, "d",
+      day("2024-06-01"), day("2025-01-01"))
+    assert(pruned.inputFiles.length == 2, pruned.inputFiles.toSeq)
+    assert(pruned.collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(10L, 11L, 20L, 21L))
+    // java.sql.Date bounds between the two ranges keep only the null file
+    assert(DeltaBridge.filesInRange(spark, t, "d",
+      java.sql.Date.valueOf("2024-04-01"), java.sql.Date.valueOf("2024-07-01"))
+      .size == 1)
+    // the native relation's pushed DATE literal prunes the same file
+    val native = spark.read.format("graft-delta").load(t)
+      .filter("d >= DATE'2024-06-01'")
+    assert(native.collect().map(_.getLong(0)).sorted.toSeq == Seq(10L, 11L))
+    val scan = native.queryExecution.executedPlan.collectFirst {
+      case f: FileSourceScanExec => f }.get
+    assert(scan.metrics("numFiles").value == 2,
+      s"DATE stats must skip the Q1 file, read ${scan.metrics("numFiles").value}")
+  }
+
   test("NATIVE relation: spark.read.format mounts the log, Catalyst prunes " +
     "partitions through the log-backed FileIndex, stats skip files at " +
     "planning time, versionAsOf time-travels") {

@@ -44,7 +44,7 @@ class TxLogDeltaLogSpec extends SparkSpec {
     val t = freshTable()
     def rows(r: Range) = r.map(i => (i.toLong, s"v$i")).toDF("k", "s")
     TxLog.append(spark, rows(0 until 40), t, partFiles = 2)
-    TxLog.appendWithStats(spark, rows(100 until 140), t, "k", partFiles = 2)
+    TxLog.append(spark, rows(100 until 140), t, partFiles = 2)
     TxLog.overwrite(spark, rows(0 until 60), t, partFiles = 3)
     assertAgree(t)
     TxLog.merge(spark, Seq((5L, "m"), (500L, "n")).toDF("k", "s"), t, "k")

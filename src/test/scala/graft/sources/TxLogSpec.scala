@@ -16,6 +16,36 @@ class TxLogSpec extends SparkSpec {
     xs.toDF("k", "s")
   }
 
+  /** Each live add's logged (min, max) of `column` in its Delta `stats`,
+    * in log order; None when the add logs no bound for it. */
+  private def bounds(t: String, column: String): Seq[Option[(AnyRef, AnyRef)]] =
+    DeltaBridge.readState(spark, t, None).live.values.toSeq.map { e =>
+      e.stats.flatMap { js =>
+        val m = DeltaBridge.mapper.readValue(js,
+          classOf[java.util.Map[String, AnyRef]])
+        def b(k: String) = Option(m.get(k))
+          .flatMap(x => Option(x.asInstanceOf[java.util.Map[String, AnyRef]]
+            .get(column)))
+        for (lo <- b("minValues"); hi <- b("maxValues")) yield (lo, hi)
+      }
+    }
+
+  /** Rewrite every add of Delta version `v` of `t` in place — a
+    * hand-edited log, as a foreign or damaged writer would leave it. */
+  private def editAdds(t: String, v: Long)(
+      f: java.util.Map[String, AnyRef] => Unit): Unit = {
+    val file = DeltaBridge.deltaVersionFile(t, v)
+    val edited = Files.readAllLines(file).toArray(Array.empty[String])
+      .filter(_.nonEmpty).map { line =>
+        val m = DeltaBridge.mapper.readValue(line,
+          classOf[java.util.Map[String, AnyRef]])
+        Option(m.get("add")).foreach(a =>
+          f(a.asInstanceOf[java.util.Map[String, AnyRef]]))
+        DeltaBridge.mapper.writeValueAsString(m)
+      }.mkString("", "\n", "\n")
+    Files.writeString(file, edited)
+  }
+
   test("append/read roundtrip and version numbering") {
     val t = freshTable()
     assert(TxLog.versions(t).isEmpty)
@@ -186,29 +216,33 @@ class TxLogSpec extends SparkSpec {
     "stat-less files conservatively, and agree with the full scan") {
     import spark.implicits._
     val t = freshTable()
-    // two stats-bearing commits with disjoint key ranges + one legacy
-    // (stat-less) append that pruning must never drop
-    TxLog.appendWithStats(spark,
-      (1L to 10L).map(k => (k, s"v$k")).toDF("k", "s"), t, "k", partFiles = 1)
-    TxLog.appendWithStats(spark,
-      (100L to 110L).map(k => (k, s"v$k")).toDF("k", "s"), t, "k", partFiles = 1)
-    TxLog.append(spark, Seq((5000L, "legacy")).toDF("k", "s"), t, partFiles = 1)
-    assert(TxLog.liveFilesWithStats(t).count(_._2.isDefined) == 2)
-    // [0, 50) matches only the first file — plus the stat-less one
-    val kept = TxLog.pruneFiles(t, 0L, 50L)
-    assert(kept.size == 2, s"expected first + legacy file, got $kept")
-    val pruned = TxLog.readPruned(spark, t, 0L, 50L)
+    // one add whose stats are stripped from the log (pruning must never
+    // drop it) + two commits with disjoint key ranges
+    TxLog.append(spark, Seq((5000L, "stat-less")).toDF("k", "s"), t, partFiles = 1)
+    editAdds(t, 0)(_.remove("stats"))
+    TxLog.append(spark,
+      (1L to 10L).map(k => (k, s"v$k")).toDF("k", "s"), t, partFiles = 1)
+    TxLog.append(spark,
+      (100L to 110L).map(k => (k, s"v$k")).toDF("k", "s"), t, partFiles = 1)
+    assert(bounds(t, "k").count(_.isDefined) == 2)
+    // [0, 50) matches only the first ranged file — plus the stat-less one
+    val kept = DeltaBridge.filesInRange(spark, t, "k", 0L, 50L)
+    assert(kept.size == 2, s"expected first + stat-less file, got $kept")
+    val pruned = DeltaBridge.readPruned(spark, t, "k", 0L, 50L)
       .filter(col("k") < 50L).collect().map(_.getLong(0)).toSet
     val full = TxLog.read(spark, t)
       .filter(col("k") < 50L).collect().map(_.getLong(0)).toSet
     assert(pruned == full && full == (1L to 10L).toSet)
     // stats survive the log round-trip with exact bounds
-    val stats = TxLog.liveFilesWithStats(t).flatMap(_._2).sortBy(_._1)
+    val stats = bounds(t, "k").flatten.map { case (lo, hi) =>
+      (lo.asInstanceOf[Number].longValue(), hi.asInstanceOf[Number].longValue())
+    }.sortBy(_._1)
     assert(stats == Seq((1L, 10L), (100L, 110L)))
-    // merge/vacuum interop: entries with stats still resolve to paths
+    // merge interop: the rewritten file commits fresh stats
     TxLog.merge(spark, Seq((5L, "V5")).toDF("k", "s"), t, "k")
     assert(TxLog.read(spark, t).filter(col("k") === 5L)
       .head().getString(1) == "V5")
+    assert(bounds(t, "k").count(_.isEmpty) == 1)
   }
 
   test("vacuum deletes only unreferenced files; head reads survive, " +
@@ -261,73 +295,113 @@ class TxLogSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
-  test("typed stats: string and date columns prune, doubles round-trip, " +
-    "legacy untagged entries still parse, cross-type bounds keep") {
+  test("Delta stats: string and date columns prune, doubles round-trip, " +
+    "cross-type bounds keep") {
     import spark.implicits._
-    import TxLog.StatValue
     val t = freshTable()
     // string-keyed table: two files with disjoint lexical ranges
-    TxLog.appendWithStats(spark,
+    TxLog.append(spark,
       Seq("apple", "banana", "cherry").map(s => (s, 1L)).toDF("name", "x"),
-      t, "name", partFiles = 1)
-    TxLog.appendWithStats(spark,
+      t, partFiles = 1)
+    TxLog.append(spark,
       Seq("melon", "peach", "zz#q:u\"ote").map(s => (s, 2L)).toDF("name", "x"),
-      t, "name", partFiles = 1)
-    val typed = TxLog.liveFilesWithTypedStats(t).flatMap(_._2)
-    assert(typed == Seq(
-      (StatValue.S("apple"), StatValue.S("cherry")),
-      (StatValue.S("melon"), StatValue.S("zz#q:u\"ote"))),
-      s"string stats must round-trip exactly (incl. '#', ':' and quotes): $typed")
+      t, partFiles = 1)
+    val logged = bounds(t, "name")
+    assert(logged == Seq(Some(("apple", "cherry")), Some(("melon", "zz#q:u\"ote"))),
+      s"string stats must round-trip exactly (incl. '#', ':' and quotes): $logged")
     // ["a", "d") proves the second file can't match
-    val kept = TxLog.pruneFilesTyped(t, StatValue.S("a"), StatValue.S("d"))
-    assert(kept.size == 1)
+    assert(DeltaBridge.filesInRange(spark, t, "name", "a", "d").size == 1)
     // a LONG bound over string stats is incomparable → keep everything
-    assert(TxLog.pruneFilesTyped(t, StatValue.L(0), StatValue.L(9)).size == 2)
-    // and the legacy long API sees no long stats → keeps everything
-    assert(TxLog.pruneFiles(t, 0L, 9L).size == 2)
+    assert(DeltaBridge.filesInRange(spark, t, "name", 0L, 9L).size == 2)
 
     // double stats round-trip exactly (Double.toString is injective)
     val td = freshTable()
-    TxLog.appendWithStats(spark,
+    TxLog.append(spark,
       Seq(0.1, 2.5000000001, -3.75).map(d => (d, 1L)).toDF("v", "x"),
-      td, "v", partFiles = 1)
-    assert(TxLog.liveFilesWithTypedStats(td).flatMap(_._2) ==
-      Seq((StatValue.D(-3.75), StatValue.D(2.5000000001))))
-    assert(TxLog.pruneFilesTyped(td, StatValue.D(3.0), StatValue.D(9.0)).isEmpty)
-    assert(TxLog.pruneFilesTyped(td, StatValue.D(0.0), StatValue.D(1.0)).size == 1)
+      td, partFiles = 1)
+    assert(bounds(td, "v") ==
+      Seq(Some((Double.box(-3.75), Double.box(2.5000000001)))))
+    assert(DeltaBridge.filesInRange(spark, td, "v", 3.0, 9.0).isEmpty)
+    assert(DeltaBridge.filesInRange(spark, td, "v", 0.0, 1.0).size == 1)
 
-    // date stats land as epoch-day 'a' tags and prune half-open
+    // date stats land as Delta's yyyy-MM-dd strings and prune half-open
     val ta = freshTable()
-    TxLog.appendWithStats(spark,
+    TxLog.append(spark,
       Seq("2024-01-01", "2024-06-30").map(s => (java.sql.Date.valueOf(s), 1L))
-        .toDF("d", "x"), ta, "d", partFiles = 1)
-    val day = (s: String) =>
-      StatValue.Dt(java.time.LocalDate.parse(s).toEpochDay)
-    assert(TxLog.pruneFilesTyped(ta, day("2024-07-01"), day("2025-01-01")).isEmpty)
-    assert(TxLog.pruneFilesTyped(ta, day("2024-06-30"), day("2025-01-01")).size == 1)
+        .toDF("d", "x"), ta, partFiles = 1)
+    assert(bounds(ta, "d") == Seq(Some(("2024-01-01", "2024-06-30"))))
+    val day = java.time.LocalDate.parse(_: String)
+    assert(DeltaBridge.filesInRange(spark, ta, "d",
+      day("2024-07-01"), day("2025-01-01")).isEmpty)
+    assert(DeltaBridge.filesInRange(spark, ta, "d",
+      day("2024-06-30"), day("2025-01-01")).size == 1)
+    assert(DeltaBridge.filesInRange(spark, ta, "d",
+      java.sql.Date.valueOf("2023-01-01"), java.sql.Date.valueOf("2024-01-01"))
+      .isEmpty)
+  }
 
-    // legacy untagged entry written by an old log parses as long stats
-    val tl = freshTable()
-    TxLog.append(spark, df(3L -> "a"), tl, partFiles = 1)
-    val legacy = TxLog.liveFiles(tl).head
-    TxLog.commit(tl, add = Seq(s"$legacy#3#9"), remove = Seq(legacy))
-    assert(TxLog.liveFilesWithStats(tl).flatMap(_._2) == Seq((3L, 9L)))
-    assert(TxLog.pruneFiles(tl, 10L, 20L).isEmpty)
-    assert(TxLog.pruneFiles(tl, 9L, 20L).size == 1)
-
-    // a CORRUPT percent sequence in a string stat degrades to None (file
-    // kept, no error) — one bad log entry must never fail the whole read
-    for (bad <- Seq("s:%", "s:%zz", "s:abc%f")) {
-      assert(StatValue.decode(bad).isEmpty, s"'$bad' must decode to None")
+  test("a commit given an entry suffix other than a deletion vector fails " +
+    "loud and lands nothing") {
+    val t = freshTable()
+    TxLog.append(spark, df(3L -> "a"), t, partFiles = 1)
+    val entry = TxLog.liveFiles(t).head
+    val err = intercept[IllegalArgumentException] {
+      TxLog.commit(t, add = Seq(s"$entry#3#9"), remove = Seq(entry))
     }
-    val tc = freshTable()
-    TxLog.append(spark, df(5L -> "a"), tc, partFiles = 1)
-    val entry = TxLog.liveFiles(tc).head
-    TxLog.commit(tc, add = Seq(s"$entry#s:%#s:%zz"), remove = Seq(entry))
-    assert(TxLog.liveFilesWithTypedStats(tc) ==
-      Seq((entry, None)), "corrupt stats must keep the file, statless")
-    assert(TxLog.pruneFilesTyped(tc,
-      StatValue.S("x"), StatValue.S("y")).size == 1)
+    assert(err.getMessage.contains("deletion vector"), err.getMessage)
+    assert(TxLog.versions(t) == Seq(1) && TxLog.liveFiles(t) == Seq(entry))
+    assert(TxLog.read(spark, t).collect().map(_.getLong(0)).toSeq == Seq(3L))
+  }
+
+  test("a hand-corrupted stats JSON keeps its file on every pruned read") {
+    val t = freshTable()
+    TxLog.append(spark, df(5L -> "a"), t, partFiles = 1)
+    TxLog.append(spark, df(6L -> "b"), t, partFiles = 1)
+    TxLog.append(spark, df(50L -> "c"), t, partFiles = 1)
+    // version 0: truncated JSON; version 1: bounds of the wrong type
+    editAdds(t, 0)(_.put("stats", "{\"minValues\":{\"k\":5"))
+    editAdds(t, 1)(_.put("stats",
+      "{\"minValues\":{\"k\":\"x\"},\"maxValues\":{\"k\":[6]}}"))
+    // [100, 200): only the intact add proves itself out
+    assert(DeltaBridge.filesInRange(spark, t, "k", 100L, 200L).size == 2)
+    assert(DeltaBridge.readPruned(spark, t, "k", 0L, 10L)
+      .filter(col("k") < 10L).collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(5L, 6L))
+  }
+
+  test("pruning survives rewrites: files optimize, merge and updateWhere " +
+    "commit still skip, and pruned rows equal the full-scan filter") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.input_file_name
+    val t = freshTable()
+    def rows(ks: Seq[Long]) = ks.map(k => (k, s"v$k")).toDF("k", "s")
+    // key groups 0-9, 100-109 and 1000-1009: no file ever holds keys
+    // between groups, so the pruner keeps exactly the files with a hit
+    TxLog.append(spark, rows(0L to 9L), t, partFiles = 1)
+    TxLog.append(spark, rows(100L to 109L), t, partFiles = 1)
+    def check(op: String): Unit =
+      Seq((0L, 50L), (100L, 200L), (1000L, 2000L)).foreach { case (lo, hi) =>
+        val live = TxLog.liveFiles(t)
+        val kept = DeltaBridge.filesInRange(spark, t, "k", lo, hi)
+        val full = TxLog.read(spark, t).filter(col("k") >= lo && col("k") < hi)
+        val hits = full.select(input_file_name()).distinct().count()
+        assert(kept.size == hits && kept.size < live.size,
+          s"after $op, [$lo, $hi) kept $kept of $live; $hits files hold a row")
+        def ks(d: org.apache.spark.sql.DataFrame) =
+          d.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+        assert(ks(DeltaBridge.readPruned(spark, t, "k", lo, hi)
+          .filter(col("k") >= lo && col("k") < hi)) == ks(full),
+          s"after $op, [$lo, $hi)")
+      }
+    TxLog.optimize(spark, t)
+    TxLog.append(spark, rows(1000L to 1009L), t, partFiles = 1)
+    check("optimize")
+    TxLog.merge(spark, Seq((5L, "V5")).toDF("k", "s"), t, "k")
+    check("merge")
+    TxLog.updateWhere(spark, t, "k = 1005", Map("s" -> "'u'"))
+    check("updateWhere")
+    assert(TxLog.read(spark, t).filter(col("k").isin(5L, 1005L))
+      .collect().map(_.getString(1)).sorted.toSeq == Seq("V5", "u"))
   }
 
   test("batch index: committedBatch resolves via the O(1) side index, " +

@@ -5,8 +5,8 @@
 # this script makes "compile green before snapshot" mechanical.
 #
 # Usage: tools/preflight.sh [--test]
-#   default : session/install, parquet reader, one-log, one-reader and
-#             layout-kind guards +
+#   default : session/install, parquet reader, one-log, one-reader,
+#             one-stats and layout-kind guards +
 #             sbt compile +
 #             Test/compile (fast, the r9 failure class)
 #   --test  : additionally runs the full ScalaTest suite
@@ -64,6 +64,19 @@ readers=$(grep -nE '\.read\.|readEntries' src/main/scala/graft/sources/TxLog.sca
 if [[ -n "$readers" ]]; then
   echo "read outside DeltaBridge.scanLive in TxLog.scala:"
   echo "$readers"
+  exit 1
+fi
+
+# One statistics format (each add's Delta `stats`, pruned through
+# DeltaBridge.filesInRange and statsExclude): a revived add tag, typed
+# stats codec, stats-collecting append or second pruner brings back two
+# formats that drift, and files a rewrite commits lose their pruning.
+echo "[preflight] one-stats guard"
+second_stats=$(grep -rnE 'graft\.stats|StatValue|appendWithStats|liveFilesWith|pruneFilesTyped' \
+  src || true)
+if [[ -n "$second_stats" ]]; then
+  echo "second statistics format (prune on Delta stats via DeltaBridge.filesInRange):"
+  echo "$second_stats"
   exit 1
 fi
 
