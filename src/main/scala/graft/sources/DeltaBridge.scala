@@ -6,7 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.Tables.{Stamp, stamps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetBridge, ParquetFileFormat}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -25,7 +28,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *
   *  - [[read]] reconstructs a snapshot from any protocol-v1 `_delta_log`,
   *    TxLog's or a real Delta writer's: `_last_checkpoint` bootstrap (the
-  *    checkpoint is itself parquet — Spark reads it natively), JSON action
+  *    checkpoint is itself parquet — Spark's own reader reads it on the
+  *    driver, with no job), JSON action
   *    replay above the checkpoint, `versionAsOf` time travel, and the
   *    metaData `schemaString` applied as the read schema (it IS a Spark
   *    schema JSON — the one part of the format that is Spark-native);
@@ -36,7 +40,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *  - [[buildDataFrame]] is the one builder that turns a replayed set of
   *    adds into rows — [[read]], every [[TxLog]] read and rewrite scan
   *    ([[scanLive]]) and the streaming source's batches go through it, so
-  *    the two APIs never disagree on a table's schema or rows;
+  *    the two APIs never disagree on a table's schema or rows; its clean
+  *    files, `format("graft-delta")` and the SQL catalog all plan as one
+  *    scan over [[logRelation]], the one log-indexed relation;
   *  - [[writeCheckpoint]] compacts the log (TxLog calls it every 10
   *    versions, `CALL graft.checkpoint` on demand) and [[vacuumLog]]
   *    retires the JSON a checkpoint covers.
@@ -48,8 +54,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * `partitionColumns` in metaData (the delta-rs/delta-spark wire shape),
   * and [[read]] prunes add actions against a `partitionFilter` at the
   * METADATA level — the same log-level pruning a real Delta reader
-  * performs before planning any scan — then reconstructs partition
-  * columns from the layout under their logged types. TxLog fixes those
+  * performs before planning any scan — then types partition columns
+  * from each add's logged `partitionValues` under the logged schema,
+  * whatever the directory layout. TxLog fixes those
   * types at commit over every value of the post-commit snapshot (INT,
   * BIGINT, DATE, else STRING — the narrowest type that renders each
   * value back identically), so `code=0123` reads as the string "0123"
@@ -57,11 +64,14 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *
   * Scale: the log is metadata — actions are O(files), the checkpoint
   * bootstrap reads one parquet, and data files are never touched until
-  * the returned DataFrame's own scan. Partition pruning happens twice,
-  * both metadata-priced: once against the action list here, once more by
-  * Catalyst's own partition-directory pruning inside the scan. This is
-  * exactly how production Delta readers behave; nothing here is a toy
-  * shortcut.
+  * the returned DataFrame's own scan. A snapshot plans as ONE scan over
+  * a file index built from the log ([[DeltaLogFileIndex]]) at any commit
+  * count: no directory listing, no listing job, no scan per commit.
+  * Partition pruning is metadata-priced at both levels: the
+  * `partitionFilter` drops add actions before the index is built, and a
+  * later Catalyst filter prunes the index's typed partition rows (and
+  * stats) at planning. This is how production Delta readers plan a
+  * snapshot; nothing here is a toy shortcut.
   */
 object DeltaBridge {
 
@@ -95,26 +105,20 @@ object DeltaBridge {
     sb.toString
   }
 
-  /** Split a staged relative path into (non-partition prefix, trailing
-    * `col=value` run) — the TRAILING consecutive `k=v` directories
-    * immediately above the file, which is exactly the run Spark's own
-    * bottom-up partition-discovery walk collects (a `k=v`-shaped segment
-    * higher up, below a non-`k=v` one, is part of the opaque prefix).
-    * Values unescape Hive percent-encoding; `__HIVE_DEFAULT_PARTITION__`
-    * maps to null. */
-  private[sources] def splitHivePath(path: String)
-      : (String, Seq[(String, String)]) = {
-    val dirs = path.split('/').dropRight(1).toSeq
-    var i = dirs.length
-    while (i > 0 && dirs(i - 1).indexOf('=') > 0) i -= 1
-    val pvs = dirs.drop(i).map { seg =>
-      val eq = seg.indexOf('=')
-      val v = unescapePathName(seg.substring(eq + 1))
-      (unescapePathName(seg.substring(0, eq)),
-        if (v == HiveDefaultPartition) null else v)
-    }
-    (dirs.take(i).mkString("/"), pvs)
-  }
+  /** The partition values a staged relative path encodes: the TRAILING
+    * consecutive `col=value` directories immediately above the file,
+    * which is exactly the run Spark's own bottom-up partition-discovery
+    * walk collects (a `k=v`-shaped segment higher up, below a non-`k=v`
+    * one, is part of the opaque prefix). Values unescape Hive
+    * percent-encoding; `__HIVE_DEFAULT_PARTITION__` maps to null. */
+  private[sources] def hivePartitionValues(path: String): Seq[(String, String)] =
+    path.split('/').dropRight(1).reverseIterator
+      .takeWhile(_.indexOf('=') > 0).toSeq.reverse.map { seg =>
+        val eq = seg.indexOf('=')
+        val v = unescapePathName(seg.substring(eq + 1))
+        (unescapePathName(seg.substring(0, eq)),
+          if (v == HiveDefaultPartition) null else v)
+      }
 
   /** The number of Delta versions in `table`'s `_delta_log`. [[TxLog]]
     * commits write the Delta log directly, so there is nothing left to
@@ -262,7 +266,6 @@ object DeltaBridge {
     // each part is written on the driver through Spark's own parquet
     // writer (no job: a commit at the cadence pays file I/O, not a
     // scheduling round), then linked into place
-    import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
     val (factory, conf) = GraftParquetBridge.writerFactory(spark, ckptSchema)
     val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToCatalystConverter(ckptSchema)
@@ -570,6 +573,17 @@ object DeltaBridge {
     st
   }
 
+  /** The replayed state of a READABLE snapshot at `versionAsOf` (None =
+    * head): [[readState]] of a log that has declared its schema — what
+    * [[read]], `format("graft-delta")`, the SQL catalog and the streaming
+    * source mount. */
+  private[sources] def snapshot(spark: => SparkSession, table: String,
+                                versionAsOf: Option[Long]): LogState = {
+    val st = readState(spark, table, versionAsOf)
+    require(st.schemaJson != null, s"$table: no metaData action in log")
+    st
+  }
+
   /** The actions of JSON version `v`, one per non-empty line. */
   private def actionsOf(table: String, v: Long): Seq[java.util.Map[String, AnyRef]] =
     Files.readAllLines(deltaVersionFile(table, v)).asScala.toSeq
@@ -609,7 +623,7 @@ object DeltaBridge {
     }
   }
 
-  /** Snapshot a Delta table at `versionAsOf` (None = head), optionally
+  /** Read a Delta table's snapshot at `versionAsOf` (None = head), optionally
     * pruned by exact-match partition values. Bootstraps from
     * `_last_checkpoint` when present AND usable; JSON actions above the
     * bootstrap replay in order.
@@ -618,13 +632,13 @@ object DeltaBridge {
     * the metadata-level pruning a real Delta reader performs (and the
     * reason partitionValues live in the log at all): a filtered read of a
     * 10⁵-partition table plans a scan over only the matching partitions'
-    * files. Partition columns are reconstructed on read (Delta data files
-    * do not store them): Hive-layout logs (TxLog's, delta-spark's)
-    * read through Spark's own partition discovery rooted at the table —
-    * one scan, Catalyst prunes directories natively; a foreign log whose
-    * file layout does not encode its partitionValues falls back to one
-    * scan branch per live partition tuple (correct for any layout; the
-    * plan grows with the post-filter partition count, so filter first).
+    * files. The selected adds are the whole file set of the returned
+    * DataFrame ([[buildDataFrame]]): clean files of an unmapped table plan
+    * as ONE scan over a log-backed index ([[logRelation]]) whatever the
+    * commit count or directory layout, partition columns typed from the
+    * log's `partitionValues` (Delta data files do not store them), and a
+    * later `.filter` on a partition or stats-bearing column prunes that
+    * index again at planning.
     *
     * PREPARED READS: a call whose (session, table, versionAsOf,
     * partitionFilter, statsFilter) key and validity token match an earlier
@@ -700,8 +714,7 @@ object DeltaBridge {
                           partitionFilter: Map[String, String],
                           statsFilter: Option[(String, Any, Any)])
       : (DataFrame, Seq[Path]) = {
-    val st = readState(spark, table, versionAsOf)
-    require(st.schemaJson != null, s"$table: no metaData action in log")
+    val st = snapshot(spark, table, versionAsOf)
     val schema = schemaOf(st)
     val badKeys = partitionFilter.keySet -- st.partitionCols.toSet
     require(badKeys.isEmpty,
@@ -719,14 +732,19 @@ object DeltaBridge {
       partitionFilter.forall { case (k, v) =>
         e.pv.get(physOf(k)).contains(v) } && inRange.forall(_(p))
     }
-    val df = buildDataFrame(spark, table, schema, st.partitionCols, mapping,
-      live.map { case (p, e) => (p, e.pv, e.dv) })
+    val df = buildDataFrame(spark, table, schema, st.partitionCols, mapping, live)
     (df, live.map { case (p, _) => Paths.get(table, p) } ++
       live.flatMap(_._2.dv).flatMap(DeletionVectors.sidecarPath(table, _)))
   }
 
-  private def columnMappingMode(st: LogState): String =
+  private[sources] def columnMappingMode(st: LogState): String =
     st.configuration.getOrElse("delta.columnMapping.mode", "none")
+
+  /** True iff a snapshot needs [[buildDataFrame]]'s mapped or DV
+    * branches, so `format("graft-delta")` and the SQL catalog mount it
+    * through [[ExtendedDeltaRelation]] instead of [[logRelation]]. */
+  private[sources] def needsExtendedRead(st: LogState): Boolean =
+    columnMappingMode(st) != "none" || st.live.values.exists(_.dv.isDefined)
 
   /** Logical → physical column names of a replayed state: under column
     * mapping the log's partitionValues and stats keys are PHYSICAL
@@ -768,24 +786,37 @@ object DeltaBridge {
     StructField(physicalName(f), physType(f.dataType), f.nullable, meta)
   }
 
-  /** THE builder: the DataFrame over a set of live adds (path,
-    * partitionValues, deletion vector) under the logged `schema` — the
-    * one place a replayed add set becomes rows, shared by [[read]], every
-    * [[TxLog]] read and rewrite scan ([[scanLive]]) and the streaming
-    * source's batches. Its branches:
+  /** THE log-indexed relation: Spark's own `HadoopFsRelation` +
+    * `ParquetFileFormat` scan over a [[DeltaLogFileIndex]] of exactly
+    * `adds` (clean files of an unmapped table) under the logged
+    * `schema`. The file list comes from the log, never a directory walk
+    * or a listing job, and partition values are typed from each add's
+    * `partitionValues`, so the directory layout does not matter. Every
+    * log-indexed scan is built here: [[buildDataFrame]]'s clean files,
+    * `format("graft-delta")` ([[DeltaBridgeSource]]) and the SQL catalog
+    * (whose V2 index wraps this relation's `location`). Columns are
+    * nullable, as in every Spark file-source relation. */
+  private[sources] def logRelation(spark: SparkSession, table: String,
+                                   schema: StructType, partitionCols: Seq[String],
+                                   adds: Seq[(String, AddEntry)]): HadoopFsRelation = {
+    val partitionSchema = GraftSqlBridge.asNullable(StructType(partitionCols.map(schema(_))))
+    val dataSchema = GraftSqlBridge.asNullable(
+      StructType(schema.filterNot(f => partitionCols.contains(f.name))))
+    HadoopFsRelation(new DeltaLogFileIndex(spark, table, partitionSchema, adds),
+      partitionSchema, dataSchema, None, new ParquetFileFormat, Map.empty)(spark)
+  }
+
+  /** THE builder: the DataFrame over a set of live adds under the logged
+    * `schema` — the one place a replayed add set becomes rows, shared by
+    * [[read]], every [[TxLog]] read and rewrite scan ([[scanLive]]) and
+    * the streaming source's batches. Its branches:
     *
-    *  - clean files of an unmapped table read through Spark's own
-    *    parquet scan under the logged schema: one scan for a flat table;
-    *    for a Hive-consistent layout one scan per non-partition path
-    *    PREFIX (the TxLog stage dir; empty for delta-spark's layout,
-    *    which puts partition dirs at the table root), rooted there with
-    *    `basePath` so discovery re-attaches the partition columns under
-    *    their logged types and Catalyst prunes directories — one branch
-    *    per commit's stage, not per partition;
-    *  - clean files of any other layout (a foreign log whose paths do
-    *    not encode its partitionValues, or a column-mapped table whose
-    *    directory names are physical): one scan branch per live
-    *    partition tuple, the log's values attached as typed literals;
+    *  - clean files of an unmapped table: ONE scan over [[logRelation]],
+    *    its columns selected in logged-schema order — one scan at any
+    *    commit count, file count or layout;
+    *  - clean files of a column-mapped table (directory names and data
+    *    columns are physical): one scan branch per live partition tuple,
+    *    the log's values attached as typed literals;
     *  - each file with a deletion vector: one [[dvFilteredScan]] branch,
     *    its partition values attached as literals (DV'd files are the
     *    copy-on-write minority by construction, so the plan stays
@@ -799,29 +830,17 @@ object DeltaBridge {
   private[sources] def buildDataFrame(
       spark: SparkSession, table: String, schema: StructType,
       partitionCols: Seq[String], mapping: String,
-      files: Seq[(String, Map[String, String],
-        Option[DeletionVectors.Descriptor])]): DataFrame = {
+      files: Seq[(String, AddEntry)]): DataFrame = {
     if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val (clean, dvd) = files.partition(_._3.isEmpty)
-    def paths(fs: Seq[(String, _, _)]): Seq[String] = fs.map(f => s"$table/${f._1}")
-    val ordered: Seq[Column] = schema.fieldNames.toSeq.map(col)
-    val fast: Option[DataFrame] =
-      if (mapping != "none" || clean.isEmpty) None
-      else if (partitionCols.isEmpty)
-        Some(spark.read.schema(schema).parquet(paths(clean): _*))
-      else if (clean.forall { case (p, pv, _) =>
-          val layout = splitHivePath(p)._2
-          layout.toMap == pv && layout.map(_._1) == partitionCols })
-        Some(splitByPrefix(clean.map(_._1)).map { case (prefix, ps) =>
-          val basePath = if (prefix.isEmpty) table else s"$table/$prefix"
-          spark.read.schema(schema).option("basePath", basePath)
-            .parquet(ps.map(p => s"$table/$p"): _*)
-            .select(ordered: _*)
-        }.reduce(_ unionByName _))
-      else None
-    if (dvd.isEmpty && fast.isDefined) return fast.get
+    val (clean, dvd) = files.partition(_._2.dv.isEmpty)
+    val indexed: Option[DataFrame] = Option.when(mapping == "none" && clean.nonEmpty) {
+      val rel = LogicalRelation(logRelation(spark, table, schema, partitionCols, clean))
+      val byName = rel.output.map(a => a.name -> a).toMap
+      GraftSqlBridge.ofRows(spark, Project(schema.fieldNames.toSeq.map(byName), rel))
+    }
+    if (dvd.isEmpty && indexed.isDefined) return indexed.get
     val idMode = mapping == "id"
     // field-id matching is conf-gated in the parquet reader and consulted
     // lazily at scan time FROM THE RELATION'S OWN SESSION — so id-mode
@@ -849,12 +868,12 @@ object DeltaBridge {
           if (mapping == "none" || partitionCols.contains(f.name)) col(f.name)
           else col(s"`${phys(f)}`").cast(f.dataType).as(f.name)
         }: _*)
-    val cleanBranches = fast.map(Seq(_)).getOrElse(
-      clean.groupBy(_._2).toSeq.map { case (pv, fs) =>
-        finish(rspark.read.schema(dataSchema).parquet(paths(fs): _*), pv)
+    val cleanBranches = indexed.map(Seq(_)).getOrElse(
+      clean.groupBy(_._2.pv).toSeq.map { case (pv, fs) =>
+        finish(rspark.read.schema(dataSchema).parquet(fs.map(f => s"$table/${f._1}"): _*), pv)
       })
-    val dvBranches = dvd.map { case (p, pv, d) =>
-      finish(dvFilteredScan(rspark, table, dataSchema, p, d.get), pv)
+    val dvBranches = dvd.map { case (p, e) =>
+      finish(dvFilteredScan(rspark, table, dataSchema, p, e.dv.get), e.pv)
     }
     (cleanBranches ++ dvBranches).reduce(_ unionByName _)
   }
@@ -884,13 +903,10 @@ object DeltaBridge {
   private[sources] def scanLive(spark: SparkSession, table: String,
                                 st: LogState, paths: Seq[String]): DataFrame =
     buildDataFrame(spark, table, schemaOf(st), st.partitionCols,
-      columnMappingMode(st), paths.map { p =>
-        val e = st.live(p)
-        (p, e.pv, e.dv)
-      })
+      columnMappingMode(st), paths.map(p => p -> st.live(p)))
 
   /** One version's actions, parsed for the streaming source: its add
-    * files (path, partitionValues, deletion-vector descriptor — a DV
+    * files (path and replayed entry, deletion vector included — a DV
     * delete's re-published add is a LOGICAL remove+add, and the stream
     * must emit its post-DV row set, never the raw physical rows),
     * whether it carried removes (a non-append change the stream must
@@ -898,8 +914,7 @@ object DeltaBridge {
     * metaData schemaString if the version re-declared one, and its `txn`
     * (appId → batch version) actions ([[TxLog]]'s exactly-once probe). */
   private[sources] case class VersionDelta(
-      adds: Seq[(String, Map[String, String],
-        Option[DeletionVectors.Descriptor])],
+      adds: Seq[(String, AddEntry)],
       hasRemoves: Boolean,
       schemaJson: Option[String],
       txns: Map[String, Long] = Map.empty)
@@ -917,7 +932,7 @@ object DeltaBridge {
     val st = LogState()
     val actions = actionsOf(table, v)
     applyVersion(st, actions)
-    VersionDelta(st.live.toSeq.map { case (p, e) => (p, e.pv, e.dv) },
+    VersionDelta(st.live.toSeq,
       actions.exists(_.containsKey("remove")), Option(st.schemaJson),
       st.txns.iterator.map { case (a, (v, _)) => a -> v }.toMap)
   }
@@ -961,56 +976,6 @@ object DeltaBridge {
   private def dateOf(s: String): Option[java.time.LocalDate] =
     try Some(java.time.LocalDate.parse(s))
     catch { case _: java.time.format.DateTimeParseException => None }
-
-  /** Replayed snapshot state for external composition —
-    * [[DeltaBridgeSource]]'s FileIndex builds Catalyst-native partition
-    * pruning and stats skipping on top of exactly this. */
-  private[sources] case class Snapshot(
-      schemaJson: String,
-      partitionCols: Seq[String],
-      live: Seq[(String, Map[String, String], Option[String])])
-
-  /** The STREAMING snapshot — tolerates deletion vectors (the stream
-    * serves their post-DV row sets through [[buildDataFrame]]; a
-    * batch-zero or recovery snapshot over a table that took a DV delete
-    * must not brick the stream) but refuses
-    * column mapping, whose physical-name scans the streaming source
-    * cannot plan. */
-  private[sources] case class StreamSnapshot(
-      schemaJson: String,
-      partitionCols: Seq[String],
-      live: Seq[(String, Map[String, String],
-        Option[DeletionVectors.Descriptor])])
-
-  private[sources] def streamSnapshot(spark: SparkSession, table: String,
-                                      versionAsOf: Option[Long])
-      : StreamSnapshot = {
-    val st = readState(spark, table, versionAsOf)
-    require(st.schemaJson != null, s"$table: no metaData action in log")
-    require(columnMappingMode(st) == "none",
-      s"$table: column-mapped snapshots have no parquet-index form — " +
-        "batch mounts serve them through DeltaBridge.read (DeltaBridge.mount);" +
-        " streaming over a mapped table is unsupported")
-    StreamSnapshot(st.schemaJson, st.partitionCols,
-      st.live.toSeq.map { case (p, e) => (p, e.pv, e.dv) })
-  }
-
-  /** ONE log replay deciding the mount: Right(snapshot) for the fast
-    * parquet-index path, Left(logical schema, partition columns) when
-    * the snapshot needs [[read]]'s mapped or DV branches — the relation and catalog
-    * branch on this single call instead of probing and then replaying
-    * again. */
-  private[sources] def mount(spark: SparkSession, table: String,
-                             versionAsOf: Option[Long])
-      : Either[(StructType, Seq[String]), Snapshot] = {
-    val st = readState(spark, table, versionAsOf)
-    require(st.schemaJson != null, s"$table: no metaData action in log")
-    if (columnMappingMode(st) != "none" ||
-        st.live.values.exists(_.dv.isDefined))
-      Left((schemaOf(st), st.partitionCols))
-    else Right(Snapshot(st.schemaJson, st.partitionCols,
-      st.live.toSeq.map { case (p, e) => (p, e.pv, e.stats) }))
-  }
 
   /** True iff `statsJson` PROVES some `(column, op, v)` check
     * unsatisfiable — no value of `column` satisfies `column <op> v` —
@@ -1082,18 +1047,6 @@ object DeltaBridge {
                  lo: Any, hi: Any,
                  versionAsOf: Option[Long] = None): DataFrame =
     read(spark, table, versionAsOf, Map.empty, Some((column, lo, hi)))
-
-  /** Group live paths by their non-partition path prefix,
-    * preserving first-seen order on both levels. */
-  private def splitByPrefix(live: Seq[String]): Seq[(String, Seq[String])] = {
-    val out = scala.collection.mutable.LinkedHashMap[String,
-      scala.collection.mutable.Buffer[String]]()
-    live.foreach { p =>
-      out.getOrElseUpdate(splitHivePath(p)._1,
-        scala.collection.mutable.Buffer.empty) += p
-    }
-    out.toSeq.map { case (k, v) => (k, v.toSeq) }
-  }
 
   private[sources] def lastCheckpointVersion(table: String): Option[Long] =
     lastCheckpointMeta(table).map(_._1)
@@ -1190,10 +1143,10 @@ object DeltaBridge {
   }
 
   /** A Delta checkpoint is parquet whose rows each carry at most one
-    * action as a nested struct column — Spark reads it natively (all
-    * parts as one scan for the multi-part form). Rows stream to the
-    * driver through `toLocalIterator` — one partition in memory at a
-    * time, never the whole manifest as a second driver-side array (the
+    * action as a nested struct column. Each part is read on the driver
+    * by Spark's own parquet reader under its footer's schema
+    * ([[GraftParquetBridge.foreachRow]] — no job), one row at a time,
+    * never the whole manifest as a second driver-side array (the
     * replayed `st.live` + tombstone maps are the only O(files) driver
     * state, and they are the reader's product). Bootstraps into a FRESH
     * state only; remove tombstones are no-ops for the LIVE set by
@@ -1207,13 +1160,9 @@ object DeltaBridge {
                                       st: LogState): Unit = {
     require(st.live.isEmpty && st.schemaJson == null,
       "bootstrapFromCheckpoint expects a fresh LogState")
-    val rows = graft.Tables.parquet(spark, files.map(_.toString): _*)
-    val cols = rows.columns.toSet
-    val it = rows.toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
+    files.foreach(f => GraftParquetBridge.foreachRow(spark, f.toString) { r =>
       def struct(name: String): Option[org.apache.spark.sql.Row] =
-        if (cols.contains(name) && !r.isNullAt(r.fieldIndex(name)))
+        if (r.schema.fieldNames.contains(name) && !r.isNullAt(r.fieldIndex(name)))
           Some(r.getStruct(r.fieldIndex(name)))
         else None
       // a foreign checkpoint may omit optional struct fields entirely
@@ -1279,7 +1228,7 @@ object DeltaBridge {
         st.txns += (tx.getAs[String]("appId") -> (
           tx.getAs[Long]("version"), field[Long](tx, "lastUpdated")))
       }
-    }
+    })
     // the add-beats-tombstone rule, order-free: a foreign checkpoint
     // may serialize a path's remove row before its add row
     st.live.keysIterator.foreach(st.tombstones -= _)

@@ -3,19 +3,19 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The Delta bridge mounted as a NATIVE Spark relation — the delta-spark
   * architecture (its TahoeFileIndex) reproduced on the jar-free log
-  * reader: a custom [[FileIndex]] whose file listing comes from the
-  * `_delta_log` replay instead of directory walking, plugged into
-  * Spark's own `HadoopFsRelation` + `ParquetFileFormat` scan path. What
-  * that buys over [[DeltaBridge.read]]'s library calls:
+  * reader: [[DeltaBridge.logRelation]], Spark's own `HadoopFsRelation` +
+  * `ParquetFileFormat` scan path over a [[DeltaLogFileIndex]] whose file
+  * listing comes from the `_delta_log` replay instead of directory
+  * walking — the same relation [[DeltaBridge.read]] and the SQL catalog
+  * plan through. What every mount of it gets:
   *
   *  - `spark.read.format(<this class>).load(table)` — the table is an
   *    ordinary Spark source; `option("versionAsOf", n)` time-travels;
@@ -73,25 +73,15 @@ class DeltaBridgeSource extends RelationProvider
       "graft-delta: specify either versionAsOf or timestampAsOf, not both")
     val resolved = versionAsOf.orElse(
       tsAsOf.map(ts => DeltaBridge.versionAtTimestamp(table, parseTs(ts))))
-    val spark = ctx.sparkSession
     // ONE log replay decides the mount: column-mapped / DV'd snapshots
-    // cannot plan through the parquet index (physical names, row-index
+    // cannot plan through the log index (physical names, row-index
     // filtering) — they mount through the extended-read relation
     // instead, same user surface
-    DeltaBridge.mount(spark, table, resolved) match {
-      case Left((logical, _)) =>
-        new ExtendedDeltaRelation(ctx, table, resolved, logical)
-      case Right(snap) =>
-        val schema =
-          DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-        val partitionSchema = StructType(snap.partitionCols.map(schema(_)))
-        val dataSchema = StructType(
-          schema.filterNot(f => snap.partitionCols.contains(f.name)))
-        HadoopFsRelation(
-          new DeltaLogFileIndex(spark, table, snap, schema, partitionSchema),
-          partitionSchema, dataSchema, None, new ParquetFileFormat,
-          Map.empty)(spark)
-    }
+    val st = DeltaBridge.snapshot(ctx.sparkSession, table, resolved)
+    if (DeltaBridge.needsExtendedRead(st))
+      new ExtendedDeltaRelation(ctx, table, resolved, DeltaBridge.schemaOf(st))
+    else DeltaBridge.logRelation(ctx.sparkSession, table, DeltaBridge.schemaOf(st),
+      st.partitionCols, st.live.toSeq)
   }
 
   /** Write side: `df.write.format("graft-delta").mode(...).save(path)` —
@@ -130,12 +120,9 @@ class DeltaBridgeSource extends RelationProvider
                             schema: Option[StructType],
                             providerName: String,
                             parameters: Map[String, String]): (String, StructType) = {
-    val table = tableOf(parameters)
-    // streamSnapshot: a DV'd head must not brick stream creation — the
-    // source serves post-DV row sets (column mapping still refuses)
-    val snap = DeltaBridge.streamSnapshot(ctx.sparkSession, table, None)
-    (shortName(),
-      DataType.fromJson(snap.schemaJson).asInstanceOf[StructType])
+    // the schema the source itself pins, refusals included
+    (shortName(), new DeltaBridgeStreamSource(ctx.sparkSession,
+      tableOf(parameters), parameters).schema)
   }
 
   override def createSource(ctx: SQLContext, metadataPath: String,
@@ -212,7 +199,9 @@ private[sources] class DeltaBridgeStreamSink(
   * builder, never raw physical rows), and a metaData with a DIFFERENT
   * schemaString fails loud rather than silently misreading. Batch-zero
   * and recovery snapshots over a DV'd table likewise serve post-DV
-  * rows ([[DeltaBridge.streamSnapshot]]) instead of refusing.
+  * rows instead of refusing; a column-mapped table is refused at
+  * creation (its physical-name scans need [[DeltaBridge.read]]'s mapped
+  * branch, which the stream does not plan).
   *
   * Scale: getOffset is one directory listing; a batch reads exactly the
   * snapshot (once) plus the new versions' files through
@@ -232,10 +221,12 @@ private[sources] class DeltaBridgeStreamSource(
     * a checkpoint-only log (JSON commits cleaned up past the
     * checkpoint), which snapshots fine and must still serve batch zero. */
   private val headVersion: Long = DeltaBridge.headVersion(table)
-  private val snap0 = DeltaBridge.streamSnapshot(spark, table,
+  private val snap0 = DeltaBridge.snapshot(spark, table,
     Some(headVersion).filter(_ >= 0))
-  override val schema: StructType =
-    DataType.fromJson(snap0.schemaJson).asInstanceOf[StructType]
+  require(DeltaBridge.columnMappingMode(snap0) == "none",
+    s"$table: streaming over a column-mapped table is unsupported; " +
+      "batch reads serve it through DeltaBridge.read")
+  override val schema: StructType = DeltaBridge.schemaOf(snap0)
 
   private val ignoreChanges =
     parameters.get("ignoreChanges").exists(_.toBoolean)
@@ -308,12 +299,11 @@ private[sources] class DeltaBridgeStreamSource(
     // predates the re-pinned head, and serving the newer snapshot while
     // committing the old offset would double-deliver every version
     // committed while the stream was down (r12 review finding).
-    val files: Seq[(String, Map[String, String],
-        Option[DeletionVectors.Descriptor])] =
+    val files: Seq[(String, DeltaBridge.AddEntry)] =
       if (serveSnapshot && start.isEmpty) {
         val snap =
           if (hi == headVersion) snap0
-          else DeltaBridge.streamSnapshot(spark, table, Some(hi))
+          else DeltaBridge.snapshot(spark, table, Some(hi))
         // recovery batch zero reads at ITS offset but is served under
         // this instance's declared schema (the engine requires it) —
         // if the schema moved between the recovered offset and the
@@ -324,7 +314,7 @@ private[sources] class DeltaBridgeStreamSource(
             s"$table: the schema changed between the checkpointed batch " +
               s"(version $hi) and the current head; delete the checkpoint " +
               "to restart the stream under the current schema")
-        snap.live
+        snap.live.toSeq
       } else {
         val lo = start.map(_.json().toLong).getOrElse(startExclusive)
         // a metaData action whose schema EQUALS the pinned head schema
@@ -355,11 +345,11 @@ private[sources] class DeltaBridgeStreamSource(
           // one log replay, only on a range that contains a metaData —
           // the schema the range STARTED under must already be the
           // pinned one, else the earlier adds misread
-          // streamSnapshot: only the schema is needed here, and the
-          // snapshot at lo may legitimately carry DVs (review r15: the
-          // DV-refusing flavor bricked a DV'd stream crossing a
-          // metaData that re-declares the current schema)
-          val atLo = DeltaBridge.streamSnapshot(spark, table,
+          // only the schema is needed here, and the snapshot at lo may
+          // legitimately carry DVs (a DV-refusing snapshot here bricked a
+          // DV'd stream crossing a metaData that re-declares the current
+          // schema)
+          val atLo = DeltaBridge.snapshot(spark, table,
             Some(math.max(lo, 0L))).schemaJson
           if (atLo != snap0.schemaJson)
             throw new IllegalStateException(
@@ -470,61 +460,53 @@ private[sources] object ExtendedDeltaRelation {
 }
 
 /** File listing driven by the replayed `_delta_log` — never a directory
-  * walk: `listFiles` filters the log's add entries by the pushed
-  * partition predicates (evaluated on typed partitionValues rows) and by
-  * stats-provable exclusions, then groups survivors into one
-  * [[PartitionDirectory]] per partition tuple. At a 10⁵-file table this
-  * is metadata arithmetic on the driver, exactly like delta-spark's
-  * index — and unlike InMemoryFileIndex there is no filesystem listing
-  * to scale with. */
+  * walk, never a listing job: the index of [[DeltaBridge.logRelation]],
+  * built over exactly the adds it is given. `listFiles` filters them by
+  * the pushed partition predicates (evaluated on typed partition rows)
+  * and by stats-provable exclusions, then groups survivors into one
+  * [[PartitionDirectory]] per partition tuple. Partition values are the
+  * log's strings cast to their logged types under the session time zone
+  * (the conversion a literal `cast` applies), so every partition type a
+  * Delta log can declare types here, and paths need not encode them. At a
+  * 10⁵-file table this is metadata arithmetic on the driver, exactly like
+  * delta-spark's index — and unlike InMemoryFileIndex there is no
+  * filesystem listing to scale with. */
 private[sources] class DeltaLogFileIndex(
-    spark: SparkSession, table: String, snap: DeltaBridge.Snapshot,
-    schema: StructType, override val partitionSchema: StructType)
+    spark: SparkSession, private val table: String,
+    override val partitionSchema: StructType,
+    private val adds: Seq[(String, DeltaBridge.AddEntry)])
   extends FileIndex {
 
+  /** Two indexes over the same adds are one relation to the planner (as
+    * two InMemoryFileIndexes over the same paths are), so a snapshot read
+    * twice in one query shares its exchanges. */
+  override def equals(o: Any): Boolean = o match {
+    case i: DeltaLogFileIndex =>
+      table == i.table && partitionSchema == i.partitionSchema && adds == i.adds
+    case _ => false
+  }
+  override lazy val hashCode: Int = (table, partitionSchema, adds).hashCode
+
   private val entries: Seq[(FileStatus, Map[String, String], Option[String])] =
-    snap.live.map { case (p, pv, stats) =>
+    adds.map { case (p, e) =>
       val f = java.nio.file.Paths.get(table, p)
-      (new FileStatus(java.nio.file.Files.size(f), false, 0, 128L * 1024 * 1024,
-        java.nio.file.Files.getLastModifiedTime(f).toMillis,
-        new HPath(f.toUri)), pv, stats)
+      val attrs = java.nio.file.Files.readAttributes(f,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      (new FileStatus(attrs.size, false, 0, 128L * 1024 * 1024,
+        attrs.lastModifiedTime.toMillis, new HPath(f.toUri)), e.pv, e.stats)
     }
+
+  /** The typed partition row of each distinct partitionValues map. */
+  private val rowOf: Map[Map[String, String], InternalRow] = {
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    entries.map(_._2).distinct.map(pv => pv -> InternalRow.fromSeq(
+      partitionSchema.fields.toSeq.map(f => Cast(
+        Literal.create(pv.getOrElse(f.name, null), StringType), f.dataType, tz).eval())))
+      .toMap
+  }
 
   override def rootPaths: Seq[HPath] =
     Seq(new HPath(java.nio.file.Paths.get(table).toUri))
-
-  /** The V2 catalog adapter's views ([[graft.sources.v2.DeltaLogV2Index]]):
-    * same snapshot entries, stats column dropped. */
-  private[sources] def entriesWithValues: Seq[(FileStatus, Map[String, String])] =
-    entries.map { case (fs, pv, _) => (fs, pv) }
-
-  /** Typed partition value of `name` in a partitionValues map — the V2
-    * adapter's PartitionSpec uses the SAME string→Catalyst conversion
-    * the V1 listing binds predicates against. */
-  private[sources] def typedPartValue(pv: Map[String, String], name: String,
-                                      dt: DataType): Any =
-    partValue(pv.getOrElse(name, null), dt)
-
-  /** Hive-string partition value → Catalyst internal value of `dt`. */
-  private def partValue(v: String, dt: DataType): Any =
-    if (v == null) null
-    else dt match {
-      case StringType  => UTF8String.fromString(v)
-      case IntegerType => v.toInt
-      case LongType    => v.toLong
-      case ShortType   => v.toShort
-      case ByteType    => v.toByte
-      case DoubleType  => v.toDouble
-      case FloatType   => v.toFloat
-      case BooleanType => v.toBoolean
-      case DateType    => java.time.LocalDate.parse(v).toEpochDay.toInt
-      case other => throw new IllegalArgumentException(
-        s"unsupported partition column type $other")
-    }
-
-  private def rowOf(pv: Map[String, String]): InternalRow =
-    InternalRow.fromSeq(partitionSchema.fields.toSeq.map(f =>
-      partValue(pv.getOrElse(f.name, null), f.dataType)))
 
   /** Bind a pushed predicate's attributes to partition-row ordinals BY
     * NAME (the filters carry the relation's AttributeReferences, whose

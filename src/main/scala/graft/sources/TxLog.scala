@@ -172,7 +172,7 @@ object TxLog {
       }
     }
 
-  /** Snapshot read; empty-schema-safe only when the table has data.
+  /** The snapshot read; empty-schema-safe only when the table has data.
     * The same DataFrame [[DeltaBridge.read]] builds for Delta version
     * `asOf` − 1: the logged schema, partition columns re-attached under
     * their logged types, and DV-bearing entries ([[deleteWhereDv]])
@@ -458,10 +458,10 @@ object TxLog {
       .filter(Files.exists(_)).flatMap(readFooter(footerConf, _)))
     val partCols =
       if (st.schemaJson != null && st.schemaJson != EmptySchema) st.partitionCols
-      else addPaths.headOption.map(DeltaBridge.splitHivePath(_)._2.map(_._1))
+      else addPaths.headOption.map(DeltaBridge.hivePartitionValues(_).map(_._1))
         .getOrElse(Seq.empty)
     val addPvs = addPaths.map { p =>
-      val pvs = DeltaBridge.splitHivePath(p)._2
+      val pvs = DeltaBridge.hivePartitionValues(p)
       require(pvs.map(_._1) == partCols,
         s"commit to $table: file $p has partition layout " +
           s"[${pvs.map(_._1).mkString(",")}], table is " +

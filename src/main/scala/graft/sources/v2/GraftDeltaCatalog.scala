@@ -5,14 +5,13 @@ import java.util
 import graft.sources.{DeltaBridge, TxLog}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsDeleteV2, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Literal => VLiteral, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, PartitioningAwareFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache, PartitioningAwareFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructType}
@@ -172,15 +171,12 @@ private[v2] class GraftDeltaTable(path: String, versionAsOf: Option[Long])
   private lazy val resolvedVersion: Option[Long] =
     versionAsOf.orElse(
       Some(DeltaBridge.headVersion(path)).filter(_ >= 0))
-  /** ONE log replay decides the mount: Left(schema, partCols) routes
-    * scans through [[graft.sources.ExtendedDeltaRelation]]'s path via a
-    * V1Scan adapter (column mapping / deletion vectors); Right(snapshot)
-    * is the fast parquet-index path. */
-  private lazy val mounted = DeltaBridge.mount(spark, path, resolvedVersion)
-  private lazy val fullSchema = mounted.fold(_._1, s =>
-    DataType.fromJson(s.schemaJson).asInstanceOf[StructType])
-  private def partitionColsOf: Seq[String] =
-    mounted.fold(_._2, _.partitionCols)
+  /** ONE log replay decides the mount: a column-mapped or DV'd snapshot
+    * routes scans through [[graft.sources.ExtendedDeltaRelation]]'s path
+    * via a V1Scan adapter; any other plans over
+    * [[DeltaBridge.logRelation]]'s index. */
+  private lazy val state = DeltaBridge.snapshot(spark, path, resolvedVersion)
+  private lazy val fullSchema = DeltaBridge.schemaOf(state)
 
   override def name(): String =
     s"graft-delta.`$path`" + versionAsOf.fold("")(v => s"@v$v")
@@ -193,22 +189,19 @@ private[v2] class GraftDeltaTable(path: String, versionAsOf: Option[Long])
       TableCapability.STREAMING_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    mounted match {
-      case Left((logical, _)) =>
-        // mapped / DV'd snapshot: a V1Scan adapter onto the proven
-        // extended-read path, with column pruning pushed through — the
-        // SQL surface is identical, only the physical mount differs.
-        // resolvedVersion (not versionAsOf): the adapter replays the log
-        // at EXECUTION time, and it must read the snapshot this mount
-        // decision was planned against
-        new ExtendedV1ScanBuilder(path, resolvedVersion, logical)
-      case Right(s) =>
-        val partitionSchema = StructType(s.partitionCols.map(fullSchema(_)))
-        val dataSchema = StructType(
-          fullSchema.filterNot(f => s.partitionCols.contains(f.name)))
-        ParquetScanBuilder(spark,
-          new DeltaLogV2Index(spark, path, s, fullSchema, partitionSchema),
-          fullSchema, dataSchema, options)
+    if (DeltaBridge.needsExtendedRead(state))
+      // mapped / DV'd snapshot: a V1Scan adapter onto the proven
+      // extended-read path, with column pruning pushed through — the
+      // SQL surface is identical, only the physical mount differs.
+      // resolvedVersion (not versionAsOf): the adapter replays the log
+      // at EXECUTION time, and it must read the snapshot this mount
+      // decision was planned against
+      new ExtendedV1ScanBuilder(path, resolvedVersion, fullSchema)
+    else {
+      val rel = DeltaBridge.logRelation(spark, path, fullSchema,
+        state.partitionCols, state.live.toSeq)
+      ParquetScanBuilder(spark, new DeltaLogV2Index(spark, rel.location, fullSchema),
+        fullSchema, rel.dataSchema, options)
     }
 
   /** Accessors for [[GraftDmlStrategy]] (UPDATE / MERGE INTO planning). */
@@ -256,7 +249,7 @@ private[v2] class GraftDeltaTable(path: String, versionAsOf: Option[Long])
             s"writeStream into ${name()}: Append output mode only (the " +
               "epoch-id idempotence contract does not cover truncation)")
           GraftDeltaStreamingWrite(path, info.schema(), info.queryId(),
-            partitionColsOf)
+            state.partitionCols)
         }
       }
     }
@@ -333,48 +326,33 @@ private[v2] class ExtendedV1ScanBuilder(path: String,
 }
 
 /** The log-driven file index in the shape Spark's V2 parquet scan
-  * requires (`PartitioningAwareFileIndex`): listing DELEGATES to
-  * [[graft.sources.DeltaLogFileIndex]], so catalog reads get the same
-  * metadata partition pruning and proof-backed stats skipping as
-  * `format("graft-delta")` — one pruning implementation, two mounts.
-  * The partition-spec / leaf-file views are derived from the same log
-  * snapshot (they feed `sizeInBytes`, `inputFiles` and the scan's
-  * partition arithmetic, never a directory walk). */
+  * requires (`PartitioningAwareFileIndex`) over the index of
+  * [[DeltaBridge.logRelation]]: listing DELEGATES to it, so catalog
+  * reads get the same metadata partition pruning and proof-backed stats
+  * skipping as `format("graft-delta")` — one index, two mounts. The
+  * partition-spec / leaf-file views are its unfiltered listing (typed
+  * partition rows included); they feed `sizeInBytes`, `inputFiles` and
+  * the scan's partition arithmetic, never a directory walk. */
 private[v2] class DeltaLogV2Index(
-    spark: SparkSession, table: String, snap: DeltaBridge.Snapshot,
-    fullSchema: StructType, partSchema: StructType)
+    spark: SparkSession, inner: FileIndex, fullSchema: StructType)
   extends PartitioningAwareFileIndex(spark, Map.empty, Some(fullSchema),
     FileStatusCache.getOrCreate(spark)) {
 
-  private val inner = new graft.sources.DeltaLogFileIndex(
-    spark, table, snap, fullSchema, partSchema)
+  private lazy val all = inner.listFiles(Nil, Nil)
 
   override def partitionSpec(): PartitionSpec =
-    if (partSchema.isEmpty) PartitionSpec(StructType(Nil), Seq.empty)
-    else {
-      val dirs = inner.entriesWithValues
-        .groupBy(_._2) // by partitionValues map
-        .toSeq
-        .map { case (pv, files) =>
-          PartitionPath(
-            InternalRow.fromSeq(partSchema.map(f =>
-              inner.typedPartValue(pv, f.name, f.dataType))),
-            files.head._1.getPath.getParent)
-        }
-      PartitionSpec(partSchema, dirs)
-    }
+    PartitionSpec(inner.partitionSchema,
+      if (inner.partitionSchema.isEmpty) Nil
+      else all.map(d => PartitionPath(d.values, d.files.head.getPath.getParent)))
 
   override def leafFiles: scala.collection.mutable.LinkedHashMap[
-      org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileStatus] = {
-    val m = scala.collection.mutable.LinkedHashMap
-      .empty[org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileStatus]
-    inner.entriesWithValues.foreach { case (fs, _) => m(fs.getPath) = fs }
-    m
-  }
+      org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileStatus] =
+    scala.collection.mutable.LinkedHashMap.from(
+      all.flatMap(_.files).map(f => f.getPath -> f.fileStatus))
 
   override def leafDirToChildrenFiles: Map[
       org.apache.hadoop.fs.Path, Array[org.apache.hadoop.fs.FileStatus]] =
-    inner.entriesWithValues.map(_._1).groupBy(_.getPath.getParent)
+    all.flatMap(_.files).map(_.fileStatus).groupBy(_.getPath.getParent)
       .map { case (d, fs) => d -> fs.toArray }
 
   /** The pruning entry point the scan calls — the log-driven listing

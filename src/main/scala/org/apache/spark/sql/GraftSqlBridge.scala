@@ -11,6 +11,11 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `StructType.asNullable` (`private[spark]`): every field, nested
+    * ones included, made nullable — the schema Spark gives every
+    * file-source relation. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** Re-tag a batch DataFrame as STREAMING — what a V1
     * `execution.streaming.Source.getBatch` must return (the engine
     * asserts `isStreaming`). The relation nodes flip their flag exactly

@@ -631,7 +631,7 @@ class DeltaBridgeSpec extends SparkSpec {
       "the empty commit is Delta version 0 as soon as it lands")
     TxLog.appendPartitioned(spark,
       Seq((1L, "CA")).toDF("id", "state"), t, Seq("state"))
-    assert(DeltaBridge.streamSnapshot(spark, t, None).partitionCols == Seq("state"))
+    assert(DeltaBridge.snapshot(spark, t, None).partitionCols == Seq("state"))
     val v0 = Files.readAllLines(
       Paths.get(t, "_delta_log", f"${0L}%020d.json")).asScala
       .filter(_.nonEmpty)
@@ -1078,6 +1078,21 @@ class DeltaBridgeSpec extends SparkSpec {
     val fb = DeltaBridge.read(spark, t2).collect()
     assert(fb.map(r => (r.getAs[Long]("id"), r.getAs[String]("v"),
       r.getAs[Int]("year"))).toSeq == Seq((1L, "x", 2024)))
+    // a second partition tuple in the same flat layout still plans ONE scan
+    Seq((2L, "y")).toDF("id", "v").coalesce(1).write.parquet(s"$t2/d1")
+    val part1 = {
+      val s = Files.list(Paths.get(t2, "d1"))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).next() + "" finally s.close()
+    }
+    Files.writeString(Paths.get(t2, "_delta_log", f"${1L}%020d.json"),
+      s"""{"add":{"path":"d1/$part1","partitionValues":{"year":"2025"},"size":${Files.size(Paths.get(t2, s"d1/$part1"))},"modificationTime":1700000000000,"dataChange":true}}
+         |""".stripMargin)
+    val two = DeltaBridge.read(spark, t2)
+    assert(two.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.size == 1)
+    assert(two.collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("year")))
+      .sorted.toSeq == Seq((1L, 2024), (2L, 2025)))
   }
 
   test("re-export EXTENDING a published log keeps version 0's table id and " +
@@ -1755,7 +1770,7 @@ class DeltaBridgeSpec extends SparkSpec {
     TxLog.deleteWhereDv(spark, t, "k = 5", maxDvFraction = 0.1)
     // v2: a foreign writer re-declares the SAME schema alongside an add
     // — the shape that flips the range-start schema check on
-    val schemaJson = DeltaBridge.streamSnapshot(spark, t, None).schemaJson
+    val schemaJson = DeltaBridge.snapshot(spark, t, None).schemaJson
     val f = stageOneFile(Seq((100L, "x")).toDF("k", "s"), t, "pX.parquet")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     writeLogJson(t, 2L, Seq(

@@ -24,8 +24,8 @@ class TxLogDeltaLogSpec extends SparkSpec {
     vs.foreach { v =>
       val tx = TxLog.liveFiles(t, Some(v))
         .map(e => TxLog.entryPath(e) -> TxLog.entryDv(e).map(_.cardinality))
-      val delta = DeltaBridge.streamSnapshot(spark, t, Some(v - 1L)).live
-        .map { case (p, _, dv) => p -> dv.map(_.cardinality) }
+      val delta = DeltaBridge.snapshot(spark, t, Some(v - 1L)).live.toSeq
+        .map { case (p, e) => p -> e.dv.map(_.cardinality) }
       assert(tx.sorted == delta.sorted, s"live files of $t at version $v")
       val bridge = DeltaBridge.read(spark, t, Some(v - 1L))
       if (tx.isEmpty) assert(bridge.count() == 0, s"rows of $t at version $v")

@@ -6,7 +6,7 @@
 #
 # Usage: tools/preflight.sh [--test]
 #   default : session/install, parquet reader, one-log, one-reader,
-#             one-stats and layout-kind guards +
+#             one-stats, one-scan and layout-kind guards +
 #             sbt compile +
 #             Test/compile (fast, the r9 failure class)
 #   --test  : additionally runs the full ScalaTest suite
@@ -77,6 +77,20 @@ second_stats=$(grep -rnE 'graft\.stats|StatValue|appendWithStats|liveFilesWith|p
 if [[ -n "$second_stats" ]]; then
   echo "second statistics format (prune on Delta stats via DeltaBridge.filesInRange):"
   echo "$second_stats"
+  exit 1
+fi
+
+# One Delta scan (DeltaBridge.logRelation: a HadoopFsRelation over the
+# log-backed DeltaLogFileIndex): a revived basePath union, per-prefix
+# split or second snapshot/mount type brings back a second way from a
+# replayed add set to a scan, one that plans a scan per commit and lists
+# files in a Spark job above 32 paths.
+echo "[preflight] one-scan guard"
+second_scan=$(grep -rnE 'basePath|splitByPrefix|StreamSnapshot|case class Snapshot\(|def mount\(' \
+  src/main/scala/graft/sources/ || true)
+if [[ -n "$second_scan" ]]; then
+  echo "second snapshot-to-scan path (build scans through DeltaBridge.logRelation):"
+  echo "$second_scan"
   exit 1
 fi
 
